@@ -128,6 +128,65 @@ object AnnIndexStore {
     * covers). Production value is a no-op. */
   @volatile private[index] var postResolveHook: () => Unit = () => ()
 
+  // ---- store-frame cache: one planned scan frame per store version ----
+  //
+  // `spark.read.parquet(<store>)` pays a file listing plus a footer
+  // schema-inference Spark job on EVERY call — on the batch search
+  // paths and the SQL serving hot path alike, that job was a fixed
+  // per-call floor that did no search work. A planned frame is
+  // immutable, so it is cached per (session, resolved data dir,
+  // version): the write-time version token is the invalidation key (a
+  // rebuild re-stamps it, so superseded entries are simply never read
+  // again). Only VERSIONED stores cache: an unversioned store's files
+  // can change with no detectable signal, so it re-lists per call — and
+  // the serving path's version-swap retry re-lists too (its new token
+  // misses), so a retry can never re-read the pre-swap file listing.
+  // Load-validate-store, the [[loadCentroidsCached]] rule: a frame is
+  // stored only when the token still matches AFTER the listing, so a
+  // listing that raced an in-place rebuild is used once and never
+  // pinned under the old token. Keyed by the SESSION OBJECT (identity
+  // equality) — a hash surrogate could alias two sessions and hand one
+  // a frame bound to the other's session state. Eviction: stale tokens
+  // are unordered UUIDs with nothing to age by, so hygiene is
+  // size-bounded — at the cap, frames of stopped sessions are dropped
+  // first, then the map clears wholesale (a re-warm is one listing per
+  // store). `AnnCatalog.clear()` clears it too.
+  private val storeFrames = new java.util.concurrent.ConcurrentHashMap[
+    (SparkSession, String, String), DataFrame]
+  private val MaxStoreFrames = 256
+
+  /** The parquet frame of a store's RESOLVED data dir (a
+    * [[resolveStore]] result), cached per write-time version. */
+  def storeFrame(spark: SparkSession, dataDir: String): DataFrame =
+    storeFrame(spark, dataDir, versionAt(dataDir))
+
+  /** [[storeFrame]] under a version the caller already resolved with
+    * `dataDir` ([[resolveVersioned]]) — the serving path keys its
+    * executor cache on that same token, so the frame must be validated
+    * against it rather than against a fresh read. */
+  def storeFrame(spark: SparkSession, dataDir: String,
+      ver: Option[String]): DataFrame = ver match {
+    case None => spark.read.parquet(dataDir)
+    case Some(v) =>
+      val key = (spark, dataDir, v)
+      val hit = storeFrames.get(key)
+      if (hit != null) hit
+      else {
+        if (storeFrames.size() >= MaxStoreFrames) {
+          storeFrames.keySet.removeIf(_._1.sparkContext.isStopped)
+          if (storeFrames.size() >= MaxStoreFrames) storeFrames.clear()
+        }
+        val df = spark.read.parquet(dataDir)
+        if (!versionAt(dataDir).contains(v)) df
+        else {
+          val race = storeFrames.putIfAbsent(key, df)
+          if (race != null) race else df
+        }
+      }
+  }
+
+  def clearStoreFrames(): Unit = storeFrames.clear()
+
   private def currentGen(root: String): Option[String] = {
     val mf = new java.io.File(root, manifestName)
     if (!mf.exists()) return None
@@ -799,25 +858,6 @@ object AnnIndexStore {
     heap.iterator.map((p: (Double, Int)) => p._2.toLong).toArray
   }
 
-  /** [[searchIvfChunked]] in the [[searchChunkedTo]] form: each chunk's
-    * centroid-routed result is written straight to parquet (staged,
-    * promoted by rename) instead of accumulating as localCheckpoint
-    * blocks. */
-  def searchIvfChunkedTo(spark: SparkSession, path: String, queries: DataFrame,
-      outPath: String, k: Int, ef: Int = 200, nprobe: Int = AutoNprobe,
-      chunkRows: Int = 100000): Unit = {
-    val store = resolveStore(path)
-    val cents = loadCentroidsCached(spark, store)
-    val np = math.min(resolveNprobe(path, nprobe), cents.length)
-    writeChunkedResults(spark, outPath,
-      queryChunks(queries, chunkRows).map { chunk =>
-        val qByBucket = chunk.iterator.flatMap { case (qid, qvec) =>
-          nearestLists(cents, np, qvec).iterator.map(l => (l, (qid, qvec)))
-        }.toArray.groupBy(_._1).map { case (b, xs) => (b, xs.map(_._2)) }
-        searchByBatch(spark, s"$store/lists", qByBucket, k, ef)
-      })
-  }
-
   /** Per-assignment broadcast footprint estimate for the list-major
     * grouping: dim floats + array header + the (qid, vec) tuple and
     * boxing overhead. Deliberately generous — over-estimating splits
@@ -825,14 +865,13 @@ object AnnIndexStore {
     * re-reads); under-estimating blows the driver collect. */
   private def assignmentBytes(dim: Int): Long = 4L * dim + 96L
 
-  /** `-Dgraft.ivf.groupBytes` — the driver/broadcast residency bound
-    * one list-major group may occupy (assignment rows × vec footprint).
-    * Default 256 MB: the 250k-query batch measured driver-flat at
-    * ~100 MB of vectors (BASELINE.md round 13), so a 256 MB group holds
-    * a full contest-scale type-0 batch in ONE group while staying far
-    * from driver-heap pressure on executor-shaped JVMs. */
-  private def ivfGroupBytes: Long =
-    java.lang.Long.getLong("graft.ivf.groupBytes", 256L * 1024 * 1024)
+  /** Default driver/broadcast residency bound of one list-major group
+    * (assignment rows × vec footprint): the 250k-query batch measured
+    * driver-flat at ~100 MB of vectors (BASELINE.md round 13), so a
+    * 256 MB group holds a full contest-scale type-0 batch in ONE group
+    * while staying far from driver-heap pressure on executor-shaped
+    * JVMs. */
+  private val DefaultGroupBytes: Long = 256L * 1024 * 1024
 
   /** LIST-MAJOR batched [[searchIvf]]: reads each probed list's blob
     * exactly ONCE per batch, however large the batch.
@@ -844,18 +883,25 @@ object AnnIndexStore {
     * the batch loop: its per-category search iterates INDEX-major for
     * exactly this reason (hybrid_graph.cpp:239-298). Here:
     *
-    *  1. one distributed routing pass assigns every query its `nprobe`
-    *     nearest lists (persisted MEMORY_AND_DISK — qids + vecs spill
-    *     to local disk, never the driver);
-    *  2. the per-list assignment COUNTS (≤ nlist rows) come to the
-    *     driver and first-fit-decreasing bin-pack the lists into groups
-    *     whose assignment footprint fits [[ivfGroupBytes]];
-    *  3. each group collects ONLY its own assignments (≤ the bound by
-    *     construction), broadcasts them, and scans ONLY its own lists —
-    *     every blob is deserialized once, for all the queries that
-    *     probe it;
-    *  4. per-group per-qid partial top-k rows (dist kept) stage to
-    *     `<out>.cand.tmp`, and one global [[rankTopK]] merges a query's
+    *  1. a distributed routing plan assigns every query its `nprobe`
+    *     nearest lists, and the per-list assignment COUNTS (≤ nlist
+    *     rows) come to the driver, which first-fit-decreasing bin-packs
+    *     the lists into groups whose assignment footprint fits
+    *     `groupBytes`;
+    *  2. ONE group (the normal case under the default bound): the
+    *     assignments are collected once (re-routing the batch inside
+    *     that collect — persisting nprobe-expanded rows that are read
+    *     once cost an extra cache-materializing job), broadcast,
+    *     walked, ranked and written to `outPath` in one step — no
+    *     staging, no second merge;
+    *  3. several groups: the routed assignments are persisted
+    *     MEMORY_AND_DISK (qids + vecs spill to local disk, never the
+    *     driver); each group collects ONLY its own assignments (≤ the
+    *     bound by construction), broadcasts them, and scans ONLY its
+    *     own lists — every blob is deserialized once, for all the
+    *     queries that probe it. Per-group per-qid partial top-k rows
+    *     (dist kept) stage to `<out>.cand.tmp` (removed on success and
+    *     on failure), and one global [[rankTopK]] merges a query's
     *     groups exactly — a query whose probed lists span groups gets
     *     the same (dist, id)-ordered result the single-pass form
     *     produces.
@@ -868,51 +914,54 @@ object AnnIndexStore {
     * merge order). */
   def searchIvfListMajorTo(spark: SparkSession, path: String, queries: DataFrame,
       outPath: String, k: Int, ef: Int = 200, nprobe: Int = AutoNprobe,
-      groupBytes: Long = -1L): Unit = {
-    import spark.implicits._
+      groupBytes: Long = DefaultGroupBytes): Unit = {
     val store = resolveStore(path)
     val cents = loadCentroidsCached(spark, store)
     val np = math.min(resolveNprobe(path, nprobe), cents.length)
-    val capRows = math.max(1L,
-      (if (groupBytes > 0) groupBytes else ivfGroupBytes) /
-        assignmentBytes(cents(0).length))
+    val capRows = math.max(1L, groupBytes / assignmentBytes(cents(0).length))
     val centsFlat = typedLit(cents.flatten)
-    val routed = queries
+    val routing = queries
       .select(col("qid").cast("long").as("qid"),
         explode(graft.functions.VectorFunctions.nearestCentroids(
           col("qvec"), centsFlat, lit(np))).as("probe"),
         col("qvec"))
       .select(col("qid"), col("probe").cast("long").as("bucket"), col("qvec"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    def collectByBucket(rows: DataFrame): Map[Long, Array[(Long, Array[Float])]] =
+      rows.select(col("bucket"), col("qid"), col("qvec"))
+        .collect()
+        .map(r => (r.getLong(0), (r.getLong(1), r.getSeq[Float](2).toArray)))
+        .groupBy(_._1).map { case (b, xs) => (b, xs.map(_._2)) }
+    val counts = routing.groupBy("bucket").count()
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    // first-fit-decreasing: oversized lists land alone (handled
+    // chunked below); everything else packs under capRows
+    val groups = scala.collection.mutable.ArrayBuffer.empty[
+      (scala.collection.mutable.ArrayBuffer[Long], Long)]
+    counts.sortBy { case (b, c) => (-c, b) }.foreach { case (b, c) =>
+      val fit = groups.indexWhere { case (_, used) => used + c <= capRows }
+      if (fit >= 0) {
+        val (ls, used) = groups(fit)
+        ls += b
+        groups(fit) = (ls, used + c)
+      } else groups += ((scala.collection.mutable.ArrayBuffer(b), c))
+    }
+    if (groups.length <= 1 && groups.forall(_._2 <= capRows)) {
+      // one group holds every assignment (or the batch is empty):
+      // search, rank and write in one step
+      writeChunkedResults(spark, outPath, Iterator.single(
+        searchByBatch(spark, s"$store/lists", collectByBucket(routing), k, ef)))
+      return
+    }
+    val routed = routing.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val candTmp = new java.io.File(outPath.stripSuffix("/") + ".cand.tmp")
+    deleteRecursively(candTmp)
     try {
-      val counts = routed.groupBy("bucket").count()
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-      // first-fit-decreasing: oversized lists land alone (handled
-      // chunked below); everything else packs under capRows
-      val groups = scala.collection.mutable.ArrayBuffer.empty[
-        (scala.collection.mutable.ArrayBuffer[Long], Long)]
-      counts.sortBy { case (b, c) => (-c, b) }.foreach { case (b, c) =>
-        val fit = groups.indexWhere { case (_, used) => used + c <= capRows }
-        if (fit >= 0) {
-          val (ls, used) = groups(fit)
-          ls += b
-          groups(fit) = (ls, used + c)
-        } else groups += ((scala.collection.mutable.ArrayBuffer(b), c))
-      }
-      val candTmp = outPath.stripSuffix("/") + ".cand.tmp"
-      deleteRecursively(new java.io.File(candTmp))
-      var any = false
       groups.foreach { case (lists, used) =>
         val rows = routed.filter(col("bucket")
           .isin(lists.map(java.lang.Long.valueOf).toSeq: _*))
         val parts: Iterator[Map[Long, Array[(Long, Array[Float])]]] =
-          if (used <= capRows) {
-            val qByBucket = rows.select(col("bucket"), col("qid"), col("qvec"))
-              .collect()
-              .map(r => (r.getLong(0), (r.getLong(1), r.getSeq[Float](2).toArray)))
-              .groupBy(_._1).map { case (b, xs) => (b, xs.map(_._2)) }
-            Iterator.single(qByBucket)
-          } else {
+          if (used <= capRows) Iterator.single(collectByBucket(rows))
+          else {
             // hot-list skew: one list alone exceeds the bound — stream
             // its queries at the bound; only THIS blob re-reads
             val b = lists.head
@@ -922,16 +971,16 @@ object AnnIndexStore {
           }
         parts.foreach { qByBucket =>
           searchByBatchCandidates(spark, s"$store/lists", qByBucket, k, ef)
-            .write.mode("append").parquet(candTmp)
-          any = true
+            .write.mode("append").parquet(candTmp.getPath)
         }
       }
-      val merged =
-        if (any) rankTopK(spark.read.parquet(candTmp), k)
-        else spark.emptyDataset[(Long, Long, Long)].toDF("qid", "rank", "nid")
-      writeChunkedResults(spark, outPath, Iterator.single(merged))
-      deleteRecursively(new java.io.File(candTmp))
-    } finally routed.unpersist(blocking = false)
+      crashPoint("listmajor.staged")
+      writeChunkedResults(spark, outPath, Iterator.single(
+        rankTopK(spark.read.parquet(candTmp.getPath), k)))
+    } finally {
+      deleteRecursively(candTmp)
+      routed.unpersist(blocking = false)
+    }
   }
 
   /** Type-3 search over a per-label [[buildBy]] table built with
@@ -968,7 +1017,7 @@ object AnnIndexStore {
       if (efBands) resolveBands(path) else graft.operators.SearchParams.DefaultBands
     val bq = spark.sparkContext.broadcast(qByBucket)
     val wanted = qByBucket.keys.toSeq
-    val scan0 = spark.read.parquet(resolveStore(path))
+    val scan0 = storeFrame(spark, resolveStore(path))
       .filter(col("bucket").isin(wanted: _*))
     // banded arm, attr-stamped store: push PER-BUCKET attr envelopes
     // into the scan — parquet row-group stats then skip sub-rows no
@@ -1108,7 +1157,7 @@ object AnnIndexStore {
     // page-cached and the deserialization is shared via
     // fromBytesCached.
     val shards = math.max(1, math.min(16, qBatch.length / 4000))
-    val scanOne = spark.read.parquet(resolveStore(path))
+    val scanOne = storeFrame(spark, resolveStore(path))
       .filter(col("bucket") >= minB && col("bucket") <= maxB)
       .select(col("bucket"), col("ids"), col("attrs"), col("graph"))
     val scan =
@@ -1232,7 +1281,7 @@ object AnnIndexStore {
     import spark.implicits._
     val bq = spark.sparkContext.broadcast(qByBucket)
     val wanted = qByBucket.keys.toSeq
-    spark.read.parquet(resolveStore(path))
+    storeFrame(spark, resolveStore(path))
       .filter(col("bucket").isin(wanted: _*))
       .select(col("bucket"), col("ids"), col("graph"))
       .as[(Long, Array[Long], Array[Byte])]
@@ -1341,7 +1390,7 @@ object AnnIndexStore {
       qBatch: Array[(Long, Array[Float])], k: Int, ef: Int): DataFrame = {
     import spark.implicits._
     val bq = spark.sparkContext.broadcast(qBatch)
-    spark.read.parquet(resolveStore(path))
+    storeFrame(spark, resolveStore(path))
       .select(col("ids"), col("graph"))
       .as[(Array[Long], Array[Byte])]
       .mapPartitions { it =>
@@ -1438,7 +1487,7 @@ object AnnIndexStore {
     // lists store is itself a buildBy store and could carry its own
     // generation layout after a maintenance flip — a root-level resolve
     // alone would read the superseded flat files
-    spark.read.parquet(resolveStore(s"${resolveStore(path)}/lists"))
+    storeFrame(spark, resolveStore(s"${resolveStore(path)}/lists"))
       .select(col("bucket"), col("ids"), col("graph"))
       .as[(Long, Array[Long], Array[Byte])]
       .mapPartitions { it =>
@@ -1484,7 +1533,8 @@ object AnnIndexStore {
     * entry (recoverStore + repairDelta + the replay rules) restores a
     * store whose serve set is exactly the acknowledged rows. Production
     * value is a no-op; the call sites double as documentation of the
-    * crash windows. */
+    * crash windows. [[searchIvfListMajorTo]]'s staged merge has one
+    * too, so a spec can fail it between staging and merge. */
   @volatile private[index] var crashHook: String => Unit = _ => ()
 
   private[index] def crashPoint(name: String): Unit = crashHook(name)
@@ -2016,7 +2066,7 @@ object AnnIndexStore {
       // coalesce: sum over a ZERO-row store (a valid empty build that a
       // stream is bootstrapping) is NULL, and getLong would NPE before
       // the infinity guard could fire
-      spark.read.parquet(dir)
+      storeFrame(spark, dir)
         .agg(coalesce(sum(size(col("ids"))), lit(0L))).head().getLong(0)
     val dir = resolveStore(path)
     val indexed = versionAt(dir) match {
@@ -2060,9 +2110,10 @@ object AnnIndexStore {
     // keyed by (dir, write-time version): an in-place rebuild bumps the
     // token (file read, no job), so a store rebuilt WITHOUT attrCol
     // after a stamped check re-checks instead of serving the stale pass
-    val key = dir + "@" + versionAt(dir).getOrElse("-")
+    val ver = versionAt(dir)
+    val key = dir + "@" + ver.getOrElse("-")
     if (attrStampOk.contains(key)) return
-    val df = spark.read.parquet(dir)
+    val df = storeFrame(spark, dir, ver)
     if (df.columns.contains("attr_col")) {
       val row = df.select("attr_col").limit(1).collect()
       require(row.isEmpty || row(0).getString(0) != null,

@@ -31,7 +31,7 @@ object EfTuner {
     // xxhash64 tiebreak: a salted store's equal-size sub rows (chunks
     // are exactly maxRowsPerIndex rows) tie on (n, bucket), and an
     // untied limit(1) would measure a different graph per run
-    val row = spark.read.parquet(AnnIndexStore.resolveStore(indexPath))
+    val row = AnnIndexStore.storeFrame(spark, AnnIndexStore.resolveStore(indexPath))
       .select(col("bucket"), size(col("ids")).as("n"), col("graph"))
       .orderBy(desc("n"), col("bucket"), xxhash64(col("graph")))
       .limit(1).collect()
@@ -115,7 +115,7 @@ object EfTuner {
     // generation the bucket streaming reads.
     val storeDataDir =
       if (resolve) AnnIndexStore.resolveStore(storePath) else storePath
-    val df = spark.read.parquet(storeDataDir)
+    val df = AnnIndexStore.storeFrame(spark, storeDataDir)
     require(df.columns.contains("attrs"), s"tuneBands: $storePath has no attrs")
     val buckets = df.select(col("bucket").cast("long")).distinct()
       .orderBy("bucket").collect().map(_.getLong(0))

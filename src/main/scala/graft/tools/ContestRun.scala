@@ -310,30 +310,21 @@ object ContestRun {
     // ProbeHarness.tunedIvfEf — so both lifecycle tools' receipts match)
     val t0Ef = ProbeHarness.tunedIvfEf(spark, s"$root/by_ivf",
       t0Mode, base, queries, k, ef, nprobe = t0Nprobe)
-    // GRAFT_CONTEST_T0_BATCH=chunk keeps the query-major feed for A/B;
-    // the ivf default is LIST-major (each blob read once per batch —
-    // the chunk feed re-loaded ~every probed list per 50k slice, ~70 GB
-    // of reads against the 14 GB 30M store)
-    val t0Batch = sys.env.getOrElse("GRAFT_CONTEST_T0_BATCH", "listmajor")
     val t0Override =
       if (sys.env.contains("GRAFT_CONTEST_NPROBE") ||
         sys.env.contains("GRAFT_CONTEST_IVF_EF")) " override" else ""
     val t0Params =
       if (t0Mode == "ivf")
-        s"$searchParams nprobe=$t0Nprobe ivfef=$t0Ef batch=$t0Batch$t0Override"
+        s"$searchParams nprobe=$t0Nprobe ivfef=$t0Ef$t0Override"
       else searchParams
     if (!freshFor(s"$resPath/$t0Name", t0Params)) timed(s"search_type0_$t0Mode") {
       val q0 = queries.filter(col("qtype") === 0).select(col("qid"), col("qvec"))
       // ...To forms: narrow (qid, rank, nid) results go straight to
-      // parquet — no localCheckpoint blocks accumulate across the feed
-      if (t0Mode == "ivf" && t0Batch == "listmajor")
+      // parquet — no localCheckpoint blocks accumulate across the feed;
+      // the ivf arm is LIST-major: each blob is read once per batch
+      if (t0Mode == "ivf")
         AnnIndexStore.searchIvfListMajorTo(spark, s"$root/by_ivf", q0,
           s"$resPath/$t0Name", k, t0Ef, nprobe = t0Nprobe)
-      else if (t0Mode == "ivf")
-        AnnIndexStore.searchIvfChunkedTo(spark, s"$root/by_ivf", q0,
-          s"$resPath/$t0Name", k, t0Ef,
-          nprobe = t0Nprobe,
-          chunkRows = 50000)
       else
         AnnIndexStore.searchChunkedTo(spark, s"$root/by_hash", q0,
           s"$resPath/$t0Name", k, ef, chunkRows = 50000)

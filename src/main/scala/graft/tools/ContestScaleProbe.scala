@@ -209,10 +209,6 @@ object ContestScaleProbe {
         t0Mode, base, queries, k, ef, nprobe = t0Nprobe)
       else ef
     val t0Name = if (t0Mode == "ivf") "t0_ivf" else "t0"
-    // GRAFT_CONTEST_T0_BATCH=chunk keeps the query-major feed for A/B
-    // (ContestRun's switch — same default: list-major reads each blob
-    // once per batch instead of once per 50k slice)
-    val t0Batch = sys.env.getOrElse("GRAFT_CONTEST_T0_BATCH", "listmajor")
     // "override" marks an A/B stamp: GRAFT_CONTEST_NPROBE/IVF_EF runs
     // measure a deliberately off-tuned operating point, and the
     // existence-union below must never average such a cache into a
@@ -222,24 +218,20 @@ object ContestScaleProbe {
         sys.env.contains("GRAFT_CONTEST_IVF_EF")) " override" else ""
     val t0Params =
       if (t0Mode == "ivf")
-        s"$searchParams nprobe=$t0Nprobe ivfef=$t0Ef batch=$t0Batch$t0Override"
+        s"$searchParams nprobe=$t0Nprobe ivfef=$t0Ef$t0Override"
       else searchParams
     if (armOn("t0") && !freshFor(s"$outPath/$t0Name", t0Params)) timed(s"search_type0_$t0Mode") {
-      // 50k chunks: per-chunk agg state (one bounded top-k heap per qid
-      // per bucket task) is the heap high-water mark of the whole probe
       val q0 = queries.filter(col("qtype") === 0).select(col("qid"), col("qvec"))
-      if (t0Mode == "ivf" && t0Batch == "listmajor") {
+      // the ivf arm is LIST-major: each blob is read once per batch
+      if (t0Mode == "ivf")
         AnnIndexStore.searchIvfListMajorTo(spark, s"$root/by_ivf", q0,
           s"$outPath/$t0Name", k, t0Ef, nprobe = t0Nprobe)
-      } else {
-        (if (t0Mode == "ivf")
-          AnnIndexStore.searchIvfChunked(spark, s"$root/by_ivf", q0, k, t0Ef,
-            nprobe = t0Nprobe, chunkRows = 50000)
-        else
-          AnnIndexStore.searchChunked(spark, s"$root/by_hash", q0, k, ef,
-            chunkRows = 50000))
+      else
+        // 50k chunks: per-chunk agg state (one bounded top-k heap per
+        // qid per bucket task) is the heap high-water mark of the probe
+        AnnIndexStore.searchChunked(spark, s"$root/by_hash", q0, k, ef,
+            chunkRows = 50000)
           .write.mode("overwrite").parquet(s"$outPath/$t0Name")
-      }
       stamp(s"$outPath/$t0Name", t0Params)
     }
     if (!skipT1 && !freshFor(s"$outPath/t1", searchParams)) timed("search_type1_label") {

@@ -151,7 +151,7 @@ object AnnCatalog {
   def clear(): Unit = {
     registry.clear(); attrCache.clear(); centroidCache.clear()
     nullFreeCache.clear(); nprobeCache.clear()
-    AnnTopKExec.clearScanFrames()
+    graft.index.AnnIndexStore.clearStoreFrames()
     AnnTopKExec.clearPlacements()
   }
 
@@ -832,47 +832,6 @@ object AnnTopKExec extends org.apache.spark.internal.Logging {
     }
   }
 
-  /** Run `walk` over every (pred-matching) row of the store and merge
-    * the global top-k, ascending (dist, id).
-    *
-    * Versioned store (stamped by [[graft.index.AnnIndexStore]] writers):
-    *   pass 1 scans ONLY (bucket, sub) — no blob bytes — and walks rows
-    *   the executor's [[graft.index.ServingCache]] already holds under
-    *   (path, version, bucket, sub); rows it doesn't are recorded in a
-    *   collection accumulator. Pass 2 (cold rows only, pruned to their
-    *   buckets) reads the blobs, deserializes into the cache, and walks.
-    *   A fully warm statement is pass 1 alone — the read-on-hit tax the
-    *   fingerprint-keyed cache paid per statement is gone. A store
-    *   swapped mid-statement is detected by re-reading the version after
-    *   the passes (write-time tokens are unique) and the statement
-    *   retries against the new generation — entries keyed under a
-    *   superseded token are never read again and age out of the LRU.
-    *
-    * Unversioned store (legacy layout, or a writer that died between
-    * the parquet commit and the stamp): one full blob scan through
-    * [[HnswIndex.fromBytesCached]] — the content fingerprint can never
-    * serve stale bytes, just slower. */
-  // Driver-side scan-frame cache: `spark.read.parquet` pays a file
-  // listing + footer schema inference PER STATEMENT on the serving hot
-  // path. A planned frame is immutable, so it is cached per
-  // (session, path, version) — the write-time version token is the
-  // invalidation key (a maintenance swap bumps it, so superseded
-  // entries are simply never read again). Only VERSIONED stores cache:
-  // an unversioned store's files can change with no detectable signal,
-  // so it re-lists per statement — and a version-swap RETRY re-lists
-  // too (its new token misses), so a retry can never re-read the
-  // pre-swap file listing. Keyed by the SESSION OBJECT (identity
-  // equality) — a hash surrogate could alias two sessions and hand one
-  // a frame bound to the other's session state. Eviction: stale tokens
-  // are unordered UUIDs with nothing to age by, so hygiene is
-  // size-bounded — at the cap, frames of stopped sessions are dropped
-  // first, then the map clears wholesale (a re-warm is one listing per
-  // store). `AnnCatalog.clear()` clears this too.
-  private val scanFrames = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), org.apache.spark.sql.DataFrame]
-
-  private[graft] def clearScanFrames(): Unit = scanFrames.clear()
-
   private[graft] def clearPlacements(): Unit = placements.synchronized {
     placements.clear(); placementEntries.set(0)
   }
@@ -916,9 +875,9 @@ object AnnTopKExec extends org.apache.spark.internal.Logging {
   // and the emission overwrites the placement — self-healing, results
   // identical by construction. Inert under local[*] masters (one JVM,
   // nothing to place) and disableable via -Dgraft.serving.localityAware
-  // =false. Keyed by (session, path, version) like scanFrames: the
-  // version token protects against a rebuilt store, and the SESSION key
-  // protects against a restarted SparkContext at the same store version
+  // =false. Keyed by (session, path, version): the version token
+  // protects against a rebuilt store, and the SESSION key protects
+  // against a restarted SparkContext at the same store version
   // — old placements name that context's executor ids, and scheduling
   // a fresh cluster's tasks toward dead executors would cost the
   // locality wait on every chunk until misses re-teach the map.
@@ -1067,28 +1026,26 @@ object AnnTopKExec extends org.apache.spark.internal.Logging {
   private def placedMaxItems: Int =
     Integer.getInteger("graft.serving.placedMaxItems", 4096)
 
-  /** `dataPath` is the store's RESOLVED data dir (the current
-    * generation for flipped stores) — the frame scans it, while the
-    * cache stays keyed by the logical path + version (the version token
-    * is unique per write, so one key can never name two layouts). */
-  private def scanFrame(spark: SparkSession, path: String,
-      ver: Option[String], dataPath: String): org.apache.spark.sql.DataFrame = ver match {
-    case None => spark.read.parquet(dataPath)
-    case Some(v) =>
-      val key = (spark, path, v)
-      val hit = scanFrames.get(key)
-      if (hit != null) hit
-      else {
-        if (scanFrames.size() >= 256) {
-          scanFrames.keySet.removeIf(_._1.sparkContext.isStopped)
-          if (scanFrames.size() >= 256) scanFrames.clear()
-        }
-        val df = spark.read.parquet(dataPath)
-        val race = scanFrames.putIfAbsent(key, df)
-        if (race != null) race else df
-      }
-  }
-
+  /** Run `walk` over every (pred-matching) row of the store and merge
+    * the global top-k, ascending (dist, id).
+    *
+    * Versioned store (stamped by [[graft.index.AnnIndexStore]] writers):
+    *   pass 1 scans ONLY (bucket, sub) — no blob bytes — and walks rows
+    *   the executor's [[graft.index.ServingCache]] already holds under
+    *   (path, version, bucket, sub); rows it doesn't are recorded in a
+    *   collection accumulator. Pass 2 (cold rows only, pruned to their
+    *   buckets) reads the blobs, deserializes into the cache, and walks.
+    *   A fully warm statement is pass 1 alone — the read-on-hit tax the
+    *   fingerprint-keyed cache paid per statement is gone. A store
+    *   swapped mid-statement is detected by re-reading the version after
+    *   the passes (write-time tokens are unique) and the statement
+    *   retries against the new generation — entries keyed under a
+    *   superseded token are never read again and age out of the LRU.
+    *
+    * Unversioned store (legacy layout, or a writer that died between
+    * the parquet commit and the stamp): one full blob scan through
+    * [[HnswIndex.fromBytesCached]] — the content fingerprint can never
+    * serve stale bytes, just slower. */
   private def searchStore(spark: SparkSession, path: String,
       pred: Option[org.apache.spark.sql.Column], walk: Walk,
       k: Int, subdir: Option[String] = None): Array[(Long, Double)] = {
@@ -1097,7 +1054,9 @@ object AnnTopKExec extends org.apache.spark.internal.Logging {
     val ord = Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
 
     def onePass(ver: Option[String], dataPath: String): Array[(Double, Long)] = {
-      val df0 = scanFrame(spark, path, ver, dataPath)
+      // the shared store-frame cache, validated against THIS pass's
+      // token — the executor cache below keys its entries on it
+      val df0 = graft.index.AnnIndexStore.storeFrame(spark, dataPath, ver)
       val df = pred.map(df0.filter).getOrElse(df0)
       val subCol = (if (df.columns.contains("sub")) col("sub") else lit(0))
         .cast("int").as("sub")

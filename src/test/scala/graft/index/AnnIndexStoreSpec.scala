@@ -716,7 +716,7 @@ class AnnIndexStoreSpec extends SparkSpec {
     } finally System.clearProperty("graft.eftuner.maxBytes")
   }
 
-  test("searchChunkedTo / searchIvfChunkedTo write the searchChunked result set") {
+  test("searchChunkedTo / searchIvfListMajorTo equal the chunked result sets") {
     val base = Seq.tabulate(900)(i => (i.toLong, vec())).toDF("id", "vec")
     val queries = Seq.tabulate(11)(i => (i.toLong, vec())).toDF("qid", "qvec")
     val root = Files.createTempDirectory("graft-annstore-to").toString
@@ -734,11 +734,8 @@ class AnnIndexStoreSpec extends SparkSpec {
     AnnIndexStore.buildIvf(base, s"$root/by_ivf", nlist = 4)
     val ivfMem = AnnIndexStore.searchIvfChunked(spark, s"$root/by_ivf", queries,
       k = 5, ef = 128, nprobe = 2, chunkRows = 4)
-    AnnIndexStore.searchIvfChunkedTo(spark, s"$root/by_ivf", queries,
-      s"$root/t0_ivf", k = 5, ef = 128, nprobe = 2, chunkRows = 4)
-    assert(set(spark.read.parquet(s"$root/t0_ivf")) == set(ivfMem))
 
-    // list-major batch form: same result set as the query-major paths —
+    // list-major batch form: same result set as the query-major path —
     // (a) default bound: the whole batch fits one group, every blob
     // read once; (b) a bound tiny enough that every list overflows it,
     // driving both the multi-group packing AND the hot-list slice path
@@ -751,6 +748,14 @@ class AnnIndexStoreSpec extends SparkSpec {
     assert(set(spark.read.parquet(s"$root/t0_lm_tiny")) == set(ivfMem))
     assert(!new java.io.File(s"$root/t0_lm_tiny.cand.tmp").exists(),
       "candidate staging dir must be cleaned up after the merge")
+    // ... and after a failure between staging and the merge
+    AnnIndexStore.crashHook = p => if (p == "listmajor.staged") sys.error(p)
+    try intercept[RuntimeException] {
+      AnnIndexStore.searchIvfListMajorTo(spark, s"$root/by_ivf", queries,
+        s"$root/t0_lm_fail", k = 5, ef = 128, nprobe = 2, groupBytes = 500)
+    } finally AnnIndexStore.crashHook = _ => ()
+    assert(!new java.io.File(s"$root/t0_lm_fail.cand.tmp").exists(),
+      "a failed merge must not leave candidate staging behind")
   }
 
   test("decile ANN join: range predicate holds, recall >= 0.85 vs exact") {

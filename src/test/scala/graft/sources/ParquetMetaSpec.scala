@@ -2,7 +2,7 @@ package graft.sources
 
 import java.nio.file.Files
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.graft.JobRecorder
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -14,20 +14,8 @@ class ParquetMetaSpec extends SparkSpec {
   private def tmpDir(prefix: String): String =
     Files.createTempDirectory(prefix).toFile.getAbsolutePath
 
-  private def countJobs(body: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(s: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      // the listener bus is async (and private): give any submitted
-      // job's start event ample time to be delivered before reading
-      Thread.sleep(500)
-    } finally spark.sparkContext.removeSparkListener(l)
-    jobs.get()
-  }
+  private def countJobs(body: => Unit): Int =
+    JobRecorder.record(spark.sparkContext)(body).jobs.size
 
   test("rowCount matches Spark count on a flat directory, with zero jobs") {
     import spark.implicits._
