@@ -24,13 +24,10 @@ object GraftConf {
     */
   val TopKAggFallbackKeys = 8192
 
-  /** Apply engine session defaults to a builder.
-    * `GRAFT_TOPK_FALLBACK_KEYS` overrides the threshold (A/B knob: the
-    * raised default changes ObjectHashAggregate behavior for EVERY
-    * object aggregate in the session, not just the bounded top-k heaps
-    * it was sized for — bisectable per run). */
+  /** Apply engine session defaults to a builder. The raised threshold
+    * changes ObjectHashAggregate behavior for EVERY object aggregate in
+    * the session, not just the bounded top-k heaps it was sized for. */
   def tuned(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-      sys.env.getOrElse("GRAFT_TOPK_FALLBACK_KEYS",
-        TopKAggFallbackKeys.toString))
+      TopKAggFallbackKeys.toString)
 }

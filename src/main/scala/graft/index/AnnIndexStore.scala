@@ -814,50 +814,6 @@ object AnnIndexStore {
     searchByBatch(spark, s"$store/lists", qByBucket, k, ef)
   }
 
-  /** Chunked [[searchIvf]] for query batches too large to hold on the
-    * driver at once: streams `chunkRows`-sized slices through
-    * `toLocalIterator` (the [[searchChunked]] pattern), routes each
-    * slice to its `nprobe` nearest centroid lists driver-side (the
-    * centroid table is already driver-resident; nlist·dim flops per
-    * query ≈1 s per 100k chunk at nlist=128 dim=100), and unions the
-    * eagerly-materialized per-chunk results. Peak driver memory is one
-    * chunk, independent of total batch size. */
-  def searchIvfChunked(spark: SparkSession, path: String, queries: DataFrame,
-      k: Int, ef: Int = 200, nprobe: Int = AutoNprobe,
-      chunkRows: Int = 100000): DataFrame = {
-    import spark.implicits._
-    val store = resolveStore(path)
-    val cents = loadCentroidsCached(spark, store)
-    val np = math.min(resolveNprobe(path, nprobe), cents.length)
-    val results = queryChunks(queries, chunkRows).map { chunk =>
-      val qByBucket = chunk.iterator.flatMap { case (qid, qvec) =>
-        nearestLists(cents, np, qvec).iterator.map(l => (l, (qid, qvec)))
-      }.toArray.groupBy(_._1).map { case (b, xs) => (b, xs.map(_._2)) }
-      searchByBatch(spark, s"$store/lists", qByBucket, k, ef).localCheckpoint(eager = true)
-    }.toSeq
-    if (results.isEmpty) spark.emptyDataset[(Long, Long, Long)].toDF("qid", "rank", "nid")
-    else results.reduce(_.unionByName(_))
-  }
-
-  /** Driver-side centroid routing: the `np` nearest list ids for one
-    * query via a bounded max-heap (drain order irrelevant — the
-    * per-list candidates merge through the bounded top-k downstream). */
-  private def nearestLists(cents: Array[Array[Float]], np: Int,
-      q: Array[Float]): Array[Long] = {
-    val heap = new scala.collection.mutable.PriorityQueue[(Double, Int)]()(Ordering.by(_._1))
-    var li = 0
-    while (li < cents.length) {
-      val c = cents(li)
-      var d = 0.0
-      var i = 0
-      while (i < c.length) { val t = q(i) - c(i); d += t * t; i += 1 }
-      if (heap.size < np) heap.enqueue((d, li))
-      else if (d < heap.head._1) { heap.dequeue(); heap.enqueue((d, li)) }
-      li += 1
-    }
-    heap.iterator.map((p: (Double, Int)) => p._2.toLong).toArray
-  }
-
   /** Per-assignment broadcast footprint estimate for the list-major
     * grouping: dim floats + array header + the (qid, vec) tuple and
     * boxing overhead. Deliberately generous — over-estimating splits
@@ -876,10 +832,9 @@ object AnnIndexStore {
   /** LIST-MAJOR batched [[searchIvf]]: reads each probed list's blob
     * exactly ONCE per batch, however large the batch.
     *
-    * The chunked form is QUERY-major — every `chunkRows` slice re-scans
-    * ~all probed lists, so a B-chunk batch reads the store ~B times
-    * (the 30M ladder measured ~70 GB of blob reloads against a 14 GB
-    * store). This is the reference's own locality order inverted into
+    * A QUERY-major chunked feed re-scans ~all probed lists per slice,
+    * so a B-chunk batch reads the store ~B times (the 30M ladder
+    * measured ~70 GB of blob reloads against a 14 GB store). This is the reference's own locality order inverted into
     * the batch loop: its per-category search iterates INDEX-major for
     * exactly this reason (hybrid_graph.cpp:239-298). Here:
     *
@@ -910,8 +865,8 @@ object AnnIndexStore {
     * skew) degrades gracefully: its group streams query slices at the
     * bound, re-reading just that one blob per slice — amplification
     * proportional to the skew, never to the batch. Results are
-    * bit-identical to [[searchIvfChunked]] (same walks, same (dist, id)
-    * merge order). */
+    * bit-identical to the one-shot [[searchIvf]] (same walks, same
+    * (dist, id) merge order). */
   def searchIvfListMajorTo(spark: SparkSession, path: String, queries: DataFrame,
       outPath: String, k: Int, ef: Int = 200, nprobe: Int = AutoNprobe,
       groupBytes: Long = DefaultGroupBytes): Unit = {
@@ -1304,45 +1259,13 @@ object AnnIndexStore {
     * broadcast query batch; bounded top-k merge. (qid, rank, nid).
     *
     * The query batch is broadcast-sized by contract (the contest shape,
-    * 1M × ~420 B ≈ 420 MB, fits a broadcast); batches beyond that go
-    * through [[searchChunked]], which never materializes the full batch
-    * on the driver. */
+    * 1M × ~420 B ≈ 420 MB, fits a broadcast). */
   def search(spark: SparkSession, path: String, queries: DataFrame,
       k: Int, ef: Int = 200): DataFrame = {
     val qBatch = queries.select(col("qid").cast("long"), col("qvec"))
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
     searchBatch(spark, path, qBatch, k, ef)
   }
-
-  /** Chunked search for query batches too large to hold on the driver
-    * at once: streams the batch through `toLocalIterator` in
-    * `chunkRows`-sized slices, broadcasts one slice at a time (each
-    * chunk's result is eagerly materialized, so the previous broadcast
-    * is unreferenced before the next is built), and unions the
-    * per-chunk results. Peak driver memory is one chunk + one
-    * partition, independent of total batch size. */
-  def searchChunked(spark: SparkSession, path: String, queries: DataFrame,
-      k: Int, ef: Int = 200, chunkRows: Int = 100000): DataFrame = {
-    import spark.implicits._
-    val results = queryChunks(queries, chunkRows).map { chunk =>
-      // materialize this chunk's results so its broadcast can be freed
-      searchBatch(spark, path, chunk, k, ef).localCheckpoint(eager = true)
-    }.toSeq
-    if (results.isEmpty) spark.emptyDataset[(Long, Long, Long)].toDF("qid", "rank", "nid")
-    else results.reduce(_.unionByName(_))
-  }
-
-  /** [[searchChunked]] that streams each chunk's (qid, rank, nid)
-    * result straight to parquet instead of holding every chunk as a
-    * localCheckpoint block: nothing accumulates in the block manager
-    * between chunks, and the run's peak footprint is one chunk's plan.
-    * Chunks append into a `.tmp` staging dir promoted by rename at the
-    * end, so a crash mid-sequence never leaves a _SUCCESS-marked
-    * partial result for a resume guard to trust. */
-  def searchChunkedTo(spark: SparkSession, path: String, queries: DataFrame,
-      outPath: String, k: Int, ef: Int = 200, chunkRows: Int = 100000): Unit =
-    writeChunkedResults(spark, outPath,
-      queryChunks(queries, chunkRows).map(chunk => searchBatch(spark, path, chunk, k, ef)))
 
   /** Driver-streamed `chunkRows`-sized query slices — peak driver
     * memory is one chunk, independent of total batch size. */

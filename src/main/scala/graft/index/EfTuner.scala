@@ -414,7 +414,7 @@ object EfTuner {
     * sample selection (the first 32 type-2 query vectors — range
     * queries exercise exactly the banded arms being tuned) and the
     * recall bar (0.999, the lifecycle gate's own), so ContestRun and
-    * ContestScaleProbe cannot drift apart. Tunes and persists the
+    * the benchmark's contest setup cannot drift apart. Tunes and persists the
     * `_ef_bands` sidecar unless the store already has one TUNED UNDER
     * THE SAME (k, ef) — the table is a function of those args, and a
     * k/ef sweep reusing the previous parameters' bands would feed the

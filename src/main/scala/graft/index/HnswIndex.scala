@@ -703,27 +703,24 @@ final class HnswIndex(
             // chain-cut disallowed neighbor is dropped either way, and
             // checking the predicate first both skips its distance AND
             // leaves the bounded visit budget for allowed nodes. That
-            // budget reallocation is the measured win (EdgeTsProbe,
-            // 300k rows, ef=150): recall@10 at coverage 0.02/0.10/0.30
-            // rises 0.52→0.84 / 0.69→0.83 / 0.74→0.78 at equal budget,
-            // for 0.5–0.9× the q/s — strictly better recall-per-visit.
+            // budget reallocation is the measured win (edge-ts A/B at
+            // d1af3fe, 300k rows, ef=150): recall@10 at coverage
+            // 0.02/0.10/0.30 rises 0.52→0.84 / 0.69→0.83 / 0.74→0.78 at
+            // equal budget, for 0.5–0.9× the q/s — strictly better
+            // recall-per-visit. Chains that have wandered maxHops nodes
+            // deep into the disallowed region are cut here (they can
+            // still be reached again through a shorter chain only if
+            // unseen — the reference accepts the same first-touch
+            // approximation).
             val ok = allowed(nb)
             val nbHops: Byte = if (ok) 0 else (cHops + 1).toByte
-            if (HnswIndex.prefilterDisallowed && !(ok || nbHops <= maxHops)) {
-              // cut before paying the distance
-            } else {
+            if (ok || nbHops <= maxHops) {
               val d = qdistTo(qc, nb)
               visits += 1
               if (!res.isFull || d < res.worstDist) {
-                // cut chains that have wandered maxHops nodes deep into
-                // the disallowed region (they can still be reached again
-                // through a shorter chain only if unseen — the reference
-                // accepts the same first-touch approximation)
-                if (ok || nbHops <= maxHops) {
-                  cand.push(d, nb)
-                  if (useHops) hops(nb) = nbHops
-                  if (ok) res.offer(d, nb)
-                }
+                cand.push(d, nb)
+                if (useHops) hops(nb) = nbHops
+                if (ok) res.offer(d, nb)
               }
             }
           }
@@ -872,16 +869,6 @@ object HnswIndex {
   // naming it makes the no-capture contract explicit and checkable
   private[index] val newWalkScratch: java.util.function.Supplier[WalkScratch] =
     () => new WalkScratch
-
-  /** Check the in-filter predicate BEFORE the distance on chain-cut
-    * neighbors (the reference's edge-ts-first order,
-    * searcher.hpp:343-344). Not merely a cost move: dropped neighbors
-    * no longer consume the visit budget, which the EdgeTsProbe A/B
-    * measured as a large recall-per-budget win at low coverage
-    * (recall@10 0.52→0.84 at coverage 0.02, equal budget). Default on;
-    * the toggle exists so the A/B stays reproducible. */
-  @volatile var prefilterDisallowed: Boolean =
-    java.lang.Boolean.parseBoolean(System.getProperty("graft.hnsw.prefilter", "true"))
 
   /** Shared empty upper-level slot for level-0-only nodes (~15/16 of
     * all nodes at m=16) — avoids one array allocation per insert. */

@@ -26,8 +26,7 @@ import org.apache.spark.sql.functions._
   * by contract); larger batches stream through `toLocalIterator` in
   * `chunkRows`-sized slices, each slice executed and eagerly
   * materialized before the next is read — peak driver memory is one
-  * slice, independent of total batch size (the same bounded-feed shape
-  * as `AnnIndexStore.searchChunked`). Per-qid top-k makes slices
+  * slice, independent of total batch size. Per-qid top-k makes slices
   * independent, so the union is exact.
   */
 object HybridKnn {

@@ -393,8 +393,8 @@ object ApproxQueries {
     // `ORDER BY l2_sq LIMIT k` statements as ann_sql_topk, but the
     // registration carries a seeded-IVF index, so the planner's type-0
     // route reads only the query's nprobe nearest lists instead of
-    // walking every hash bucket (the 100-TB serving shape; IvfScaleProbe
-    // measured 3.3× at the contest point). Seeded centroids make list
+    // walking every hash bucket (the 100-TB serving shape; IvfScaleProbe,
+    // deleted after 8b7c77f, measured 3.3× at the contest point). Seeded centroids make list
     // membership — and therefore the nprobe-limited candidate set —
     // exactly replayable by the DuckDB oracle: this is hash-checked
     // APPROXIMATE serving, not recall-floored.

@@ -16,10 +16,9 @@ package graft.tools
   *     {0.01, 0.05, 0.1, 0.3}, category values drawn with the same u²
   *     skew as the base labels.
   *
-  * One definition keeps `ContestScaleProbe` (parquet lifecycle) and
-  * `ContestRun` (binary lifecycle, io.h formats) row-for-row twins: the
-  * same (id, label, ts, vec) stream feeds both, so their recall and
-  * stage walls are directly comparable.
+  * One definition feeds `ContestRun`'s gen mode (binary lifecycle,
+  * io.h formats) and the benchmark's contest inputs, so their recall
+  * and stage walls are directly comparable.
   */
 object ContestCorpus {
 

@@ -32,85 +32,4 @@ private[tools] object ProbeHarness {
   def stamp(dir: String, params: String): Unit =
     java.nio.file.Files.write(
       new java.io.File(dir, "_stage_params").toPath, params.getBytes("UTF-8"))
-
-  /** ONE definition of the lifecycle tools' tune-once protocols
-    * (ContestRun + ContestScaleProbe): a hand-maintained copy in each
-    * tool would let the bar/ladder/logging silently diverge between
-    * the two tools' receipts the day one is edited. */
-
-  /** Fingerprint of a store's SERVED `_ef_bands` table ("default" when
-    * no sidecar): banded stages' stamps carry it, because a bands
-    * re-tune (protocol bump, store rebuild) changes dispatch and
-    * therefore result rows — a bare k/ef stamp would keep serving the
-    * pre-bump cache while the receipts print the new BANDS line. ONE
-    * definition for both lifecycle tools. */
-  def bandsTag(store: String): String =
-    graft.index.AnnIndexStore.efBandsOf(store)
-      .map(b => java.lang.Long.toHexString(
-        scala.util.hashing.MurmurHash3.stringHash(b.serialize).toLong & 0xffffffffL))
-      .getOrElse("default")
-
-  /** Band tune-once: reuse policy lives in
-    * [[graft.index.EfTuner.tuneAndPersistBands]]; the stage line
-    * prints only when a tune actually ran, so resumed runs' stage
-    * records stay comparable across rounds. */
-  def tuneBandsOnce(spark: org.apache.spark.sql.SparkSession, store: String,
-      tag: String, queries: org.apache.spark.sql.DataFrame,
-      k: Int, ef: Int): Unit = {
-    val t0 = System.nanoTime()
-    graft.index.EfTuner.tuneAndPersistBands(spark, store, queries, k, ef).foreach { b =>
-      println(f"STAGE tune_bands_$tag: ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      println(s"BANDS $tag: ${b.serialize.linesIterator.mkString(" ")}")
-    }
-  }
-
-  /** nprobe for the type-0 arm: `GRAFT_CONTEST_NPROBE` is the explicit
-    * A/B override; the ivf arm otherwise tunes-once
-    * ([[graft.index.EfTuner.tuneAndPersistNprobe]]) and serves the
-    * store's `_nprobe` sidecar; the hash arm does not probe. */
-  def tunedNprobe(spark: org.apache.spark.sql.SparkSession, ivfStore: String,
-      t0Mode: String, queries: org.apache.spark.sql.DataFrame,
-      k: Int, ef: Int): Int =
-    sys.env.get("GRAFT_CONTEST_NPROBE").map(_.toInt).getOrElse {
-      if (t0Mode == "ivf") {
-        val t0 = System.nanoTime()
-        graft.index.EfTuner.tuneAndPersistNprobe(spark, ivfStore, queries, k, ef)
-          .foreach { r =>
-            println(f"STAGE tune_nprobe: ${(System.nanoTime() - t0) / 1e9}%.1f s")
-            println(s"NPROBE chosen=${r.chosen} " +
-              r.rungs.map(x => f"${x.nprobe}:${x.recall}%.4f").mkString(" "))
-          }
-        graft.index.AnnIndexStore.resolveNprobe(ivfStore,
-          graft.index.AnnIndexStore.AutoNprobe)
-      } else graft.index.AnnIndexStore.DefaultNprobe
-    }
-
-  /** Walk ef for the type-0 ivf arm: `GRAFT_CONTEST_IVF_EF` is the
-    * explicit A/B override; otherwise tune-once
-    * ([[graft.index.EfTuner.tuneAndPersistIvfEf]]) at the store's
-    * tuned nprobe and serve the `_ivf_ef` sidecar. The hash arm (and a
-    * store left untuned by an empty sample) keeps the CLI ef — the
-    * pre-tuner behavior, never a silent new default. Call AFTER
-    * [[tunedNprobe]] and pass ITS result as `nprobe`: the knobs
-    * compose in that order (routing first, then the walk absorbs the
-    * residual loss), and an nprobe A/B override (GRAFT_CONTEST_NPROBE)
-    * must tune the walk ef at the OVERRIDDEN probe count — the
-    * operating point the search actually serves. */
-  def tunedIvfEf(spark: org.apache.spark.sql.SparkSession, ivfStore: String,
-      t0Mode: String, base: org.apache.spark.sql.DataFrame,
-      queries: org.apache.spark.sql.DataFrame, k: Int, cliEf: Int,
-      nprobe: Int): Int =
-    sys.env.get("GRAFT_CONTEST_IVF_EF").map(_.toInt).getOrElse {
-      if (t0Mode == "ivf") {
-        val t0 = System.nanoTime()
-        graft.index.EfTuner.tuneAndPersistIvfEf(spark, ivfStore, base, queries, k,
-            nprobe = nprobe)
-          .foreach { r =>
-            println(f"STAGE tune_ivf_ef: ${(System.nanoTime() - t0) / 1e9}%.1f s")
-            println(s"IVFEF chosen=${r.chosenEf} " +
-              r.rungs.map(x => f"${x.ef}:${x.recall}%.4f").mkString(" "))
-          }
-        graft.index.AnnIndexStore.ivfEfOf(ivfStore).getOrElse(cliEf)
-      } else cliEf
-    }
 }

@@ -74,8 +74,8 @@ object AnnCatalog {
   /** `ivfIndex` (a [[graft.index.AnnIndexStore.buildIvf]]/`buildIvfSeeded`
     * root holding `centroids` + `lists`) upgrades the UNFILTERED route:
     * instead of walking every hash bucket (B× walk amplification —
-    * IvfScaleProbe measured centroid routing 3.3× faster at the 10M×250k
-    * contest point), the statement's query vector picks its `nprobe`
+    * IvfScaleProbe, deleted after 8b7c77f, measured centroid routing
+    * 3.3× faster at the 10M×250k contest point), the statement's query vector picks its `nprobe`
     * nearest centroids driver-side and only those lists are read and
     * walked — the reference's "don't scan what routing can skip"
     * (hybrid_graph.cpp:306-333). `nprobe` is the per-registration
@@ -1009,7 +1009,7 @@ object AnnTopKExec extends org.apache.spark.internal.Logging {
 
   /** Cumulative warm-pass attribution counters, so a locality
     * regression shows in the gate bench's `serving_diag` (per-route
-    * deltas) rather than only in LocalityServingProbe reruns. Under
+    * deltas) rather than only in a local-cluster probe rerun. Under
     * `local[*]` the placed branch is unreachable by design, so the
     * bench records placed=0 there — that reading means "inert-local",
     * not "regressed". */

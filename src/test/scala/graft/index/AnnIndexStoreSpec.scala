@@ -39,10 +39,6 @@ class AnnIndexStoreSpec extends SparkSpec {
         .withColumn("l", lit(0.0)).withColumn("r", lit(0.0)), 10)
     val recall = AnnJoin.recallAtK(r1, exact)
     assert(recall >= 0.9, s"recall $recall")
-    // chunked form (3 chunks of 4) is row-identical to the one-shot form
-    val rc = AnnIndexStore.searchChunked(spark, dir, queries, k = 10, ef = 128, chunkRows = 4)
-    val sc = rc.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(sc == s1)
     // ef tuning against the REAL stored sub-index (largest bucket):
     // deterministic, monotone-measured, passes its target on this corpus
     val qs = Seq.tabulate(25)(_ => vec()).toArray
@@ -498,12 +494,6 @@ class AnnIndexStoreSpec extends SparkSpec {
     val res2 = AnnIndexStore.searchIvf(spark, dir, queries, k = 10, ef = 200, nprobe = 2)
     assert(res2.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet ==
       res.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet)
-    // chunked variant (driver-side centroid routing): same answers at a
-    // chunk size that forces several slices
-    val chunked = AnnIndexStore.searchIvfChunked(spark, dir, queries,
-      k = 10, ef = 200, nprobe = 2, chunkRows = 3)
-    assert(chunked.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet ==
-      res.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet)
   }
 
   test("buildIvfPqSeeded/searchIvfPq: stored route ≡ in-memory IVF-PQ; codes scan prunes to probed lists") {
@@ -716,36 +706,28 @@ class AnnIndexStoreSpec extends SparkSpec {
     } finally System.clearProperty("graft.eftuner.maxBytes")
   }
 
-  test("searchChunkedTo / searchIvfListMajorTo equal the chunked result sets") {
+  test("searchIvfListMajorTo equals searchIvf at both group bounds") {
     val base = Seq.tabulate(900)(i => (i.toLong, vec())).toDF("id", "vec")
     val queries = Seq.tabulate(11)(i => (i.toLong, vec())).toDF("qid", "qvec")
     val root = Files.createTempDirectory("graft-annstore-to").toString
-    AnnIndexStore.build(base, s"$root/by_hash", numBuckets = 3)
-    val inMem = AnnIndexStore.searchChunked(spark, s"$root/by_hash", queries,
-      k = 5, ef = 128, chunkRows = 4)
-    AnnIndexStore.searchChunkedTo(spark, s"$root/by_hash", queries,
-      s"$root/t0", k = 5, ef = 128, chunkRows = 4)
-    assert(new java.io.File(s"$root/t0/_SUCCESS").exists())
-    val onDisk = spark.read.parquet(s"$root/t0")
     def set(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(set(onDisk) == set(inMem))
-
     AnnIndexStore.buildIvf(base, s"$root/by_ivf", nlist = 4)
-    val ivfMem = AnnIndexStore.searchIvfChunked(spark, s"$root/by_ivf", queries,
-      k = 5, ef = 128, nprobe = 2, chunkRows = 4)
+    val oneShot = set(AnnIndexStore.searchIvf(spark, s"$root/by_ivf", queries,
+      k = 5, ef = 128, nprobe = 2))
 
-    // list-major batch form: same result set as the query-major path —
+    // list-major batch form: same result set as the one-shot search —
     // (a) default bound: the whole batch fits one group, every blob
     // read once; (b) a bound tiny enough that every list overflows it,
     // driving both the multi-group packing AND the hot-list slice path
     // (per-group partial top-k rows merged by the global rankTopK)
     AnnIndexStore.searchIvfListMajorTo(spark, s"$root/by_ivf", queries,
       s"$root/t0_lm", k = 5, ef = 128, nprobe = 2)
-    assert(set(spark.read.parquet(s"$root/t0_lm")) == set(ivfMem))
+    assert(new java.io.File(s"$root/t0_lm/_SUCCESS").exists())
+    assert(set(spark.read.parquet(s"$root/t0_lm")) == oneShot)
     AnnIndexStore.searchIvfListMajorTo(spark, s"$root/by_ivf", queries,
       s"$root/t0_lm_tiny", k = 5, ef = 128, nprobe = 2, groupBytes = 500)
-    assert(set(spark.read.parquet(s"$root/t0_lm_tiny")) == set(ivfMem))
+    assert(set(spark.read.parquet(s"$root/t0_lm_tiny")) == oneShot)
     assert(!new java.io.File(s"$root/t0_lm_tiny.cand.tmp").exists(),
       "candidate staging dir must be cleaned up after the merge")
     // ... and after a failure between staging and the merge
