@@ -64,7 +64,7 @@ object TextFunctions {
     // equivalent `aggregate(toks, 0L, (acc, t) => acc +
     // (pmod(hash60(pmod(hash60(t, 131), dim).cast("string"), 137),
     // 2001) - 1000))` — value-identical (spec + DuckDB oracle pin it);
-    // A/B in tools/KernelBench
+    // A/B in tools/KernelBench (tool deleted after 77313f2)
     ExprBridge.column(org.apache.spark.sql.graft.ClassifierMilliSum(
       ExprBridge.expression(toks), dim))
 

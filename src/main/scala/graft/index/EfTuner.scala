@@ -52,11 +52,12 @@ object EfTuner {
     * scan streams with hardware prefetch). Measured, not assumed:
     * WalkMicro's per-eval section on the 6M t2 store's bucket-3
     * sub-graph (ns/eval ratio, coverage 0.10-0.75 — see BASELINE.md
-    * round 14). A CODE constant rather than a per-store measurement so
-    * the crossover tuner stays deterministic (gate-pinnable): the
-    * ratio is a property of the eval loops and the hardware class, not
-    * of store content — across the measured coverages it moved far
-    * less than the eval-count curves the tuner derives per store.
+    * round 14; tool deleted after 77313f2). A CODE constant rather
+    * than a per-store measurement so the crossover tuner stays
+    * deterministic (gate-pinnable): the ratio is a property of the
+    * eval loops and the hardware class, not of store content — across
+    * the measured coverages it moved far less than the eval-count
+    * curves the tuner derives per store.
     * Measured on the 30M ladder's by_range150 bucket-3 sub-graph
     * (99,894 rows, dim 100): walk 187-311 ns/eval vs scan 30-38
     * ns/eval → ratio 4.9-9.0 across coverage 0.10-0.75, ≈6.7 in the
@@ -338,13 +339,13 @@ object EfTuner {
     // O(10k)). [[ScanPerEvalAdvantage]] converts eval counts to wall:
     // the scan's sequential evals are that factor cheaper than the
     // walk's random-access + heap-bookkeeping evals (measured,
-    // WalkMicro). The chosen threshold is the FIRST ladder rung where
-    // the walk's converted work undercuts the scan's — below it the
-    // slice is scanned, at/above it walked; scan-wins-everywhere emits
-    // the ladder max, walk-wins-everywhere the ladder min (a sliver
-    // scan region always remains — the boosted walk's 1/cover ef
-    // growth guarantees a scan-favored regime exists at some scale,
-    // and the measurement, not the prior, decides where).
+    // WalkMicro, tool deleted after 77313f2). The chosen threshold is
+    // the FIRST ladder rung where the walk's converted work undercuts
+    // the scan's — below it the slice is scanned, at/above it walked;
+    // scan-wins-everywhere emits the ladder max, walk-wins-everywhere
+    // the ladder min (a sliver scan region always remains — the boosted
+    // walk's 1/cover ef growth guarantees a scan-favored regime exists
+    // at some scale, and the measurement, not the prior, decides where).
     val fp32W = 4.0
     // PASS-1 cap, tuned at the default binding bands (the brute line
     // is not known yet): the crossover sweep below must price the walk

@@ -196,19 +196,22 @@ object Multimodal {
     if (bytes == null || bytes.isEmpty) return None
     // Container-magic pre-filter (r15): every format the JDK's built-in
     // providers decode opens with one of these four-byte magics (WAVE =
-    // "RIFF", AIFF/AIFF-C = "FORM", AU = ".snd" — each reader checks it
-    // first and throws otherwise), so a payload without them can never
-    // decode and the provider walk is skipped. On a mixed corpus the
-    // NON-audio case is the common one, and each failed
-    // getAudioInputStream costs a per-provider header probe plus a
-    // filled-in UnsupportedAudioFileException per row. Value-identical
-    // by the readers' own magic checks (MultimodalSpec's real WAV still
-    // decodes; non-audio rows returned None before and after).
+    // "RIFF", AIFF/AIFF-C = "FORM", AU = ".snd", and Standard MIDI =
+    // "MThd", which SoftMidiAudioFileReader renders to 44.1 kHz stereo
+    // PCM — each reader checks its magic first and throws otherwise),
+    // so a payload without them can never decode and the provider walk
+    // is skipped. On a mixed corpus the NON-audio case is the common
+    // one, and each failed getAudioInputStream costs a per-provider
+    // header probe plus a filled-in UnsupportedAudioFileException per
+    // row. Value-identical only while this list holds the magic of
+    // every built-in reader (MultimodalSpec decodes a real WAV and a
+    // real MIDI file; non-audio rows return None either way).
     if (bytes.length < 4) return None
     val magicOk =
       (bytes(0) == 'R' && bytes(1) == 'I' && bytes(2) == 'F' && bytes(3) == 'F') ||
       (bytes(0) == 'F' && bytes(1) == 'O' && bytes(2) == 'R' && bytes(3) == 'M') ||
-      (bytes(0) == '.' && bytes(1) == 's' && bytes(2) == 'n' && bytes(3) == 'd')
+      (bytes(0) == '.' && bytes(1) == 's' && bytes(2) == 'n' && bytes(3) == 'd') ||
+      (bytes(0) == 'M' && bytes(1) == 'T' && bytes(2) == 'h' && bytes(3) == 'd')
     if (!magicOk) return None
     try {
       import javax.sound.sampled.{AudioFormat, AudioSystem}

@@ -18,7 +18,7 @@ import graft.sources.ParquetMeta
   * the storage analog of the reference's sorted replicas (`utils.h:
   * 352-479`): reorganize once, serve many — except here the payoff is
   * Catalyst planning `SortMergeJoin` with no `Exchange` and no `Sort`
-  * on either side ([[graft.tools.PlanAudit]]-checked in BucketingSpec).
+  * on either side (plan shape checked in BucketingSpec).
   *
   * Scale notes, encoded in the writer:
   *   - `repartition(buckets, key)` BEFORE `bucketBy` — without it every

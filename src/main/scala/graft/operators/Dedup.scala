@@ -44,12 +44,6 @@ object Dedup {
         min(col(idCol)).cast("long").as("rep_doc_id"),
         count(lit(1)).as("dup_count"))
 
-  /** Probe-only alias of [[explodedShingles]] for the optimization
-    * micro-benches (tools/MicroProbe) — not a query-path API. */
-  def explodedShinglesForProbe(df: DataFrame, idCol: String, textCol: String,
-      shingleSize: Int): DataFrame =
-    explodedShingles(df, idCol, textCol, shingleSize)
-
   /** Distinct (id, shingle, n = doc's distinct-shingle count) rows — the
     * inverted-index input. Typed flatMap, not composed HOF expressions:
     * Catalyst performs no CSE inside lambda bodies, so the expression
@@ -88,7 +82,8 @@ object Dedup {
     // a driver collect + hash-relation build per mine. Sort-merge on the
     // co-partitioned cache is exchange-free either way and measured
     // 2.1× faster than the broadcast plan on the gate corpus (r14
-    // MicroProbe: join stage 1.94 s BHJ / 1.44 s SHJ / 0.93 s SMJ) —
+    // MicroProbe, tool deleted after 77313f2: join stage 1.94 s BHJ /
+    // 1.44 s SHJ / 0.93 s SMJ) —
     // and it is the only strategy of the three that stays spill-safe on
     // a hot-shingle corpus at scale.
     ex.as("a").join(ex.as("b").hint("merge"),
@@ -157,21 +152,6 @@ object Dedup {
       jaccardPrefixPairs(df, idCol, textCol, shingleSize, minJaccard)
     else
       jaccardShinglePairs(df, idCol, textCol, shingleSize, minJaccard)
-
-  /** Diagnostic postings profile of the inverted-index miner's join key:
-    * (distinct shingles, total postings, Σp² join rows, max posting) —
-    * the Σp² term is the quadratic hot-shingle cost the prefix route
-    * avoids. Probe-only (one small agg job); not on any query path. */
-  def jaccardPostingsProfile(df: DataFrame, idCol: String, textCol: String,
-      shingleSize: Int): Array[Long] = {
-    val r = explodedShingles(df, idCol, textCol, shingleSize)
-      .groupBy("sh").agg(count(lit(1)).as("p"))
-      .agg(count(lit(1)), coalesce(sum(col("p")), lit(0L)),
-        coalesce(sum(col("p") * col("p")), lit(0L)),
-        coalesce(max(col("p")), lit(0L)))
-      .collect()(0)
-    Array(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
-  }
 
   /** Per-doc MinHash signature (array<long> of length numHashes); docs
     * with no shingles are dropped. One md5 per distinct shingle +

@@ -9,9 +9,9 @@ import org.apache.spark.sql.DataFrame
   * scan is ONE split however many cores exist (parquet cannot split
   * below a row group), so every scan-rooted distance loop ran in one
   * task (measured r14: `neardup_cosine`'s 2M-pair loop = 1.0 s in one
-  * task on a 32-core session). Below `-Dgraft.small.parallelizeBytes`
-  * (default 64 MB — the "cheap to shuffle outright" regime) the input
-  * is round-robined across `defaultParallelism`; above it, unchanged —
+  * task on a 32-core session). Below [[ParallelizeBytes]] (64 MB —
+  * the "cheap to shuffle outright" regime) the input is round-robined
+  * across `defaultParallelism`; above it, unchanged —
   * big inputs split at the file/row-group level anyway, and shuffling a
   * corpus-sized table to "parallelize" it would be the exact
   * anti-pattern the operators' never-shuffle-the-base contracts forbid.
@@ -26,11 +26,10 @@ import org.apache.spark.sql.DataFrame
   * were reverted to their stream shapes. Don't re-apply blindly. */
 object SmallBase {
 
-  private def bound: Long =
-    java.lang.Long.getLong("graft.small.parallelizeBytes", 64L << 20)
+  private val ParallelizeBytes: Long = 64L << 20
 
   def parallelize(df: DataFrame): DataFrame =
-    if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(bound))
+    if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(ParallelizeBytes))
       df.repartition(df.sparkSession.sparkContext.defaultParallelism)
     else df
 }

@@ -52,9 +52,7 @@ object ApproxQueries {
     * selection would tune the two gates on different samples with no
     * error. Sorted by vec_id so the sample is independent of
     * partition/file enumeration order. */
-  // shared with tools/NprobeProbe: the probe's "receipts behind the
-  // sidecar's choice" must measure the SAME sample the gate pins
-  private[graft] def stridedSample(s: SparkSession, dir: String,
+  private def stridedSample(s: SparkSession, dir: String,
       maxSample: Long): Array[Array[Float]] = {
     val n = graft.sources.ParquetMeta.rowCount(s, s"$dir/embeddings.parquet")
     val stride = math.max(1L, (n + maxSample - 1) / maxSample)
@@ -948,9 +946,9 @@ object ApproxQueries {
     // shipping a hand-set nprobe that silently drops recall — the
     // DEFENSIVE half of the knob). The interior-choice half is
     // measured on the clustered 10M k-means store (BASELINE.md round
-    // 13, NprobeProbe ladder). Teeth: chosen-rung recall floor,
-    // double-run determinism, `_nprobe` sidecar round-trip into the
-    // AutoNprobe serving resolution.
+    // 13, NprobeProbe ladder; tool deleted after 77313f2). Teeth:
+    // chosen-rung recall floor, double-run determinism, `_nprobe`
+    // sidecar round-trip into the AutoNprobe serving resolution.
     "ann_nprobe_tune" ->
       """SELECT CAST(nprobe AS BIGINT) AS nprobe, CAST(chosen AS BIGINT) AS chosen
         |FROM (VALUES (1, 0), (2, 0), (4, 0), (8, 0), (16, 1))

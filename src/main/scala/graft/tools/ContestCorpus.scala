@@ -52,9 +52,6 @@ object ContestCorpus {
 
   private val widths = Array(0.01, 0.05, 0.1, 0.3)
 
-  /** Range width of query width-class `w` (0-3) — probe labeling hook. */
-  def widthOf(w: Int): Double = widths(w)
-
   /** Query row `i → (qtype, v, l, r, qvec)` with the reference's -1
     * sentinels for fields a type does not use (utils.h:491-548). */
   def queryRow(i: Long): (Int, Long, Double, Double, Array[Float]) = {

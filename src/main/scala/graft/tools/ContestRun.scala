@@ -11,7 +11,6 @@ import org.apache.spark.sql.functions._
 import graft.index.{AnnIndexStore, EfTuner}
 import graft.operators.{AnnJoin, HybridKnn, KnnJoin, Selectivity}
 import graft.sources.ContestBinaryIO
-import graft.tools.ProbeHarness.{freshFor, stamp}
 
 /** The contest lifecycle end-to-end over the contest's own BINARY
   * formats — the Spark equivalent of the reference's `hybrid_search`
@@ -181,6 +180,33 @@ object ContestRun {
   private def stageRoot(basePath: String): String =
     "/tmp/graft_contest_bin_" +
       s"${new File(basePath).getName.replace('.', '_')}_${new File(basePath).length()}"
+
+  /** Stage-cache validity guard. The lifecycle resumes off `/tmp`
+    * parquet caches so a crash or code iteration only repays unfinished
+    * stages — but a cached stage's output is valid ONLY under the
+    * parameters that produced it; an `exists(_SUCCESS)` check that
+    * omits a result-changing argument (k, ef, nprobe) silently reports
+    * the PREVIOUS run's rows under the new run's labels.
+    *
+    * [[freshFor]] returns true only when the stage dir's `_SUCCESS`
+    * exists AND its recorded `_stage_params` sidecar equals `params`;
+    * anything else (including a legacy cache with no sidecar) deletes
+    * the stale dir so the caller rebuilds and [[stamp]]s. The sidecar
+    * is underscore-prefixed — invisible to parquet reads of the stage
+    * dir. */
+  private def freshFor(dir: String, params: String): Boolean = {
+    val d = new File(dir)
+    val ok = new File(d, "_SUCCESS").exists() && {
+      val f = new File(d, "_stage_params")
+      f.exists() &&
+        new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8") == params
+    }
+    if (!ok && d.exists()) graft.sources.ParquetMeta.deleteRecursively(d)
+    ok
+  }
+
+  private def stamp(dir: String, params: String): Unit =
+    java.nio.file.Files.write(new File(dir, "_stage_params").toPath, params.getBytes("UTF-8"))
 
   /** The scale lifecycle on the caller's session; every stage caches
     * under `root` and resumes. One arm per query type — the ones the

@@ -7,9 +7,10 @@ import org.apache.spark.sql.SparkSession
 
 /** Dumps `.explain("formatted")` for every declared query (or a named
   * subset) to one file per query — the optimization-round evidence trail
-  * (plans/r14/<query>_<tag>.txt). Unlike PlanAudit (stdout, curated
-  * subset) this captures the complete surface so before/after plan diffs
-  * are checkable without running Spark.
+  * (plans/r14/<query>_<tag>.txt). It captures the complete surface, or
+  * a curated subset (PlanAudit, tool deleted after 77313f2, printed one
+  * to stdout), so before/after plan diffs are checkable without running
+  * Spark.
   *
   * Usage: runMain graft.tools.PlanDump <sfDir> <outDir> <tag> [q1,q2,...]
   */

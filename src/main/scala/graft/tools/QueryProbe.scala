@@ -9,11 +9,17 @@ import scala.collection.mutable
   * each named query `reps` times under the bench's session shape and
   * reports wall, Spark job count, stage count, task count, and
   * cumulative task time — the measure-first numbers that tell overhead
-  * (many tiny jobs / stages) apart from compute (task seconds).
+  * (many tiny jobs / stages) apart from compute (task seconds). Under
+  * each rep's line it lists every job with its wall and call site, so
+  * the collect/write/agg that owns each of a query's jobs is named —
+  * including a count() or probe that runs at plan-build time and never
+  * appears in the final plan.
   *
   * Usage: runMain graft.tools.QueryProbe <sfDir> <reps> [q1,q2,...]
   */
 object QueryProbe {
+  private final case class Job(id: Int, site: String, t0: Long, var ms: Long = -1L)
+
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val reps = if (args.length > 1) args(1).toInt else 2
@@ -30,25 +36,22 @@ object QueryProbe {
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(100000).selectExpr("sum(id)").collect()
 
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val stages = new java.util.concurrent.atomic.AtomicInteger(0)
     val tasks = new java.util.concurrent.atomic.AtomicInteger(0)
     val taskMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    val jobWall = mutable.ArrayBuffer.empty[(Int, Long)]
-    val jobStartNs = mutable.HashMap.empty[Int, Long]
+    val trace = mutable.LinkedHashMap.empty[Int, Job]
     spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(s: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet()
-        jobStartNs.synchronized { jobStartNs(s.jobId) = System.nanoTime() }
+      override def onJobStart(s: SparkListenerJobStart): Unit = trace.synchronized {
+        // the result stage's name is the job's short call site when no
+        // caller set the callSite.short property
+        val site = Option(s.properties)
+          .flatMap(p => Option(p.getProperty("callSite.short")))
+          .orElse(s.stageInfos.sortBy(_.stageId).lastOption.map(_.name))
+          .getOrElse("?")
+        trace(s.jobId) = Job(s.jobId, site, System.nanoTime())
       }
-      override def onJobEnd(s: SparkListenerJobEnd): Unit = {
-        jobStartNs.synchronized {
-          jobStartNs.remove(s.jobId).foreach { t0 =>
-            jobWall.synchronized {
-              jobWall += ((s.jobId, (System.nanoTime() - t0) / 1000000))
-            }
-          }
-        }
+      override def onJobEnd(s: SparkListenerJobEnd): Unit = trace.synchronized {
+        trace.get(s.jobId).foreach(j => j.ms = (System.nanoTime() - j.t0) / 1000000)
       }
       override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
         stages.incrementAndGet()
@@ -63,19 +66,18 @@ object QueryProbe {
 
     names.foreach { name =>
       (1 to reps).foreach { rep =>
-        jobs.set(0); stages.set(0); tasks.set(0); taskMs.set(0L)
-        jobWall.synchronized(jobWall.clear())
+        stages.set(0); tasks.set(0); taskMs.set(0L)
+        trace.synchronized(trace.clear())
         val t0 = System.nanoTime()
         val n = graft.SparkEntry.queries(name)(spark, dir).count()
         val wall = (System.nanoTime() - t0) / 1e9
         graft.operators.CacheRegistry.releaseAll(blocking = true)
         Thread.sleep(400) // async listener drain
-        val jw = jobWall.synchronized(jobWall.toSeq)
-        val slow = jw.sortBy(-_._2).take(8)
-          .map { case (id, ms) => s"j$id=${ms}ms" }.mkString(" ")
+        val jobs = trace.synchronized(trace.values.toList)
         println(f"PROBE $name%-24s rep$rep wall=$wall%7.3f s  " +
-          f"jobs=${jobs.get()}%3d stages=${stages.get()}%3d " +
-          f"tasks=${tasks.get()}%4d taskSum=${taskMs.get()}%6d ms rows=$n  slowest: $slow")
+          f"jobs=${jobs.size}%3d stages=${stages.get()}%3d " +
+          f"tasks=${tasks.get()}%4d taskSum=${taskMs.get()}%6d ms rows=$n")
+        jobs.foreach(j => println(f"  j${j.id}%-4d ${j.ms}%6d ms  ${j.site}"))
       }
       System.gc()
     }

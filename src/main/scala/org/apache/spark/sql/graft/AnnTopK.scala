@@ -1023,8 +1023,7 @@ object AnnTopKExec extends org.apache.spark.internal.Logging {
     * unfiltered hash route — past the cap the statement falls to the
     * scan path, whose file-split scheduling is the right shape for a
     * work list that large anyway. */
-  private def placedMaxItems: Int =
-    Integer.getInteger("graft.serving.placedMaxItems", 4096)
+  private val PlacedMaxItems = 4096
 
   /** Run `walk` over every (pred-matching) row of the store and merge
     * the global top-k, ascending (dist, id).
@@ -1118,7 +1117,7 @@ object AnnTopKExec extends org.apache.spark.internal.Logging {
         // over an unexpectedly large work list is caught by the
         // limit(cap+1) collect — either way the statement falls to
         // the scan path, never an unbounded driver collect.
-        val cap = AnnTopKExec.placedMaxItems
+        val cap = AnnTopKExec.PlacedMaxItems
         // the O(1) size pre-check only applies to UNFILTERED statements,
         // where work list = every store row ⊇ the learned placements
         // (placed.size() > cap proves the list exceeds the cap without

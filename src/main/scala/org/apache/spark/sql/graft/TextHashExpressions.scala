@@ -230,7 +230,7 @@ case class ArrayEqCount(left: Expression, right: Expression)
   * time, exactly the broadcast-weights serving shape). Value-identical
   * to the HOF composition in
   * [[graft.functions.TextFunctions.classifierScoreMilli]]'s scaladoc;
-  * the A/B lives in `tools/ClassifierBench` (1.8× at 2M docs with both arms warmed — md5 dominates both; the removed cost is the per-token lambda machinery). */
+  * the A/B lived in `tools/ClassifierBench`, tool deleted after 77313f2 (1.8× at 2M docs with both arms warmed — md5 dominates both; the removed cost is the per-token lambda machinery). */
 case class ClassifierMilliSum(child: Expression, dim: Int)
     extends UnaryExpression with ExpectsInputTypes {
   override def prettyName: String = "classifier_milli_sum"
@@ -280,8 +280,8 @@ case class ClassifierMilliSum(child: Expression, dim: Int)
   * copy per executor, exactly a broadcast variable's distribution for
   * a plan-resident table), and row time is one md5 + one array read
   * per token — identical to the hash-derived twin, so the A/B in
-  * `tools/ClassifierBench` measures the serving-cost question
-  * directly. Same null semantics, same kernel
+  * `tools/ClassifierBench` (tool deleted after 77313f2) measured the
+  * serving-cost question directly. Same null semantics, same kernel
   * ([[TextHashUtil.classifierMilliSum]]). `dim` = weights.length. */
 case class ClassifierMilliSumWeights(child: Expression, weights: Seq[Long])
     extends UnaryExpression with ExpectsInputTypes {

@@ -125,6 +125,23 @@ class MultimodalSpec extends SparkSpec {
     assert(f3 == Multimodal.decodeFeaturesStub("not-audio".getBytes).toSeq)
   }
 
+  test("real MIDI decode: a Standard MIDI File renders through the JDK synth") {
+    // format 0, one track, 96 ticks per quarter; the track holds one
+    // note on, its note off a quarter later, and end-of-track
+    val smf = Array[Int](
+      'M', 'T', 'h', 'd', 0, 0, 0, 6, 0, 0, 0, 1, 0, 96,
+      'M', 'T', 'r', 'k', 0, 0, 0, 12,
+      0x00, 0x90, 60, 100,
+      0x60, 0x80, 60, 0,
+      0x00, 0xff, 0x2f, 0x00).map(_.toByte)
+    val decoded = Multimodal.decodeAudioFeatures(smf)
+    assert(decoded.isDefined)
+    val (ms, rate, channels, features) = decoded.get
+    assert(channels == 2 && rate == 44100)
+    assert(math.abs(ms - 4000L) <= 100L, s"duration $ms ms")
+    assert(features.length == Multimodal.FeatureDim)
+  }
+
   test("withFeatures routes decodable audio through the real kernel") {
     val tone = wav(0.2, 8000f, 1, freq = 220, amp = 0.3)
     val rows = Seq((0L, tone), (1L, "plain text".getBytes)).toDF("media_id", "bytes")

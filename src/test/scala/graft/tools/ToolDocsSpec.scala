@@ -1,0 +1,35 @@
+package graft.tools
+
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Doc-drift guard: every `runMain graft.<Name>` command the docs hand a
+  * reader must name a main that still exists, so deleting or renaming a
+  * tool without updating the docs fails here instead of in a reader's
+  * shell. */
+class ToolDocsSpec extends AnyFunSuite {
+
+  private val docs = Seq("README.md", ".claude/skills/verify/SKILL.md", "PLANS.md")
+  private val RunMain = """runMain\s+(graft\.[A-Za-z0-9_.]+)""".r
+
+  test("every runMain class named in the docs loads and has a main") {
+    val named = docs.flatMap { doc =>
+      val text = new String(Files.readAllBytes(Paths.get(doc)), StandardCharsets.UTF_8)
+      RunMain.findAllMatchIn(text).map(m => doc -> m.group(1).stripSuffix("."))
+    }
+    val classes = named.map(_._2).distinct
+    assert(classes.size >= 5, s"only ${classes.size} runMain commands found in $docs")
+    val broken = named.filterNot { case (_, cls) =>
+      try {
+        Class.forName(cls, false, getClass.getClassLoader)
+          .getMethod("main", classOf[Array[String]])
+        true
+      } catch {
+        case _: ClassNotFoundException | _: NoSuchMethodException => false
+      }
+    }
+    assert(broken.isEmpty, s"docs name mains that do not exist: ${broken.mkString(", ")}")
+  }
+}
