@@ -274,18 +274,15 @@ object Dedup {
     * sequential passes STACK their shuffle files (~14 GB each at 100M
     * docs) and re-fill the scratch the banding split exists to
     * protect. The pause gives the (async, blocking-per-item) cleaner
-    * thread time to unlink before the next pass allocates.
-    * GRAFT_BAND_PASS_GC_MS tunes the pause (0 disables both the gc and
-    * the sleep — also the escape hatch for JVMs running
-    * -XX:+DisableExplicitGC, where System.gc() is a no-op and an
-    * external cleaner cadence must be trusted instead). */
+    * thread time to unlink before the next pass allocates. Under
+    * -XX:+DisableExplicitGC the gc is a no-op and the cleaner's own
+    * cadence must be trusted instead. */
   private def releasePassShuffles(): Unit = {
-    val ms = sys.env.get("GRAFT_BAND_PASS_GC_MS").map(_.toLong).getOrElse(2000L)
-    if (ms > 0) {
-      System.gc()
-      Thread.sleep(ms)
-    }
+    System.gc()
+    Thread.sleep(PassGcPauseMs)
   }
+
+  private val PassGcPauseMs = 2000L
 
   /** Per-doc SimHash fingerprint over distinct-token hashes: (doc_id, simhash). */
   def simhashFingerprints(df: DataFrame, idCol: String, textCol: String,

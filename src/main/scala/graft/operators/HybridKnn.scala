@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
   */
 object HybridKnn {
 
-  private[operators] type RoutedRow = (Long, Int, Long, Double, Double, Array[Float], String)
+  private type RoutedRow = (Long, Int, Long, Double, Double, Array[Float], String)
 
   /** (qid, rank, nid) flat results for the full 4-type query batch. */
   def execute(base: DataFrame, queries: DataFrame, k: Int,
@@ -88,7 +88,7 @@ object HybridKnn {
   // this array — one driver job instead of one per route, the query side
   // of every sub-plan becomes a LocalRelation, and empty routes plan
   // nothing at all.
-  private[operators] def executeBatch(base: DataFrame, routed: Array[RoutedRow], k: Int,
+  private def executeBatch(base: DataFrame, routed: Array[RoutedRow], k: Int,
       categoryLayout: Option[DataFrame],
       ann: Boolean, annEf: Int, annBuckets: Int): DataFrame = {
     val spark = base.sparkSession

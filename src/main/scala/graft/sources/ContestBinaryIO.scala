@@ -1,101 +1,114 @@
 package graft.sources
 
-import java.io.{BufferedInputStream, DataOutputStream, FileInputStream, FileOutputStream}
+import java.io.{DataOutputStream, File, FileOutputStream, RandomAccessFile}
 import java.nio.{ByteBuffer, ByteOrder}
+import java.nio.channels.FileChannel
+import java.nio.file.{Paths, StandardOpenOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Sources/sinks for the contest's little-endian binary formats
+/** Reads and writes the contest's little-endian binary formats
   * (FIXTURES.md §1; reference io.h:40-62 ReadBin, utils.h:257-276
   * ReadBase, utils.h:491-548 ReadQuery, io.h:22-33 SaveKNN).
   *
-  * Reads are distributed: the file is split into contiguous row ranges,
-  * one per partition; each task streams its byte range independently —
-  * the same pattern works on any shared filesystem. Row ids are the file
-  * ordinals, assigned arithmetically (no shuffle, no zipWithIndex).
+  * Reads go through the one row decoder, the `contest-bin` DataSource V2
+  * ([[ContestBinarySource]]): engine-planned contiguous row ranges, one
+  * per partition, ids assigned from the file ordinal. Writes of the input
+  * formats go through one positioned parallel writer; only the row
+  * encoders differ between base and query files.
   */
 object ContestBinaryIO {
-
-  // ONE header reader, shared with the V2 source: the count is uint32,
-  // and a signed getInt would wrap a file with N > Int.MaxValue into a
-  // negative bound — spark.range(0, n<0) silently yields an EMPTY
-  // DataFrame, data loss with no error at exactly the scale this repo
-  // targets. ContestBinarySource.readHeader reads it unsigned.
-  private def readHeader(path: String): Long =
-    ContestBinarySource.readHeader(path)
-
-  /** ONE definition of the per-partition row-range streamer readBase
-    * and readQueries share (skip to the partition's first row, fixed
-    * rowBytes records, short-read retry, close at exhaustion) — only
-    * the record decode differs. `skip` can legally return 0 before
-    * EOF; the require fails loudly instead of spinning. */
-  private def streamRows[T](path: String, rowBytes: Int,
-      ids: Array[Long])(decode: (Long, ByteBuffer) => T): Iterator[T] = {
-    if (ids.isEmpty) return Iterator.empty
-    val in = new BufferedInputStream(new FileInputStream(path), 1 << 20)
-    var skipped = 0L
-    val target = 4L + ids.head * rowBytes
-    while (skipped < target) {
-      val s = in.skip(target - skipped)
-      require(s > 0, s"skip stalled at $skipped/$target in $path")
-      skipped += s
-    }
-    val buf = new Array[Byte](rowBytes)
-    val out = ids.iterator.map { id =>
-      var off = 0
-      while (off < rowBytes) {
-        val r = in.read(buf, off, rowBytes - off)
-        require(r > 0, s"short read at row $id")
-        off += r
-      }
-      decode(id, ByteBuffer.wrap(buf).order(ByteOrder.LITTLE_ENDIAN))
-    }
-    new Iterator[T] {
-      def hasNext: Boolean = { val h = out.hasNext; if (!h) in.close(); h }
-      def next(): T = out.next()
-    }
-  }
 
   /** Base table: (id LONG, label LONG, ts DOUBLE, vec ARRAY<FLOAT>).
     * File layout: uint32 N; N × (label f32, ts f32, vec f32[dim]). */
   def readBase(spark: SparkSession, path: String, dim: Int = 100,
-      numPartitions: Int = 32): DataFrame = {
-    import spark.implicits._
-    val n = readHeader(path)
-    val rowBytes = (2 + dim) * 4
-    spark.range(0, n, 1, numPartitions)
-      .mapPartitions { it =>
-        streamRows(path, rowBytes, it.map(_.toLong).toArray) { (id, bb) =>
-          val label = bb.getFloat.toLong
-          val ts = bb.getFloat.toDouble
-          val vec = Array.fill(dim)(bb.getFloat)
-          (id, label, ts, vec)
-        }
-      }
-      .toDF("id", "label", "ts", "vec")
-  }
+      numPartitions: Int = 32): DataFrame =
+    read(spark, "base", path, dim, numPartitions)
 
   /** Query table: (qid LONG, qtype INT, v LONG, l DOUBLE, r DOUBLE,
     * qvec ARRAY<FLOAT>). File: uint32 NQ; NQ × (type f32, v f32, l f32,
     * r f32, vec f32[dim]). The reference's -1 sentinels are preserved. */
   def readQueries(spark: SparkSession, path: String, dim: Int = 100,
-      numPartitions: Int = 8): DataFrame = {
-    import spark.implicits._
-    val n = readHeader(path)
-    val rowBytes = (4 + dim) * 4
-    spark.range(0, n, 1, numPartitions)
-      .mapPartitions { it =>
-        streamRows(path, rowBytes, it.map(_.toLong).toArray) { (id, bb) =>
-          val qtype = bb.getFloat.toInt
-          val v = bb.getFloat.toLong
-          val l = bb.getFloat.toDouble
-          val r = bb.getFloat.toDouble
-          val vec = Array.fill(dim)(bb.getFloat)
-          (id, qtype, v, l, r, vec)
+      numPartitions: Int = 8): DataFrame =
+    read(spark, "query", path, dim, numPartitions)
+
+  private def read(spark: SparkSession, kind: String, path: String, dim: Int,
+      numPartitions: Int): DataFrame =
+    spark.read.format("contest-bin").option("kind", kind).option("dim", dim)
+      .option("partitions", numPartitions).load(path)
+
+  /** Writes `n` base rows, row `id` = `row(id)` = (label, ts, vec[dim]),
+    * in the base layout `readBase` reads. */
+  def writeBase(spark: SparkSession, path: String, n: Long, dim: Int, parts: Int)(
+      row: Long => (Long, Double, Array[Float])): Unit =
+    writeBinaryParallel(spark, path, n, dim, 2, parts) { (id, bb) =>
+      val (label, ts, vec) = row(id)
+      bb.putFloat(label.toFloat); bb.putFloat(ts.toFloat)
+      putVec(bb, vec, dim)
+    }
+
+  /** Writes `nq` query rows, row `i` = `row(i)` = (type, v, l, r,
+    * vec[dim]) with -1 for unused fields, in the layout `readQueries`
+    * reads. */
+  def writeQueries(spark: SparkSession, path: String, nq: Long, dim: Int, parts: Int)(
+      row: Long => (Int, Long, Double, Double, Array[Float])): Unit =
+    writeBinaryParallel(spark, path, nq, dim, 4, parts) { (i, bb) =>
+      val (qtype, v, l, r, qvec) = row(i)
+      bb.putFloat(qtype.toFloat); bb.putFloat(v.toFloat)
+      bb.putFloat(l.toFloat); bb.putFloat(r.toFloat)
+      putVec(bb, qvec, dim)
+    }
+
+  private def putVec(bb: ByteBuffer, vec: Array[Float], dim: Int): Unit = {
+    require(vec.length == dim, s"vector of ${vec.length} floats, file dim is $dim")
+    var d = 0
+    while (d < dim) { bb.putFloat(vec(d)); d += 1 }
+  }
+
+  /** Rows/flush buffer: 4096 rows ≈ 1.6 MB base / 1.7 MB query at dim 100. */
+  private val flushRows = 4096
+
+  /** Each task fills a contiguous row range of the pre-sized file with
+    * positioned writes — no coordination, no shuffle; ids are ordinals.
+    * On a real cluster each range would be a part-object on shared
+    * storage concatenated by manifest, same layout. */
+  private def writeBinaryParallel(spark: SparkSession, path: String, n: Long, dim: Int,
+      metaFloats: Int, parts: Int)(fill: (Long, ByteBuffer) => Unit): Unit = {
+    require(n <= Int.MaxValue, s"contest header is uint32: n=$n")
+    val rowBytes = (metaFloats + dim) * 4
+    Option(new File(path).getParentFile).foreach(_.mkdirs())
+    val raf = new RandomAccessFile(path, "rw")
+    try {
+      raf.setLength(4L + n * rowBytes)
+      val hb = ByteBuffer.allocate(4).order(ByteOrder.LITTLE_ENDIAN)
+      hb.putInt(n.toInt)
+      raf.seek(0); raf.write(hb.array())
+    } finally raf.close()
+    val rows = spark.range(0, n, 1, parts).rdd.mapPartitions { it =>
+      val ch = FileChannel.open(Paths.get(path), StandardOpenOption.WRITE)
+      try {
+        val buf = ByteBuffer.allocate(rowBytes * flushRows).order(ByteOrder.LITTLE_ENDIAN)
+        var bufStart = -1L // first id currently buffered
+        var count = 0L
+        def flush(): Unit = if (buf.position() > 0) {
+          buf.flip()
+          var pos = 4L + bufStart * rowBytes
+          while (buf.hasRemaining) pos += ch.write(buf, pos)
+          buf.clear()
+          bufStart = -1L
         }
-      }
-      .toDF("qid", "qtype", "v", "l", "r", "qvec")
+        it.foreach { id =>
+          if (bufStart < 0) bufStart = id
+          fill(id, buf)
+          count += 1
+          if (!buf.hasRemaining) flush()
+        }
+        flush()
+        Iterator.single(count)
+      } finally ch.close()
+    }.fold(0L)(_ + _) // fold: a 0-row range has no partitions to reduce
+    require(rows == n, s"wrote $rows of $n rows")
   }
 
   /** Contest output sink (io.h:22-33): NQ × k uint32 neighbor ids, no
@@ -112,22 +125,6 @@ object ContestBinaryIO {
         val bb = ByteBuffer.allocate(4 * k).order(ByteOrder.LITTLE_ENDIAN)
         nb.take(k).foreach(x => bb.putInt(x.toInt))
         (nb.length until k).foreach(_ => bb.putInt(-1)) // pad when < k matches
-        out.write(bb.array())
-      }
-    } finally out.close()
-  }
-
-  /** Test/export helper: write a base DataFrame to the contest format. */
-  def writeBase(rows: Seq[(Long, Double, Array[Float])], path: String): Unit = {
-    val out = new DataOutputStream(new FileOutputStream(path))
-    try {
-      val h = ByteBuffer.allocate(4).order(ByteOrder.LITTLE_ENDIAN)
-      h.putInt(rows.length)
-      out.write(h.array())
-      rows.foreach { case (label, ts, vec) =>
-        val bb = ByteBuffer.allocate((2 + vec.length) * 4).order(ByteOrder.LITTLE_ENDIAN)
-        bb.putFloat(label.toFloat); bb.putFloat(ts.toFloat)
-        vec.foreach(bb.putFloat)
         out.write(bb.array())
       }
     } finally out.close()

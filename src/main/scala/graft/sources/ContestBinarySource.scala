@@ -14,13 +14,13 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** DataSource V2 for the contest's little-endian binary formats — the
-  * Spark-native form of [[ContestBinaryIO.readBase]]/`readQueries`
-  * (reference io.h:40-62 ReadBin, utils.h:257-276/491-548):
+  * one row decoder of the repo; [[ContestBinaryIO.readBase]]/`readQueries`
+  * are this source with `kind`, `dim` and `partitions` set (reference
+  * io.h:40-62 ReadBin, utils.h:257-276/491-548):
   *
   *   spark.read.format("contest-bin")
   *     .option("kind", "base" | "query").option("dim", 100).load(path)
   *
-  * What V2 buys over the mapPartitions reader:
   *   - **Column pruning at the scan.** The reference splits every base
   *     row into a metadata view and a vector view up front (utils.h:85,
   *     102-108 — F4); here Catalyst's pruned ReadSchema reaches the
@@ -31,10 +31,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *   - **Declared partitioning.** Row-range [[InputPartition]]s planned
   *     by the engine (one contiguous byte range each, same layout a
   *     1000-executor cluster would get as part-object ranges on shared
-  *     storage) instead of a `spark.range` piggyback.
+  *     storage).
   *
   * Row ids are file ordinals, assigned arithmetically from the range
-  * start — no shuffle, no zipWithIndex, identical to the V1 reader.
+  * start — no shuffle, no zipWithIndex. A file that holds fewer rows
+  * than its header declares fails the scan with "short read"; it never
+  * yields fewer rows.
   */
 class ContestBinarySource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "contest-bin"

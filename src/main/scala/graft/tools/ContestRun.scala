@@ -1,15 +1,12 @@
 package graft.tools
 
-import java.io.{File, RandomAccessFile}
-import java.nio.{ByteBuffer, ByteOrder}
-import java.nio.channels.FileChannel
-import java.nio.file.{Paths, StandardOpenOption}
+import java.io.File
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.index.{AnnIndexStore, EfTuner}
-import graft.operators.{AnnJoin, HybridKnn, KnnJoin, Selectivity}
+import graft.operators.{AnnJoin, KnnJoin, Selectivity}
 import graft.sources.ContestBinaryIO
 
 /** The contest lifecycle end-to-end over the contest's own BINARY
@@ -19,21 +16,13 @@ import graft.sources.ContestBinaryIO
   * score recall against the exact oracle (generate_groundtruth +
   * GetKNNRecall, utils.h:80-253).
   *
-  * Three modes:
-  *
-  *   runMain graft.tools.ContestRun [dataPath queryPath outPath k]
-  *     In-process composition on small inputs (defaults: the
-  *     reference's checked-in dummy 10k × 100 workload) — indexes are
-  *     built on the fly inside [[HybridKnn]], like the reference's
-  *     single binary.
+  * Two modes; the small case is `gen` followed by `scale`:
   *
   *   runMain graft.tools.ContestRun gen N NQ basePath queryPath
   *     Synthesize contest-format binaries at scale from the shared
   *     [[ContestCorpus]] (the same rows the benchmark's contest inputs
-  *     draw from). Partitions write disjoint row ranges of the pre-sized
-  *     file via positioned channel writes — single-node parallel; on a
-  *     real cluster each range would be a part-object on shared storage
-  *     concatenated by manifest, same layout.
+  *     draw from) through [[ContestBinaryIO.writeBase]]/`writeQueries`,
+  *     whose partitions write disjoint row ranges of the pre-sized file.
   *
   *   runMain graft.tools.ContestRun scale basePath queryPath outPath [k] [ef]
   *     The full-scale lifecycle (10M × 1M = the reference's "large"
@@ -61,26 +50,25 @@ object ContestRun {
     r
   }
 
+  private val Usage =
+    "usage: ContestRun gen N NQ basePath queryPath | " +
+      "ContestRun scale basePath queryPath outPath [k] [ef]"
+
   def main(args: Array[String]): Unit = args.headOption match {
-    case Some("gen") =>
-      val n = args(1).toLong
-      val nq = args(2).toLong
-      genBinaries(n, nq, args(3), args(4))
-    case Some("scale") =>
+    case Some("gen") if args.length == 5 =>
+      genBinaries(args(1).toLong, args(2).toLong, args(3), args(4))
+    case Some("scale") if args.length >= 4 && args.length <= 6 =>
       val k = if (args.length > 4) args(4).toInt else 100
       val ef = if (args.length > 5) args(5).toInt else 400
       val spark = scaleSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
       try runScale(spark, args(1), args(2), args(3), stageRoot(args(1)), k, ef)
       finally spark.stop()
-    case _ => runSmall(args)
+    case _ => throw new IllegalArgumentException(s"$Usage; got: ${args.mkString(" ")}")
   }
 
   // ---------------------------------------------------------------- gen
 
-  /** Rows/flush buffer: 4096 rows ≈ 1.6 MB base / 1.7 MB query. */
-  private val flushRows = 4096
-
-  def genBinaries(n: Long, nq: Long, basePath: String, queryPath: String): Unit = {
+  private def genBinaries(n: Long, nq: Long, basePath: String, queryPath: String): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = graft.GraftConf.tuned(SparkSession.builder())
       .master(s"local[$cpus]")
@@ -89,66 +77,16 @@ object ContestRun {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     timed("gen_base_bin") {
-      writeBinaryParallel(spark, basePath, n, (2 + ContestCorpus.dim) * 4, cpus * 4) {
-        (id, bb) =>
-          val (label, ts, vec) = ContestCorpus.baseRow(id)
-          bb.putFloat(label.toFloat); bb.putFloat(ts.toFloat)
-          var d = 0
-          while (d < vec.length) { bb.putFloat(vec(d)); d += 1 }
-      }
+      ContestBinaryIO.writeBase(spark, basePath, n, ContestCorpus.dim, cpus * 4)(
+        ContestCorpus.baseRow)
     }
     timed("gen_query_bin") {
-      writeBinaryParallel(spark, queryPath, nq, (4 + ContestCorpus.dim) * 4, cpus) {
-        (i, bb) =>
-          val (qtype, v, l, r, qvec) = ContestCorpus.queryRow(i)
-          bb.putFloat(qtype.toFloat); bb.putFloat(v.toFloat)
-          bb.putFloat(l.toFloat); bb.putFloat(r.toFloat)
-          var d = 0
-          while (d < qvec.length) { bb.putFloat(qvec(d)); d += 1 }
-      }
+      ContestBinaryIO.writeQueries(spark, queryPath, nq, ContestCorpus.dim, cpus)(
+        ContestCorpus.queryRow)
     }
     println(s"GEN: $basePath (${new File(basePath).length()} B), " +
       s"$queryPath (${new File(queryPath).length()} B)")
     spark.stop()
-  }
-
-  /** Each task fills a contiguous row range of the pre-sized file with
-    * positioned writes — no coordination, no shuffle; ids are ordinals. */
-  private[tools] def writeBinaryParallel(spark: SparkSession, path: String, n: Long,
-      rowBytes: Int, parts: Int)(fill: (Long, ByteBuffer) => Unit): Unit = {
-    require(n <= Int.MaxValue, s"contest header is uint32: n=$n")
-    Option(new File(path).getParentFile).foreach(_.mkdirs())
-    val raf = new RandomAccessFile(path, "rw")
-    try {
-      raf.setLength(4L + n * rowBytes)
-      val hb = ByteBuffer.allocate(4).order(ByteOrder.LITTLE_ENDIAN)
-      hb.putInt(n.toInt)
-      raf.seek(0); raf.write(hb.array())
-    } finally raf.close()
-    val rows = spark.range(0, n, 1, parts).rdd.mapPartitions { it =>
-      val ch = FileChannel.open(Paths.get(path), StandardOpenOption.WRITE)
-      try {
-        val buf = ByteBuffer.allocate(rowBytes * flushRows).order(ByteOrder.LITTLE_ENDIAN)
-        var bufStart = -1L // first id currently buffered
-        var count = 0L
-        def flush(): Unit = if (buf.position() > 0) {
-          buf.flip()
-          var pos = 4L + bufStart * rowBytes
-          while (buf.hasRemaining) pos += ch.write(buf, pos)
-          buf.clear()
-          bufStart = -1L
-        }
-        it.foreach { id =>
-          if (bufStart < 0) bufStart = id
-          fill(id, buf)
-          count += 1
-          if (!buf.hasRemaining || buf.position() + rowBytes > buf.capacity()) flush()
-        }
-        flush()
-        Iterator.single(count)
-      } finally ch.close()
-    }.reduce(_ + _)
-    require(rows == n, s"wrote $rows of $n rows")
   }
 
   // -------------------------------------------------------------- scale
@@ -434,59 +372,5 @@ object ContestRun {
         r.rungs.map(x => f"${x.ef}:${x.recall}%.4f").mkString(" ")
     }
     AnnIndexStore.ivfEfOf(ivfStore).getOrElse(cliEf)
-  }
-
-  // -------------------------------------------------------------- small
-
-  private def runSmall(args: Array[String]): Unit = {
-    val dataPath = if (args.length > 0) args(0) else "/root/reference/dummy-data.bin"
-    val queryPath = if (args.length > 1) args(1) else "/root/reference/dummy-queries.bin"
-    val outPath = if (args.length > 2) args(2) else "/tmp/graft_contest_output.bin"
-    val k = if (args.length > 3) args(3).toInt else 100
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = graft.GraftConf.tuned(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    var t0 = System.nanoTime()
-    // ingest through the DSv2 source (ContestBinarySource) — the scan
-    // plans its own row-range partitions and prunes columns; parity with
-    // the V1 reader is spec-asserted (ContestBinarySourceSpec)
-    val base = spark.read.format("contest-bin").option("kind", "base")
-      .option("partitions", cpus).load(dataPath)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val queries = spark.read.format("contest-bin").option("kind", "query")
-      .option("partitions", "2").load(queryPath)
-    val nb = base.count(); val nq = queries.count()
-    println(f"READ: base=$nb queries=$nq in ${(System.nanoTime() - t0) / 1e9}%.1f s")
-
-    // routed approximate BatchSearch (the production configuration)
-    t0 = System.nanoTime()
-    val ann = HybridKnn.execute(base, queries, k, ann = true,
-      annEf = 400, annBuckets = math.max(2, (nb / 4096).toInt))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nres = ann.count()
-    println(f"SEARCH(ann): $nres rows in ${(System.nanoTime() - t0) / 1e9}%.1f s")
-
-    t0 = System.nanoTime()
-    val nested = ann.groupBy("qid").agg(
-      expr("transform(array_sort(collect_list(struct(rank, nid))), x -> x.nid)")
-        .as("neighbors"))
-    val allQ = queries.select(col("qid")).join(nested, Seq("qid"), "left")
-      .select(col("qid"),
-        coalesce(col("neighbors"), array().cast("array<long>")).as("neighbors"))
-    ContestBinaryIO.writeKnn(allQ, outPath, k)
-    println(f"WRITE: $outPath in ${(System.nanoTime() - t0) / 1e9}%.1f s")
-
-    // exact oracle + mean recall@k (GetKNNRecall)
-    t0 = System.nanoTime()
-    val exact = KnnJoin.exactFlat(base, queries, k)
-    val recall = AnnJoin.recallAtK(ann, exact)
-    println(f"RECALL@$k vs exact oracle: $recall%.4f (in ${(System.nanoTime() - t0) / 1e9}%.1f s)")
-    spark.stop()
   }
 }

@@ -73,9 +73,7 @@ object DedupScaleProbe {
       .config("spark.ui.enabled", "false")
       .config("spark.driver.maxResultSize", "4g")
       .getOrCreate()
-    // INFO surfaces UnsafeExternalSorter spill lines — the diagnostic
-    // for the 20M SimHash-stage inflection (BASELINE.md)
-    spark.sparkContext.setLogLevel(sys.env.getOrElse("SPARK_GRAFT_LOGLEVEL", "ERROR"))
+    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 
     def exists(p: String) = new java.io.File(s"$p/_SUCCESS").exists()

@@ -44,24 +44,6 @@ class HybridKnnSpec extends SparkSpec {
     assert(chunked == single && chunked.nonEmpty)
   }
 
-  test("executeWithStats: same result rows, one stats row per query with route timings") {
-    val (res, stats) = QueryStats.executeWithStats(base, queries, 10)
-    val got = res.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val exact = KnnJoin.exactFlat(base, queries, 10)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(got == exact)
-    val st = stats.collect()
-    assert(st.length == 7)  // one row per query
-    assert(st.map(_.getLong(0)).toSet == (0L to 6L).toSet)
-    st.foreach { r =>
-      assert(r.getDouble(5) > 0.0)                 // route_seconds measured
-      assert(r.getDouble(2) >= 0.0 && r.getDouble(2) <= 1.0)  // sel in [0,1]
-    }
-    // route_queries sums back to the batch size across distinct routes
-    val perRoute = st.map(r => (r.getString(3), r.getLong(4))).distinct
-    assert(perRoute.map(_._2).sum == 7)
-  }
-
   test("ann configuration: graph routes hit their sub-indexes with high recall, bf routes stay exact") {
     val routed = HybridKnn.execute(base, queries, 10, None, ann = true,
       annEf = 256, annBuckets = 2)

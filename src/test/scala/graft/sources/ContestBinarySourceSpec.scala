@@ -1,17 +1,29 @@
 package graft.sources
 
+import java.nio.file.Files
+
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.tools.ContestCorpus
 
-/** The DSv2 reader against the reference's own dummy fixtures: row-for-row
-  * parity with the V1 mapPartitions reader, and the F4 projection split
-  * happening at the SCAN (pruned ReadSchema, no vector materialization). */
+/** The DSv2 reader on a generated fixture with the reference dummy's
+  * shape (10,000 × 100 base, 100 queries): decoded rows equal the
+  * [[ContestCorpus]] rows they were written from, and the F4 projection
+  * split happens at the SCAN (pruned ReadSchema, no vector
+  * materialization). */
 class ContestBinarySourceSpec extends SparkSpec {
 
-  private val dataPath = "/root/reference/dummy-data.bin"
-  private val queryPath = "/root/reference/dummy-queries.bin"
+  private val (nBase, nQuery) = (10000L, 100L)
+
+  private lazy val (dataPath, queryPath) = {
+    val dir = Files.createTempDirectory("graft-contest-bin").toString
+    val (b, q) = (s"$dir/data.bin", s"$dir/queries.bin")
+    ContestBinaryIO.writeBase(spark, b, nBase, ContestCorpus.dim, 4)(ContestCorpus.baseRow)
+    ContestBinaryIO.writeQueries(spark, q, nQuery, ContestCorpus.dim, 2)(ContestCorpus.queryRow)
+    (b, q)
+  }
 
   private def v2Base = spark.read.format("contest-bin")
     .option("kind", "base").load(dataPath)
@@ -23,27 +35,28 @@ class ContestBinarySourceSpec extends SparkSpec {
       case b: BatchScanExec => b.scan.readSchema().catalogString
     }.getOrElse(fail("no BatchScanExec in plan"))
 
-  test("base rows match the V1 reader exactly") {
-    val v1 = ContestBinaryIO.readBase(spark, dataPath)
-    assert(v2Base.count() === v1.count())
-    val a = v2Base.orderBy("id").collect()
-    val b = v1.orderBy("id").collect()
-    a.zip(b).foreach { case (x, y) =>
-      assert(x.getLong(0) === y.getLong(0))
-      assert(x.getLong(1) === y.getLong(1))
-      assert(x.getDouble(2) === y.getDouble(2))
-      assert(x.getSeq[Float](3) === y.getSeq[Float](3))
+  // the file stores f32, so doubles come back rounded to f32
+  private def f32(x: Double): Double = x.toFloat.toDouble
+
+  test("base rows decode to the ContestCorpus rows they were written from") {
+    val got = v2Base.orderBy("id").collect()
+    assert(got.length === nBase)
+    got.zipWithIndex.foreach { case (r, i) =>
+      assert(r.getLong(0) === i)
+      val (label, ts, vec) = ContestCorpus.baseRow(i.toLong)
+      assert(r.getLong(1) === label)
+      assert(r.getDouble(2) === f32(ts))
+      assert(r.getSeq[Float](3) === vec.toSeq)
     }
   }
 
-  test("query rows match the V1 reader exactly") {
-    val v1 = ContestBinaryIO.readQueries(spark, queryPath)
-    val a = v2Query.orderBy("qid").collect()
-    val b = v1.orderBy("qid").collect()
-    assert(a.length === b.length)
-    a.zip(b).foreach { case (x, y) =>
-      assert(x.toSeq.take(5) === y.toSeq.take(5))
-      assert(x.getSeq[Float](5) === y.getSeq[Float](5))
+  test("query rows decode to the ContestCorpus rows, -1 sentinels kept") {
+    val got = v2Query.orderBy("qid").collect()
+    assert(got.length === nQuery)
+    got.foreach { r =>
+      val (qtype, v, l, rr, qvec) = ContestCorpus.queryRow(r.getLong(0))
+      assert(r.toSeq.slice(1, 5) === Seq(qtype, v, f32(l), f32(rr)))
+      assert(r.getSeq[Float](5) === qvec.toSeq)
     }
   }
 
@@ -53,9 +66,8 @@ class ContestBinarySourceSpec extends SparkSpec {
     // and the pruned scan still computes correctly
     val byLabel = df.groupBy("label").count().collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val expected = ContestBinaryIO.readBase(spark, dataPath)
-      .groupBy("label").count().collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val expected = (0L until nBase).map(id => ContestCorpus.baseRow(id)._1)
+      .groupBy(identity).map { case (l, ls) => l -> ls.size.toLong }
     assert(byLabel === expected)
   }
 

@@ -2,31 +2,37 @@ package graft.tools
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.SparkSession
+
 import graft.SparkSpec
 import graft.operators.KnnJoin
 import graft.sources.ContestBinaryIO
 
-/** The binary lifecycle of ContestRun: the parallel positioned binary
-  * writer (gen mode) reproduces [[ContestCorpus]] row for row, and the
-  * scale lifecycle answers every query type from its stored indexes. */
+/** The binary lifecycle of ContestRun: gen mode's parallel positioned
+  * binary writer ([[ContestBinaryIO.writeBase]]/`writeQueries`)
+  * reproduces [[ContestCorpus]] row for row, the scale lifecycle answers
+  * every query type from its stored indexes, and `main` takes no other
+  * mode. */
 class ContestRunSpec extends SparkSpec {
 
   private def writeBase(path: String, n: Long, parts: Int): Unit =
-    ContestRun.writeBinaryParallel(spark, path, n, (2 + ContestCorpus.dim) * 4, parts) {
-      (id, bb) =>
-        val (label, ts, vec) = ContestCorpus.baseRow(id)
-        bb.putFloat(label.toFloat); bb.putFloat(ts.toFloat)
-        vec.foreach(bb.putFloat)
-    }
+    ContestBinaryIO.writeBase(spark, path, n, ContestCorpus.dim, parts)(ContestCorpus.baseRow)
 
   private def writeQueries(path: String, nq: Long, parts: Int): Unit =
-    ContestRun.writeBinaryParallel(spark, path, nq, (4 + ContestCorpus.dim) * 4, parts) {
-      (i, bb) =>
-        val (qtype, v, l, r, qvec) = ContestCorpus.queryRow(i)
-        bb.putFloat(qtype.toFloat); bb.putFloat(v.toFloat)
-        bb.putFloat(l.toFloat); bb.putFloat(r.toFloat)
-        qvec.foreach(bb.putFloat)
+    ContestBinaryIO.writeQueries(spark, path, nq, ContestCorpus.dim, parts)(
+      ContestCorpus.queryRow)
+
+  test("main without a gen or scale mode throws the usage before building a session") {
+    val before = SparkSession.getDefaultSession
+    Seq(Array.empty[String], Array("small"), Array("data.bin", "q.bin"),
+        Array("gen", "100"), Array("scale", "base.bin")).foreach { args =>
+      val e = intercept[IllegalArgumentException](ContestRun.main(args))
+      assert(e.getMessage.contains("ContestRun gen N NQ basePath queryPath"), e.getMessage)
+      assert(e.getMessage.contains("ContestRun scale basePath queryPath outPath"), e.getMessage)
     }
+    assert(SparkSession.getDefaultSession == before)
+    before.foreach(s => assert(!s.sparkContext.isStopped))
+  }
 
   test("writeBinaryParallel emits the contest base format; read-back matches ContestCorpus") {
     val tmp = Files.createTempFile("graft-gen-base", ".bin").toString
