@@ -3,6 +3,60 @@ import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 
 object Bench {
+
+  // ms precision is plenty for second-scale timings and keeps the
+  // stdout line short enough for the driver's bounded capture window.
+  // Locale pinned to ROOT: a comma-decimal default locale would emit
+  // invalid JSON.
+  private def fmt(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+
+  private def queriesJson(rs: Iterable[(String, Double)]): String =
+    rs.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
+
+  /** The stdout JSON line, at most `budget` chars where it can be:
+    * `wrap(queries, extra)` over every query if that fits, else over the
+    * slowest N plus truncation markers in `extra`.
+    *
+    * The driver captures only a bounded TAIL of stdout (measured: the
+    * recorded tails are exactly 2000 chars), and sbt appends its own
+    * "[success] Total time" line (~75 chars) after ours — with the full
+    * 111-query map (~2600 chars of entries alone) the line head gets
+    * clipped and the driver records parsed:null (observed rounds 4-7),
+    * so printing the complete map is NOT possible. The markers carry
+    * the max seconds among the OMITTED queries — so a query that leaves
+    * the window can be read as "faster than that bound", not dropped
+    * (the r14 PERF misread) — and, when any omitted query failed, how
+    * many did (`omitted_failed`), so a truncated failure is never read
+    * as a fast success. The map may shrink to empty: an over-budget
+    * line loses its head and parses as nothing. */
+  private[graft] def stdoutLine(results: Seq[(String, Double)], budget: Int)(
+      wrap: (String, String) => String): String = {
+    val full = wrap(queriesJson(results), "")
+    if (full.length <= budget) full
+    else {
+      // failed queries carry the -1 marker — keep them FIRST under
+      // truncation (a plain slowest-first sort would clip the crash
+      // signal before any healthy timing)
+      val bySlowest = results.sortBy { case (_, v) =>
+        (if (v < 0) Double.NegativeInfinity else -v)
+      }
+      var n = bySlowest.length
+      var line = full
+      while (line.length > budget && n > 0) {
+        n -= 1
+        val omitted = bySlowest.drop(n).map(_._2)
+        val failed = omitted.count(_ < 0)
+        line = wrap(queriesJson(bySlowest.take(n)),
+          s""","n_queries":${results.size},"queries_truncated_to_slowest":$n""" +
+            s""","omitted_max_sec":${fmt(omitted.foldLeft(0.0)(math.max))}""" +
+            (if (failed > 0) s""","omitted_failed":$failed""" else "") +
+            ""","full":"bench_results.json"""")
+      }
+      line
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -119,14 +173,6 @@ object Bench {
           System.err.println(s"[bench] canary failed: ${e.getClass.getName}: ${e.getMessage}")
           Seq.empty
       }
-    // ms precision is plenty for second-scale timings and keeps the
-    // stdout line short enough for the driver's bounded capture window.
-    // Locale pinned to ROOT: a comma-decimal default locale would emit
-    // invalid JSON.
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    def queriesJson(rs: Iterable[(String, Double)]): String =
-      rs.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
     // failed queries carry the -1.0 sentinel in `queries` (visible to
     // the driver) but must NOT be summed — each crash would otherwise
     // SUBTRACT a second from the headline total, reporting a broken
@@ -155,7 +201,6 @@ object Bench {
         "\"" + n + "\":{\"max_ms\":" + fmt(st.maxMs) +
           ",\"cold\":" + fmt(st.coldMedianMs) +
           ",\"hits\":" + st.hits + ",\"misses\":" + st.misses +
-          ",\"placed\":" + st.placed + ",\"scanned\":" + st.scanned +
           ",\"ms\":" + st.timedMs.map(fmt1).mkString("[", ",", "]") + "}"
       }.mkString("{", ",", "}")
       s""","serving_diag":{"cache_budget_mb":${rep.cacheBudgetBytes >> 20}""" +
@@ -168,45 +213,17 @@ object Bench {
     def wrap(qs: String, extra: String = "", diag: String = ""): String =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","index_build_sec":${fmt(buildSec)}$servingMsJson$diag$canaryJson$extra,"queries":$qs,"sf":"$sfDir"}"""
     val fullJson = wrap(queriesJson(results), diag = servingDiagJson)
-    // The driver captures only a bounded TAIL of stdout (measured: the
-    // recorded tails are exactly 2000 chars), and sbt appends its own
-    // "[success] Total time" line (~75 chars) after ours — with the full
-    // 111-query map (~2600 chars of entries alone) the line head gets
-    // clipped and the driver records parsed:null (observed rounds 4-7),
-    // so printing the complete map is NOT possible. Keep the stdout
-    // line under budget: full map if it fits, else the slowest N
-    // queries plus explicit truncation markers, including the max
-    // seconds among the OMITTED queries — so a query that leaves the
-    // window can be read as "faster than that bound", not dropped
-    // (the r14 PERF misread). The COMPLETE JSON (with serving_diag)
-    // always goes to bench_results.json.
-    val stdoutBudget = 1870
-    val stdoutJson =
-      if (fullJson.length <= stdoutBudget) fullJson
-      else {
-        // failed queries carry the -1 marker — keep them FIRST under
-        // truncation (a plain slowest-first sort would clip the crash
-        // signal before any healthy timing)
-        val bySlowest = results.toSeq.sortBy { case (_, v) =>
-          (if (v < 0) Double.NegativeInfinity else -v)
-        }
-        var n = bySlowest.length
-        var line = wrap(queriesJson(bySlowest))
-        while (line.length > stdoutBudget && n > 1) {
-          n -= 1
-          val omittedMax = bySlowest.drop(n).map(_._2).foldLeft(0.0)(math.max)
-          line = wrap(queriesJson(bySlowest.take(n)),
-            s""","n_queries":${results.size},"queries_truncated_to_slowest":$n""" +
-              s""","omitted_max_sec":${fmt(omittedMax)},"full":"bench_results.json"""")
-        }
-        line
-      }
+    // the complete JSON (with serving_diag) always goes to
+    // bench_results.json; stdout gets the budgeted line
+    val stdoutJson = stdoutLine(results.toSeq, 1870)(wrap(_, _))
     try java.nio.file.Files.write(java.nio.file.Paths.get("bench_results.json"),
       fullJson.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case NonFatal(e) => System.err.println(s"[bench] file write failed: ${e.getMessage}") }
     // stop BEFORE the stdout line: a shutdown-time WARN printed after
-    // our JSON would push its head out of the driver's bounded tail
-    spark.stop()
+    // our JSON would push its head out of the driver's bounded tail.
+    // A stop() that throws must not cost the line itself.
+    try spark.stop()
+    catch { case NonFatal(e) => System.err.println(s"[bench] spark.stop failed: ${e.getMessage}") }
     println(stdoutJson)
   }
 }

@@ -1354,7 +1354,7 @@ object AnnIndexStore {
         size() > 16
     }
 
-  private[index] def loadCentroidsCached(spark: SparkSession, store: String): Array[Array[Float]] = {
+  def loadCentroidsCached(spark: SparkSession, store: String): Array[Array[Float]] = {
     // IVF roots themselves carry no stamp (writeIvf's buildBy stamps the
     // nested LISTS store; buildIvfPq's writer stamps the CODES store) —
     // the centroids are written in the same build transaction as those

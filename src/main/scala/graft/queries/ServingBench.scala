@@ -37,14 +37,9 @@ object ServingBench {
     * are ServingCache counter deltas across the timed cycle: a warm
     * route must show misses = 0; any other value names the r11-style
     * latency discord (eviction thrash / budget starvation) that a bare
-    * median cannot. `placed`/`scanned` are warm-pass attribution
-    * deltas (locality-scheduled vs scan-dispatched) — under local[*]
-    * the placed path is inert by design, so placed = 0 there reads as
-    * "inert-local", and a placed→scanned flip on a cluster flags a
-    * locality regression in the gate JSON itself. */
+    * median cannot. */
   final case class RouteStat(medianMs: Double, maxMs: Double,
-      coldMedianMs: Double, hits: Long, misses: Long,
-      placed: Long, scanned: Long, timedMs: Seq[Double])
+      coldMedianMs: Double, hits: Long, misses: Long, timedMs: Seq[Double])
 
   /** The whole serving_diag block: routes plus the cache state that
     * explains them (effective budget, residency, entry count). */
@@ -108,8 +103,6 @@ object ServingBench {
       val cold = cycle().sorted // warms every statement's buckets
       val h0 = graft.index.ServingCache.hits.get()
       val m0 = graft.index.ServingCache.misses.get()
-      val p0 = org.apache.spark.sql.graft.AnnTopKExec.warmPlacedPasses.get()
-      val s0 = org.apache.spark.sql.graft.AnnTopKExec.warmScanPasses.get()
       val raw = cycle() // statement order preserved for attribution
       val ms = raw.sorted
       RouteStat(
@@ -118,8 +111,6 @@ object ServingBench {
         coldMedianMs = cold(cold.length / 2),
         hits = graft.index.ServingCache.hits.get() - h0,
         misses = graft.index.ServingCache.misses.get() - m0,
-        placed = org.apache.spark.sql.graft.AnnTopKExec.warmPlacedPasses.get() - p0,
-        scanned = org.apache.spark.sql.graft.AnnTopKExec.warmScanPasses.get() - s0,
         timedMs = raw.toSeq)
     }
 

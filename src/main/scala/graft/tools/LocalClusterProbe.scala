@@ -29,6 +29,9 @@ import org.apache.spark.sql.graft.AnnCatalog
   *      (AnnJoin.searchByCategory shape) and a broadcast join both
   *      complete with plans unchanged.
   *
+  *   5. Concurrency across executors: four threads serving the same
+  *      store through the warm path all get the exact answer.
+  *
   * Under multi-executor scheduling a warm statement is NOT guaranteed
   * its task lands on the executor that cached its bucket — misses on a
   * warm route are the expected cross-executor cost the cold fallback
@@ -186,50 +189,11 @@ object LocalClusterProbe {
       require(j.collect().length > 0, "broadcast join returned no rows")
       println("PROBE broadcast join: BroadcastHashJoin, rows OK")
 
-      // cache-locality-aware warm scheduling: with placements learned
-      // (the route cycles above), a warm statement's walk tasks must
-      // schedule onto the executor that holds each graph
-      // (ExecutorCacheTaskLocation hint) — a further warm cycle then
-      // misses NOWHERE in the fleet. Contrast cycle with the hint
-      // disabled recorded for the honest comparison (it may get lucky).
-      def cacheTotals(): (Long, Long) = {
-        val m = executorCaches()
-        (m.values.map(_._1).sum, m.values.map(_._2).sum)
-      }
-      def cycle(params: Array[(Long, Double, Double, Array[Float])])(
-          mk: ((Long, Double, Double, Array[Float])) => DataFrame): (Long, Long) = {
-        val (h0, m0) = cacheTotals()
-        params.foreach(p => mk(p).collect())
-        val (h1, m1) = cacheTotals()
-        (h1 - h0, m1 - m0)
-      }
-      def t2Stmt(p: (Long, Double, Double, Array[Float])): DataFrame =
-        ranked(b.filter(col("ts") >= p._2 && col("ts") <= p._3), p._4)
-      val warm1 = cycle(qsOf(2))(t2Stmt) // learns any remaining placements
-      val warm2 = cycle(qsOf(2))(t2Stmt) // fully placed cycle
-      require(org.apache.spark.sql.graft.AnnTopKExec.lastWarmPath == "placed",
-        "locality-aware warm path did not engage under local-cluster")
-      // a SMALL tolerance, not zero: the placement is a best-effort
-      // hint by contract — a busy executor or an expired locality wait
-      // legitimately runs a task off-placement (it misses once and
-      // re-teaches the map). Systematic failure (hint ignored) would
-      // miss on most of the ~30+ served rows, far above the bound.
-      require(warm2._2 <= 2,
-        s"fully-placed warm cycle missed ${warm2._2} rows " +
-          "(locality hint systematically not honored)")
-      System.setProperty("graft.serving.localityAware", "false")
-      val warmOff =
-        try cycle(qsOf(2))(t2Stmt)
-        finally System.clearProperty("graft.serving.localityAware")
-      println(s"PROBE locality stickiness (t2): placed cycles " +
-        s"misses=${warm1._2}→${warm2._2} (hits ${warm1._1}→${warm2._1}); " +
-        s"hint-off contrast cycle hits=${warmOff._1} misses=${warmOff._2}")
-
-      // concurrent statements through the PLACED warm path: the
-      // placement registry and serving cache are shared driver/executor
-      // state — four threads racing the same store must all serve the
-      // exact answer (the local-mode ServingConcurrencySpec covers the
-      // scan path; this is the locality path's concurrency proof)
+      // concurrent statements through the warm path: the serving
+      // cache is shared executor state — four threads racing the same
+      // store must all serve the exact answer (the local-mode
+      // ServingConcurrencySpec covers one JVM; this covers separate
+      // executor JVMs)
       locally {
         val params = qsOf(1)
         val expected = params.map { p =>
@@ -249,8 +213,8 @@ object LocalClusterProbe {
         threads.foreach(_.start())
         threads.foreach(_.join())
         require(errs.get() == 0,
-          s"${errs.get()} concurrent placed-path statements diverged")
-        println(s"PROBE concurrent placed path: 4 threads x ${params.length} " +
+          s"${errs.get()} concurrent warm-path statements diverged")
+        println(s"PROBE concurrent warm path: 4 threads x ${params.length} " +
           "statements, all exact")
       }
 

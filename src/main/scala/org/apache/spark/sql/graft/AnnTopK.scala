@@ -92,7 +92,6 @@ object AnnCatalog {
       ivfIndex: Option[String] = None,
       nprobe: Int = graft.index.AnnIndexStore.AutoNprobe): Unit = {
     (labelIndex.map(_._2) ++ rangeIndex.map(_._2)).foreach(attrCache.remove)
-    ivfIndex.foreach(centroidCache.remove)
     ivfIndex.foreach(nprobeCache.remove)
     // same staleness rule as the two caches above: a re-registration is
     // the signal the base may have been regenerated, and a cached
@@ -149,30 +148,15 @@ object AnnCatalog {
   def unregister(basePath: String): Unit = registry.remove(norm(basePath))
 
   def clear(): Unit = {
-    registry.clear(); attrCache.clear(); centroidCache.clear()
+    registry.clear(); attrCache.clear()
     nullFreeCache.clear(); nprobeCache.clear()
     graft.index.AnnIndexStore.clearStoreFrames()
-    AnnTopKExec.clearPlacements()
   }
 
-  // IVF centroid tables (nlist rows by contract), driver-resident per
-  // store path. Registration paths embed the source-generation
-  // fingerprint, so a regenerated corpus can never hit a stale entry.
-  private val centroidCache = TrieMap.empty[String, Array[(Int, Array[Float])]]
-
   // AutoNprobe sidecar resolution per ivf path — invalidated on
-  // register(), same staleness rule as centroidCache (a re-registration
-  // is the signal the store may have been rebuilt or re-tuned)
+  // register() (a re-registration is the signal the store may have
+  // been rebuilt or re-tuned)
   private[graft] val nprobeCache = TrieMap.empty[String, Int]
-
-  private[graft] def centroidsOf(spark: org.apache.spark.sql.SparkSession,
-      ivfPath: String): Array[(Int, Array[Float])] =
-    centroidCache.getOrElseUpdate(ivfPath, {
-      import org.apache.spark.sql.functions.col
-      spark.read.parquet(s"${graft.index.AnnIndexStore.resolveStore(ivfPath)}/centroids")
-        .select(col("list").cast("int"), col("centroid"))
-        .collect().map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
-    })
 
   // which column an index table's aligned `attrs` were built from
   // (AnnIndexStore.buildBy writes it as a constant `attr_col` column).
@@ -485,9 +469,9 @@ case class AnnTopKStrategy(session: SparkSession) extends SparkStrategy {
             // precedence: session conf > explicit registration value >
             // the store's tuned `_nprobe` sidecar > untuned default.
             // The sidecar resolution is CACHED per ivf path (register()
-            // invalidates, like centroidCache): an uncached read would
-            // be one exists + readAllBytes per planned statement on the
-            // ms-latency serving path. A tuner that re-stamps a LIVE
+            // invalidates): an uncached read would be one exists +
+            // readAllBytes per planned statement on the ms-latency
+            // serving path. A tuner that re-stamps a LIVE
             // registration's sidecar is picked up at re-registration —
             // registerTuned's own order (tune, then register) already
             // does this, and the session conf remains the no-restart
@@ -725,19 +709,16 @@ object AnnTopKExec extends org.apache.spark.internal.Logging {
       case HashRoute(path) =>
         searchStore(spark, path, None, plainWalk(qvec, k, effEf), k)
       case IvfRoute(path, nprobe) =>
-        // The centroid table is nlist rows by contract — driver-resident
-        // and cached per store path (registration paths embed the source
-        // generation fingerprint, so a regenerated corpus misses): a
-        // build-time constant must not cost a per-statement collect job
-        // on the serving hot path. Probe-list choice mirrors
-        // NearestCentroids exactly (sequential double L2, ties by
-        // (dist, list) ascending) so the served candidate set equals the
-        // oracle's replay.
-        val cents = AnnCatalog.centroidsOf(spark, path)
-        val scored = cents.map { case (li, cv) =>
-          (graft.functions.VectorFunctions.l2SqJvm(cv, qvec), li)
-        }.sortBy { case (d, li) => (d, li) }
-        val lists = scored.take(math.min(nprobe, cents.length)).map(_._2.toLong).toIndexedSeq
+        // The centroid table comes from the batch IVF search's cache,
+        // keyed by store version: no per-statement collect job on the
+        // serving hot path, and an in-place rebuild is never routed by
+        // the old centroids. Probe lists are NearestCentroids' own
+        // (dist, list) selection, so the served candidate set equals
+        // searchIvf's and the oracle's replay.
+        val cents = graft.index.AnnIndexStore.loadCentroidsCached(spark,
+          graft.index.AnnIndexStore.resolveStore(path))
+        val lists = NearestCentroids.topkArr(qvec, cents.flatten, nprobe)
+          .map(_.toLong).toIndexedSeq
         // salted oversized lists span several rows per bucket value; the
         // isin prunes to the probed lists via parquet min/max stats
         // LOGICAL root + subdir, resolved inside searchStore's retry
@@ -832,199 +813,6 @@ object AnnTopKExec extends org.apache.spark.internal.Logging {
     }
   }
 
-  private[graft] def clearPlacements(): Unit = placements.synchronized {
-    placements.clear(); placementEntries.set(0)
-  }
-
-  // test/probe observability: registry shape without exposing the maps
-  private[graft] def placementStoreCount: Int =
-    placements.synchronized(placements.size())
-  private[graft] def placementEntryCount: Long = placementEntries.get()
-  private[graft] def placementsContains(spark: SparkSession, path: String,
-      ver: String): Boolean =
-    placements.synchronized(placements.containsKey((spark, path, ver)))
-  // test-only direct insert, so eviction specs can fill past both
-  // bounds without building thousands of real stores
-  private[graft] def placementsInsertForTest(spark: SparkSession,
-      path: String, ver: String, entries: Int): Unit =
-    // same locking invariant as foldPlacements: counted puts happen
-    // under placements.synchronized so a concurrent boundPlacements
-    // recount can never observe puts the counter hasn't absorbed
-    placements.synchronized {
-      val m = placementsFor(spark, path, ver)
-      var i = 0
-      while (i < entries) {
-        if (m.put((i.toLong, 0), "executor_test_0") == null) placementRecorded()
-        i += 1
-      }
-    }
-
-  // Cache-locality-aware warm scheduling: a ServingCache entry lives in
-  // ONE executor JVM, but Spark schedules the warm pass's tasks by file
-  // split locality, which knows nothing about where a graph is cached —
-  // under multi-executor masters the LocalClusterProbe measured warm
-  // statements landing on the wrong executor and paying the cold blob
-  // load again. This registry records, per (store path, version), which
-  // executor served each (bucket, sub) — learned from task emissions
-  // after every pass — and later statements schedule their walk tasks
-  // with an ExecutorCacheTaskLocation preference for that executor
-  // (`executor_<host>_<id>`, the same mechanism Spark's own block
-  // manager uses for cached RDD blocks). Strictly a HINT: a task that
-  // runs elsewhere (executor lost, cluster rebalanced, locality-wait
-  // expired) misses, falls to the cold pass, repopulates THAT executor,
-  // and the emission overwrites the placement — self-healing, results
-  // identical by construction. Inert under local[*] masters (one JVM,
-  // nothing to place) and disableable via -Dgraft.serving.localityAware
-  // =false. Keyed by (session, path, version): the version token
-  // protects against a rebuilt store, and the SESSION key protects
-  // against a restarted SparkContext at the same store version
-  // — old placements name that context's executor ids, and scheduling
-  // a fresh cluster's tasks toward dead executors would cost the
-  // locality wait on every chunk until misses re-teach the map.
-  // Size-bounded two ways: at 256 store keys and at ~1M TOTAL entries
-  // across all maps (the per-store and store-count caps compose
-  // multiplicatively, so a global entry bound is the one that actually
-  // limits driver heap). Both bounds evict PER ENTRY in LRU order —
-  // stopped sessions first, then least-recently-served (path, version)
-  // maps — never wholesale: a clear-all would cold every store's placed
-  // path at once because one runaway session overflowed the registry.
-  // Access-ordered LinkedHashMap, all access under its own lock (a few
-  // driver-side touches per warm statement — contention-free); the
-  // INNER maps stay concurrent because fold puts race across statements.
-  private val placements = new java.util.LinkedHashMap[
-    (SparkSession, String, String),
-    java.util.concurrent.ConcurrentHashMap[(Long, Int), String]](16, 0.75f, true)
-
-  // Global entry count, tracked incrementally (fold puts increment via
-  // [[placementRecorded]], evictions subtract the evicted map's size) —
-  // the previous per-statement sum over ALL maps was a registry-sized
-  // scan on every warm statement. A fold racing an eviction can
-  // increment for an already-evicted map (bounded by one statement's
-  // work list, direction = overcount = earlier eviction), so the rare
-  // bound-trigger path recomputes the exact total before evicting.
-  private val placementEntries = new java.util.concurrent.atomic.AtomicLong(0)
-  private val MaxPlacementStores = 256
-  private val MaxPlacementEntries = 1L << 20
-
-  private def placementsFor(spark: SparkSession, path: String, ver: String):
-      java.util.concurrent.ConcurrentHashMap[(Long, Int), String] =
-    placements.synchronized {
-      val key = (spark, path, ver)
-      val hit = placements.get(key) // get() records the LRU touch
-      if (hit != null) hit
-      else {
-        if (placements.size() >= MaxPlacementStores) {
-          val it = placements.entrySet().iterator()
-          while (it.hasNext) {
-            val e = it.next()
-            if (e.getKey._1.sparkContext.isStopped) {
-              placementEntries.addAndGet(-e.getValue.size()); it.remove()
-            }
-          }
-          val eldest = placements.entrySet().iterator()
-          while (placements.size() >= MaxPlacementStores && eldest.hasNext) {
-            val e = eldest.next()
-            placementEntries.addAndGet(-e.getValue.size()); eldest.remove()
-          }
-        }
-        val m = new java.util.concurrent.ConcurrentHashMap[(Long, Int), String]
-        placements.put(key, m)
-        m
-      }
-    }
-
-  /** Fold-side bookkeeping for a NEW (bucket, sub) placement. */
-  private def placementRecorded(): Unit = placementEntries.incrementAndGet()
-
-  /** Fold a pass's placement emissions atomically with the registry's
-    * eviction/recount machinery: the map fetch (which may evict) and
-    * the counted puts happen under the one lock, so the entry counter
-    * can never lose an increment to a racing bound-trigger recompute
-    * (drift, if any, is strictly upward — the safe direction).
-    *
-    * Chunked: placed-path passes emit ≤cap rows, but a SCAN-path pass
-    * emits one placement per warm-served store row — holding the
-    * registry lock for a very large store's whole fold would block
-    * every concurrent statement's placementsFor at pass start.
-    * Dedup-then-chunk keeps each critical section bounded; the
-    * re-fetch per chunk keeps orphaned-map folds impossible across
-    * the chunk boundaries too. */
-  private def foldPlacements(spark: SparkSession, path: String, ver: String,
-      emissions: Seq[((Long, Int), String)]): Unit = {
-    // latest emission per key wins (same rule as map puts in order)
-    val deduped = emissions.foldLeft(
-      scala.collection.mutable.LinkedHashMap.empty[(Long, Int), String]) {
-      case (m, (k, loc)) => m += (k -> loc)
-    }
-    deduped.toSeq.grouped(4096).foreach { chunk =>
-      placements.synchronized {
-        val target = placementsFor(spark, path, ver)
-        chunk.foreach { case (key, loc) =>
-          if (target.put(key, loc) == null) placementRecorded()
-        }
-      }
-    }
-  }
-
-  /** Global placement-entry bound, applied at fold time: hints only, so
-    * forgetting costs one cold reload per row, never correctness.
-    * Evicts least-recently-served maps until ~7/8 of the bound (the
-    * slack stops a statement-by-statement evict/insert thrash at the
-    * exact boundary); the store folding right now was just touched by
-    * its own placementsFor, so it is the LAST candidate. */
-  private[graft] def boundPlacements(): Unit =
-    if (placementEntries.get() >= MaxPlacementEntries) placements.synchronized {
-      // reconcile the incremental counter first: orphaned-map folds can
-      // only ever drift it UPWARD, so the recompute (rare — bound
-      // triggers only, never per statement) keeps drift from turning
-      // into perpetual eviction
-      var exact = 0L
-      val sumIt = placements.values().iterator()
-      while (sumIt.hasNext) exact += sumIt.next().size()
-      placementEntries.set(exact)
-      val target = MaxPlacementEntries - (MaxPlacementEntries >> 3)
-      val it = placements.entrySet().iterator()
-      while (placementEntries.get() >= target && it.hasNext) {
-        val e = it.next()
-        placementEntries.addAndGet(-e.getValue.size()); it.remove()
-      }
-    }
-
-  /** The executor-side self-location string, in TaskLocation's
-    * executor-cache syntax. */
-  private def hereLoc(): String = {
-    val env = org.apache.spark.SparkEnv.get
-    s"executor_${env.blockManager.blockManagerId.host}_${env.executorId}"
-  }
-
-  private def localityAware(sc: org.apache.spark.SparkContext): Boolean =
-    !sc.isLocal &&
-      java.lang.Boolean.parseBoolean(
-        System.getProperty("graft.serving.localityAware", "true"))
-
-  /** Test observability (probes/specs only): which warm path served
-    * the last versioned pass — "placed" (locality-scheduled makeRDD)
-    * or "scan". */
-  @volatile var lastWarmPath: String = ""
-
-  /** Cumulative warm-pass attribution counters, so a locality
-    * regression shows in the gate bench's `serving_diag` (per-route
-    * deltas) rather than only in a local-cluster probe rerun. Under
-    * `local[*]` the placed branch is unreachable by design, so the
-    * bench records placed=0 there — that reading means "inert-local",
-    * not "regressed". */
-  val warmPlacedPasses = new java.util.concurrent.atomic.AtomicLong(0)
-  val warmScanPasses = new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** Work-list cap for the placed warm path: the locality dispatch
-    * collects the statement's (bucket, sub) rows driver-side, which is
-    * bounded by the route on filtered statements (one label bucket, a
-    * few range buckets, nprobe lists) but is EVERY store row on the
-    * unfiltered hash route — past the cap the statement falls to the
-    * scan path, whose file-split scheduling is the right shape for a
-    * work list that large anyway. */
-  private val PlacedMaxItems = 4096
-
   /** Run `walk` over every (pred-matching) row of the store and merge
     * the global top-k, ascending (dist, id).
     *
@@ -1074,142 +862,50 @@ object AnnTopKExec extends org.apache.spark.internal.Logging {
           }
         }.rdd.takeOrdered(k)(ord)
       case Some(v) =>
-        val sc = spark.sparkContext
-        val missAcc = sc.collectionAccumulator[(Long, Int)]("graft.serving.miss")
-        // placement bookkeeping only exists where it can ever be READ:
-        // under local[*] (or the opt-out) the placed branch below is
-        // unreachable, and per-hit accumulator traffic plus a driver
-        // map nothing consults would be pure hot-path waste
-        val track = AnnTopKExec.localityAware(sc)
-        // placement emissions: which executor HOLDS each served row's
-        // graph after this pass (hits confirm, cold puts establish).
-        // Only materialized when tracking — an accumulator created
-        // unconditionally would still be registered and serialized
-        // into every warm task under local[*], the exact bookkeeping
-        // the track guard exists to skip
-        val placeAcc =
-          if (track) Some(sc.collectionAccumulator[((Long, Int), String)](
-            "graft.serving.place"))
-          else None
-        val placed =
-          if (track) AnnTopKExec.placementsFor(spark, path, v) else null
-        def warmServe(bucket: Long, sub: Int): Iterator[(Double, Long)] = {
-          val e = graft.index.ServingCache.get(path, v, bucket, sub)
-          if (e == null) { missAcc.add((bucket, sub)); Iterator.empty }
-          else {
-            placeAcc.foreach(_.add(((bucket, sub), AnnTopKExec.hereLoc())))
-            walk(bucket, e)
-          }
-        }
-        // locality-scheduled warm pass: the statement's tiny
-        // (bucket, sub) work list is collected driver-side (rows =
-        // store rows the predicate keeps — bounded by the route:
-        // one label bucket, a few range buckets, nprobe lists),
-        // grouped by the cached-at executor, chunked so one
-        // executor's group still parallelizes, and dispatched via
-        // makeRDD with ExecutorCacheTaskLocation preferences — the
-        // reference keeps its index resident and serves from it
-        // (hybrid_graph.cpp:47-89); on a cluster, "resident" is a
-        // specific executor, so the task must go TO the graph, not
-        // the graph to the task. CAPPED both ways: a fully-learned
-        // placement map bigger than the cap skips the collect job
-        // outright (O(1) size check), and a partially-learned map
-        // over an unexpectedly large work list is caught by the
-        // limit(cap+1) collect — either way the statement falls to
-        // the scan path, never an unbounded driver collect.
-        val cap = AnnTopKExec.PlacedMaxItems
-        // the O(1) size pre-check only applies to UNFILTERED statements,
-        // where work list = every store row ⊇ the learned placements
-        // (placed.size() > cap proves the list exceeds the cap without
-        // running the collect job). A filtered statement's work list is
-        // bounded by its route regardless of how many placements the
-        // whole store has accumulated — gating it on placed.size()
-        // would permanently cold the placed path on exactly the
-        // filtered routes it exists for.
-        val itemsOpt: Option[Array[(Long, Int)]] =
-          if (track && !placed.isEmpty &&
-              (pred.nonEmpty || placed.size() <= cap)) {
-            val items = df
-              .select(col("bucket").cast("long").as("bucket"), subCol)
-              .as[(Long, Int)].limit(cap + 1).collect()
-            if (items.length > cap) None else Some(items)
-          } else None
-        val warmTop = itemsOpt match {
-          case Some(items) =>
-            AnnTopKExec.lastWarmPath = "placed"
-            AnnTopKExec.warmPlacedPasses.incrementAndGet()
-            val parts: Seq[(Seq[(Long, Int)], Seq[String])] = items
-              .groupBy(it => Option(placed.get(it)).getOrElse(""))
-              .toSeq.flatMap { case (loc, group) =>
-                group.grouped(4).map(chunk =>
-                  (chunk.toSeq, if (loc.isEmpty) Nil else Seq(loc)))
-              }
-            if (parts.isEmpty) Array.empty[(Double, Long)] // pred kept no rows
-            else sc.makeRDD(parts) // the (items, locations) overload
-              .flatMap(chunk => chunk.iterator.flatMap {
-                case (b, s) => warmServe(b, s)
-              })
-              .takeOrdered(k)(ord)
-          case None =>
-            AnnTopKExec.lastWarmPath = "scan"
-            AnnTopKExec.warmScanPasses.incrementAndGet()
-            df.select(col("bucket").cast("long").as("bucket"), subCol)
-              .as[(Long, Int)]
-              .mapPartitions(_.flatMap { case (b, s) => warmServe(b, s) })
-              .rdd.takeOrdered(k)(ord)
-        }
+        val missAcc = spark.sparkContext
+          .collectionAccumulator[(Long, Int)]("graft.serving.miss")
+        val warmTop = df
+          .select(col("bucket").cast("long").as("bucket"), subCol)
+          .as[(Long, Int)]
+          .mapPartitions(_.flatMap { case (bucket, sub) =>
+            val e = graft.index.ServingCache.get(path, v, bucket, sub)
+            if (e == null) { missAcc.add((bucket, sub)); Iterator.empty }
+            else walk(bucket, e)
+          })
+          .rdd.takeOrdered(k)(ord)
         val missed = {
           import scala.jdk.CollectionConverters._
           missAcc.value.asScala.toSet
         }
-        val result =
-          if (missed.isEmpty) warmTop
-          else {
-            val missBuckets = missed.map(_._1).toSeq
-            val coldTop = coldScan(df.filter(col("bucket").isin(missBuckets: _*)))
-              .mapPartitions { it =>
-                it.flatMap { case (bucket, sub, ids, attrs, bytes) =>
-                  if (!missed.contains((bucket, sub))) Iterator.empty
-                  // fromBytesCached, not fromBytes: when the ServingCache
-                  // is under-budgeted for the store's working set, every
-                  // statement re-misses the evicted rows — the
-                  // fingerprint-keyed deserialization cache then still
-                  // shares the parsed graph (one hash of the bytes vs a
-                  // full re-parse per statement), so the degraded path
-                  // costs what the r10 fingerprint path did, not more.
-                  // Both caches hold the SAME immutable index object, so
-                  // double-residency costs one reference, not one copy.
-                  else {
-                    val e = graft.index.ServingCache.put(path, v,
-                      bucket, sub, HnswIndex.fromBytesCached(bytes), ids, attrs)
-                    placeAcc.foreach(_.add(((bucket, sub), AnnTopKExec.hereLoc())))
-                    walk(bucket, e)
-                  }
+        if (missed.isEmpty) warmTop
+        else {
+          val missBuckets = missed.map(_._1).toSeq
+          val coldTop = coldScan(df.filter(col("bucket").isin(missBuckets: _*)))
+            .mapPartitions { it =>
+              it.flatMap { case (bucket, sub, ids, attrs, bytes) =>
+                if (!missed.contains((bucket, sub))) Iterator.empty
+                // fromBytesCached, not fromBytes: when the ServingCache
+                // is under-budgeted for the store's working set, every
+                // statement re-misses the evicted rows — the
+                // fingerprint-keyed deserialization cache then still
+                // shares the parsed graph (one hash of the bytes vs a
+                // full re-parse per statement), so the degraded path
+                // costs what the r10 fingerprint path did, not more.
+                // Both caches hold the SAME immutable index object, so
+                // double-residency costs one reference, not one copy.
+                else {
+                  val e = graft.index.ServingCache.put(path, v,
+                    bucket, sub, HnswIndex.fromBytesCached(bytes), ids, attrs)
+                  walk(bucket, e)
                 }
-              }.rdd.takeOrdered(k)(ord)
-            // a speculative/retried warm task can record a miss for a row
-            // another attempt served — identical (dist, id) duplicates,
-            // removed before the final cut (an id lives in exactly one
-            // store row, so distinct pairs are distinct ids)
-            (warmTop ++ coldTop).distinct.sorted(ord).take(k)
-          }
-        // fold this pass's placements: latest emission wins, so a row
-        // re-cached on a different executor (migration, eviction +
-        // re-load) redirects the NEXT statement there; the global entry
-        // bound keeps the registry a bounded hint cache, never a
-        // driver-heap leak
-        placeAcc.foreach { acc =>
-          import scala.jdk.CollectionConverters._
-          AnnTopKExec.boundPlacements()
-          // the whole fold runs under the registry lock (driver-side,
-          // ≤cap map puts — microseconds): an unlocked fold racing a
-          // bound-trigger recompute could erase its own increments,
-          // drifting the entry counter BELOW reality and weakening the
-          // driver-heap bound it enforces; under the lock, re-fetch and
-          // puts are atomic with every eviction/recount
-          AnnTopKExec.foldPlacements(spark, path, v, acc.value.asScala.toSeq)
+              }
+            }.rdd.takeOrdered(k)(ord)
+          // a speculative/retried warm task can record a miss for a row
+          // another attempt served — identical (dist, id) duplicates,
+          // removed before the final cut (an id lives in exactly one
+          // store row, so distinct pairs are distinct ids)
+          (warmTop ++ coldTop).distinct.sorted(ord).take(k)
         }
-        result
       }
     }
 

@@ -2,6 +2,7 @@ package graft.operators
 
 import java.nio.file.Files
 
+import org.apache.spark.graft.JobRecorder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.AnnCatalog
 
@@ -57,20 +58,19 @@ class AnnTopKStrategySpec extends SparkSpec {
     } finally AnnCatalog.unregister(dirs._1)
   }
 
-  test("local master serves the versioned warm pass via the scan path (locality machinery inert)") {
+  test("a warm trusted id-only statement runs 2 Spark jobs under local[4]") {
     AnnCatalog.register(dirs._1, dirs._2, idCol = "id", vecCol = "vec",
       ef = 150, trusted = true)
     try {
       val qv = qvecOf(11L)
-      planOf(qv, 5).collect() // first pass may be cold either way
-      org.apache.spark.sql.graft.AnnTopKExec.lastWarmPath = ""
-      planOf(qv, 5).collect()
-      // one JVM: ExecutorCacheTaskLocation scheduling buys nothing and
-      // would cost an extra per-statement collect job — the guard must
-      // keep local masters on the distributed-scan warm pass
-      assert(org.apache.spark.sql.graft.AnnTopKExec.lastWarmPath == "scan",
-        s"expected the scan warm path under local[*], got " +
-          s"'${org.apache.spark.sql.graft.AnnTopKExec.lastWarmPath}'")
+      planOf(qv, 5).collect() // first pass may be cold
+      // a fresh statement (a re-collected one reuses its executed RDD);
+      // its parquet read's inference job runs here, outside the record
+      val df = planOf(qv, 5)
+      val rec = JobRecorder.record(spark.sparkContext)(df.collect())
+      // the warm (bucket, sub) scan's takeOrdered and the result
+      // collect: no per-statement work-list collect, no cold pass
+      assert(rec.jobs.size == 2, rec.jobs.map(_.entry))
     } finally AnnCatalog.unregister(dirs._1)
   }
 
@@ -212,6 +212,30 @@ class AnnTopKStrategySpec extends SparkSpec {
       AnnCatalog.register(dirs._1, dirs._2, idCol = "id", vecCol = "vec",
         ef = 600, ivfIndex = Some(ivfPath), nprobe = 2)
       assert(planOf(qv, 10).queryExecution.executedPlan.toString.contains("nprobe=2"))
+    } finally AnnCatalog.unregister(dirs._1)
+  }
+
+  test("an in-place IVF rebuild routes by the rebuilt store's centroids") {
+    val root = Files.createTempDirectory("graft_anntopk_ivf_rebuild").toFile
+    root.deleteOnExit()
+    val ivfPath = s"$root/ivf"
+    val base = spark.read.parquet(dirs._1)
+    AnnIndexStore.buildIvfSeeded(base, ivfPath, nlist = 4, efConstruction = 100)
+    AnnCatalog.register(dirs._1, dirs._2, idCol = "id", vecCol = "vec",
+      ef = 600, ivfIndex = Some(ivfPath), nprobe = 2)
+    try {
+      val qs = Seq(3L, 11L, 250L, 777L, 1100L).map(id => (id, qvecOf(id)))
+      qs.foreach { case (_, qv) => planOf(qv, 10).collect() } // nlist = 4 store
+      // same path, different nlist, no re-registration
+      AnnIndexStore.buildIvfSeeded(base, ivfPath, nlist = 12, efConstruction = 100)
+      val expected = AnnIndexStore.searchIvf(spark, ivfPath, qs.toDF("qid", "qvec"),
+          k = 10, ef = 600, nprobe = 2)
+        .collect().map(r => (r.getAs[Long]("qid"), r.getAs[Long]("rank"), r.getAs[Long]("nid")))
+        .groupBy(_._1).map { case (q, rs) => q -> rs.sortBy(_._2).map(_._3).toSeq }
+      qs.foreach { case (id, qv) =>
+        val got = planOf(qv, 10).collect().map(_.getLong(0)).toSeq
+        assert(got == expected(id), s"query $id: routed $got vs searchIvf ${expected(id)}")
+      }
     } finally AnnCatalog.unregister(dirs._1)
   }
 
