@@ -838,18 +838,22 @@ object AnnIndexStore {
     * the batch loop: its per-category search iterates INDEX-major for
     * exactly this reason (hybrid_graph.cpp:239-298). Here:
     *
-    *  1. a distributed routing plan assigns every query its `nprobe`
-    *     nearest lists, and the per-list assignment COUNTS (≤ nlist
-    *     rows) come to the driver, which first-fit-decreasing bin-packs
-    *     the lists into groups whose assignment footprint fits
-    *     `groupBytes`;
-    *  2. ONE group (the normal case under the default bound): the
-    *     assignments are collected once (re-routing the batch inside
-    *     that collect — persisting nprobe-expanded rows that are read
-    *     once cost an extra cache-materializing job), broadcast,
-    *     walked, ranked and written to `outPath` in one step — no
-    *     staging, no second merge;
-    *  3. several groups: the routed assignments are persisted
+    *  1. ONE routing collect brings every query to the driver as
+    *     (qid, qvec, probes) — its `nprobe` nearest lists. The
+    *     `groupBytes` driver bound applies inside that collect: each
+    *     task keeps its vectors while its partition's assignments fit
+    *     its share of the bound (the bound over the task count), and
+    *     past that share returns (qid, probes) only. The per-list
+    *     assignment counts come from the collected probes;
+    *  2. ONE group (every vector came back, so the whole batch fits
+    *     the bound — the normal case under the default): the collected
+    *     rows are grouped by list, broadcast, walked, ranked and written
+    *     to `outPath` — three jobs in all (collect, rank, write), no
+    *     re-routing, no staging, no second merge;
+    *  3. several groups (some task gave up its vectors): the driver
+    *     first-fit-decreasing bin-packs the lists into groups whose
+    *     assignment footprint fits `groupBytes`, using the
+    *     probe-derived counts. The routed assignments are persisted
     *     MEMORY_AND_DISK (qids + vecs spill to local disk, never the
     *     driver); each group collects ONLY its own assignments (≤ the
     *     bound by construction), broadcasts them, and scans ONLY its
@@ -870,29 +874,42 @@ object AnnIndexStore {
   def searchIvfListMajorTo(spark: SparkSession, path: String, queries: DataFrame,
       outPath: String, k: Int, ef: Int = 200, nprobe: Int = AutoNprobe,
       groupBytes: Long = DefaultGroupBytes): Unit = {
+    import spark.implicits._
     val store = resolveStore(path)
     val cents = loadCentroidsCached(spark, store)
     val np = math.min(resolveNprobe(path, nprobe), cents.length)
     val capRows = math.max(1L, groupBytes / assignmentBytes(cents(0).length))
     val centsFlat = typedLit(cents.flatten)
-    val routing = queries
-      .select(col("qid").cast("long").as("qid"),
-        explode(graft.functions.VectorFunctions.nearestCentroids(
-          col("qvec"), centsFlat, lit(np))).as("probe"),
-        col("qvec"))
-      .select(col("qid"), col("probe").cast("long").as("bucket"), col("qvec"))
-    def collectByBucket(rows: DataFrame): Map[Long, Array[(Long, Array[Float])]] =
-      rows.select(col("bucket"), col("qid"), col("qvec"))
-        .collect()
-        .map(r => (r.getLong(0), (r.getLong(1), r.getSeq[Float](2).toArray)))
+    val probesCol = graft.functions.VectorFunctions.nearestCentroids(
+      col("qvec"), centsFlat, lit(np))
+    val routed = queries
+      .select(col("qid").cast("long"), col("qvec"), probesCol)
+      .as[(Long, Array[Float], Array[Int])]
+      .mapPartitions { it =>
+        val share = capRows / org.apache.spark.TaskContext.get().numPartitions()
+        var used = 0L
+        it.map { case (qid, qvec, probes) =>
+          used += probes.length
+          (qid, if (used <= share) qvec else null, probes)
+        }
+      }
+      .collect()
+    if (routed.forall(_._2 != null)) {
+      // every task stayed within its share, so the batch fits one
+      // group: search, rank and write in one step
+      val qByBucket = routed
+        .flatMap { case (qid, qvec, probes) => probes.map(l => (l.toLong, (qid, qvec))) }
         .groupBy(_._1).map { case (b, xs) => (b, xs.map(_._2)) }
-    val counts = routing.groupBy("bucket").count()
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
+      writeChunkedResults(spark, outPath, Iterator.single(
+        searchByBatch(spark, s"$store/lists", qByBucket, k, ef)))
+      return
+    }
+    val counts = routed.flatMap(_._3).groupMapReduce(_.toLong)(_ => 1L)(_ + _)
     // first-fit-decreasing: oversized lists land alone (handled
     // chunked below); everything else packs under capRows
     val groups = scala.collection.mutable.ArrayBuffer.empty[
       (scala.collection.mutable.ArrayBuffer[Long], Long)]
-    counts.sortBy { case (b, c) => (-c, b) }.foreach { case (b, c) =>
+    counts.toSeq.sortBy { case (b, c) => (-c, b) }.foreach { case (b, c) =>
       val fit = groups.indexWhere { case (_, used) => used + c <= capRows }
       if (fit >= 0) {
         val (ls, used) = groups(fit)
@@ -900,22 +917,21 @@ object AnnIndexStore {
         groups(fit) = (ls, used + c)
       } else groups += ((scala.collection.mutable.ArrayBuffer(b), c))
     }
-    if (groups.length <= 1 && groups.forall(_._2 <= capRows)) {
-      // one group holds every assignment (or the batch is empty):
-      // search, rank and write in one step
-      writeChunkedResults(spark, outPath, Iterator.single(
-        searchByBatch(spark, s"$store/lists", collectByBucket(routing), k, ef)))
-      return
-    }
-    val routed = routing.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val routing = queries
+      .select(col("qid").cast("long").as("qid"), explode(probesCol).as("probe"), col("qvec"))
+      .select(col("qid"), col("probe").cast("long").as("bucket"), col("qvec"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val candTmp = new java.io.File(outPath.stripSuffix("/") + ".cand.tmp")
     deleteRecursively(candTmp)
     try {
       groups.foreach { case (lists, used) =>
-        val rows = routed.filter(col("bucket")
+        val rows = routing.filter(col("bucket")
           .isin(lists.map(java.lang.Long.valueOf).toSeq: _*))
         val parts: Iterator[Map[Long, Array[(Long, Array[Float])]]] =
-          if (used <= capRows) Iterator.single(collectByBucket(rows))
+          if (used <= capRows) Iterator.single(
+            rows.select(col("bucket"), col("qid"), col("qvec"))
+              .as[(Long, Long, Array[Float])].collect()
+              .groupBy(_._1).map { case (b, xs) => (b, xs.map(x => (x._2, x._3))) })
           else {
             // hot-list skew: one list alone exceeds the bound — stream
             // its queries at the bound; only THIS blob re-reads
@@ -934,7 +950,7 @@ object AnnIndexStore {
         rankTopK(spark.read.parquet(candTmp.getPath), k)))
     } finally {
       deleteRecursively(candTmp)
-      routed.unpersist(blocking = false)
+      routing.unpersist(blocking = false)
     }
   }
 

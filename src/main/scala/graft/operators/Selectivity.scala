@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 /** Stats layer + adaptive physical-plan routing, mirroring the
   * reference's hand-rolled cost-based dispatch:
   *  - per-category counts (utils.h:377-395) and decile histogram
-  *    (utils.h:444-478) as small stats DataFrames;
+  *    (utils.h:444-478), both folded out of one (label, decile) cell
+  *    grid;
   *  - per-query selectivity (hybrid_graph.cpp:169-200);
   *  - route choice by (qtype, selectivity) with the reference's
   *    thresholds: bf_thr = 0.045, bf_thr3 = 0.08
@@ -14,7 +15,7 @@ import org.apache.spark.sql.functions._
   *  - SplitInterval: decompose a [l,r] range over the 10 fixed deciles
   *    and classify each overlapped bucket (hybrid_graph.cpp:91-134).
   *
-  * At scale these stats jobs are cheap aggregations over the base; the
+  * At scale the stats grid is one narrow pass over the base; the
   * routing column then splits the query batch into sub-plans before any
   * expensive work — the same two-phase (stats → routed plan) shape as
   * the reference, expressed declaratively.
@@ -23,15 +24,6 @@ object Selectivity {
 
   val BfThreshold = 0.045
   val BfThresholdType3 = 0.08
-
-  /** (label, cnt) — the reference's category_map. */
-  def categoryCounts(base: DataFrame): DataFrame =
-    base.groupBy("label").agg(count(lit(1)).as("cnt"))
-
-  /** (decile, cnt) — the reference's timestamp_map. */
-  def decileHistogram(base: DataFrame): DataFrame =
-    base.groupBy(floor(col("ts") * 10).cast("int").as("decile"))
-      .agg(count(lit(1)).as("cnt"))
 
   /** Per-query exact selectivity + route.
     * Output: (qid, qtype, matches, sel, route). */
@@ -68,25 +60,36 @@ object Selectivity {
     withRoutes(base, queries)
       .select(col("qid"), col("qtype"), col("sel"), col("route"))
 
-  /** The queries with `sel` and `route` appended, from ONE stats pass:
-    * the (label, decile) cell grid — both the reference's category_map
-    * and timestamp_map fall out of it — is collected to the driver
-    * (≤ labels×11 rows) and folded into the routing expression as
-    * literals. No join, no per-query job: the routed query batch is a
-    * single narrow projection, so composing plans on top of it adds
-    * nothing to the physical plan but a `when()` column. */
-  def withRoutes(base: DataFrame, queries: DataFrame): DataFrame = {
-    val cells = base
-      .select(col("label"), floor(col("ts") * 10).cast("int").as("decile"))
-      .groupBy("label", "decile").agg(count(lit(1)).as("cnt"))
+  /** The (label, decile) cell grid of `base`: row count per (label,
+    * floor(ts × 10)) cell, decile 10 holding ts = 1.0. Both of the
+    * reference's stats tables fall out of it — category_map sums a
+    * label's cells, timestamp_map a decile's. ONE job, no shuffle: each
+    * task counts its partition into a map (≤ labels × 11 entries) and
+    * the driver merges the maps. */
+  def cellCounts(base: DataFrame): Map[(Long, Int), Long] = {
+    import base.sparkSession.implicits._
+    base.select(col("label").cast("long"), floor(col("ts") * 10).cast("int"))
+      .as[(Long, Int)]
+      .mapPartitions { it =>
+        val m = scala.collection.mutable.HashMap.empty[(Long, Int), Long]
+        it.foreach(c => m(c) = m.getOrElse(c, 0L) + 1L)
+        m.iterator.map { case ((l, d), c) => (l, d, c) }
+      }
       .collect()
-    val n = math.max(cells.map(_.getLong(2)).sum, 1L).toDouble
-    val catMap: Map[Long, Long] = cells.groupBy(_.getLong(0))
-      .map { case (l, rs) => l -> rs.map(_.getLong(2)).sum }
+      .groupMapReduce(c => (c._1, c._2))(_._3)(_ + _)
+  }
+
+  /** The queries with `sel` and `route` appended, from ONE stats pass:
+    * the [[cellCounts]] grid is folded into the routing expression as
+    * literals. No join, no shuffle, no per-query job: the routed query
+    * batch is a single narrow projection, so composing plans on top of
+    * it adds nothing to the physical plan but a `when()` column. */
+  def withRoutes(base: DataFrame, queries: DataFrame): DataFrame = {
+    val cells = cellCounts(base)
+    val n = math.max(cells.values.sum, 1L).toDouble
+    val catMap: Map[Long, Long] = cells.groupMapReduce(_._1._1)(_._2)(_ + _)
     val hist = new Array[Long](10)
-    cells.foreach { r =>
-      val d = r.getInt(1); if (d >= 0 && d < 10) hist(d) += r.getLong(2)
-    }
+    cells.foreach { case ((_, d), c) => if (d >= 0 && d < 10) hist(d) += c }
     val catCnt =
       if (catMap.isEmpty) lit(0L)
       else coalesce(element_at(typedLit(catMap), col("v")), lit(0L))

@@ -1,9 +1,9 @@
 package graft.sources
 
-import java.io.{DataOutputStream, File, FileOutputStream, RandomAccessFile}
+import java.io.{File, RandomAccessFile}
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.channels.FileChannel
-import java.nio.file.{Paths, StandardOpenOption}
+import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -112,21 +112,60 @@ object ContestBinaryIO {
   }
 
   /** Contest output sink (io.h:22-33): NQ × k uint32 neighbor ids, no
-    * header, rows in qid order. Streams through the driver (the contest
-    * format is a single flat file by definition). */
+    * header, block `qid` at byte qid·4·k. `results` is (qid, neighbors)
+    * with one row per query; a row with fewer than k neighbors is padded
+    * with -1. Each task writes its rows' blocks at their offsets into a
+    * temp file beside `path` (positioned writes, as
+    * [[writeBinaryParallel]] does) and returns its qid bitset; the driver
+    * checks that the rows cover qids 0..n-1 exactly once, sets the length
+    * to n·4·k and renames the file to `path`. A gap, a duplicate or a
+    * negative qid fails the write and leaves no file at `path`: one
+    * missing row would otherwise shift every later block. One job after
+    * the plan's own stages; no sort, no driver stream. */
   def writeKnn(results: DataFrame, path: String, k: Int): Unit = {
-    val out = new DataOutputStream(new FileOutputStream(path))
+    import results.sparkSession.implicits._
+    val out = new File(path).getAbsoluteFile
+    out.getParentFile.mkdirs()
+    Files.deleteIfExists(out.toPath)
+    val tmp = new File(out.getParentFile, s".${out.getName}.tmp")
+    Files.deleteIfExists(tmp.toPath)
+    Files.createFile(tmp.toPath)
+    val tmpPath = tmp.getPath
+    val blockBytes = 4 * k
     try {
-      val it = results.select(col("qid"), col("neighbors"))
-        .orderBy("qid").toLocalIterator()
-      while (it.hasNext) {
-        val row = it.next()
-        val nb = row.getSeq[Long](1)
-        val bb = ByteBuffer.allocate(4 * k).order(ByteOrder.LITTLE_ENDIAN)
-        nb.take(k).foreach(x => bb.putInt(x.toInt))
-        (nb.length until k).foreach(_ => bb.putInt(-1)) // pad when < k matches
-        out.write(bb.array())
-      }
-    } finally out.close()
+      val parts = results.select(col("qid").cast("long"), col("neighbors"))
+        .as[(Long, Seq[Long])]
+        .mapPartitions { it =>
+          val seen = new java.util.BitSet()
+          var rows = 0L
+          val ch = FileChannel.open(Paths.get(tmpPath), StandardOpenOption.WRITE)
+          try {
+            val bb = ByteBuffer.allocate(blockBytes).order(ByteOrder.LITTLE_ENDIAN)
+            it.foreach { case (qid, nb) =>
+              require(qid >= 0 && qid < Int.MaxValue, s"writeKnn: qid $qid out of range")
+              bb.clear()
+              nb.iterator.take(k).foreach(x => bb.putInt(x.toInt))
+              while (bb.hasRemaining) bb.putInt(-1) // pad when < k matches
+              bb.flip()
+              var pos = qid * blockBytes
+              while (bb.hasRemaining) pos += ch.write(bb, pos)
+              seen.set(qid.toInt)
+              rows += 1
+            }
+          } finally ch.close()
+          Iterator.single((rows, seen.toLongArray))
+        }
+        .collect()
+      val seen = new java.util.BitSet()
+      parts.foreach { case (_, bits) => seen.or(java.util.BitSet.valueOf(bits)) }
+      val rows = parts.map(_._1).sum
+      val n = seen.cardinality()
+      require(rows == n && seen.nextClearBit(0) == n,
+        s"writeKnn: rows must cover qids 0..n-1 exactly once; $rows rows hold $n " +
+          s"distinct qids, first missing qid ${seen.nextClearBit(0)}")
+      val raf = new RandomAccessFile(tmp, "rw")
+      try raf.setLength(n.toLong * blockBytes) finally raf.close()
+      Files.move(tmp.toPath, out.toPath, StandardCopyOption.ATOMIC_MOVE)
+    } finally Files.deleteIfExists(tmp.toPath)
   }
 }

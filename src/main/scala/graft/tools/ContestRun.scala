@@ -262,13 +262,13 @@ object ContestRun {
     }
     val results = (0 to 3).map(t => spark.read.parquet(s"$resPath/t$t")).reduce(_ unionByName _)
 
-    // ---- output.bin (io.h:22-33): one k-block of uint32 per query, in
-    // qid order. Neighbor lists are assembled by a partition-local sort
-    // + run grouping (collect_list's ObjectHashAggregate trips its
+    // ---- output.bin (io.h:22-33): one k-block of uint32 per query, at
+    // offset qid·4·k. Neighbor lists are assembled by a partition-local
+    // sort + run grouping (collect_list's ObjectHashAggregate trips its
     // 128-key/task sort fallback at 1M groups — the measured cliff in
     // BASELINE.md's 20M dedup decomposition), and every qid is emitted
-    // even with zero matches (writeKnn pads with -1) — a dropped row
-    // would misalign every later block of the flat file. ----
+    // even with zero matches (writeKnn pads with -1) — writeKnn fails on
+    // a dropped or duplicated row and leaves no output.bin behind. ----
     timed("write_output_bin") {
       val nested = results.select(col("qid"), col("rank"), col("nid"))
         .repartition(cpus * 2, col("qid"))

@@ -53,7 +53,7 @@ class StoreFrameCacheSpec extends SparkSpec {
       "a second call on the same store must reuse the cached frame")
   }
 
-  test("single-group searchIvfListMajorTo runs at most 5 jobs and stages nothing") {
+  test("single-group searchIvfListMajorTo runs exactly 3 jobs and stages nothing") {
     val root = tmp("graft-sfc-ivf")
     val base = Seq.tabulate(800)(i => (i.toLong, vec())).toDF("id", "vec")
     AnnIndexStore.buildIvf(base, s"$root/ivf", nlist = 4)
@@ -65,8 +65,8 @@ class StoreFrameCacheSpec extends SparkSpec {
       AnnIndexStore.searchIvfListMajorTo(spark, s"$root/ivf", q, out,
         k = 10, ef = 64, nprobe = 2)
     }
-    // counts (2), group collect (1), rank + write (2)
-    assert(rec.jobs.size <= 5, rec.jobs.map(_.entry))
+    // routing collect (1), rank + write (2)
+    assert(rec.jobs.size == 3, rec.jobs.map(_.entry))
     assert(!rec.jobs.exists(_.isParquetRead))
     assert(!rec.sqlPlans.exists(_.contains(".cand.tmp")),
       "one group must be searched, ranked and written without staging")

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import org.apache.spark.graft.JobRecorder
 
 class SelectivitySpec extends SparkSpec {
   import spark.implicits._
@@ -42,13 +43,18 @@ class SelectivitySpec extends SparkSpec {
     assert(math.abs(sels(1L) - 0.1) < 1e-12)
   }
 
-  test("categoryCounts and decileHistogram are exact") {
-    val cc = Selectivity.categoryCounts(base).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+  test("cellCounts per-label and per-decile sums are exact") {
+    val cells = Selectivity.cellCounts(base)
+    val cc = cells.groupMapReduce(_._1._1)(_._2)(_ + _)
     assert(cc.size == 10 && cc.values.forall(_ == 100L))
-    val dh = Selectivity.decileHistogram(base).collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val dh = cells.groupMapReduce(_._1._2)(_._2)(_ + _)
     assert(dh.size == 10 && dh.values.forall(_ == 100L))
+  }
+
+  test("withRoutes' stats pass runs 1 job with no shuffle stage") {
+    val rec = JobRecorder.record(spark.sparkContext)(Selectivity.withRoutes(base, queries))
+    assert(rec.jobs.size == 1, rec.jobs.map(_.entry))
+    assert(rec.jobs.head.stages == 1, s"${rec.jobs.head.stages} stages")
   }
 
   test("splitInterval classifies SMALL/MEDIUM/FULL like the reference") {

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
 
 import graft.SparkSpec
 import graft.operators.KnnJoin
+import org.apache.spark.graft.JobRecorder
 import org.apache.spark.SparkException
 import org.apache.spark.sql.functions._
 
@@ -81,6 +82,52 @@ class ContestBinaryIOSpec extends SparkSpec {
     val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
     val ints = Array.fill(6)(bb.getInt)
     assert(ints.toSeq == Seq(9, 8, 7, 5, 6, -1))
+  }
+
+  private def knnInts(path: String): Seq[Int] = {
+    val bb = ByteBuffer.wrap(Files.readAllBytes(Paths.get(path))).order(ByteOrder.LITTLE_ENDIAN)
+    Seq.fill(bb.remaining / 4)(bb.getInt)
+  }
+
+  private def knnFrame(rows: Seq[(Long, Seq[Long])], parts: Int) = {
+    import spark.implicits._
+    spark.sparkContext.parallelize(rows, parts).toDF("qid", "neighbors")
+  }
+
+  test("writeKnn places blocks by qid whatever the partitioning and row order") {
+    val tmp = Files.createTempFile("graft-knn-rev", ".bin").toString
+    ContestBinaryIO.writeKnn(knnFrame(Seq((1L, Seq(5L, 6L)), (0L, Seq(9L, 8L, 7L))), 2), tmp, k = 3)
+    assert(knnInts(tmp) == Seq(9, 8, 7, 5, 6, -1))
+    // reverse order over several partitions, runs split across tasks
+    val rows = (0L until 50L).reverse.map(q => (q, Seq(q * 10, q * 10 + 1)))
+    ContestBinaryIO.writeKnn(knnFrame(rows, 4), tmp, k = 2)
+    assert(knnInts(tmp) == (0 until 50).flatMap(q => Seq(q * 10, q * 10 + 1)))
+  }
+
+  test("writeKnn fails on a qid gap or a duplicate qid and leaves no output") {
+    val dir = Files.createTempDirectory("graft-knn-bad")
+    val out = dir.resolve("output.bin").toString
+    ContestBinaryIO.writeKnn(knnFrame(Seq((0L, Seq(1L)), (1L, Seq(2L))), 2), out, k = 1)
+    assert(Files.size(Paths.get(out)) == 8L)
+    Seq(
+      "gap" -> Seq((0L, Seq(1L)), (2L, Seq(3L))),
+      "duplicate" -> Seq((0L, Seq(1L)), (1L, Seq(2L)), (1L, Seq(4L)))
+    ).foreach { case (name, rows) =>
+      val e = intercept[IllegalArgumentException](
+        ContestBinaryIO.writeKnn(knnFrame(rows, 2), out, k = 1))
+      assert(e.getMessage.contains("exactly once"), s"$name: ${e.getMessage}")
+      assert(!Files.exists(Paths.get(out)), s"$name: a failed write left $out")
+      assert(Files.list(dir).count() == 0L, s"$name: a failed write left its temp file")
+    }
+  }
+
+  test("writeKnn over a local DataFrame runs 1 job") {
+    import spark.implicits._
+    val res = Seq((1L, Seq(5L, 6L)), (0L, Seq(9L, 8L, 7L))).toDF("qid", "neighbors")
+    val tmp = Files.createTempFile("graft-knn-jobs", ".bin").toString
+    val rec = JobRecorder.record(spark.sparkContext)(ContestBinaryIO.writeKnn(res, tmp, k = 3))
+    assert(rec.jobs.size == 1, rec.jobs.map(_.entry))
+    assert(knnInts(tmp) == Seq(9, 8, 7, 5, 6, -1))
   }
 
   test("binary-sourced base feeds the kNN join end-to-end") {

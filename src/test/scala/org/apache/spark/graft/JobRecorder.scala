@@ -11,8 +11,10 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
   * listener bus's drain call, so a count never misses a late event. */
 object JobRecorder {
 
-  /** One started job: the long call site of its final stage. */
-  final case class Job(callSite: String) {
+  /** One started job: the long call site of its final stage, and the
+    * number of stages it holds (a shuffle's map side is one more, even
+    * when an earlier job already ran it and this one skips it). */
+  final case class Job(callSite: String, stages: Int) {
     /** The call site's first line: the outermost Spark method the user
       * code called, e.g. `DataFrameReader.parquet` for a
       * footer-inference job. */
@@ -27,7 +29,8 @@ object JobRecorder {
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val l = new SparkListener {
       override def onJobStart(s: SparkListenerJobStart): Unit =
-        jobs.add(Job(s.stageInfos.maxByOption(_.stageId).map(_.details).getOrElse("")))
+        jobs.add(Job(s.stageInfos.maxByOption(_.stageId).map(_.details).getOrElse(""),
+          s.stageInfos.size))
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
         case x: SparkListenerSQLExecutionStart => plans.add(x.physicalPlanDescription)
         case _ =>
