@@ -9,9 +9,10 @@ import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, A
 import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, GreaterThanOrEqual, IsNotNull, LessThanOrEqual}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Limit, LogicalPlan, Project, ReturnAnswer, Sort}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.{LeafExecNode, SQLExecution, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType}
+import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType, StructType}
 
 import graft.index.HnswIndex
 
@@ -299,9 +300,12 @@ case class AnnTopKStrategy(session: SparkSession) extends SparkStrategy {
     * over a FileScan) parquet read paths; the v2 case only matches when
     * the scan consumed NO partition filters — a consumed filter is
     * invisible here and routing without it would answer the wrong
-    * predicate. Returns the scan's root paths. */
+    * predicate. Returns the scan's root paths and the relation's full
+    * schema (data and partition columns, not the pruned read schema),
+    * which the guard fetch reads the base with instead of inferring it
+    * again from the footers. */
   private def unwrap(plan: LogicalPlan)
-      : Option[(Seq[org.apache.hadoop.fs.Path], PredInfo,
+      : Option[(Seq[org.apache.hadoop.fs.Path], StructType, PredInfo,
           Map[org.apache.spark.sql.catalyst.expressions.ExprId, Expression])] = plan match {
     case Project(pl, child) if pl.forall {
           case _: AttributeReference => true
@@ -310,9 +314,9 @@ case class AnnTopKStrategy(session: SparkSession) extends SparkStrategy {
           case Alias(DistCall(_, _), _) => true
           case _ => false
         } =>
-      unwrap(child).map { case (paths, preds, subst) =>
+      unwrap(child).map { case (paths, schema, preds, subst) =>
         val added = pl.collect { case a @ Alias(e, _) => a.exprId -> e }
-        (paths, preds, subst ++ added)
+        (paths, schema, preds, subst ++ added)
       }
     case Filter(cond, child) =>
       val parts = conjuncts(cond)
@@ -353,21 +357,25 @@ case class AnnTopKStrategy(session: SparkSession) extends SparkStrategy {
       range match {
         case Some(r) if eqs.length <= 1 && residue.isEmpty &&
             (eqs.nonEmpty || r.nonEmpty || extraNotNull.nonEmpty) =>
-          unwrap(child).collect { case (paths, PredInfo(None, None, nn), subst) =>
-            (paths, PredInfo(eqs.headOption, r, nn ++ extraNotNull), subst)
+          unwrap(child).collect { case (paths, schema, PredInfo(None, None, nn), subst) =>
+            (paths, schema, PredInfo(eqs.headOption, r, nn ++ extraNotNull), subst)
           }
         case _ => None
       }
     case lr: LogicalRelation =>
       lr.relation match {
-        case fs: HadoopFsRelation => Some((fs.location.rootPaths, PredInfo(), Map.empty))
+        case fs: HadoopFsRelation =>
+          Some((fs.location.rootPaths, fs.schema, PredInfo(), Map.empty))
         case _ => None
       }
     case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
       r.scan match {
         case fs: org.apache.spark.sql.execution.datasources.v2.FileScan
             if fs.partitionFilters.isEmpty =>
-          Some((fs.fileIndex.rootPaths, PredInfo(), Map.empty))
+          // the v2 relation's schema, not the FileScan's readDataSchema:
+          // the latter is pruned to the statement's columns and may lack
+          // the id the fetch filters on
+          Some((fs.fileIndex.rootPaths, r.relation.schema, PredInfo(), Map.empty))
         case _ => None
       }
     case _ => None
@@ -395,7 +403,7 @@ case class AnnTopKStrategy(session: SparkSession) extends SparkStrategy {
   private def route(k: Int, outer: Seq[org.apache.spark.sql.catalyst.expressions.NamedExpression],
       order: Seq[SortOrder], planChild: LogicalPlan): Option[SparkPlan] = {
     for {
-      (rootPaths, preds, subst) <- unwrap(planChild)
+      (rootPaths, baseSchema, preds, subst) <- unwrap(planChild)
       // resolve references through any computing projections below the
       // sort (rename chains, literal aliases, the distance alias)
       deref = { (e: Expression) =>
@@ -547,7 +555,7 @@ case class AnnTopKStrategy(session: SparkSession) extends SparkStrategy {
         .map(_.toInt).getOrElse(meta.ef)
       val basePath = rootPaths.head.toString
       AnnTopKExec(outer.map(_.toAttribute), slots, annRoute, ef, qvec, k,
-        basePath, meta.idCol, meta.vecCol, meta.trusted)
+        basePath, baseSchema, meta.idCol, meta.vecCol, meta.trusted)
     }
   }
 }
@@ -560,16 +568,52 @@ case class AnnTopKStrategy(session: SparkSession) extends SparkStrategy {
   * `slots` maps each output column to the result id, a constant, or a
   * base column; base columns are answered by a second point-lookup scan
   * of the base parquet filtered to the k result ids (pushed-down isin —
-  * k rows, not a full scan). */
+  * k rows, not a full scan). That fetch reads the base with `baseSchema`,
+  * the schema of the statement's own scanned relation, so it runs no
+  * footer-inference job; its files are still listed at execution, so a
+  * base rewritten after planning is read fresh.
+  *
+  * The result is built on the driver by [[resultRows]], so a root
+  * `collect()` ([[executeCollect]]) returns it with no result job and
+  * searches again on every call. Consumers of [[doExecute]] (`df.rdd`,
+  * writes, `toLocalIterator`, a parent operator) get the same rows
+  * through a one-partition RDD, which Spark caches per executed plan:
+  * they search once per executed plan, not once per action.
+  *
+  * Driver-side SQL metrics: output rows, base rows fetched, and the
+  * search and fetch times. */
 case class AnnTopKExec(output: Seq[Attribute], slots: Seq[AnnTopKExec.Slot],
     route: AnnTopKExec.AnnRoute, ef: Int, qvec: Array[Float], k: Int,
-    basePath: String, idCol: String, vecCol: String,
+    basePath: String, baseSchema: StructType, idCol: String, vecCol: String,
     trusted: Boolean = false)
     extends LeafExecNode {
 
+  override lazy val metrics: Map[String, SQLMetric] = Map(
+    "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"),
+    "rowsFetched" -> SQLMetrics.createMetric(sparkContext, "base rows fetched"),
+    "searchTime" -> SQLMetrics.createTimingMetric(sparkContext, "index search time"),
+    "fetchTime" -> SQLMetrics.createTimingMetric(sparkContext, "base fetch time"))
+
+  override def executeCollect(): Array[InternalRow] = {
+    val proj = UnsafeProjection.create(output.map(_.dataType).toArray)
+    resultRows().map(r => proj(r).copy(): InternalRow)
+  }
+
   override protected def doExecute(): RDD[InternalRow] = {
+    val types = output.map(_.dataType).toArray
+    sparkContext.parallelize(resultRows().toIndexedSeq, 1).mapPartitions { it =>
+      val proj = UnsafeProjection.create(types)
+      it.map(proj(_))
+    }
+  }
+
+  /** The statement's rows, in rank order: search, guard fetch,
+    * re-distance, slots. Both execution paths call this one builder. */
+  private def resultRows(): Array[InternalRow] = {
     import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    val searchStart = System.nanoTime()
     val hits = AnnTopKExec.searchHits(session, route, qvec, k, ef)
+    val fetchStart = System.nanoTime()
     val ids = hits.map(_._1)
     val types = output.map(_.dataType).toArray
     val slotArr = slots.toArray
@@ -582,7 +626,8 @@ case class AnnTopKExec(output: Seq[Attribute], slots: Seq[AnnTopKExec.Slot],
     //
     // GUARD mode (the default): the base table is the source of truth.
     // Fetch the k result rows by id (tiny scan, id-isin pushed to
-    // parquet) INCLUDING the vector, drop ids the base no longer holds
+    // parquet, read with the statement's scan schema — no footer
+    // inference) INCLUDING the vector, drop ids the base no longer holds
     // and rows whose vector went null since the index build (the
     // strategy only routes when null-vec rows provably cannot exist in
     // the scanned rows — a vec IS NOT NULL predicate, a non-nullable
@@ -598,24 +643,27 @@ case class AnnTopKExec(output: Seq[Attribute], slots: Seq[AnnTopKExec.Slot],
     // entirely from the index — zero base-table jobs, the reference's
     // serving shape. Wide projections still fetch their columns (but
     // trust the index's distances).
+    //
+    // Either way a root collect runs no result job: the rows below go
+    // straight back through executeCollect.
     val trustIndex = trusted ||
       session.conf.get("spark.graft.ann.trustIndex", "false").toBoolean
     val fetchCols = slotArr.collect { case AnnTopKExec.ColSlot(n) => n }.distinct
     val needFetch = fetchCols.nonEmpty || !trustIndex
     val fetchAll =
       if (trustIndex) fetchCols else (fetchCols :+ vecCol).distinct
-    val fetched: Map[Long, org.apache.spark.sql.Row] =
-      if (ids.isEmpty || !needFetch) Map.empty
+    val fetchedRows: Array[org.apache.spark.sql.Row] =
+      if (ids.isEmpty || !needFetch) Array.empty
       else {
         import org.apache.spark.sql.functions.col
-        session.read.parquet(basePath)
+        session.read.schema(baseSchema).parquet(basePath)
           .filter(col(idCol).isin(ids.toIndexedSeq: _*))
           .filter(col(vecCol).isNotNull)
           .select((col(idCol).cast("long").as("__id") +: fetchAll.toIndexedSeq.map(col)): _*)
           .collect()
-          .map(r => r.getLong(0) -> r)
-          .toMap
       }
+    val fetched = fetchedRows.map(r => r.getLong(0) -> r).toMap
+    val fetchEnd = System.nanoTime()
     val colIndex = fetchAll.zipWithIndex.toMap
     val converters = slotArr.zipWithIndex.map { case (s, i) =>
       s match {
@@ -646,12 +694,15 @@ case class AnnTopKExec(output: Seq[Attribute], slots: Seq[AnnTopKExec.Slot],
         }
         i += 1
       }
-      row
+      row: InternalRow
     }
-    sparkContext.parallelize(rows.toIndexedSeq, 1).mapPartitions { it =>
-      val proj = UnsafeProjection.create(types)
-      it.map(proj(_))
-    }
+    longMetric("numOutputRows") += rows.length
+    longMetric("rowsFetched") += fetchedRows.length
+    longMetric("searchTime") += (fetchStart - searchStart) / 1000000
+    longMetric("fetchTime") += (fetchEnd - fetchStart) / 1000000
+    SQLMetrics.postDriverMetricUpdates(sparkContext,
+      sparkContext.getLocalProperty(SQLExecution.EXECUTION_ID_KEY), metrics.values.toSeq)
+    rows
   }
 
   override def simpleString(maxFields: Int): String =

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.graft.JobRecorder
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.AnnCatalog
+import org.apache.spark.sql.graft.{AnnCatalog, AnnTopKExec}
 
 import graft.SparkSpec
 import graft.functions.VectorFunctions
@@ -58,20 +58,102 @@ class AnnTopKStrategySpec extends SparkSpec {
     } finally AnnCatalog.unregister(dirs._1)
   }
 
-  test("a warm trusted id-only statement runs 2 Spark jobs under local[4]") {
+  private def annExec(df: org.apache.spark.sql.DataFrame): AnnTopKExec =
+    df.queryExecution.executedPlan.collectFirst { case e: AnnTopKExec => e }
+      .getOrElse(fail(s"expected AnnTopK in:\n${df.queryExecution.executedPlan}"))
+
+  test("a warm trusted id-only statement runs 1 Spark job under local[4]") {
     AnnCatalog.register(dirs._1, dirs._2, idCol = "id", vecCol = "vec",
       ef = 150, trusted = true)
     try {
       val qv = qvecOf(11L)
       planOf(qv, 5).collect() // first pass may be cold
-      // a fresh statement (a re-collected one reuses its executed RDD);
-      // its parquet read's inference job runs here, outside the record
+      // a fresh statement; its parquet read's inference job runs here,
+      // outside the record
       val df = planOf(qv, 5)
       val rec = JobRecorder.record(spark.sparkContext)(df.collect())
-      // the warm (bucket, sub) scan's takeOrdered and the result
-      // collect: no per-statement work-list collect, no cold pass
-      assert(rec.jobs.size == 2, rec.jobs.map(_.entry))
+      // the warm (bucket, sub) scan's takeOrdered alone: no work-list
+      // collect, no cold pass, and no result job (the collect is
+      // answered from the driver)
+      assert(rec.jobs.size == 1, rec.jobs.map(_.entry))
     } finally AnnCatalog.unregister(dirs._1)
+  }
+
+  test("a warm guard-mode id-only statement runs 2 Spark jobs") {
+    AnnCatalog.register(dirs._1, dirs._2, idCol = "id", vecCol = "vec", ef = 150)
+    try {
+      val qv = qvecOf(23L)
+      planOf(qv, 5).collect() // cold pass and the null-freedom probe
+      val df = planOf(qv, 5)
+      val rec = JobRecorder.record(spark.sparkContext)(df.collect())
+      // the warm scan and the id fetch; the fetch reads the base with
+      // the scan's schema, so no footer-inference job
+      assert(rec.jobs.size == 2, rec.jobs.map(_.entry))
+      assert(!rec.jobs.exists(_.isParquetRead), rec.jobs.map(_.entry))
+    } finally AnnCatalog.unregister(dirs._1)
+  }
+
+  test("driver-side metrics: rows fetched is 0 when trusted, k in guard mode") {
+    try {
+      AnnCatalog.register(dirs._1, dirs._2, idCol = "id", vecCol = "vec",
+        ef = 150, trusted = true)
+      val trusted = planOf(qvecOf(31L), 10)
+      trusted.collect()
+      val t = annExec(trusted).metrics
+      assert(t("rowsFetched").value == 0)
+      assert(t("numOutputRows").value == 10)
+      assert(t("searchTime").value >= 0 && t("fetchTime").value >= 0)
+
+      // the base is unchanged since the index build: every hit is fetched
+      AnnCatalog.register(dirs._1, dirs._2, idCol = "id", vecCol = "vec", ef = 150)
+      val guard = planOf(qvecOf(31L), 10)
+      guard.collect()
+      val g = annExec(guard).metrics
+      assert(g("rowsFetched").value == 10)
+      assert(g("numOutputRows").value == 10)
+
+      // the RDD path reports through the same row builder
+      val viaRdd = planOf(qvecOf(37L), 10)
+      assert(viaRdd.queryExecution.toRdd.count() == 10)
+      assert(annExec(viaRdd).metrics("rowsFetched").value == 10)
+    } finally AnnCatalog.unregister(dirs._1)
+  }
+
+  test("re-collecting a routed DataFrame searches the current base again") {
+    val root = Files.createTempDirectory("graft_anntopk_recollect").toFile
+    root.deleteOnExit()
+    val basePath = s"$root/base"
+    val indexPath = s"$root/index"
+    val rnd = new scala.util.Random(43)
+    val orig = Seq.tabulate(400)(i => (i.toLong, Array.fill(dim)(rnd.nextFloat())))
+    orig.toDF("id", "vec").write.mode("overwrite").parquet(basePath)
+    AnnIndexStore.build(spark.read.parquet(basePath), indexPath, numBuckets = 2)
+    AnnCatalog.register(basePath, indexPath, idCol = "id", vecCol = "vec", ef = 400)
+    try {
+      spark.conf.set("spark.graft.ann.trustIndex", "false")
+      val qv = orig.find(_._1 == 5L).get._2
+      val df = spark.read.parquet(basePath)
+        .orderBy(VectorFunctions.l2Sq(col("vec"), typedLit(qv)), col("id"))
+        .select("id").limit(20)
+      assert(df.queryExecution.executedPlan.toString.contains("AnnTopK"))
+      val first = df.collect().map(_.getLong(0))
+      assert(first.head == 5L)
+      val second = first(1)
+      // after the plan ran: the second-ranked id takes the query vector
+      // and id 5 moves away
+      orig.map {
+        case (i, _) if i == second => (i, qv)
+        case (i, _) if i == 5L => (i, Array.fill(dim)(50f))
+        case r => r
+      }.toDF("id", "vec").write.mode("overwrite").parquet(basePath)
+      val again = df.collect().map(_.getLong(0))
+      assert(again.head == second,
+        s"the same DataFrame must rank by the current base: ${again.take(3).mkString(",")}")
+      assert(again.last == 5L)
+    } finally {
+      spark.conf.unset("spark.graft.ann.trustIndex")
+      AnnCatalog.unregister(basePath)
+    }
   }
 
   test("multi-root scan refuses the route (one matching registration is not the whole scan)") {
@@ -385,6 +467,51 @@ class AnnTopKStrategySpec extends SparkSpec {
     } finally {
       spark.conf.set("spark.sql.sources.useV1SourceList", prior)
       AnnCatalog.unregister(dirs._1)
+    }
+  }
+
+  test("DataSourceV2 wide projection: fetched columns line up with each id") {
+    val root = Files.createTempDirectory("graft_anntopk_wide_v2").toFile
+    root.deleteOnExit()
+    val basePath = s"$root/base"
+    val indexPath = s"$root/index"
+    val rnd = new scala.util.Random(31)
+    Seq.tabulate(800) { i =>
+      (i.toLong, s"name_$i", (i % 40) / 40.0, i * 3, Array.fill(dim)(rnd.nextFloat()))
+    }.toDF("id", "name", "ts", "pad", "vec").write.mode("overwrite").parquet(basePath)
+    AnnIndexStore.build(spark.read.parquet(basePath).select("id", "vec"),
+      indexPath, numBuckets = 2)
+    AnnCatalog.register(basePath, indexPath, idCol = "id", vecCol = "vec", ef = 150)
+    val prior = spark.conf.get("spark.sql.sources.useV1SourceList")
+    try {
+      spark.conf.set("spark.sql.sources.useV1SourceList", "")
+      val qv = spark.read.parquet(basePath).filter(col("id") === 77L)
+        .select("vec").head.getSeq[Float](0).toArray
+      val df = spark.read.parquet(basePath)
+        .orderBy(VectorFunctions.l2Sq(col("vec"), typedLit(qv)), col("id"))
+        .select("id", "name", "ts")
+        .limit(6)
+      val physical = df.queryExecution.executedPlan.toString
+      assert(physical.contains("AnnTopK"), s"expected AnnTopK in:\n$physical")
+      val rows = df.collect()
+      assert(rows.length == 6)
+      rows.foreach { r =>
+        val id = r.getLong(0)
+        assert(r.getString(1) == s"name_$id")
+        assert(math.abs(r.getDouble(2) - (id % 40) / 40.0) < 1e-12)
+      }
+      assert(rows.head.getLong(0) == 77L)
+      // no id in the statement: the v2 scan's read schema is pruned to
+      // (name, vec), yet the fetch still filters on id
+      val names = spark.read.parquet(basePath)
+        .orderBy(VectorFunctions.l2Sq(col("vec"), typedLit(qv)))
+        .select("name").limit(6)
+      assert(names.queryExecution.executedPlan.toString.contains("AnnTopK"))
+      val got = names.collect().map(_.getString(0))
+      assert(got.length == 6 && got.head == "name_77" && got.distinct.length == 6)
+    } finally {
+      spark.conf.set("spark.sql.sources.useV1SourceList", prior)
+      AnnCatalog.unregister(basePath)
     }
   }
 
