@@ -151,8 +151,17 @@ object AnnIndexStore {
   // size-bounded — at the cap, frames of stopped sessions are dropped
   // first, then the map clears wholesale (a re-warm is one listing per
   // store). `AnnCatalog.clear()` clears it too.
+  //
+  // The entry also holds the version's (bucket, sub) keys, collected on
+  // first use by [[storeKeys]] under the same rule (kept only when the
+  // token still matches after the collect): the SQL serving warm pass
+  // selects its rows from them on the driver instead of planning a key
+  // scan per statement.
+  private final class StoreEntry(val frame: DataFrame) {
+    @volatile var keys: Array[(Long, Int)] = null
+  }
   private val storeFrames = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), DataFrame]
+    (SparkSession, String, String), StoreEntry]
   private val MaxStoreFrames = 256
 
   /** The parquet frame of a store's RESOLVED data dir (a
@@ -167,22 +176,41 @@ object AnnIndexStore {
   def storeFrame(spark: SparkSession, dataDir: String,
       ver: Option[String]): DataFrame = ver match {
     case None => spark.read.parquet(dataDir)
-    case Some(v) =>
-      val key = (spark, dataDir, v)
-      val hit = storeFrames.get(key)
-      if (hit != null) hit
-      else {
-        if (storeFrames.size() >= MaxStoreFrames) {
-          storeFrames.keySet.removeIf(_._1.sparkContext.isStopped)
-          if (storeFrames.size() >= MaxStoreFrames) storeFrames.clear()
-        }
-        val df = spark.read.parquet(dataDir)
-        if (!versionAt(dataDir).contains(v)) df
-        else {
-          val race = storeFrames.putIfAbsent(key, df)
-          if (race != null) race else df
-        }
+    case Some(v) => storeEntry(spark, dataDir, v).frame
+  }
+
+  /** Every (bucket, sub) row key of the store version `ver` at
+    * `dataDir`, sorted; `sub` reads 0 on stores without the column.
+    * One collect job on a version's first call, none after. */
+  def storeKeys(spark: SparkSession, dataDir: String, ver: String): Array[(Long, Int)] = {
+    val e = storeEntry(spark, dataDir, ver)
+    val hit = e.keys
+    if (hit != null) hit
+    else {
+      val sub = if (e.frame.columns.contains("sub")) col("sub") else lit(0)
+      val keys = e.frame.select(col("bucket").cast("long"), sub.cast("int"))
+        .collect().map(r => (r.getLong(0), r.getInt(1))).sorted
+      if (versionAt(dataDir).contains(ver)) e.keys = keys
+      keys
+    }
+  }
+
+  private def storeEntry(spark: SparkSession, dataDir: String, v: String): StoreEntry = {
+    val key = (spark, dataDir, v)
+    val hit = storeFrames.get(key)
+    if (hit != null) hit
+    else {
+      if (storeFrames.size() >= MaxStoreFrames) {
+        storeFrames.keySet.removeIf(_._1.sparkContext.isStopped)
+        if (storeFrames.size() >= MaxStoreFrames) storeFrames.clear()
       }
+      val e = new StoreEntry(spark.read.parquet(dataDir))
+      if (!versionAt(dataDir).contains(v)) e
+      else {
+        val race = storeFrames.putIfAbsent(key, e)
+        if (race != null) race else e
+      }
+    }
   }
 
   def clearStoreFrames(): Unit = storeFrames.clear()
@@ -990,31 +1018,20 @@ object AnnIndexStore {
     val wanted = qByBucket.keys.toSeq
     val scan0 = storeFrame(spark, resolveStore(path))
       .filter(col("bucket").isin(wanted: _*))
-    // banded arm, attr-stamped store: push PER-BUCKET attr envelopes
-    // into the scan — parquet row-group stats then skip sub-rows no
-    // query OF THAT BUCKET can touch before their blob columns are even
-    // read (a global envelope would approach [0, 1] as soon as the
-    // batch spans many labels and prune nothing). Each disjunct only
-    // drops rows outside its own bucket's query envelope, so the filter
-    // is safe by construction; the per-row ts(0)/ts(last) check below
-    // still skips precisely, per query, before deserialization. The
-    // stats evaluation is per ROW GROUP and these rows are graph blobs
-    // (few rows per group), so a few hundred disjuncts cost ~nothing;
-    // beyond the clamp the OR tree's plan-analysis cost outweighs the
-    // pruning and the batch-global envelope is used instead.
+    // banded arm, attr-stamped store: push the batch's attr envelope
+    // [min l, max r] into the scan — parquet row-group stats then skip
+    // sub-rows no query of the batch can touch before their blob
+    // columns are read. One constant-size filter whatever the label
+    // count: a per-bucket OR of envelopes cost ~100 ms of driver
+    // planning per ~70 labels, and over a large batch each label's own
+    // envelope approaches [0, 1] anyway. Exactness never rests on it:
+    // the per-row ts(0)/ts(last) check below skips precisely, per
+    // query, before deserialization.
     val scan =
       if (efBands && scan0.columns.contains("attr_min")) {
-        if (qByBucket.size <= 256)
-          scan0.filter(qByBucket.iterator.map { case (b, qs) =>
-            col("bucket") === b &&
-              col("attr_max") >= qs.iterator.map(_._2).min &&
-              col("attr_min") <= qs.iterator.map(_._3).max
-          }.reduce(_ || _))
-        else {
-          val minL = qByBucket.valuesIterator.flatMap(_.iterator).map(_._2).min
-          val maxR = qByBucket.valuesIterator.flatMap(_.iterator).map(_._3).max
-          scan0.filter(col("attr_max") >= minL && col("attr_min") <= maxR)
-        }
+        val minL = qByBucket.valuesIterator.flatMap(_.iterator).map(_._2).min
+        val maxR = qByBucket.valuesIterator.flatMap(_.iterator).map(_._3).max
+        scan0.filter(col("attr_max") >= minL && col("attr_min") <= maxR)
       } else scan0
     scan
       .select(col("bucket"), col("ids"), col("attrs"), col("graph"))

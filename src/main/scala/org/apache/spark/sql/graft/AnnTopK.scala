@@ -3,7 +3,7 @@ package org.apache.spark.sql.graft
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, AttributeReference, Expression, GenericInternalRow, IntegerLiteral, Literal, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, GreaterThanOrEqual, IsNotNull, LessThanOrEqual}
@@ -560,9 +560,12 @@ case class AnnTopKStrategy(session: SparkSession) extends SparkStrategy {
   }
 }
 
-/** Physical index-search node: reads the bucketed index table, each
-  * bucket walks its HNSW for the (plan-time constant) query vector, the
-  * driver merges to the global top-k ordered by (dist, id). The merge is
+/** Physical index-search node: the route's index rows each walk their
+  * HNSW for the (plan-time constant) query vector, the driver merges to
+  * the global top-k ordered by (dist, id). On a versioned store a warm
+  * statement's search is the store version's prepared (bucket, sub)
+  * keys, filtered on the driver, walked by one RDD job
+  * ([[AnnTopKExec.searchStore]]): nothing is planned for it. The merge is
   * k·buckets rows — the same two-level shape as the reference's
   * per-sub-index candidate pooling (hybrid_graph.cpp:306-333).
   * `slots` maps each output column to the result id, a constant, or a
@@ -580,8 +583,9 @@ case class AnnTopKStrategy(session: SparkSession) extends SparkStrategy {
   * through a one-partition RDD, which Spark caches per executed plan:
   * they search once per executed plan, not once per action.
   *
-  * Driver-side SQL metrics: output rows, base rows fetched, and the
-  * search and fetch times. */
+  * Driver-side SQL metrics: output rows, base rows fetched, the search
+  * and fetch times, the index rows walked (warm and cold) and the
+  * executor-cache misses. */
 case class AnnTopKExec(output: Seq[Attribute], slots: Seq[AnnTopKExec.Slot],
     route: AnnTopKExec.AnnRoute, ef: Int, qvec: Array[Float], k: Int,
     basePath: String, baseSchema: StructType, idCol: String, vecCol: String,
@@ -592,7 +596,9 @@ case class AnnTopKExec(output: Seq[Attribute], slots: Seq[AnnTopKExec.Slot],
     "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"),
     "rowsFetched" -> SQLMetrics.createMetric(sparkContext, "base rows fetched"),
     "searchTime" -> SQLMetrics.createTimingMetric(sparkContext, "index search time"),
-    "fetchTime" -> SQLMetrics.createTimingMetric(sparkContext, "base fetch time"))
+    "fetchTime" -> SQLMetrics.createTimingMetric(sparkContext, "base fetch time"),
+    "storeRowsWalked" -> SQLMetrics.createMetric(sparkContext, "index rows walked"),
+    "cacheMisses" -> SQLMetrics.createMetric(sparkContext, "index cache misses"))
 
   override def executeCollect(): Array[InternalRow] = {
     val proj = UnsafeProjection.create(output.map(_.dataType).toArray)
@@ -612,7 +618,8 @@ case class AnnTopKExec(output: Seq[Attribute], slots: Seq[AnnTopKExec.Slot],
   private def resultRows(): Array[InternalRow] = {
     import org.apache.spark.sql.catalyst.CatalystTypeConverters
     val searchStart = System.nanoTime()
-    val hits = AnnTopKExec.searchHits(session, route, qvec, k, ef)
+    val searched = AnnTopKExec.searchHits(session, route, qvec, k, ef)
+    val hits = searched.rows
     val fetchStart = System.nanoTime()
     val ids = hits.map(_._1)
     val types = output.map(_.dataType).toArray
@@ -700,6 +707,8 @@ case class AnnTopKExec(output: Seq[Attribute], slots: Seq[AnnTopKExec.Slot],
     longMetric("rowsFetched") += fetchedRows.length
     longMetric("searchTime") += (fetchStart - searchStart) / 1000000
     longMetric("fetchTime") += (fetchEnd - fetchStart) / 1000000
+    longMetric("storeRowsWalked") += searched.rowsWalked
+    longMetric("cacheMisses") += searched.cacheMisses
     SQLMetrics.postDriverMetricUpdates(sparkContext,
       sparkContext.getLocalProperty(SQLExecution.EXECUTION_ID_KEY), metrics.values.toSeq)
     rows
@@ -742,23 +751,48 @@ object AnnTopKExec extends org.apache.spark.internal.Logging {
     override def toString: String = s"ivf=$path nprobe=$nprobe"
   }
 
+  /** The store rows a route reads, by bucket value: one definition
+    * gives both the driver-side test on a version's prepared keys and
+    * the scan filter of the blob scans, so the two cannot drift. */
+  private sealed trait Buckets {
+    def contains(b: Long): Boolean
+    def column: Option[Column]
+  }
+  private case object AllBuckets extends Buckets {
+    def contains(b: Long): Boolean = true
+    def column: Option[Column] = None
+  }
+  private final case class BucketsIn(set: Set[Long]) extends Buckets {
+    def contains(b: Long): Boolean = set.contains(b)
+    def column: Option[Column] = Some(bucketCol.isin(set.toSeq: _*))
+  }
+  private final case class BucketRange(lo: Long, hi: Long) extends Buckets {
+    def contains(b: Long): Boolean = b >= lo && b <= hi
+    def column: Option[Column] = Some(bucketCol >= lo && bucketCol <= hi)
+  }
+  private def bucketCol: Column = org.apache.spark.sql.functions.col("bucket")
+
+  /** A search's top-k, ascending (dist, id) as (id, exact fp32 dist),
+    * with the store rows it walked (warm and cold) and the rows the
+    * executor cache missed. */
+  private[graft] final case class Hits(rows: Array[(Long, Double)],
+      rowsWalked: Long, cacheMisses: Long)
+
   /** Distributed bucket search + driver top-k merge, ascending (dist, id).
-    * Bucketed routes read only the matching sub-index rows (parquet
-    * min/max pruning); range routes run the in-filter walk on partially
-    * covered deciles. Returns (id, exact fp32 dist) in rank order.
+    * Bucketed routes select only the matching sub-index rows; range
+    * routes run the in-filter walk on partially covered deciles.
     *
     * Versioned stores ([[graft.index.AnnIndexStore.storeVersion]]) serve
-    * through the two-pass [[searchStore]]: a WARM statement scans only
-    * the tiny key columns and walks executor-cached graphs — zero blob
-    * bytes read — while unversioned stores take the legacy full blob
-    * scan through the content-fingerprint cache. */
+    * through the two-pass [[searchStore]]: a WARM statement walks
+    * executor-cached graphs from the version's prepared keys — no scan
+    * planned, zero blob bytes read — while unversioned stores take the
+    * legacy full blob scan through the content-fingerprint cache. */
   private[graft] def searchHits(spark: SparkSession, route: AnnRoute,
-      qvec: Array[Float], k: Int, ef: Int): Array[(Long, Double)] = {
-    import org.apache.spark.sql.functions.col
+      qvec: Array[Float], k: Int, ef: Int): Hits = {
     val effEf = math.max(ef, k)
     route match {
       case HashRoute(path) =>
-        searchStore(spark, path, None, plainWalk(qvec, k, effEf), k)
+        searchStore(spark, path, AllBuckets, plainWalk(qvec, k, effEf), k)
       case IvfRoute(path, nprobe) =>
         // The centroid table comes from the batch IVF search's cache,
         // keyed by store version: no per-statement collect job on the
@@ -769,18 +803,16 @@ object AnnTopKExec extends org.apache.spark.internal.Logging {
         val cents = graft.index.AnnIndexStore.loadCentroidsCached(spark,
           graft.index.AnnIndexStore.resolveStore(path))
         val lists = NearestCentroids.topkArr(qvec, cents.flatten, nprobe)
-          .map(_.toLong).toIndexedSeq
-        // salted oversized lists span several rows per bucket value; the
-        // isin prunes to the probed lists via parquet min/max stats
-        // LOGICAL root + subdir, resolved inside searchStore's retry
-        // loop: an eagerly pre-resolved "<gen>/lists" path would pin
-        // one generation and make the version-swap retry a no-op for
-        // this route
-        searchStore(spark, path,
-          Some(col("bucket").isin(lists: _*)),
+          .map(_.toLong).toSet
+        // a salted oversized list spans several (bucket, sub) keys; the
+        // selection takes them all. LOGICAL root + subdir, resolved
+        // inside searchStore's retry loop: an eagerly pre-resolved
+        // "<gen>/lists" path would pin one generation and make the
+        // version-swap retry a no-op for this route
+        searchStore(spark, path, BucketsIn(lists),
           plainWalk(qvec, k, effEf), k, subdir = Some("lists"))
       case LabelRoute(path, bucket, tsRange) =>
-        searchStore(spark, path, Some(col("bucket") === bucket),
+        searchStore(spark, path, BucketsIn(Set(bucket)),
           labelWalk(qvec, k, effEf, tsRange), k)
       case RangeRoute(path, lo, hi) =>
         // one bucket of slack low ONLY when lo sits exactly on a decile
@@ -794,8 +826,7 @@ object AnnTopKExec extends org.apache.spark.internal.Logging {
         val nominal = math.floor(lo * 10).toLong
         val minB = if (lo <= nominal / 10.0) nominal - 1 else nominal
         val maxB = math.floor(hi * 10).toLong
-        searchStore(spark, path,
-          Some(col("bucket") >= minB && col("bucket") <= maxB),
+        searchStore(spark, path, BucketRange(minB, maxB),
           rangeWalk(qvec, k, effEf, lo, hi), k)
     }
   }
@@ -864,101 +895,114 @@ object AnnTopKExec extends org.apache.spark.internal.Logging {
     }
   }
 
-  /** Run `walk` over every (pred-matching) row of the store and merge
+  /** Run `walk` over every `sel`-matching row of the store and merge
     * the global top-k, ascending (dist, id).
     *
     * Versioned store (stamped by [[graft.index.AnnIndexStore]] writers):
-    *   pass 1 scans ONLY (bucket, sub) — no blob bytes — and walks rows
-    *   the executor's [[graft.index.ServingCache]] already holds under
-    *   (path, version, bucket, sub); rows it doesn't are recorded in a
-    *   collection accumulator. Pass 2 (cold rows only, pruned to their
-    *   buckets) reads the blobs, deserializes into the cache, and walks.
-    *   A fully warm statement is pass 1 alone — the read-on-hit tax the
-    *   fingerprint-keyed cache paid per statement is gone. A store
-    *   swapped mid-statement is detected by re-reading the version after
-    *   the passes (write-time tokens are unique) and the statement
-    *   retries against the new generation — entries keyed under a
-    *   superseded token are never read again and age out of the LRU.
+    *   the version's (bucket, sub) keys are collected once and kept
+    *   with its store-frame cache entry
+    *   ([[graft.index.AnnIndexStore.storeKeys]]). Pass 1 selects the
+    *   statement's keys on the driver and runs ONE RDD job over them —
+    *   no Catalyst plan, no scan — walking the rows the executor's
+    *   [[graft.index.ServingCache]] already holds under (path, version,
+    *   bucket, sub); keys it doesn't are recorded in a collection
+    *   accumulator. Pass 2 (cold rows only, pruned to their buckets)
+    *   reads the blobs, deserializes into the cache, and walks. A fully
+    *   warm statement is pass 1 alone. A store swapped mid-statement is
+    *   detected by re-reading the version after the passes (write-time
+    *   tokens are unique) and the statement retries against the new
+    *   generation — entries keyed under a superseded token are never
+    *   read again and age out of the LRU.
     *
     * Unversioned store (legacy layout, or a writer that died between
     * the parquet commit and the stamp): one full blob scan through
     * [[HnswIndex.fromBytesCached]] — the content fingerprint can never
     * serve stale bytes, just slower. */
   private def searchStore(spark: SparkSession, path: String,
-      pred: Option[org.apache.spark.sql.Column], walk: Walk,
-      k: Int, subdir: Option[String] = None): Array[(Long, Double)] = {
+      sel: Buckets, walk: Walk,
+      k: Int, subdir: Option[String] = None): Hits = {
     import org.apache.spark.sql.functions.{col, lit}
     import spark.implicits._
     val ord = Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
+    val sc = spark.sparkContext
 
-    def onePass(ver: Option[String], dataPath: String): Array[(Double, Long)] = {
-      // the shared store-frame cache, validated against THIS pass's
-      // token — the executor cache below keys its entries on it
+    def blobScan(dataPath: String, ver: Option[String], filter: Option[Column]) = {
       val df0 = graft.index.AnnIndexStore.storeFrame(spark, dataPath, ver)
-      val df = pred.map(df0.filter).getOrElse(df0)
+      val df = filter.fold(df0)(df0.filter)
       val subCol = (if (df.columns.contains("sub")) col("sub") else lit(0))
         .cast("int").as("sub")
       val attrsCol = (if (df.columns.contains("attrs")) col("attrs")
         else lit(null).cast("array<double>")).as("attrs")
-      def coldScan(d: org.apache.spark.sql.DataFrame) = d
-        .select(col("bucket").cast("long").as("bucket"), subCol,
+      df.select(col("bucket").cast("long").as("bucket"), subCol,
           col("ids"), attrsCol, col("graph"))
         .as[(Long, Int, Array[Long], Array[Double], Array[Byte])]
+    }
+
+    def hits(top: Array[(Double, Long)], walked: Long, misses: Long) =
+      Hits(top.map { case (d, id) => (id, d) }, walked, misses)
+
+    def onePass(ver: Option[String], dataPath: String): Hits =
       ver match {
       case None =>
-        coldScan(df).mapPartitions { it =>
+        val walked = sc.longAccumulator
+        val top = blobScan(dataPath, None, sel.column).mapPartitions { it =>
           it.flatMap { case (bucket, _, ids, attrs, bytes) =>
+            walked.add(1)
             walk(bucket, new graft.index.ServingCache.Entry(
               HnswIndex.fromBytesCached(bytes), ids, attrs))
           }
         }.rdd.takeOrdered(k)(ord)
+        hits(top, walked.value, 0L)
       case Some(v) =>
-        val missAcc = spark.sparkContext
-          .collectionAccumulator[(Long, Int)]("graft.serving.miss")
-        val warmTop = df
-          .select(col("bucket").cast("long").as("bucket"), subCol)
-          .as[(Long, Int)]
-          .mapPartitions(_.flatMap { case (bucket, sub) =>
-            val e = graft.index.ServingCache.get(path, v, bucket, sub)
-            if (e == null) { missAcc.add((bucket, sub)); Iterator.empty }
-            else walk(bucket, e)
-          })
-          .rdd.takeOrdered(k)(ord)
-        val missed = {
-          import scala.jdk.CollectionConverters._
-          missAcc.value.asScala.toSet
-        }
-        if (missed.isEmpty) warmTop
+        val keys = graft.index.AnnIndexStore.storeKeys(spark, dataPath, v)
+          .filter { case (bucket, _) => sel.contains(bucket) }
+        if (keys.isEmpty) hits(Array.empty, 0L, 0L)
         else {
-          val missBuckets = missed.map(_._1).toSeq
-          val coldTop = coldScan(df.filter(col("bucket").isin(missBuckets: _*)))
-            .mapPartitions { it =>
-              it.flatMap { case (bucket, sub, ids, attrs, bytes) =>
-                if (!missed.contains((bucket, sub))) Iterator.empty
-                // fromBytesCached, not fromBytes: when the ServingCache
-                // is under-budgeted for the store's working set, every
-                // statement re-misses the evicted rows — the
-                // fingerprint-keyed deserialization cache then still
-                // shares the parsed graph (one hash of the bytes vs a
-                // full re-parse per statement), so the degraded path
-                // costs what the r10 fingerprint path did, not more.
-                // Both caches hold the SAME immutable index object, so
-                // double-residency costs one reference, not one copy.
-                else {
-                  val e = graft.index.ServingCache.put(path, v,
-                    bucket, sub, HnswIndex.fromBytesCached(bytes), ids, attrs)
-                  walk(bucket, e)
+          val missAcc = sc.collectionAccumulator[(Long, Int)]("graft.serving.miss")
+          val warmTop = sc.parallelize(keys.toIndexedSeq,
+              math.min(keys.length, sc.defaultParallelism))
+            .mapPartitions(_.flatMap { case (bucket, sub) =>
+              val e = graft.index.ServingCache.get(path, v, bucket, sub)
+              if (e == null) { missAcc.add((bucket, sub)); Iterator.empty }
+              else walk(bucket, e)
+            })
+            .takeOrdered(k)(ord)
+          val missed = {
+            import scala.jdk.CollectionConverters._
+            missAcc.value.asScala.toSet
+          }
+          if (missed.isEmpty) hits(warmTop, keys.length, 0L)
+          else {
+            val missBuckets = missed.map(_._1)
+            val coldTop = blobScan(dataPath, ver, BucketsIn(missBuckets).column)
+              .mapPartitions { it =>
+                it.flatMap { case (bucket, sub, ids, attrs, bytes) =>
+                  if (!missed.contains((bucket, sub))) Iterator.empty
+                  // fromBytesCached, not fromBytes: when the ServingCache
+                  // is under-budgeted for the store's working set, every
+                  // statement re-misses the evicted rows — the
+                  // fingerprint-keyed deserialization cache then still
+                  // shares the parsed graph (one hash of the bytes vs a
+                  // full re-parse per statement), so the degraded path
+                  // costs what the r10 fingerprint path did, not more.
+                  // Both caches hold the SAME immutable index object, so
+                  // double-residency costs one reference, not one copy.
+                  else {
+                    val e = graft.index.ServingCache.put(path, v,
+                      bucket, sub, HnswIndex.fromBytesCached(bytes), ids, attrs)
+                    walk(bucket, e)
+                  }
                 }
-              }
-            }.rdd.takeOrdered(k)(ord)
-          // a speculative/retried warm task can record a miss for a row
-          // another attempt served — identical (dist, id) duplicates,
-          // removed before the final cut (an id lives in exactly one
-          // store row, so distinct pairs are distinct ids)
-          (warmTop ++ coldTop).distinct.sorted(ord).take(k)
+              }.rdd.takeOrdered(k)(ord)
+            // a speculative/retried warm task can record a miss for a row
+            // another attempt served — identical (dist, id) duplicates,
+            // removed before the final cut (an id lives in exactly one
+            // store row, so distinct pairs are distinct ids)
+            hits((warmTop ++ coldTop).distinct.sorted(ord).take(k),
+              keys.length, missed.size)
+          }
         }
       }
-    }
 
     // (data dir, version) resolved together: a generation-layout store
     // serves one immutable dir per pass, so a pass is always internally
@@ -970,7 +1014,7 @@ object AnnTopKExec extends org.apache.spark.internal.Logging {
     // one statement is the corner this retry covers). A failure with NO
     // store change is a real error and propagates.
     var (dataPath, ver) = graft.index.AnnIndexStore.resolveVersioned(path, subdir)
-    var top: Array[(Double, Long)] = null
+    var top: Hits = null
     var retries = 0
     while (top == null) {
       val passed =
@@ -996,6 +1040,6 @@ object AnnTopKExec extends org.apache.spark.internal.Logging {
         }
       }
     }
-    top.map { case (d, id) => (id, d) }
+    top
   }
 }

@@ -589,6 +589,50 @@ class AnnIndexStoreSpec extends SparkSpec {
     assert(recall >= 0.85, s"recall $recall")
   }
 
+  /** A 20-label attrSalted store (3 ts-contiguous chunks per label) and
+    * one banded query per label. */
+  private lazy val bandedStore = {
+    // ts = a permutation of i/1800: each label's rows sit 1/90 apart
+    val base = Seq.tabulate(1800)(i =>
+        (i.toLong, (i % 20).toLong, (i * 7919 % 1800) / 1800.0, vec()))
+      .toDF("id", "label", "ts", "vec")
+    val dir = Files.createTempDirectory("graft-annstore-t3env").toString + "/by_label_ts"
+    AnnIndexStore.buildBy(base, dir, "label", attrCol = Some("ts"),
+      maxRowsPerIndex = 30, attrSalted = true)
+    val queries = Seq.tabulate(20) { i =>
+      val l = (i % 7) / 10.0
+      (i.toLong, i.toLong, l, l + 0.05 + (i % 3) / 10.0, vec())
+    }
+    (dir, queries)
+  }
+
+  test("banded type-3 batch over many labels equals its queries searched one per batch") {
+    val (dir, queries) = bandedStore
+    assert(spark.read.parquet(dir).groupBy("bucket").count()
+      .collect().forall(_.getLong(1) == 3), "expected 3 chunks per label")
+    def search(qs: Seq[(Long, Long, Double, Double, Array[Float])]): Set[(Long, Long, Long)] =
+      AnnIndexStore.searchByRange(spark, dir, qs.toDF("qid", "v", "l", "r", "qvec"),
+          k = 10, ef = 64, efBands = true)
+        .collect().map(r => (r.getAs[Long]("qid"), r.getAs[Long]("rank"), r.getAs[Long]("nid")))
+        .toSet
+    val batch = search(queries)
+    assert(batch.map(_._1).size == 20)
+    assert(batch == queries.flatMap(q => search(Seq(q))).toSet)
+  }
+
+  test("banded type-3 scan filter has a constant size whatever the label count") {
+    val (dir, queries) = bandedStore
+    def attrMaxRefs(qs: Seq[(Long, Long, Double, Double, Array[Float])]): Int = {
+      val plan = AnnIndexStore.searchByRange(spark, dir,
+          qs.toDF("qid", "v", "l", "r", "qvec"), k = 10, ef = 64, efBands = true)
+        .queryExecution.optimizedPlan.toString
+      "attr_max".r.findAllMatchIn(plan).size
+    }
+    val two = attrMaxRefs(queries.take(2))
+    assert(two > 0)
+    assert(attrMaxRefs(queries) == two)
+  }
+
   test("stored decile-range search: predicate holds, recall >= 0.85 vs exact") {
     val base = Seq.tabulate(1500)(i => (i.toLong, (i % 40) / 40.0, vec()))
       .toDF("id", "ts", "vec")

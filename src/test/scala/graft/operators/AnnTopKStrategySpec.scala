@@ -119,6 +119,91 @@ class AnnTopKStrategySpec extends SparkSpec {
     } finally AnnCatalog.unregister(dirs._1)
   }
 
+  test("a warm trusted statement fires one query-execution callback: its own collect") {
+    AnnCatalog.register(dirs._1, dirs._2, idCol = "id", vecCol = "vec",
+      ef = 150, trusted = true)
+    try {
+      val qv = qvecOf(13L)
+      planOf(qv, 5).collect()
+      val df = planOf(qv, 5)
+      // the warm search plans no Dataset of its own
+      val calls = JobRecorder.queryCallbacks(spark)(df.collect())
+      assert(calls == Seq("collect"), calls)
+    } finally AnnCatalog.unregister(dirs._1)
+  }
+
+  test("a store version's keys are collected by its first statement only") {
+    val root = Files.createTempDirectory("graft_anntopk_keys").toFile
+    root.deleteOnExit()
+    val indexPath = s"$root/index"
+    AnnIndexStore.build(spark.read.parquet(dirs._1), indexPath, numBuckets = 3)
+    AnnCatalog.register(dirs._1, indexPath, idCol = "id", vecCol = "vec",
+      ef = 150, trusted = true)
+    try {
+      val qv = qvecOf(17L)
+      def keyJobs(): Seq[JobRecorder.Job] = {
+        val df = planOf(qv, 5)
+        JobRecorder.record(spark.sparkContext)(df.collect())
+          .jobs.filter(_.callSite.contains("AnnIndexStore$.storeKeys"))
+      }
+      // the first statement also lists the new version's frame (its
+      // footer-inference job), then collects the keys
+      assert(keyJobs().count(!_.isParquetRead) == 1)
+      assert(keyJobs().isEmpty)
+    } finally AnnCatalog.unregister(dirs._1)
+  }
+
+  test("an in-place label-store rebuild that adds a label serves it next statement") {
+    val root = Files.createTempDirectory("graft_anntopk_relabel").toFile
+    root.deleteOnExit()
+    val basePath = s"$root/base"
+    val byLabelPath = s"$root/by_label"
+    val rnd = new scala.util.Random(53)
+    Seq.tabulate(600)(i => (i.toLong, (i % 4).toLong, Array.fill(dim)(rnd.nextFloat())))
+      .toDF("id", "label", "vec").write.mode("overwrite").parquet(basePath)
+    val base = spark.read.parquet(basePath)
+    AnnIndexStore.buildBy(base.filter(col("label") < 3), byLabelPath, "label")
+    AnnCatalog.register(basePath, s"$root/unused", idCol = "id", vecCol = "vec",
+      ef = 200, labelIndex = Some(("label", byLabelPath)), trusted = true)
+    try {
+      def label(v: Long): Array[Long] =
+        spark.read.parquet(basePath).filter(col("label") === v)
+          .orderBy(VectorFunctions.l2Sq(col("vec"), typedLit(Array.fill(dim)(0.5f))),
+            col("id"))
+          .select("id").limit(10).collect().map(_.getLong(0))
+      assert(label(1L).length == 10) // the first version's keys are now held
+      assert(label(3L).isEmpty)
+      AnnIndexStore.buildBy(base, byLabelPath, "label")
+      val got = label(3L)
+      assert(got.length == 10 && got.forall(_ % 4 == 3), got.toSeq)
+    } finally AnnCatalog.unregister(basePath)
+  }
+
+  test("driver-side metrics: an IVF statement walks nprobe rows; a warm one misses none") {
+    val root = Files.createTempDirectory("graft_anntopk_ivf_metrics").toFile
+    root.deleteOnExit()
+    val ivfPath = s"$root/ivf"
+    AnnIndexStore.buildIvfSeeded(spark.read.parquet(dirs._1), ivfPath, nlist = 8,
+      efConstruction = 100)
+    // unsalted: one store row per list
+    val lists = spark.read.parquet(
+      AnnIndexStore.resolveStore(s"${AnnIndexStore.resolveStore(ivfPath)}/lists"))
+    assert(lists.count() == 8 && lists.select("bucket").distinct().count() == 8)
+    AnnCatalog.register(dirs._1, dirs._2, idCol = "id", vecCol = "vec",
+      ef = 150, ivfIndex = Some(ivfPath), nprobe = 3, trusted = true)
+    try {
+      val qv = qvecOf(41L)
+      val cold = planOf(qv, 10)
+      cold.collect()
+      assert(annExec(cold).metrics("storeRowsWalked").value == 3)
+      assert(annExec(cold).metrics("cacheMisses").value == 3)
+      val warm = planOf(qv, 10)
+      warm.collect()
+      assert(annExec(warm).metrics("storeRowsWalked").value == 3)
+      assert(annExec(warm).metrics("cacheMisses").value == 0)
+    } finally AnnCatalog.unregister(dirs._1)
+  }
+
   test("re-collecting a routed DataFrame searches the current base again") {
     val root = Files.createTempDirectory("graft_anntopk_recollect").toFile
     root.deleteOnExit()

@@ -1,23 +1,28 @@
 package graft.sources
 
+import java.nio.file.Files
+
 import graft.SparkSpec
 import graft.operators.KnnJoin
+import graft.tools.ContestCorpus
 import org.apache.spark.sql.functions._
 
-/** Integration test against the reference repo's checked-in smoke
-  * fixtures (dummy-data.bin: 10k rows × (label, ts, vec[100]);
-  * dummy-queries.bin: 100 queries × (type, v, l, r, vec[100])) — the
-  * same files baseline.cpp:30-32 defaults to. Data-only usage of the
-  * read-only reference checkout; skipped if absent. */
+/** The contest smoke workload at the reference dummy's shape
+  * (dummy-data.bin: 10k rows × (label, ts, vec[100]); dummy-queries.bin:
+  * 100 queries × (type, v, l, r, vec[100]) — the files baseline.cpp:30-32
+  * defaults to), on a fixture generated from [[ContestCorpus]] in the
+  * same binary layout, so it runs on every host. */
 class ReferenceDummySpec extends SparkSpec {
 
-  private val dataPath = "/root/reference/dummy-data.bin"
-  private val queryPath = "/root/reference/dummy-queries.bin"
-  private def available: Boolean =
-    new java.io.File(dataPath).exists() && new java.io.File(queryPath).exists()
+  private lazy val (dataPath, queryPath) = {
+    val dir = Files.createTempDirectory("graft-dummy-bin").toString
+    val (b, q) = (s"$dir/dummy-data.bin", s"$dir/dummy-queries.bin")
+    ContestBinaryIO.writeBase(spark, b, 10000, ContestCorpus.dim, 4)(ContestCorpus.baseRow)
+    ContestBinaryIO.writeQueries(spark, q, 100, ContestCorpus.dim, 2)(ContestCorpus.queryRow)
+    (b, q)
+  }
 
   test("reads the contest dummy base with the documented shape") {
-    assume(available)
     val base = ContestBinaryIO.readBase(spark, dataPath, dim = 100, numPartitions = 8)
     assert(base.count() == 10000)
     val row = base.agg(
@@ -28,10 +33,11 @@ class ReferenceDummySpec extends SparkSpec {
   }
 
   test("answers the full dummy workload; type-1/3 results respect predicates") {
-    assume(available)
     val base = ContestBinaryIO.readBase(spark, dataPath, 100, 8)
     val queries = ContestBinaryIO.readQueries(spark, queryPath, 100, 2)
     assert(queries.count() == 100)
+    assert(queries.select("qtype").distinct().collect().map(_.getInt(0)).toSet ==
+      Set(0, 1, 2, 3))
     val res = KnnJoin.exactFlat(base, queries, k = 100)
     // join results back to base+queries and check predicate satisfaction
     val checked = res

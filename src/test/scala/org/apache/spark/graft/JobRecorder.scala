@@ -4,7 +4,10 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Records the Spark jobs and SQL executions a block starts, for specs
   * that assert exact job counts. Lives under `org.apache.spark` for the
@@ -43,5 +46,25 @@ object JobRecorder {
       sc.listenerBus.waitUntilEmpty()
     } finally sc.removeSparkListener(l)
     Recording(jobs.asScala.toSeq, plans.asScala.toSeq)
+  }
+
+  /** The names of the Dataset actions whose `QueryExecutionListener`
+    * callbacks (success or failure) `body` fires in `spark`'s session. */
+  def queryCallbacks(spark: SparkSession)(body: => Unit): Seq[String] = {
+    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        names.add(funcName)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+        names.add(funcName)
+    }
+    val bus = spark.sparkContext.listenerBus
+    bus.waitUntilEmpty()
+    spark.listenerManager.register(l)
+    try {
+      body
+      bus.waitUntilEmpty()
+    } finally spark.listenerManager.unregister(l)
+    names.asScala.toSeq
   }
 }
