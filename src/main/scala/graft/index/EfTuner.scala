@@ -547,6 +547,11 @@ object EfTuner {
     val store = AnnIndexStore.resolveStore(storePath)
     val cents = AnnIndexStore.loadCentroidsCached(spark, store)
     val nlist = cents.length
+    // a rung past the list count probes every list, as the nlist rung
+    // does: clamped and deduplicated, so the tuner never reports or
+    // persists an nprobe the store cannot have (a 10-list store with
+    // the default ladder persists 10, not 16)
+    val rungLadder = ladder.map(math.min(_, nlist)).distinct
     // ONE all-lists walk instead of one searchIvf job per rung: per-list
     // walks are independent of which lists a probe set selects, so a
     // rung's searchIvf result is EXACTLY the (dist, id)-ascending top-k
@@ -579,11 +584,11 @@ object EfTuner {
     // in both forms (NprobeTunerEquivalenceSpec pins the rungs).
     val extension = {
       val b = scala.collection.mutable.ArrayBuffer.empty[Int]
-      var ext = ladder.last
+      var ext = rungLadder.last
       while (ext < nlist) { ext = math.min(ext * 2, nlist); b += ext }
       b.toSeq
     }
-    val allRungs: Seq[Int] = (ladder ++ extension).distinct
+    val allRungs: Seq[Int] = rungLadder ++ extension
     val rungIdx = allRungs.zipWithIndex.toMap
     val hits = new Array[Long](allRungs.length)
     var total = 0L
@@ -641,7 +646,7 @@ object EfTuner {
       rungs += NprobeRung(np, recall)
       if (recall >= targetRecall) chosen = np
     }
-    val it = ladder.iterator
+    val it = rungLadder.iterator
     while (chosen < 0 && it.hasNext) measure(it.next())
     // Ladder exhausted under the bar: extend toward nlist by doubling
     // rather than silently shipping the under-bar ladder max — the
@@ -652,7 +657,7 @@ object EfTuner {
     // where the old fallback served an unreceipted under-bar count.)
     val extIt = extension.iterator
     while (chosen < 0 && extIt.hasNext) measure(extIt.next())
-    NprobeResult(if (chosen < 0) ladder.last else chosen, targetRecall,
+    NprobeResult(if (chosen < 0) rungLadder.last else chosen, targetRecall,
       rungs.toSeq)
   }
 

@@ -2,16 +2,20 @@ package org.apache.spark.sql.graft
 
 import scala.collection.concurrent.TrieMap
 
+import org.apache.hadoop.fs.Path
+
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, AttributeReference, Expression, GenericInternalRow, IntegerLiteral, Literal, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, AttributeReference, BoundReference, Cast, Expression, GenericInternalRow, IntegerLiteral, Literal, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, GreaterThanOrEqual, IsNotNull, LessThanOrEqual}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Limit, LogicalPlan, Project, ReturnAnswer, Sort}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.execution.{LeafExecNode, SQLExecution, SparkPlan, SparkStrategy}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.{LeafExecNode, PartitionedFileUtil, SQLExecution, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.datasources.{FileFormat, HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
+import org.apache.spark.sql.sources
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType, StructType}
 
 import graft.index.HnswIndex
@@ -565,16 +569,22 @@ case class AnnTopKStrategy(session: SparkSession) extends SparkStrategy {
   * the global top-k ordered by (dist, id). On a versioned store a warm
   * statement's search is the store version's prepared (bucket, sub)
   * keys, filtered on the driver, walked by one RDD job
-  * ([[AnnTopKExec.searchStore]]): nothing is planned for it. The merge is
-  * k·buckets rows — the same two-level shape as the reference's
-  * per-sub-index candidate pooling (hybrid_graph.cpp:306-333).
+  * ([[AnnTopKExec.searchStore]]); rows the executor cache misses are
+  * read by one more. The merge is k·buckets rows — the same two-level
+  * shape as the reference's per-sub-index candidate pooling
+  * (hybrid_graph.cpp:306-333).
   * `slots` maps each output column to the result id, a constant, or a
-  * base column; base columns are answered by a second point-lookup scan
-  * of the base parquet filtered to the k result ids (pushed-down isin —
-  * k rows, not a full scan). That fetch reads the base with `baseSchema`,
-  * the schema of the statement's own scanned relation, so it runs no
-  * footer-inference job; its files are still listed at execution, so a
-  * base rewritten after planning is read fresh.
+  * base column; base columns are answered by a point fetch of the k
+  * result rows from the base parquet, ids pushed down for row-group
+  * pruning. That fetch reads the base with `baseSchema`, the schema of
+  * the statement's own scanned relation, so it infers nothing from the
+  * footers; its files are listed again on every call, so a base
+  * rewritten after planning is read fresh.
+  *
+  * Every read here, the guard fetch and the cold blob loads alike, is
+  * one [[AnnTopKExec.freshParquet]] RDD job over Spark's parquet row
+  * reader: no Dataset is built, so a statement runs no analysis,
+  * optimization or codegen below its own collect.
   *
   * The result is built on the driver by [[resultRows]], so a root
   * `collect()` ([[executeCollect]]) returns it with no result job and
@@ -585,7 +595,7 @@ case class AnnTopKStrategy(session: SparkSession) extends SparkStrategy {
   *
   * Driver-side SQL metrics: output rows, base rows fetched, the search
   * and fetch times, the index rows walked (warm and cold) and the
-  * executor-cache misses. */
+  * executor-cache hits and misses. */
 case class AnnTopKExec(output: Seq[Attribute], slots: Seq[AnnTopKExec.Slot],
     route: AnnTopKExec.AnnRoute, ef: Int, qvec: Array[Float], k: Int,
     basePath: String, baseSchema: StructType, idCol: String, vecCol: String,
@@ -598,6 +608,7 @@ case class AnnTopKExec(output: Seq[Attribute], slots: Seq[AnnTopKExec.Slot],
     "searchTime" -> SQLMetrics.createTimingMetric(sparkContext, "index search time"),
     "fetchTime" -> SQLMetrics.createTimingMetric(sparkContext, "base fetch time"),
     "storeRowsWalked" -> SQLMetrics.createMetric(sparkContext, "index rows walked"),
+    "cacheHits" -> SQLMetrics.createMetric(sparkContext, "index cache hits"),
     "cacheMisses" -> SQLMetrics.createMetric(sparkContext, "index cache misses"))
 
   override def executeCollect(): Array[InternalRow] = {
@@ -616,13 +627,11 @@ case class AnnTopKExec(output: Seq[Attribute], slots: Seq[AnnTopKExec.Slot],
   /** The statement's rows, in rank order: search, guard fetch,
     * re-distance, slots. Both execution paths call this one builder. */
   private def resultRows(): Array[InternalRow] = {
-    import org.apache.spark.sql.catalyst.CatalystTypeConverters
     val searchStart = System.nanoTime()
     val searched = AnnTopKExec.searchHits(session, route, qvec, k, ef)
     val hits = searched.rows
     val fetchStart = System.nanoTime()
     val ids = hits.map(_._1)
-    val types = output.map(_.dataType).toArray
     val slotArr = slots.toArray
     // searchHits distances are already the engine-canonical sequential-
     // double arithmetic (HnswIndex.exactDistTo — identical to the
@@ -632,17 +641,17 @@ case class AnnTopKExec(output: Seq[Attribute], slots: Seq[AnnTopKExec.Slot],
     // matches, with no re-distancing needed here.
     //
     // GUARD mode (the default): the base table is the source of truth.
-    // Fetch the k result rows by id (tiny scan, id-isin pushed to
-    // parquet, read with the statement's scan schema — no footer
-    // inference) INCLUDING the vector, drop ids the base no longer holds
-    // and rows whose vector went null since the index build (the
-    // strategy only routes when null-vec rows provably cannot exist in
-    // the scanned rows — a vec IS NOT NULL predicate, a non-nullable
-    // column, trusted, or a measured null-free base — so dropping here
-    // matches), and
-    // re-distance/re-sort against the CURRENT base vectors — so even a
-    // base row whose vector changed since the index build emits the
-    // distance and rank the unrouted exact plan would.
+    // Fetch the k result rows by id (one fresh read of the base, ids
+    // pushed down, read with the statement's scan schema — no footer
+    // inference, no query planned) INCLUDING the vector, drop ids the
+    // base no longer holds and rows whose vector went null since the
+    // index build (the strategy only routes when null-vec rows provably
+    // cannot exist in the scanned rows — a vec IS NOT NULL predicate, a
+    // non-nullable column, trusted, or a measured null-free base — so
+    // dropping here matches), and re-distance/re-sort against the
+    // CURRENT base vectors — so even a base row whose vector changed
+    // since the index build emits the distance and rank the unrouted
+    // exact plan would.
     //
     // TRUST mode (per-registration `trusted=true`, or the session-wide
     // spark.graft.ann.trustIndex operator override): the store is fresh
@@ -657,31 +666,20 @@ case class AnnTopKExec(output: Seq[Attribute], slots: Seq[AnnTopKExec.Slot],
       session.conf.get("spark.graft.ann.trustIndex", "false").toBoolean
     val fetchCols = slotArr.collect { case AnnTopKExec.ColSlot(n) => n }.distinct
     val needFetch = fetchCols.nonEmpty || !trustIndex
-    val fetchAll =
-      if (trustIndex) fetchCols else (fetchCols :+ vecCol).distinct
-    val fetchedRows: Array[org.apache.spark.sql.Row] =
-      if (ids.isEmpty || !needFetch) Array.empty
-      else {
-        import org.apache.spark.sql.functions.col
-        session.read.schema(baseSchema).parquet(basePath)
-          .filter(col(idCol).isin(ids.toIndexedSeq: _*))
-          .filter(col(vecCol).isNotNull)
-          .select((col(idCol).cast("long").as("__id") +: fetchAll.toIndexedSeq.map(col)): _*)
-          .collect()
-      }
-    val fetched = fetchedRows.map(r => r.getLong(0) -> r).toMap
+    val (fetched, fetchedSchema) =
+      if (ids.isEmpty || !needFetch) (Map.empty[Long, InternalRow], new StructType())
+      else AnnTopKExec.fetchBaseRows(session, basePath, baseSchema, idCol, vecCol,
+        fetchCols.toSeq, ids)
     val fetchEnd = System.nanoTime()
-    val colIndex = fetchAll.zipWithIndex.toMap
-    val converters = slotArr.zipWithIndex.map { case (s, i) =>
-      s match {
-        case AnnTopKExec.ColSlot(_) =>
-          CatalystTypeConverters.createToCatalystConverter(types(i))
-        case _ => null
-      }
+    val resolver = conf.resolver
+    def ordinal(name: String): Int = fetchedSchema.indexWhere(f => resolver(f.name, name))
+    val colOrd = slotArr.map {
+      case AnnTopKExec.ColSlot(n) => ordinal(n)
+      case _ => -1
     }
+    val vecOrd = ordinal(vecCol)
     def baseDist(id: Long): Double =
-      graft.functions.VectorFunctions.l2SqJvm(
-        fetched(id).getSeq[Float](colIndex(vecCol) + 1), qvec)
+      graft.functions.VectorFunctions.l2SqJvm(fetched(id).getArray(vecOrd).toFloatArray(), qvec)
     val outHits =
       if (!needFetch) hits
       else if (trustIndex) hits.filter { case (id, _) => fetched.contains(id) }
@@ -696,18 +694,23 @@ case class AnnTopKExec(output: Seq[Attribute], slots: Seq[AnnTopKExec.Slot],
           case AnnTopKExec.IdSlot => row.update(i, id)
           case AnnTopKExec.DistSlot => row.update(i, d)
           case AnnTopKExec.ConstSlot(v) => row.update(i, v)
-          case AnnTopKExec.ColSlot(n) =>
-            row.update(i, converters(i)(fetched(id).get(colIndex(n) + 1)))
+          case AnnTopKExec.ColSlot(_) =>
+            // the fetched row holds Catalyst values of the scan's own
+            // column types, so it feeds the output row as is
+            val o = colOrd(i)
+            val r = fetched(id)
+            row.update(i, if (r.isNullAt(o)) null else r.get(o, fetchedSchema(o).dataType))
         }
         i += 1
       }
       row: InternalRow
     }
     longMetric("numOutputRows") += rows.length
-    longMetric("rowsFetched") += fetchedRows.length
+    longMetric("rowsFetched") += fetched.size
     longMetric("searchTime") += (fetchStart - searchStart) / 1000000
     longMetric("fetchTime") += (fetchEnd - fetchStart) / 1000000
     longMetric("storeRowsWalked") += searched.rowsWalked
+    longMetric("cacheHits") += searched.cacheHits
     longMetric("cacheMisses") += searched.cacheMisses
     SQLMetrics.postDriverMetricUpdates(sparkContext,
       sparkContext.getLocalProperty(SQLExecution.EXECUTION_ID_KEY), metrics.values.toSeq)
@@ -752,31 +755,93 @@ object AnnTopKExec extends org.apache.spark.internal.Logging {
   }
 
   /** The store rows a route reads, by bucket value: one definition
-    * gives both the driver-side test on a version's prepared keys and
-    * the scan filter of the blob scans, so the two cannot drift. */
+    * gives both the row test (on a version's prepared keys and on the
+    * rows a blob read returns) and the parquet filters the read pushes
+    * down for row-group pruning, so the two cannot drift. */
   private sealed trait Buckets {
     def contains(b: Long): Boolean
-    def column: Option[Column]
+    def pushed: Seq[sources.Filter]
   }
   private case object AllBuckets extends Buckets {
     def contains(b: Long): Boolean = true
-    def column: Option[Column] = None
+    def pushed: Seq[sources.Filter] = Nil
   }
   private final case class BucketsIn(set: Set[Long]) extends Buckets {
     def contains(b: Long): Boolean = set.contains(b)
-    def column: Option[Column] = Some(bucketCol.isin(set.toSeq: _*))
+    def pushed: Seq[sources.Filter] = Seq(sources.In("bucket", set.toArray.sorted.map(b => b: Any)))
   }
   private final case class BucketRange(lo: Long, hi: Long) extends Buckets {
     def contains(b: Long): Boolean = b >= lo && b <= hi
-    def column: Option[Column] = Some(bucketCol >= lo && bucketCol <= hi)
+    def pushed: Seq[sources.Filter] =
+      Seq(sources.GreaterThanOrEqual("bucket", lo), sources.LessThanOrEqual("bucket", hi))
   }
-  private def bucketCol: Column = org.apache.spark.sql.functions.col("bucket")
 
   /** A search's top-k, ascending (dist, id) as (id, exact fp32 dist),
     * with the store rows it walked (warm and cold) and the rows the
-    * executor cache missed. */
+    * executor cache served and missed. */
   private[graft] final case class Hits(rows: Array[(Long, Double)],
-      rowsWalked: Long, cacheMisses: Long)
+      rowsWalked: Long, cacheHits: Long, cacheMisses: Long)
+
+  /** A fresh read of the parquet directory `dir` that plans no query.
+    * The directory is listed now by an [[InMemoryFileIndex]] given
+    * `schema`, so no footer is read to infer one and hive partition
+    * values come from the listing. Spark's parquet row reader then reads
+    * the data columns named in `columns`, followed by every partition
+    * column, with `filters` pushed down: they only skip row groups, so
+    * the caller still tests each row. The rows are the reader's own
+    * objects, reused from one row to the next. Returns the rows, at most
+    * one partition per core, and their schema. */
+  private def freshParquet(spark: org.apache.spark.sql.classic.SparkSession, dir: String,
+      schema: StructType, columns: Seq[String],
+      filters: Seq[sources.Filter]): (RDD[InternalRow], StructType) = {
+    val index = new InMemoryFileIndex(spark, Seq(new Path(dir)), Map.empty, Some(schema))
+    val partSchema = index.partitionSchema
+    val resolver = spark.sessionState.conf.resolver
+    val dataSchema = StructType(schema.filterNot(f => partSchema.exists(p => resolver(p.name, f.name))))
+    val required = StructType(dataSchema.filter(f => columns.exists(resolver(_, f.name))))
+    val files = index.listFiles(Nil, Nil).flatMap { part =>
+      part.files.map(f => PartitionedFileUtil.getPartitionedFile(f, f.getPath, part.values, 0, f.getLen))
+    }
+    val reader = new ParquetFileFormat().buildReaderWithPartitionValues(spark, dataSchema,
+      partSchema, required, filters, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      spark.sessionState.newHadoopConfWithOptions(Map.empty))
+    val sc = spark.sparkContext
+    val rows = sc.parallelize(files, math.max(1, math.min(files.length, sc.defaultParallelism)))
+      .mapPartitions(_.flatMap(reader))
+    (rows, StructType(required ++ partSchema))
+  }
+
+  /** `CAST(<column o of schema> AS BIGINT)` over a reader row: ids and
+    * bucket keys may be stored at any integral width. */
+  private def longAt(spark: org.apache.spark.sql.classic.SparkSession, schema: StructType,
+      o: Int): Cast =
+    Cast(BoundReference(o, schema(o).dataType, nullable = true), LongType,
+      Some(spark.sessionState.conf.sessionLocalTimeZone))
+
+  /** The guard fetch: the base rows of `ids` whose vector is non-null,
+    * keyed by id, holding the id, the vector and `cols`, with the rows'
+    * schema. One fresh read of the base, so a base rewritten after
+    * planning is read as it is now; each kept row is copied out of the
+    * reader's reused row. */
+  private def fetchBaseRows(spark: org.apache.spark.sql.classic.SparkSession,
+      basePath: String, baseSchema: StructType, idCol: String, vecCol: String,
+      cols: Seq[String], ids: Array[Long]): (Map[Long, InternalRow], StructType) = {
+    val resolver = spark.sessionState.conf.resolver
+    val idName = baseSchema.find(f => resolver(f.name, idCol)).fold(idCol)(_.name)
+    val (rows, schema) = freshParquet(spark, basePath, baseSchema, idCol +: vecCol +: cols,
+      Seq(sources.In(idName, ids.map(id => id: Any))))
+    val idOf = longAt(spark, schema, schema.indexWhere(f => resolver(f.name, idCol)))
+    val vecOrd = schema.indexWhere(f => resolver(f.name, vecCol))
+    val want = ids.toSet
+    val kept = rows.mapPartitions(_.flatMap { r =>
+      if (r.isNullAt(vecOrd)) None
+      else idOf.eval(r) match {
+        case id: Long if want.contains(id) => Some(id -> r.copy())
+        case _ => None
+      }
+    }).collect()
+    (kept.toMap, schema)
+  }
 
   /** Distributed bucket search + driver top-k merge, ascending (dist, id).
     * Bucketed routes select only the matching sub-index rows; range
@@ -786,9 +851,9 @@ object AnnTopKExec extends org.apache.spark.internal.Logging {
     * through the two-pass [[searchStore]]: a WARM statement walks
     * executor-cached graphs from the version's prepared keys — no scan
     * planned, zero blob bytes read — while unversioned stores take the
-    * legacy full blob scan through the content-fingerprint cache. */
-  private[graft] def searchHits(spark: SparkSession, route: AnnRoute,
-      qvec: Array[Float], k: Int, ef: Int): Hits = {
+    * legacy full blob read through the content-fingerprint cache. */
+  private[graft] def searchHits(spark: org.apache.spark.sql.classic.SparkSession,
+      route: AnnRoute, qvec: Array[Float], k: Int, ef: Int): Hits = {
     val effEf = math.max(ef, k)
     route match {
       case HashRoute(path) =>
@@ -906,57 +971,68 @@ object AnnTopKExec extends org.apache.spark.internal.Logging {
     *   no Catalyst plan, no scan — walking the rows the executor's
     *   [[graft.index.ServingCache]] already holds under (path, version,
     *   bucket, sub); keys it doesn't are recorded in a collection
-    *   accumulator. Pass 2 (cold rows only, pruned to their buckets)
-    *   reads the blobs, deserializes into the cache, and walks. A fully
-    *   warm statement is pass 1 alone. A store swapped mid-statement is
-    *   detected by re-reading the version after the passes (write-time
-    *   tokens are unique) and the statement retries against the new
-    *   generation — entries keyed under a superseded token are never
-    *   read again and age out of the LRU.
+    *   accumulator. Pass 2 (cold rows only) is one [[freshParquet]] job
+    *   over the version's data dir with the missed buckets pushed down
+    *   (a blob store writes one row per row group, so the read skips
+    *   every other row): it deserializes into the cache and walks. A
+    *   fully warm statement is pass 1 alone. A store swapped
+    *   mid-statement is detected by re-reading the version after the
+    *   passes (write-time tokens are unique) and the statement retries
+    *   against the new generation — entries keyed under a superseded
+    *   token are never read again and age out of the LRU.
     *
     * Unversioned store (legacy layout, or a writer that died between
-    * the parquet commit and the stamp): one full blob scan through
-    * [[HnswIndex.fromBytesCached]] — the content fingerprint can never
-    * serve stale bytes, just slower. */
-  private def searchStore(spark: SparkSession, path: String,
+    * the parquet commit and the stamp): one full [[freshParquet]] blob
+    * read through [[HnswIndex.fromBytesCached]] — the content
+    * fingerprint can never serve stale bytes, just slower. */
+  private def searchStore(spark: org.apache.spark.sql.classic.SparkSession, path: String,
       sel: Buckets, walk: Walk,
       k: Int, subdir: Option[String] = None): Hits = {
-    import org.apache.spark.sql.functions.{col, lit}
-    import spark.implicits._
     val ord = Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
     val sc = spark.sparkContext
 
-    def blobScan(dataPath: String, ver: Option[String], filter: Option[Column]) = {
-      val df0 = graft.index.AnnIndexStore.storeFrame(spark, dataPath, ver)
-      val df = filter.fold(df0)(df0.filter)
-      val subCol = (if (df.columns.contains("sub")) col("sub") else lit(0))
-        .cast("int").as("sub")
-      val attrsCol = (if (df.columns.contains("attrs")) col("attrs")
-        else lit(null).cast("array<double>")).as("attrs")
-      df.select(col("bucket").cast("long").as("bucket"), subCol,
-          col("ids"), attrsCol, col("graph"))
-        .as[(Long, Int, Array[Long], Array[Double], Array[Byte])]
+    // The store rows `keep` accepts, as (bucket, sub, ids, attrs, graph
+    // bytes); `sub` reads 0 and `attrs` null on stores without them. A
+    // row is tested on its keys before its arrays are copied out.
+    def blobRows(dataPath: String, ver: Option[String], pushed: Seq[sources.Filter],
+        keep: (Long, Int) => Boolean) = {
+      val stored = graft.index.AnnIndexStore.storeFrame(spark, dataPath, ver).schema
+      val (rows, schema) = freshParquet(spark, dataPath, stored,
+        Seq("bucket", "sub", "ids", "attrs", "graph"), pushed)
+      def at(name: String) = schema.fieldIndex(name)
+      val bucketOf = longAt(spark, schema, at("bucket"))
+      val subOf = if (schema.fieldNames.contains("sub")) Some(longAt(spark, schema, at("sub"))) else None
+      val attrsO = if (schema.fieldNames.contains("attrs")) at("attrs") else -1
+      val (idsO, graphO) = (at("ids"), at("graph"))
+      rows.mapPartitions(_.flatMap { r =>
+        val bucket = bucketOf.eval(r).asInstanceOf[Long]
+        val sub = subOf.fold(0)(_.eval(r).asInstanceOf[Long].toInt)
+        if (!keep(bucket, sub)) None
+        else Some((bucket, sub, r.getArray(idsO).toLongArray(),
+          if (attrsO < 0 || r.isNullAt(attrsO)) null else r.getArray(attrsO).toDoubleArray(),
+          r.getBinary(graphO)))
+      })
     }
 
-    def hits(top: Array[(Double, Long)], walked: Long, misses: Long) =
-      Hits(top.map { case (d, id) => (id, d) }, walked, misses)
+    def hits(top: Array[(Double, Long)], walked: Long, cacheHits: Long, misses: Long) =
+      Hits(top.map { case (d, id) => (id, d) }, walked, cacheHits, misses)
 
     def onePass(ver: Option[String], dataPath: String): Hits =
       ver match {
       case None =>
         val walked = sc.longAccumulator
-        val top = blobScan(dataPath, None, sel.column).mapPartitions { it =>
-          it.flatMap { case (bucket, _, ids, attrs, bytes) =>
+        val top = blobRows(dataPath, None, sel.pushed, (bucket, _) => sel.contains(bucket))
+          .mapPartitions(_.flatMap { case (bucket, _, ids, attrs, bytes) =>
             walked.add(1)
             walk(bucket, new graft.index.ServingCache.Entry(
               HnswIndex.fromBytesCached(bytes), ids, attrs))
-          }
-        }.rdd.takeOrdered(k)(ord)
-        hits(top, walked.value, 0L)
+          })
+          .takeOrdered(k)(ord)
+        hits(top, walked.value, 0L, 0L)
       case Some(v) =>
         val keys = graft.index.AnnIndexStore.storeKeys(spark, dataPath, v)
           .filter { case (bucket, _) => sel.contains(bucket) }
-        if (keys.isEmpty) hits(Array.empty, 0L, 0L)
+        if (keys.isEmpty) hits(Array.empty, 0L, 0L, 0L)
         else {
           val missAcc = sc.collectionAccumulator[(Long, Int)]("graft.serving.miss")
           val warmTop = sc.parallelize(keys.toIndexedSeq,
@@ -971,35 +1047,31 @@ object AnnTopKExec extends org.apache.spark.internal.Logging {
             import scala.jdk.CollectionConverters._
             missAcc.value.asScala.toSet
           }
-          if (missed.isEmpty) hits(warmTop, keys.length, 0L)
+          if (missed.isEmpty) hits(warmTop, keys.length, keys.length, 0L)
           else {
-            val missBuckets = missed.map(_._1)
-            val coldTop = blobScan(dataPath, ver, BucketsIn(missBuckets).column)
-              .mapPartitions { it =>
-                it.flatMap { case (bucket, sub, ids, attrs, bytes) =>
-                  if (!missed.contains((bucket, sub))) Iterator.empty
-                  // fromBytesCached, not fromBytes: when the ServingCache
-                  // is under-budgeted for the store's working set, every
-                  // statement re-misses the evicted rows — the
-                  // fingerprint-keyed deserialization cache then still
-                  // shares the parsed graph (one hash of the bytes vs a
-                  // full re-parse per statement), so the degraded path
-                  // costs what the r10 fingerprint path did, not more.
-                  // Both caches hold the SAME immutable index object, so
-                  // double-residency costs one reference, not one copy.
-                  else {
-                    val e = graft.index.ServingCache.put(path, v,
-                      bucket, sub, HnswIndex.fromBytesCached(bytes), ids, attrs)
-                    walk(bucket, e)
-                  }
-                }
-              }.rdd.takeOrdered(k)(ord)
+            val coldTop = blobRows(dataPath, ver, BucketsIn(missed.map(_._1)).pushed,
+                (bucket, sub) => missed.contains((bucket, sub)))
+              .mapPartitions(_.flatMap { case (bucket, sub, ids, attrs, bytes) =>
+                // fromBytesCached, not fromBytes: when the ServingCache
+                // is under-budgeted for the store's working set, every
+                // statement re-misses the evicted rows — the
+                // fingerprint-keyed deserialization cache then still
+                // shares the parsed graph (one hash of the bytes vs a
+                // full re-parse per statement), so the degraded path
+                // costs what the r10 fingerprint path did, not more.
+                // Both caches hold the SAME immutable index object, so
+                // double-residency costs one reference, not one copy.
+                val e = graft.index.ServingCache.put(path, v,
+                  bucket, sub, HnswIndex.fromBytesCached(bytes), ids, attrs)
+                walk(bucket, e)
+              })
+              .takeOrdered(k)(ord)
             // a speculative/retried warm task can record a miss for a row
             // another attempt served — identical (dist, id) duplicates,
             // removed before the final cut (an id lives in exactly one
             // store row, so distinct pairs are distinct ids)
             hits((warmTop ++ coldTop).distinct.sorted(ord).take(k),
-              keys.length, missed.size)
+              keys.length, keys.length - missed.size, missed.size)
           }
         }
       }

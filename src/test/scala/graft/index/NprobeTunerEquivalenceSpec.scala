@@ -59,4 +59,24 @@ class NprobeTunerEquivalenceSpec extends SparkSpec {
       targetRecall = 1.01, ef = ef, ladder = Seq(1, 2))
     assert(res2 == res)
   }
+
+  test("tuneNprobe clamps its ladder to the store's list count") {
+    val dir = java.nio.file.Files.createTempDirectory("nprobe_clamp").toFile
+    val path = new java.io.File(dir, "ivf").getPath
+    val rnd = new scala.util.Random(9)
+    val dim = 16
+    val base = (0 until 1000).map(i => (i.toLong, Array.fill(dim)(rnd.nextFloat())))
+    val nlist = 10
+    AnnIndexStore.buildIvfSeeded(base.toDF("id", "vec"), path, nlist = nlist, m = 8,
+      efConstruction = 80)
+    val sample = base.take(12).map(_._2).toArray
+    // uniform vectors and k = 100: each query's top-100 spans the lists,
+    // so only the all-lists rung reaches recall 1.0
+    val res = EfTuner.tuneNprobe(spark, path, sample, k = 100, targetRecall = 1.0, ef = 200)
+    val below = res.rungs.filter(_.nprobe < nlist)
+    assert(below.nonEmpty && below.forall(_.recall < 1.0), res.rungs)
+    assert(res.chosen == nlist, res)
+    assert(res.rungs.forall(_.nprobe <= nlist), res.rungs)
+    assert(res.rungs.map(_.nprobe) == Seq(1, 2, 4, 8, nlist), res.rungs)
+  }
 }

@@ -132,6 +132,78 @@ class AnnTopKStrategySpec extends SparkSpec {
     } finally AnnCatalog.unregister(dirs._1)
   }
 
+  test("a warm guard-mode statement fires one query-execution callback: its own collect") {
+    AnnCatalog.register(dirs._1, dirs._2, idCol = "id", vecCol = "vec", ef = 150)
+    try {
+      val qv = qvecOf(29L)
+      planOf(qv, 5).collect() // cold pass and the null-freedom probe
+      val df = planOf(qv, 5)
+      df.queryExecution.executedPlan
+      // the guard fetch reads the base in a plain RDD job: no Dataset
+      val calls = JobRecorder.queryCallbacks(spark)(df.collect())
+      assert(calls == Seq("collect"), calls)
+    } finally AnnCatalog.unregister(dirs._1)
+  }
+
+  /** A fresh 600-row base with labels 0..3 (id % 4), registered with a
+    * per-label store of its own; returns the base path. */
+  private def labelled(tag: String, trusted: Boolean): String = {
+    val root = Files.createTempDirectory(s"graft_anntopk_$tag").toFile
+    root.deleteOnExit()
+    val basePath = s"$root/base"
+    val byLabelPath = s"$root/by_label"
+    val rnd = new scala.util.Random(61)
+    Seq.tabulate(600)(i => (i.toLong, (i % 4).toLong, Array.fill(dim)(rnd.nextFloat())))
+      .toDF("id", "label", "vec").write.mode("overwrite").parquet(basePath)
+    AnnIndexStore.buildBy(spark.read.parquet(basePath), byLabelPath, "label")
+    AnnCatalog.register(basePath, s"$root/unused", idCol = "id", vecCol = "vec",
+      ef = 200, labelIndex = Some(("label", byLabelPath)), trusted = trusted)
+    basePath
+  }
+
+  private def labelStmt(basePath: String, label: Long, qv: Array[Float]) =
+    spark.read.parquet(basePath).filter(col("label") === label)
+      .orderBy(VectorFunctions.l2Sq(col("vec"), typedLit(qv)), col("id"))
+      .select("id").limit(10)
+
+  test("a trusted statement's first touch of a label: 2 jobs, one callback") {
+    val basePath = labelled("cold_label", trusted = true)
+    try {
+      val qv = Array.fill(dim)(0.5f)
+      labelStmt(basePath, 1L, qv).collect() // the store's keys, label 1 cached
+      val df = labelStmt(basePath, 2L, qv)
+      df.queryExecution.executedPlan
+      var rec: JobRecorder.Recording = null
+      val calls = JobRecorder.queryCallbacks(spark) {
+        rec = JobRecorder.record(spark.sparkContext)(df.collect())
+      }
+      // the warm pass finds label 2 missing; the cold pass reads its blob
+      // in a plain RDD job, which fires no callback of its own
+      assert(rec.jobs.size == 2, rec.jobs.map(_.entry))
+      assert(calls == Seq("collect"), calls)
+      assert(annExec(df).metrics("cacheMisses").value == 1)
+    } finally AnnCatalog.unregister(basePath)
+  }
+
+  test("cacheHits and cacheMisses metrics sum to the serving cache's own counts") {
+    val basePath = labelled("hit_metrics", trusted = false)
+    try {
+      val qv = Array.fill(dim)(0.25f)
+      val h0 = graft.index.ServingCache.hits.get()
+      val m0 = graft.index.ServingCache.misses.get()
+      val metrics = Seq(0L, 1L, 0L, 2L, 1L, 3L, 0L).map { label =>
+        val df = labelStmt(basePath, label, qv)
+        assert(df.collect().length == 10)
+        val m = annExec(df).metrics
+        (m("cacheHits").value, m("cacheMisses").value)
+      }
+      val (hits, misses) = (metrics.map(_._1).sum, metrics.map(_._2).sum)
+      assert(misses == 4 && hits == 3, metrics)
+      assert(hits == graft.index.ServingCache.hits.get() - h0)
+      assert(misses == graft.index.ServingCache.misses.get() - m0)
+    } finally AnnCatalog.unregister(basePath)
+  }
+
   test("a store version's keys are collected by its first statement only") {
     val root = Files.createTempDirectory("graft_anntopk_keys").toFile
     root.deleteOnExit()
@@ -598,6 +670,71 @@ class AnnTopKStrategySpec extends SparkSpec {
       spark.conf.set("spark.sql.sources.useV1SourceList", prior)
       AnnCatalog.unregister(basePath)
     }
+  }
+
+  /** The statement's rows routed and, with routing off, unrouted. */
+  private def routedAndExact(q: () => org.apache.spark.sql.DataFrame)
+      : (Array[org.apache.spark.sql.Row], Array[org.apache.spark.sql.Row]) = {
+    val routedDf = q()
+    assert(routedDf.queryExecution.executedPlan.toString.contains("AnnTopK"),
+      routedDf.queryExecution.executedPlan)
+    val routed = routedDf.collect()
+    spark.conf.set("spark.graft.ann.autoRoute", "false")
+    try {
+      val df = q()
+      assert(!df.queryExecution.executedPlan.toString.contains("AnnTopK"))
+      (routed, df.collect())
+    } finally spark.conf.unset("spark.graft.ann.autoRoute")
+  }
+
+  test("hive-partitioned base: a guard-mode wide projection lines up with each id") {
+    val root = Files.createTempDirectory("graft_anntopk_hive").toFile
+    root.deleteOnExit()
+    val basePath = s"$root/base"
+    val indexPath = s"$root/index"
+    val rnd = new scala.util.Random(67)
+    Seq.tabulate(500) { i =>
+      (i.toLong, i % 5, s"name_$i", Array.fill(dim)(rnd.nextFloat()))
+    }.toDF("id", "label", "name", "vec")
+      .write.mode("overwrite").partitionBy("label").parquet(basePath)
+    AnnIndexStore.build(spark.read.parquet(basePath).select("id", "vec"),
+      indexPath, numBuckets = 2)
+    AnnCatalog.register(basePath, indexPath, idCol = "id", vecCol = "vec", ef = 500)
+    try {
+      val qv = Array.fill(dim)(0.5f)
+      val (routed, exact) = routedAndExact(() => spark.read.parquet(basePath)
+        .orderBy(VectorFunctions.l2Sq(col("vec"), typedLit(qv)), col("id"))
+        .select("id", "label", "name").limit(12))
+      assert(routed.length == 12)
+      routed.foreach { r =>
+        val id = r.getLong(0)
+        assert(r.getInt(1) == id % 5 && r.getString(2) == s"name_$id", r)
+      }
+      assert(routed.sameElements(exact),
+        s"routed ${routed.mkString(",")}\nexact  ${exact.mkString(",")}")
+    } finally AnnCatalog.unregister(basePath)
+  }
+
+  test("an INT id column with differently-cased names routes in guard mode") {
+    val root = Files.createTempDirectory("graft_anntopk_intid").toFile
+    root.deleteOnExit()
+    val basePath = s"$root/base"
+    val indexPath = s"$root/index"
+    val rnd = new scala.util.Random(71)
+    Seq.tabulate(400)(i => (i, s"n$i", Array.fill(dim)(rnd.nextFloat())))
+      .toDF("ID", "Name", "Vec").write.mode("overwrite").parquet(basePath)
+    AnnIndexStore.build(spark.read.parquet(basePath), indexPath, numBuckets = 2)
+    AnnCatalog.register(basePath, indexPath, idCol = "id", vecCol = "vec", ef = 400)
+    try {
+      val qv = Array.fill(dim)(0.5f)
+      val (routed, exact) = routedAndExact(() => spark.read.parquet(basePath)
+        .orderBy(VectorFunctions.l2Sq(col("vec"), typedLit(qv)), col("id"))
+        .select("id", "name").limit(10))
+      assert(routed.length == 10)
+      assert(routed.forall(r => r.getString(1) == s"n${r.getInt(0)}"), routed.toSeq)
+      assert(routed.sameElements(exact),
+        s"routed ${routed.mkString(",")}\nexact  ${exact.mkString(",")}")
+    } finally AnnCatalog.unregister(basePath)
   }
 
   test("SQL text form routes too") {
