@@ -89,11 +89,12 @@ object Bench {
     val storeBuilders = Seq("knn_stored", "ann_sql_topk", "ann_sql_routed", "ann_delta_knn")
       .filter(selected.contains)
     val tB0 = System.nanoTime()
-    // overlap the four builders' DISJOINT store builds before running
-    // the queries serially (r15, guide §2.6 — the serial pre-pass left
-    // the 32-core session mostly idle; ensure blocks only, so catalog
-    // registrations keep their serial order). Work unchanged: the
-    // queries' own ensure blocks see committed stores and skip.
+    // overlap the builders' DISJOINT store builds (the route pack the
+    // first three share, the delta store) before running the queries
+    // serially (r15, guide §2.6 — the serial pre-pass left the 32-core
+    // session mostly idle; ensure blocks only, so catalog registrations
+    // keep their serial order). Work unchanged: the queries' own ensure
+    // blocks see committed stores and skip.
     try graft.queries.StorePaths.prebuildStores(spark, sfDir, storeBuilders.toSet)
     catch {
       case NonFatal(e) =>

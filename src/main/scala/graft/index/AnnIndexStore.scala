@@ -490,7 +490,12 @@ object AnnIndexStore {
       // double-size index and leave another partition empty (observed
       // at the 10M probe: a 625k-row bucket next to 312k ones)
       .mapPartitions { it =>
-        it.toArray.groupBy(_._3).iterator.map { case (bucket, rows) =>
+        it.toArray.groupBy(_._3).iterator.map { case (bucket, rowsIn) =>
+          // insert in id order, as buildBy inserts in (attr, id) order:
+          // shuffle arrival order depends on the input's partitioning,
+          // and the graph on insertion order, so one base would
+          // otherwise build a different store per upstream layout
+          val rows = rowsIn.sortBy(_._1)
           val index = HnswIndex.buildOn(rows.head._2.length, m, efConstruction,
             rows.iterator.map(_._2), HnswIndex.maxAbsOf(rows.iterator.map(_._2)))
           (bucket, rows.map(_._1), index.toBytes)

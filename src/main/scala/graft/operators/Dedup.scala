@@ -254,12 +254,12 @@ object Dedup {
       pairs
     } else {
       val perGroup = (0 until bandGroups).map { g =>
+        if (g > 0) releasePassShuffles()
         val (pairs, banded) = minePass(g * bpg, (g + 1) * bpg - 1)
         // eager: this pass's shuffle/cache is fully consumed HERE, so
         // its scratch can be dropped before the next pass allocates
         val done = pairs.localCheckpoint(true)
         banded.unpersist(blocking = true)
-        releasePassShuffles()
         done
       }
       perGroup.reduce(_.unionByName(_)).dropDuplicates("doc_a", "doc_b")
@@ -274,7 +274,9 @@ object Dedup {
     * sequential passes STACK their shuffle files (~14 GB each at 100M
     * docs) and re-fill the scratch the banding split exists to
     * protect. The pause gives the (async, blocking-per-item) cleaner
-    * thread time to unlink before the next pass allocates. Under
+    * thread time to unlink before the next pass allocates, so it runs
+    * only BETWEEN passes: after the last one no band shuffle
+    * allocates, the same state the one-shot mode never pauses in. Under
     * -XX:+DisableExplicitGC the gc is a no-op and the cleaner's own
     * cadence must be trusted instead. */
   private def releasePassShuffles(): Unit = {
@@ -452,10 +454,9 @@ object Dedup {
       else keyStructs.grouped(keyStructs.length / bandGroups).toSeq
         // eager: each pass's shuffle is fully consumed here, so its
         // scratch is reclaimable before the next pass allocates
-        .map { g =>
-          val pass = bandCandidates(g.toIndexedSeq).localCheckpoint(true)
-          releasePassShuffles()
-          pass
+        .zipWithIndex.map { case (g, i) =>
+          if (i > 0) releasePassShuffles()
+          bandCandidates(g.toIndexedSeq).localCheckpoint(true)
         }
         .reduce(_.unionByName(_))
         .dropDuplicates("ra", "rb")

@@ -13,12 +13,14 @@ import org.apache.spark.sql.functions._
   *      - `bruteforce` type-1/3 → partition-pruned scan on the clustered
   *        label layout (J2's sorted-slice scan);
   *      - other exact routes → the streaming exact join;
-  *      - optionally, `full_graph`/`category_graph`/`interval_graph`
-  *        routes → partitioned HNSW ([[AnnJoin.hnswKnn]]) for the
-  *        approximate configuration;
+  *      - with `stores` (the approximate configuration), the
+  *        `full_graph`/`category_graph`/`interval_graph` routes →
+  *        the stored per-type indexes under that root
+  *        ([[graft.index.TypeStores.search]], built by
+  *        [[graft.index.TypeStores.ensure]] over this base);
   *   3. union of per-route results (each already top-k per qid).
   *
-  * With `ann = false` every route is exact, so the composition returns
+  * Without `stores` every route is exact, so the composition returns
   * byte-identical results to [[KnnJoin.exact]] — asserted in
   * HybridKnnSpec and by the shared DuckDB oracle of `knn_routed`.
   *
@@ -36,13 +38,13 @@ object HybridKnn {
   /** (qid, rank, nid) flat results for the full 4-type query batch. */
   def execute(base: DataFrame, queries: DataFrame, k: Int,
       categoryLayout: Option[DataFrame] = None,
-      ann: Boolean = false, annEf: Int = 200, annBuckets: Int = 8,
+      stores: Option[String] = None, ef: Int = 200,
       chunkRows: Int = 200000): DataFrame = {
     // stats-lookup routing (Selectivity.withRoutes): one tiny stats
     // collect, then `route` is a literal-folded column on the query
     // batch itself — no join. Any routing decision preserves exactness —
-    // it only picks WHICH exact physical path runs (ANN routes excepted,
-    // behind the flag).
+    // it only picks WHICH exact physical path runs (graph routes
+    // excepted, when `stores` is given).
     val spark = base.sparkSession
     val routedDf = Selectivity.withRoutes(base, queries)
       .select(col("qid").cast("long"), col("qtype").cast("int"),
@@ -59,8 +61,7 @@ object HybridKnn {
     val probe = routedDf.limit(chunkRows + 1).collect()
     if (probe.length <= chunkRows) {
       // common case: one driver job, every route fed from one array
-      executeBatch(base, probe.map(rowOf), k,
-        categoryLayout, ann, annEf, annBuckets)
+      executeBatch(base, probe.map(rowOf), k, categoryLayout, stores, ef)
     } else {
       val it = routedDf.toLocalIterator()
       val chunks = Iterator.continually {
@@ -71,7 +72,7 @@ object HybridKnn {
       val results = chunks.map { chunk =>
         // materialize this chunk's result so its broadcasts can be freed
         // before the next chunk is pulled from the iterator
-        executeBatch(base, chunk, k, categoryLayout, ann, annEf, annBuckets)
+        executeBatch(base, chunk, k, categoryLayout, stores, ef)
           .localCheckpoint(eager = true)
       }.toSeq
       if (results.isEmpty) emptyRes(spark)
@@ -90,7 +91,7 @@ object HybridKnn {
   // nothing at all.
   private def executeBatch(base: DataFrame, routed: Array[RoutedRow], k: Int,
       categoryLayout: Option[DataFrame],
-      ann: Boolean, annEf: Int, annBuckets: Int): DataFrame = {
+      stores: Option[String], ef: Int): DataFrame = {
     val spark = base.sparkSession
     import spark.implicits._
 
@@ -112,49 +113,21 @@ object HybridKnn {
 
     val rest = routed.filterNot(t => t._7 == "bruteforce" && (t._2 == 1 || t._2 == 3))
 
-    if (!ann) {
-      // exact configuration: everything else through the streaming join,
-      // only the type branches actually present in the batch
-      val restRes =
-        if (rest.isEmpty) emptyRes(spark)
-        else KnnJoin.exactFlat(base, asQueryDf(rest), k,
-          types = rest.map(_._2).distinct.toSeq)
-      return bfCatRes.unionByName(restRes)
-    }
-
-    // approximate configuration — the reference's stage layout:
-    //   type-0 → union over hash-bucket sub-indexes       (:306-333)
-    //   type-1 → per-category sub-index                   (:239-298)
-    //   type-2 → per-decile sub-indexes w/ in-filter      (:338-459)
-    //   type-3 → in-filter walk of the category sub-index (:267,
-    //            searcher.hpp:301-374); ef sloped by category size
-    //   anything else → exact streaming join
-    val slope = Some(SearchParams.EfSlope(annEf))
-    val fullQ = rest.collect { case (qid, _, _, _, _, qv, "full_graph") => (qid, qv) }
-    val catQ = rest.collect { case (qid, 1, v, _, _, qv, "category_graph") => (v, (qid, qv)) }
-      .groupBy(_._1).map { case (l, xs) => (l, xs.map(_._2)) }
-    val cat3Q = rest.collect { case (qid, 3, v, l, r, qv, "category_graph") => (v, (qid, l, r, qv)) }
-      .groupBy(_._1).map { case (l, xs) => (l, xs.map(_._2)) }
-    val intQ = rest.collect { case (qid, 2, _, l, r, qv, "interval_graph") => (qid, l, r, qv) }
-    val exactRows = rest.filterNot(t =>
-      t._7 == "full_graph" ||
-        (t._7 == "category_graph" && (t._2 == 1 || t._2 == 3)) ||
-        (t._7 == "interval_graph" && t._2 == 2))
+    // approximate configuration: every graph route searches its type's
+    // stored index (the reference's stage layout — type-0 hash-bucket
+    // union :306-333, type-1 category sub-index :239-298, type-2 decile
+    // in-filter :338-459, type-3 in-filter category walk :267); the
+    // remaining bruteforce rows (type 2) and, without stores, all rows
+    // go through the streaming exact join, only the type branches
+    // actually present in the batch
+    val (graphRows, exactRows) = rest.partition(t => stores.isDefined && t._7 != "bruteforce")
     val exactRes =
       if (exactRows.isEmpty) emptyRes(spark)
       else KnnJoin.exactFlat(base, asQueryDf(exactRows), k,
         types = exactRows.map(_._2).distinct.toSeq)
-
-    bfCatRes
-      .unionByName(AnnJoin.hnswKnnBatch(
-        base.select(col("id"), col("vec")), fullQ, k, annEf, annBuckets))
-      .unionByName(AnnJoin.categoryHnswKnnBatch(
-        base.select(col("id"), col("label"), col("vec")), catQ, k, annEf, efSlope = slope))
-      .unionByName(AnnJoin.categoryRangeHnswKnnBatch(
-        base.select(col("id"), col("label"), col("ts"), col("vec")), cat3Q, k, annEf,
-        efSlope = slope))
-      .unionByName(AnnJoin.decileHnswKnnBatch(
-        base.select(col("id"), col("ts"), col("vec")), intQ, k, annEf))
-      .unionByName(exactRes)
+    val res = bfCatRes.unionByName(exactRes)
+    if (graphRows.isEmpty) res
+    else res.unionByName(
+      graft.index.TypeStores.search(spark, stores.get, asQueryDf(graphRows), k, ef))
   }
 }

@@ -81,4 +81,14 @@ object KnnJoin {
     exact(base, queries, k, metric, types)
       .select(col("qid"), posexplode(col("neighbors")).as(Seq("rank0", "nid")))
       .select(col("qid"), (col("rank0") + 1).cast("long").as("rank"), col("nid"))
+
+  /** Recall@k of `approx` against `exact` (this join's output), both
+    * (qid, rank, nid): the mean per-qid share of exact ids found. */
+  def recallAtK(approx: DataFrame, exact: DataFrame): Double = {
+    val a = approx.groupBy("qid").agg(collect_set(col("nid")).as("got"))
+    val e = exact.groupBy("qid").agg(collect_set(col("nid")).as("want"))
+    a.join(e, "qid")
+      .select(avg(size(array_intersect(col("got"), col("want"))) / size(col("want"))))
+      .head().getDouble(0)
+  }
 }

@@ -2,24 +2,17 @@ package graft.operators
 
 /** Search-effort parameter table — the Spark analog of the reference's
   * `SearchParams` (hybrid_graph.h:14-34): beam width `ef` is not a
-  * constant but a function of sub-index size and predicate coverage.
+  * constant but a function of predicate coverage and of how many
+  * buckets a search unions.
   *
-  * The reference slopes ef linearly in category size for type-1/3
-  * (hybrid_graph.cpp:263-267: `ef = ef_base + slope · count`, capped)
-  * and widens it for in-filter walks by selectivity band
-  * (hybrid_graph.cpp:421-448: 680/780/1180 as coverage shrinks). Both
-  * knobs exist because recall at fixed ef degrades as (a) the graph
-  * grows and (b) the filter rejects more of the walk's frontier.
+  * The reference widens ef for in-filter walks by selectivity band
+  * (hybrid_graph.cpp:421-448: 680/780/1180 as coverage shrinks),
+  * because recall at fixed ef degrades as the filter rejects more of
+  * the walk's frontier. (Its per-category size slope,
+  * hybrid_graph.cpp:263-267, has no counterpart here: the stored
+  * sub-indexes are searched at the caller's ef or a tuned one.)
   */
 object SearchParams {
-
-  /** ef sloped by sub-index size: `base + slope·n`, capped. The
-    * reference's type-1 table is (1800, slope→2500 cap) at 10M rows;
-    * the default slope here reproduces its growth rate per row. */
-  case class EfSlope(base: Int, slope: Double = 0.02, capFactor: Int = 8) {
-    def efFor(n: Long): Int =
-      math.min(base.toLong * capFactor, base + (slope * n).toLong).toInt
-  }
 
   /** Widen ef for a range-filtered (in-filter) walk: the fraction of the
     * sub-index the predicate keeps is `cover`; effort grows as its

@@ -3,8 +3,9 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.index.TypeStores
 import graft.multimodal.Multimodal
-import graft.operators.{AnnJoin, SimilaritySearch}
+import graft.operators.SimilaritySearch
 import graft.streaming.EventPipeline
 
 /** Approximate / streaming / multimodal coverage. EVERY entry is
@@ -69,17 +70,21 @@ object ApproxQueries {
       .sortBy(_._1).map(_._2)
   }
 
+  /** The route pack's type-0 hash-bucket store (built if missing). */
+  private def routeHashStore(s: SparkSession, dir: String): String =
+    TypeStores.hashPath(StorePaths.ensureRouteStores(s, dir))
+
   private def evq(s: SparkSession, dir: String): DataFrame =
     graft.sources.Events.read(s, dir)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // partitioned-HNSW approximate kNN (per-bucket sub-index + merge)
+    // bucketed-HNSW approximate kNN: every hash bucket of the route
+    // pack's stored type-0 index walks the query batch, bounded top-k
+    // merge
     "ann_hnsw_knn" -> ((s, dir) => {
-      val base = emb(s, dir).select(col("vec_id").cast("long").as("id"),
-        col("embedding").as("vec"))
       val q = emb(s, dir).filter(col("vec_id") % 71 === 3)
         .select(col("vec_id").cast("long").as("qid"), col("embedding").as("qvec"))
-      AnnJoin.hnswKnn(base, q, k = 10, ef = 200, numBuckets = 4)
+      graft.index.AnnIndexStore.search(s, routeHashStore(s, dir), q, k = 10, ef = 200)
     }),
 
     // LSM delta-append serving: main graphs hold 4/5 of the corpus, the
@@ -224,13 +229,7 @@ object ApproxQueries {
     // from the parquet footer count (no job), with an ordered-top-N
     // fallback for sparse/offset id spaces.
     "ann_ef_tune" -> ((s, dir) => {
-      val idxPath = StorePaths.taggedPath(s, "/tmp/graft_ann_sql", dir)
-      if (!new java.io.File(s"$idxPath/_SUCCESS").exists()) {
-        graft.index.AnnIndexStore.build(
-          emb(s, dir).select(col("vec_id").cast("long").as("id"),
-            col("embedding").as("vec")),
-          idxPath, numBuckets = 4)
-      }
+      val idxPath = routeHashStore(s, dir)
       val sample = stridedSample(s, dir, maxSample = 2048L)
       val res = graft.index.EfTuner.tuneStored(s, idxPath, sample, k = 10,
         targetRecall = 0.95, ladder = Seq(16, 32, 64, 128, 256))
@@ -268,7 +267,7 @@ object ApproxQueries {
     // the `_ef_bands` sidecar codec the banded arms load.
     "ann_ef_bands" -> ((s, dir) => {
       val root = StorePaths.ensureRouteStores(s, dir)
-      val store = s"$root/by_decile"
+      val store = TypeStores.decilePath(root)
       // deterministic driver-bounded sample: THE shared tuner-gate
       // selection (footer-count stride, sparse-id fallback, vec_id
       // order) — not a diverged copy
@@ -366,8 +365,8 @@ object ApproxQueries {
     // of a full scan — the reference's core premise surfaced in Catalyst
     "ann_sql_topk" -> ((s, dir) => {
       val basePath = s"$dir/embeddings.parquet"
-      val idxPath = StorePaths.ensureHashStore(s, dir)
-      // trusted: the store was built THIS run from THIS base
+      val idxPath = routeHashStore(s, dir)
+      // trusted: the store was built from THIS base's embeddings
       // (fingerprinted path), so serving skips the per-query
       // staleness-validation job — scoped to this basePath only
       org.apache.spark.sql.graft.AnnCatalog.register(
@@ -399,9 +398,9 @@ object ApproxQueries {
     "ann_sql_ivf" -> ((s, dir) => {
       val basePath = s"$dir/embeddings.parquet"
       val ivfPath = StorePaths.ensureIvfStore(s, dir)
-      // hash store stays the registered non-type-0 fallback path (same
-      // tag ann_sql_topk maintains); the type-0 route prefers the lists
-      val hashPath = StorePaths.ensureHashStore(s, dir)
+      // hash store stays the registered non-type-0 fallback path (the
+      // one ann_sql_topk registers); the type-0 route prefers the lists
+      val hashPath = routeHashStore(s, dir)
       // ef 400: each probed list must be searched exhaustively-grade so
       // the serving top-k equals the oracle's exact re-rank over the
       // SAME candidate set (the approximation is WHICH lists, not the
@@ -430,10 +429,10 @@ object ApproxQueries {
       val basePath = s"$root/base"
       val b = s.read.parquet(basePath)
       // trusted: stores built this run from this base (see ann_sql_topk)
-      org.apache.spark.sql.graft.AnnCatalog.register(basePath, s"$root/by_hash",
+      org.apache.spark.sql.graft.AnnCatalog.register(basePath, TypeStores.hashPath(root),
         idCol = "id", vecCol = "vec", ef = 200,
-        labelIndex = Some(("label", s"$root/by_label")),
-        rangeIndex = Some(("ts", s"$root/by_decile")),
+        labelIndex = Some(("label", TypeStores.labelPath(root))),
+        rangeIndex = Some(("ts", TypeStores.decilePath(root))),
         trusted = true)
       // min qid per type — deterministic, reproducible by the oracle.
       // The min is computed distributively and joined back so the

@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.index.TypeStores
+
 /** Per-statement SQL serving latency, per route — the always-on
   * micro-bench behind `serving_ms` in the bench JSON. The r10 serving
   * regression (every statement re-reading store blobs to key the graph
@@ -59,9 +61,9 @@ object ServingBench {
     // shared definition of their parameters (StorePaths) — whichever of
     // the bench or the gates runs first materializes for both, so a
     // second copy of the build blocks here could silently drift
-    val hashPath = StorePaths.ensureHashStore(s, dir)
     val ivfPath = StorePaths.ensureIvfStore(s, dir)
     val root = StorePaths.ensureRouteStores(s, dir)
+    val hashPath = TypeStores.hashPath(root)
     val basePath = s"$root/base"
     val b = s.read.parquet(basePath)
 
@@ -134,10 +136,10 @@ object ServingBench {
         ivfIndex = Some(ivfPath), nprobe = 4)
       results += "t0_ivf" -> msPerStmt(qe, "ivf=")(t0Stmt)
 
-      org.apache.spark.sql.graft.AnnCatalog.register(basePath, s"$root/by_hash",
+      org.apache.spark.sql.graft.AnnCatalog.register(basePath, hashPath,
         idCol = "id", vecCol = "vec", ef = 200,
-        labelIndex = Some(("label", s"$root/by_label")),
-        rangeIndex = Some(("ts", s"$root/by_decile")), trusted = true)
+        labelIndex = Some(("label", TypeStores.labelPath(root))),
+        rangeIndex = Some(("ts", TypeStores.decilePath(root))), trusted = true)
       def ranked(filtered: DataFrame, qv: Array[Float]): DataFrame =
         filtered.orderBy(VF.l2Sq(col("vec"), typedLit(qv)), col("id"))
           .select("id").limit(10)

@@ -17,10 +17,10 @@ import org.apache.spark.sql.functions._
   *
   * Builds: ServingBench and the ann_sql_* gate queries serve from the
   * SAME tagged store paths — whichever runs first materializes the
-  * store for both, so the build parameters (numBuckets, nlist, the
-  * by_label/by_decile defs) must live in one place: two drifted copies
-  * would silently measure — or serve — an index built with the other
-  * side's parameters, with no error. */
+  * store for both, so the build parameters (nlist here, the three
+  * type stores' in [[graft.index.TypeStores]]) must live in one place:
+  * two drifted copies would silently measure — or serve — an index
+  * built with the other side's parameters, with no error. */
 private[graft] object StorePaths {
 
   def storeTag(s: SparkSession, dir: String): String =
@@ -107,63 +107,38 @@ private[graft] object StorePaths {
           new java.io.File(c, "_SUCCESS").exists())
   }
 
-  private def embIdVec(s: SparkSession, dir: String) =
-    s.read.parquet(s"$dir/embeddings.parquet")
-      .select(col("vec_id").cast("long").as("id"), col("embedding").as("vec"))
-
-  /** The embeddings hash-bucket store (ann_sql_topk / ann_sql_ivf /
-    * ServingBench t0): built if missing, path returned. */
-  def ensureHashStore(s: SparkSession, dir: String): String = {
-    val p = taggedPath(s, "/tmp/graft_ann_sql", dir)
-    if (!new java.io.File(s"$p/_SUCCESS").exists())
-      graft.index.AnnIndexStore.build(embIdVec(s, dir), p, numBuckets = 4)
-    p
-  }
-
   /** The embeddings seeded-IVF store (ann_sql_ivf / ServingBench
     * t0_ivf): built if missing, path returned. */
   def ensureIvfStore(s: SparkSession, dir: String): String = {
     val p = taggedPath(s, "/tmp/graft_ann_ivf_sql", dir)
     if (!new java.io.File(s"$p/lists/_SUCCESS").exists())
-      graft.index.AnnIndexStore.buildIvfSeeded(embIdVec(s, dir), p, nlist = 16)
+      graft.index.AnnIndexStore.buildIvfSeeded(
+        s.read.parquet(s"$dir/embeddings.parquet")
+          .select(col("vec_id").cast("long").as("id"), col("embedding").as("vec")),
+        p, nlist = 16)
     p
   }
 
-  /** The 4-type route pack's base + by_hash/by_label/by_decile stores
-    * (ann_sql_routed / ServingBench t1-t3): built if missing, root
-    * returned — base at `<root>/base`, stores beside it. */
+  /** The 4-type route pack: its base at `<root>/base` and the
+    * [[graft.index.TypeStores]] layout beside it (knn_stored,
+    * knn_routed_ann, ann_hnsw_knn, ann_ef_tune, the ann_sql_* gates,
+    * ServingBench): built if missing, root returned. */
   def ensureRouteStores(s: SparkSession, dir: String): String = {
     val root = taggedPath(s, "/tmp/graft_sql_route", dir)
     val basePath = s"$root/base"
     if (!new java.io.File(s"$basePath/_SUCCESS").exists())
       graft.SparkEntry.vecBase(s, dir).write.mode("overwrite").parquet(basePath)
-    val b = s.read.parquet(basePath)
-    // the three index builds are INDEPENDENT (distinct store paths, all
-    // reading the committed base parquet) — overlap them from driver
-    // threads (guide §2.6): each build's jobs use a handful of tasks,
-    // so serial invocation left most cores idle through the pre-pass
-    val builds = Seq.newBuilder[() => Unit]
-    if (!new java.io.File(s"$root/by_hash/_SUCCESS").exists())
-      builds += (() =>
-        graft.index.AnnIndexStore.build(b.select(col("id"), col("vec")), s"$root/by_hash", 4))
-    if (!new java.io.File(s"$root/by_label/_SUCCESS").exists())
-      builds += (() =>
-        graft.index.AnnIndexStore.buildBy(b, s"$root/by_label", "label", attrCol = Some("ts")))
-    if (!new java.io.File(s"$root/by_decile/_SUCCESS").exists())
-      builds += (() =>
-        graft.index.AnnIndexStore.buildBy(
-          b.withColumn("decile", floor(col("ts") * 10).cast("long")),
-          s"$root/by_decile", "decile", attrCol = Some("ts")))
-    graft.operators.ParallelActions.runAll(builds.result())
+    graft.index.TypeStores.ensure(s.read.parquet(basePath), root)
     root
   }
 
   /** Overlap the one-time store builds of the bench's builder queries
-    * (r15, guide §2.6): the four builders write DISJOINT store roots
-    * (graft_ann_store / graft_ann_sql / graft_sql_route /
-    * graft_ann_delta) and each uses only a handful of tasks, so the
-    * serial pre-pass left the machine mostly idle — measured 24.1 s of
-    * isolated cold builds that overlap into the slowest one's wall.
+    * (r15, guide §2.6): the route pack (knn_stored, ann_sql_topk and
+    * ann_sql_routed all read it) and the delta store (ann_delta_knn)
+    * have DISJOINT roots and each build uses only a handful of tasks,
+    * so a serial pre-pass leaves the machine mostly idle. The route
+    * pack is one build however many of its readers are selected: two
+    * threads ensuring one root would race on its writes.
     * ONLY the ensure blocks run here (not the queries themselves): the
     * serving queries also REGISTER catalog routes, and overlapping two
     * registrations under one base path could cross the pre-pass
@@ -171,12 +146,11 @@ private[graft] object StorePaths {
     * idempotent, registrations are not order-free. The queries then
     * find committed stores and skip their ensure. */
   def prebuildStores(s: SparkSession, dir: String, names: Set[String]): Unit = {
-    val ensures: Map[String, () => Unit] = Map(
-      "knn_stored" -> (() => { graft.queries.VectorQueries.ensureKnnStores(s, dir); () }),
-      "ann_sql_topk" -> (() => { ensureHashStore(s, dir); () }),
-      "ann_sql_routed" -> (() => { ensureRouteStores(s, dir); () }),
-      "ann_delta_knn" -> (() => { graft.queries.ApproxQueries.ensureDeltaStore(s, dir); () }))
-    graft.operators.ParallelActions.runAll(
-      names.toSeq.sorted.flatMap(ensures.get))
+    val routePack = Set("knn_stored", "ann_sql_topk", "ann_sql_routed")
+    val builds = Seq(
+      names.exists(routePack) -> (() => { ensureRouteStores(s, dir); () }),
+      names("ann_delta_knn") ->
+        (() => { graft.queries.ApproxQueries.ensureDeltaStore(s, dir); () }))
+    graft.operators.ParallelActions.runAll(builds.collect { case (true, b) => b })
   }
 }

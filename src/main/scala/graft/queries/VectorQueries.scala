@@ -20,32 +20,6 @@ object VectorQueries {
   private def qs(s: SparkSession, dir: String): DataFrame =
     graft.SparkEntry.vecQueries(s, dir)
 
-  /** knn_stored's one-time store builds, factored out so the bench's
-    * pre-pass can overlap them with the OTHER builder queries' ensure
-    * blocks (disjoint store roots; guide §2.6). Independent store
-    * paths inside too — overlapped builds, the ensureRouteStores
-    * rationale. Idempotent: committed stores are skipped. */
-  def ensureKnnStores(s: SparkSession, dir: String): String = {
-    val root = StorePaths.taggedPath(s, "/tmp/graft_ann_store", dir)
-    val b = base(s, dir)
-    val builds = Seq.newBuilder[() => Unit]
-    if (!new java.io.File(s"$root/by_hash/_SUCCESS").exists())
-      builds += (() =>
-        graft.index.AnnIndexStore.build(b.select(col("id"), col("vec")), s"$root/by_hash", 4))
-    if (!new java.io.File(s"$root/by_label/_SUCCESS").exists())
-      builds += (() =>
-        graft.index.AnnIndexStore.buildBy(
-          b.select(col("id"), col("label"), col("ts"), col("vec")), s"$root/by_label",
-          "label", attrCol = Some("ts")))
-    if (!new java.io.File(s"$root/by_decile/_SUCCESS").exists())
-      builds += (() =>
-        graft.index.AnnIndexStore.buildBy(
-          b.withColumn("decile", floor(col("ts") * 10).cast("long")),
-          s"$root/by_decile", "decile", attrCol = Some("ts")))
-    graft.operators.ParallelActions.runAll(builds.result())
-    root
-  }
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // SQ8 two-stage refine: top-20 by int8 code distance, exact top-5 re-rank
     "sq8_refine_knn" -> ((s, dir) => {
@@ -106,33 +80,24 @@ object VectorQueries {
     }),
 
     // the same routed composition in its APPROXIMATE configuration —
-    // the reference's production BatchSearch: type-0 hash-bucket union,
-    // type-1 category walk, type-2 decile in-filter, type-3 category
-    // range walk, ef sloped by sub-index size. Rows-only check (recall
-    // floors are asserted in CategoryAnnSpec/HybridKnnSpec).
+    // the reference's production BatchSearch: the graph-routed queries
+    // search the route pack's stored indexes (type-0 hash-bucket union,
+    // type-1 label store, type-2 decile in-filter, type-3 label range
+    // walk), bruteforce routes stay exact. Rows-only check (recall
+    // floors are asserted in HybridKnnSpec).
     "knn_routed_ann" -> ((s, dir) =>
       graft.operators.HybridKnn.execute(base(s, dir), qs(s, dir), 10,
-        ann = true, annEf = 150, annBuckets = 4)),
+        stores = Some(StorePaths.ensureRouteStores(s, dir)), ef = 200)),
 
     // build-once/search-many lifecycle over PERSISTED index tables: the
     // hash-bucket store answers type-0, the per-label store (buildBy)
-    // answers type-1 with the predicate by construction, and the decile
-    // store (buildBy + ts attr) answers type-2 with the in-filter walk.
+    // answers type-1 with the predicate by construction, the decile
+    // store (buildBy + ts attr) answers type-2 with the in-filter walk,
+    // and the label store's in-filter ts walk answers type-3.
     // Rows-only; AnnIndexStoreSpec enforces recall + determinism.
-    "knn_stored" -> ((s, dir) => {
-      val root = ensureKnnStores(s, dir)
-      val q = qs(s, dir)
-      graft.index.AnnIndexStore.search(s, s"$root/by_hash",
-          q.filter(col("qtype") === 0).select(col("qid"), col("qvec")), 10, 200)
-        .unionByName(graft.index.AnnIndexStore.searchBy(s, s"$root/by_label",
-          q.filter(col("qtype") === 1).select(col("qid"), col("v"), col("qvec")), 10, 200))
-        .unionByName(graft.index.AnnIndexStore.searchDecileRange(s, s"$root/by_decile",
-          q.filter(col("qtype") === 2).select(col("qid"), col("l"), col("r"), col("qvec")),
-          10, 200))
-        .unionByName(graft.index.AnnIndexStore.searchByRange(s, s"$root/by_label",
-          q.filter(col("qtype") === 3)
-            .select(col("qid"), col("v"), col("l"), col("r"), col("qvec")), 10, 200))
-    }),
+    "knn_stored" -> ((s, dir) =>
+      graft.index.TypeStores.search(s, StorePaths.ensureRouteStores(s, dir),
+        qs(s, dir), 10, 200)),
 
     // inner-product metric kNN (the reference's second metric, unused at
     // its runtime but supported: pyglass/glass/common.hpp:8-11)

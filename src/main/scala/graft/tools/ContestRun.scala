@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.index.{AnnIndexStore, EfTuner}
-import graft.operators.{AnnJoin, KnnJoin, Selectivity}
+import graft.operators.{KnnJoin, Selectivity}
 import graft.sources.ContestBinaryIO
 
 /** The contest lifecycle end-to-end over the contest's own BINARY
@@ -303,11 +303,11 @@ object ContestRun {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val approx = results.join(broadcast(sample.select("qid")), "qid")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val recall = AnnJoin.recallAtK(approx, exact)
+      val recall = KnnJoin.recallAtK(approx, exact)
       val perType = sample.select(col("qid"), col("qtype")).collect()
         .groupBy(_.getInt(1)).toSeq.sortBy(_._1).map { case (t, rows) =>
           val idsDf = rows.map(_.getLong(0)).toSeq.toDF("qid")
-          val r = AnnJoin.recallAtK(
+          val r = KnnJoin.recallAtK(
             approx.join(broadcast(idsDf), "qid"),
             exact.join(broadcast(idsDf), "qid"))
           f"type$t=$r%.4f(${rows.length})"

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 
 import org.apache.spark.sql.graft.AnnCatalog
 
+import graft.index.TypeStores
+
 /** Multi-executor measurement of the serving-path claims that were,
   * until round 12, reasoned from `local[32]` — run under Spark's
   * `local-cluster[2,8,…]` master, which launches REAL separate
@@ -26,7 +28,7 @@ import org.apache.spark.sql.graft.AnnCatalog
   *      statements (graphs, ids and attrs survive serialization into
   *      separate JVMs).
   *   4. Broadcast-side sanity: a routed category search
-  *      (AnnJoin.searchByCategory shape) and a broadcast join both
+  *      (AnnIndexStore.searchBy shape) and a broadcast join both
   *      complete with plans unchanged.
   *
   *   5. Concurrency across executors: four threads serving the same
@@ -87,9 +89,9 @@ object LocalClusterProbe {
     import graft.functions.{VectorFunctions => VF}
     import graft.queries.StorePaths
     val embBase = s"$dir/embeddings.parquet"
-    val hashPath = StorePaths.ensureHashStore(spark, dir)
     val ivfPath = StorePaths.ensureIvfStore(spark, dir)
     val root = StorePaths.ensureRouteStores(spark, dir)
+    val hashPath = TypeStores.hashPath(root)
     val basePath = s"$root/base"
     val b = spark.read.parquet(basePath)
 
@@ -134,10 +136,10 @@ object LocalClusterProbe {
       AnnCatalog.register(embBase, hashPath, idCol = "vec_id",
         vecCol = "embedding", ef = 400, trusted = true,
         ivfIndex = Some(ivfPath), nprobe = 4)
-      AnnCatalog.register(basePath, s"$root/by_hash", idCol = "id",
+      AnnCatalog.register(basePath, hashPath, idCol = "id",
         vecCol = "vec", ef = 200,
-        labelIndex = Some(("label", s"$root/by_label")),
-        rangeIndex = Some(("ts", s"$root/by_decile")), trusted = true)
+        labelIndex = Some(("label", TypeStores.labelPath(root))),
+        rangeIndex = Some(("ts", TypeStores.decilePath(root))), trusted = true)
 
       runRoute("t0_ivf", qsOf(0), "ivf=") { p =>
         spark.read.parquet(embBase)
@@ -167,10 +169,10 @@ object LocalClusterProbe {
         val exact =
           try ranked(b.filter(col("label") === p._1), p._4)
             .collect().map(_.getLong(0)).toSeq
-          finally AnnCatalog.register(basePath, s"$root/by_hash",
+          finally AnnCatalog.register(basePath, hashPath,
             idCol = "id", vecCol = "vec", ef = 200,
-            labelIndex = Some(("label", s"$root/by_label")),
-            rangeIndex = Some(("ts", s"$root/by_decile")), trusted = true)
+            labelIndex = Some(("label", TypeStores.labelPath(root))),
+            rangeIndex = Some(("ts", TypeStores.decilePath(root))), trusted = true)
         routed != exact
       }
       require(mismatches == 0,

@@ -1,11 +1,8 @@
 package graft.index
 
 import graft.SparkSpec
-import graft.operators.{AnnJoin, KnnJoin}
-import org.apache.spark.sql.functions._
 
 class HnswSpec extends SparkSpec {
-  import spark.implicits._
 
   private val rnd = new scala.util.Random(2024)
   private val dim = 16
@@ -112,18 +109,5 @@ class HnswSpec extends SparkSpec {
     val expected = first.map(org.apache.spark.sql.graft.Sq8Encode.encodeOne(_, 1.0))
     assert(idx.buildCodeRow(0).sameElements(expected),
       "entry node's build codes must reflect its vector, not zeros")
-  }
-
-  test("partitioned AnnJoin.hnswKnn recall@10 >= 0.9 vs exact join") {
-    val base = Seq.tabulate(2000)(i => (i.toLong, vec())).toDF("id", "vec")
-    val queries = Seq.tabulate(15)(i => (i.toLong, vec())).toDF("qid", "qvec")
-    val approx = AnnJoin.hnswKnn(base, queries, k = 10, ef = 128, numBuckets = 4)
-    val exact = KnnJoin.exactFlat(
-      base.withColumn("label", lit(0L)).withColumn("ts", lit(0.0)),
-      queries.withColumn("qtype", lit(0)).withColumn("v", lit(0L))
-        .withColumn("l", lit(0.0)).withColumn("r", lit(0.0)),
-      10)
-    val recall = AnnJoin.recallAtK(approx, exact)
-    assert(recall >= 0.9, s"recall $recall")
   }
 }

@@ -45,8 +45,9 @@ class HybridKnnSpec extends SparkSpec {
   }
 
   test("ann configuration: graph routes hit their sub-indexes with high recall, bf routes stay exact") {
-    val routed = HybridKnn.execute(base, queries, 10, None, ann = true,
-      annEf = 256, annBuckets = 2)
+    val root = Files.createTempDirectory("graft-hybrid-stores").toString
+    graft.index.TypeStores.ensure(base, root)
+    val routed = HybridKnn.execute(base, queries, 10, None, stores = Some(root), ef = 256)
     val exact = KnnJoin.exactFlat(base, queries, 10)
     // bruteforce-routed queries (2, 4, 5) must be byte-identical
     val bfIds = Set(2L, 4L, 5L)
@@ -58,7 +59,7 @@ class HybridKnnSpec extends SparkSpec {
     // graph-routed queries (0: full, 1: category, 3: interval,
     // 6: type-3 category range walk): recall floor
     Seq(0L, 1L, 3L, 6L).foreach { qid =>
-      val recall = AnnJoin.recallAtK(
+      val recall = KnnJoin.recallAtK(
         routed.filter($"qid" === qid), exact.filter($"qid" === qid))
       assert(recall >= 0.9, s"qid $qid recall $recall")
     }

@@ -24,7 +24,7 @@ class SimilaritySearchSpec extends SparkSpec {
   test("LSH cosine top-k recall >= 0.8 vs brute force on clustered data") {
     val exact = SimilaritySearch.bruteForceCosineTopK(clustered, queries, 10)
     val approx = SimilaritySearch.lshCosineTopK(clustered, queries, 10, numPlanes = 10)
-    val recall = AnnJoin.recallAtK(approx, exact)
+    val recall = KnnJoin.recallAtK(approx, exact)
     assert(recall >= 0.8, s"recall $recall")
   }
 
@@ -39,7 +39,7 @@ class SimilaritySearchSpec extends SparkSpec {
         .withColumn("l", lit(0.0)).withColumn("r", lit(0.0)), 10)
       // ivfKnn excludes self-matches; align the oracle
       .filter($"nid" =!= $"qid")
-    val recall = AnnJoin.recallAtK(approx, exact)
+    val recall = KnnJoin.recallAtK(approx, exact)
     assert(recall >= 0.85, s"recall $recall")
   }
 
@@ -63,7 +63,7 @@ class SimilaritySearchSpec extends SparkSpec {
         .withColumn("l", lit(0.0)).withColumn("r", lit(0.0)), 10)
       .filter($"nid" =!= $"qid")
     // random seeds trail k-means at equal nlist — assert a looser floor
-    val recall = AnnJoin.recallAtK(a, exact)
+    val recall = KnnJoin.recallAtK(a, exact)
     assert(recall >= 0.6, s"recall $recall")
   }
 
@@ -132,7 +132,7 @@ class SimilaritySearchSpec extends SparkSpec {
       l2queries.withColumn("qtype", lit(0)).withColumn("v", lit(0L))
         .withColumn("l", lit(0.0)).withColumn("r", lit(0.0)), 10)
       .filter($"nid" =!= $"qid")
-    val recall = AnnJoin.recallAtK(a, exact)
+    val recall = KnnJoin.recallAtK(a, exact)
     assert(recall >= 0.85, s"recall $recall")
   }
 
@@ -144,9 +144,9 @@ class SimilaritySearchSpec extends SparkSpec {
       l2queries.withColumn("qtype", lit(0)).withColumn("v", lit(0L))
         .withColumn("l", lit(0.0)).withColumn("r", lit(0.0)), 10)
       .filter($"nid" =!= $"qid")
-    val narrow = AnnJoin.recallAtK(
+    val narrow = KnnJoin.recallAtK(
       SimilaritySearch.pqKnnSeeded(clustered, l2queries, 10, refineK = 15), exact)
-    val wide = AnnJoin.recallAtK(
+    val wide = KnnJoin.recallAtK(
       SimilaritySearch.pqKnnSeeded(clustered, l2queries, 10, refineK = 200), exact)
     assert(wide >= narrow, s"refine monotonicity: narrow=$narrow wide=$wide")
     assert(wide >= 0.95, s"near-exhaustive refine should approach exact: $wide")
@@ -169,8 +169,8 @@ class SimilaritySearchSpec extends SparkSpec {
     assert(rows1.toSeq == rows2.toSeq, "trained PQ must be run-deterministic (fixed seed)")
     val seeded = SimilaritySearch.pqKnnSeeded(clustered, l2queries, k = 10,
       m = 4, ksub = 16, refineK = 60)
-    val rT = AnnJoin.recallAtK(t1, exact)
-    val rS = AnnJoin.recallAtK(seeded, exact)
+    val rT = KnnJoin.recallAtK(t1, exact)
+    val rS = KnnJoin.recallAtK(seeded, exact)
     assert(rT >= rS - 0.05, s"trained recall $rT should not lose to seeded $rS")
     assert(rT >= 0.85, s"trained recall $rT")
   }
@@ -195,8 +195,8 @@ class SimilaritySearchSpec extends SparkSpec {
     assert(rowsA.forall { case (qid, _, nid) => qid != nid })
     // routing really prunes: with nprobe == nlist the candidate space is
     // the whole corpus, so recall can only improve (or hold)
-    val rSeeded = AnnJoin.recallAtK(a, exact)
-    val rAllLists = AnnJoin.recallAtK(
+    val rSeeded = KnnJoin.recallAtK(a, exact)
+    val rAllLists = KnnJoin.recallAtK(
       SimilaritySearch.ivfPqKnnSeeded(clustered, l2queries, k = 10,
         nlist = 20, nprobe = 20, m = 4, ksub = 16, refineK = 60), exact)
     assert(rAllLists >= rSeeded,
@@ -211,7 +211,7 @@ class SimilaritySearchSpec extends SparkSpec {
     assert(t1.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq ==
       t2.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq,
       "trained IVF-PQ must be run-deterministic (fixed seed)")
-    val rTrained = AnnJoin.recallAtK(t1, exact)
+    val rTrained = KnnJoin.recallAtK(t1, exact)
     assert(rTrained >= rSeeded - 0.05,
       s"trained recall $rTrained should not lose to seeded $rSeeded")
     assert(rTrained >= 0.85, s"trained IVF-PQ recall $rTrained")
