@@ -694,18 +694,6 @@ object AnnIndexStore {
     writeIvfPq(b, path, coarse, book, m)
   }
 
-  /** Trained IVF-PQ stored index: Lloyd coarse + per-subspace Lloyd
-    * residual codebooks (the quality path; see
-    * [[graft.operators.SimilaritySearch.ivfPqKnnTrained]]). */
-  def buildIvfPq(base: DataFrame, path: String, nlist: Int,
-      m: Int = 8, ksub: Int = 256, sampleCap: Int = 16384,
-      maxIter: Int = 10, seed: Long = 7L): Unit = {
-    val b = base.select(col("id").cast("long").as("id"), col("vec"))
-    val (coarse, book) = graft.operators.SimilaritySearch.trainedIvfPqBooks(
-      b, nlist, m, ksub, sampleCap, maxIter, seed)
-    writeIvfPq(b, path, coarse, book, m)
-  }
-
   private def writeIvfPq(b: DataFrame, path: String,
       coarse: Array[Array[Float]], book: Array[Array[Float]], m: Int): Unit = {
     val spark = b.sparkSession
@@ -739,7 +727,7 @@ object AnnIndexStore {
     stampVersion(new java.io.File(s"${path.stripSuffix("/")}/codes"))
   }
 
-  /** Search a [[buildIvfPq]]/[[buildIvfPqSeeded]] store: per query,
+  /** Search a [[buildIvfPqSeeded]] store: per query,
     * route to the `nprobe` nearest stored centroids, prune the codes
     * scan to those list partitions (STATIC `isin` filter — the probed
     * set is collected once, bounded by nlist), ADC-rank with
@@ -988,23 +976,21 @@ object AnnIndexStore {
   }
 
   /** Type-3 search over a per-label [[buildBy]] table built with
-    * `attrCol = ts`: each query walks ONLY its label's sub-index with
-    * the ts in-filter — the stored-index form of the reference's
-    * SearchCategoryRange (searcher.hpp:301-374).
+    * `attrCol = ts`: each query walks ONLY its label's sub-index, each
+    * sub-row through [[SubIndexWalk.partial]] — the stored-index form
+    * of the reference's SearchCategoryRange (searcher.hpp:301-374).
     *
-    * `efBands` (serving-scale arm, pairs with an `attrSalted` store):
-    * the type-2 rework's ingredients applied to the label+range path —
-    * (a) sub-rows whose [ts(0), ts(last)] misses the query range are
-    * SKIPPED before the graph is even deserialized (with attr-contiguous
-    * salting an oversized label's non-overlapping chunks cost nothing;
-    * hash-salted stores walk every chunk per query), (b) a sub-row the
-    * range fully covers walks PLAIN (no in-filter overhead), (c) below
-    * [[graft.operators.SearchParams.BruteCoverage]] the slice is scanned
-    * by the quantized two-stage [[HnswIndex.exactOverQ]] (int8 preselect
-    * + fp32 re-rank — the measured 4.3× over the boosted filtered walk
-    * at the t2 probe). Results can differ from the exact-effort arm at
-    * the quantization margin, so hash-gated oracle queries keep the
-    * default. queries: (qid, v, l, r, qvec) → (qid, rank, nid). */
+    * `efBands` (serving-scale arm, pairs with an `attrSalted` store)
+    * walks at the store's [[SubIndexWalk.Banded]] effort and adds two
+    * skips of this search's own: (a) sub-rows whose [ts(0), ts(last)]
+    * misses the query range are SKIPPED before the graph is even
+    * deserialized (with attr-contiguous salting an oversized label's
+    * non-overlapping chunks cost nothing; hash-salted stores walk every
+    * chunk per query), (b) a sub-row the range fully covers walks PLAIN
+    * at ef (no in-filter overhead). Results can differ from the
+    * exact-effort arm at the quantization margin, so hash-gated oracle
+    * queries keep the default. queries: (qid, v, l, r, qvec) →
+    * (qid, rank, nid). */
   def searchByRange(spark: SparkSession, path: String, queries: DataFrame,
       k: Int, ef: Int = 200, efBands: Boolean = false): DataFrame = {
     import spark.implicits._
@@ -1017,8 +1003,8 @@ object AnnIndexStore {
         (r.getLong(0), r.getDouble(2), r.getDouble(3), r.getSeq[Float](4).toArray)))
       .groupBy(_._1).map { case (b, xs) => (b, xs.map(_._2)) }
     if (qByBucket.isEmpty) return spark.emptyDataset[(Long, Long, Long)].toDF("qid", "rank", "nid")
-    val bands =
-      if (efBands) resolveBands(path) else graft.operators.SearchParams.DefaultBands
+    val effort =
+      if (efBands) SubIndexWalk.Banded(resolveBands(path)) else SubIndexWalk.ExactEffort
     val bq = spark.sparkContext.broadcast(qByBucket)
     val wanted = qByBucket.keys.toSeq
     val scan0 = storeFrame(spark, resolveStore(path))
@@ -1058,25 +1044,7 @@ object AnnIndexStore {
                   l <= ts(0) && r >= ts(ts.length - 1)
                 val hits =
                   if (full) index.search(qvec, k, ef)
-                  else {
-                    val cover = tsIdx.coverage(l, r)
-                    val (thr, exactScan) =
-                      if (efBands)
-                        (bands.bruteCoverage,
-                          () => index.exactOverQ(qvec, tsIdx.inRange(l, r), k))
-                      else
-                        (graft.operators.SearchParams.SmallCoverage,
-                          () => index.exactOver(qvec, tsIdx.inRange(l, r), k))
-                    if (cover < thr) exactScan()
-                    else {
-                      val allowed: Int => Boolean = i => ts(i) >= l && ts(i) <= r
-                      val efW =
-                        if (efBands) bands.inFilterEf(ef, cover)
-                        else graft.operators.SearchParams.inFilterEf(ef, cover)
-                      index.search(qvec, k, efW, allowed,
-                        seeds = tsIdx.seeds(l, r, graft.operators.SearchParams.FilterSeeds))
-                    }
-                  }
+                  else SubIndexWalk.partial(index, ts, tsIdx, qvec, l, r, k, ef, effort)
                 hits.iterator.map { case (internal, d) => (qid, ids(internal), d) }
               }
             }
@@ -1089,11 +1057,10 @@ object AnnIndexStore {
 
   /** Range search over a ts-bucketed [[buildBy]] table (bucketCol =
     * floor(ts·scale), attrCol = ts): each query reads only its
-    * overlapping bucket rows (bucket min/max pruned), walks
-    * fully-covered buckets unfiltered and partially-covered ones with
-    * the ts in-filter, and the per-bucket candidates merge through the
-    * bounded top-k — the stored-index form of the reference's type-2
-    * stage (hybrid_graph.cpp:338-459).
+    * overlapping bucket rows (bucket min/max pruned), and the
+    * per-bucket candidates merge through the bounded top-k — the
+    * stored-index form of the reference's type-2 stage
+    * (hybrid_graph.cpp:338-459).
     *
     * `scale` = buckets per unit ts (10 = the reference's deciles). The
     * reference is pinned to 10 because its decile graphs are offset
@@ -1107,12 +1074,11 @@ object AnnIndexStore {
     * point); ts-contiguous fine buckets cut the per-query walk count by
     * the salt factor.
     *
-    * `efBands` (serving-scale arm): fully-covered bucket walks use
-    * [[graft.operators.SearchParams.unionWalkEf]] (per-bucket depth
-    * shrinks as more full buckets contribute) and SMALL slices use the
-    * quantized [[HnswIndex.exactOverQ]] two-stage scan. Off by default:
-    * both can differ from the exact-effort result at the margin, and
-    * the hash-gated oracle queries must stay bit-stable.
+    * Each (query, bucket) pair is one [[SubIndexWalk.bucket]] call;
+    * `efBands` selects its [[SubIndexWalk.Banded]] arm over the store's
+    * bands. Off by default: the banded arm can differ from the
+    * exact-effort result at the margin, and the hash-gated oracle
+    * queries must stay bit-stable.
     *
     * queries: (qid, l, r, qvec). */
   def searchDecileRange(spark: SparkSession, path: String, queries: DataFrame,
@@ -1127,19 +1093,10 @@ object AnnIndexStore {
     if (qBatch.isEmpty) return spark.emptyDataset[(Long, Long, Long)].toDF("qid", "rank", "nid")
     // the banded arm's effort table: the store's tuned sidecar when
     // present (EfTuner.tuneBands), else the hand-derived defaults
-    val bands =
-      if (efBands) resolveBands(path) else graft.operators.SearchParams.DefaultBands
+    val effort =
+      if (efBands) SubIndexWalk.Banded(resolveBands(path)) else SubIndexWalk.ExactEffort
     val bq = spark.sparkContext.broadcast(qBatch)
-    // widen the coarse prune one bucket low ONLY when the batch's min
-    // lo sits exactly on a bucket boundary — the single case where a
-    // boundary row could be filed one bucket down by floor rounding
-    // AND still be in range (ts >= lo is monotone through the double
-    // multiply, so off-boundary lows can never have in-range rows
-    // below the nominal bucket; ADVICE r2). The per-row in-filter
-    // keeps the extra bucket correct when it is included.
-    val minLo = qBatch.map(_._2).min
-    val nominalB = math.floor(minLo * scale).toLong
-    val minB = if (minLo <= nominalB.toDouble / scale) nominalB - 1 else nominalB
+    val minB = SubIndexWalk.lowBucket(qBatch.map(_._2).min, scale)
     val maxB = math.floor(qBatch.map(_._3).max * scale).toLong
     // Query-shard the batch across replicated bucket scans: one task
     // per bucket row makes the stage wall the SLOWEST bucket (middle
@@ -1163,7 +1120,7 @@ object AnnIndexStore {
         it.flatMap { case (bucket, ids, ts, graphBytes, qshard) =>
           val bStart = bucket.toDouble / scale
           val bEnd = (bucket + 1).toDouble / scale
-          // boundary buckets inclusive on both sides (see minB note)
+          // boundary buckets inclusive on both sides (SubIndexWalk.lowBucket)
           val all = bq.value
           val overlapping = Iterator.range(qshard, all.length, shards)
             .map(all(_))
@@ -1174,47 +1131,8 @@ object AnnIndexStore {
             val index = HnswIndex.fromBytesCached(graphBytes)
             val tsIdx = new TsIndex(ts)
             overlapping.iterator.flatMap { case (qid, l, r, qvec) =>
-              val full = l <= bStart && r >= bEnd
-              val hits =
-                if (full) {
-                  val efFull =
-                    if (efBands) {
-                      val mFull = math.max(0,
-                        math.floor(r * scale) - math.ceil(l * scale)).toInt
-                      bands.unionWalkEf(ef, k, mFull)
-                    } else ef
-                  index.search(qvec, k, efFull)
-                } else {
-                  // partial bucket: below a coverage threshold a
-                  // sequential exact scan of the in-range run (one
-                  // contiguous slice — ts-sorted build) beats a
-                  // rejection-boosted filtered walk. The banded arm
-                  // scans int8 codes + fp32 refine and draws its line
-                  // at BruteCoverage (measured: warm filtered walk
-                  // ≈ 3.5 ms vs ≤ 2.5 ms scan at the 6M probe; the
-                  // reference's narrow-sel SplitInterval draws the same
-                  // 0.5-0.6 line, hybrid_graph.cpp:91-134); the plain
-                  // arm scans fp32 below SmallCoverage. Same walk above
-                  // the line in both arms.
-                  val cover = tsIdx.coverage(l, r)
-                  val (thr, exactScan) =
-                    if (efBands)
-                      (bands.bruteCoverage,
-                        () => index.exactOverQ(qvec, tsIdx.inRange(l, r), k))
-                    else
-                      (graft.operators.SearchParams.SmallCoverage,
-                        () => index.exactOver(qvec, tsIdx.inRange(l, r), k))
-                  if (cover < thr) exactScan()
-                  else {
-                    val allowed: Int => Boolean = i => ts(i) >= l && ts(i) <= r
-                    val efW =
-                      if (efBands) bands.inFilterEf(ef, cover)
-                      else graft.operators.SearchParams.inFilterEf(ef, cover)
-                    index.search(qvec, k, efW, allowed,
-                      seeds = tsIdx.seeds(l, r, graft.operators.SearchParams.FilterSeeds))
-                  }
-                }
-              hits.iterator.map { case (internal, d) => (qid, ids(internal), d) }
+              SubIndexWalk.bucket(index, ts, tsIdx, qvec, l, r, bucket, scale, k, ef, effort)
+                .iterator.map { case (internal, d) => (qid, ids(internal), d) }
             }
           }
         }
@@ -1394,7 +1312,7 @@ object AnnIndexStore {
 
   def loadCentroidsCached(spark: SparkSession, store: String): Array[Array[Float]] = {
     // IVF roots themselves carry no stamp (writeIvf's buildBy stamps the
-    // nested LISTS store; buildIvfPq's writer stamps the CODES store) —
+    // nested LISTS store; writeIvfPq stamps the CODES store) —
     // the centroids are written in the same build transaction as those
     // datasets, so their stamp is a valid freshness key for the root's
     // centroid table: a rebuild rewrites both and re-stamps. Without the

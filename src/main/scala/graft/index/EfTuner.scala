@@ -175,24 +175,19 @@ object EfTuner {
         "row groups don't pack multiple buckets.")
 
     // ---- full-union factors, one per mFull threshold ----
-    // Buckets stream one at a time: per-query candidate lists keep only
-    // k entries per (bucket row, rung), so accumulators are O(sample ·
-    // rungs · m · k) tuples while at most one bucket's graphs are
-    // resident — the 100×-store cliff the old all-m-buckets collect had
-    // is gone. Measuring every rung per bucket (instead of early-
-    // stopping the ladder) changes cost, not the chosen factor.
-    // Buckets still stream one at a time (the driver-residency
-    // contract), but each distinct bucket is LOADED once for all mFull
-    // thresholds instead of once per threshold: the centered slices are
-    // nested (m=2 ⊆ m=4 ⊆ m=8 around the middle bucket), so the old
-    // per-m loop collected the inner buckets up to three times — at the
-    // gate store that was 14 filter+collect jobs per tune where the
-    // union needs 8 (r14 measure: ann_ef_bands was 47 scheduler-bound
-    // jobs for its double tune). Walk WORK is unchanged — a bucket
-    // shared by several thresholds is still walked at each threshold's
-    // own unionWalkEf — and accumulation order per (m, rung, query)
-    // changes only the list order, which the final sorted.take(k)
-    // already made irrelevant.
+    // Buckets stream in budget-bounded batches (the driver-residency
+    // contract): per-query candidate lists keep only k entries per
+    // (bucket row, rung), so accumulators are O(sample · rungs · m · k)
+    // tuples — no all-m-buckets collect and its 100×-store cliff. Each
+    // distinct bucket is LOADED once for all mFull thresholds: the
+    // centered slices are nested (m=2 ⊆ m=4 ⊆ m=8 around the middle
+    // bucket), and a per-m loop collected the inner buckets up to three
+    // times (r14: 14 filter+collect jobs per tune where the union needs
+    // 8). Walk WORK is unchanged — a shared bucket is still walked at
+    // each threshold's own unionWalkEf, and measuring every rung
+    // (instead of early-stopping the ladder) changes cost, not the
+    // chosen factor; accumulation order per (m, rung, query) changes
+    // only list order, which the final sorted.take(k) makes irrelevant.
     val fullTuned = {
       val ms = deflt.full.map(_._1).sorted
       val slices: Map[Int, Set[Long]] = ms.map { m =>
@@ -299,15 +294,18 @@ object EfTuner {
     val bandRecallMemo = scala.collection.mutable.HashMap.empty[(Double, Double), Double]
     def bandRecall(cap: Double, cover: Double): Double =
       bandRecallMemo.getOrElseUpdate((cap, cover), bandRecallRaw(cap, cover))
-    def bandRecallRaw(cap: Double, cover: Double): Double = {
+    // the ts bounds of the row's centred `cover` fraction
+    def centred(cover: Double): (Double, Double) = {
       val n = sortedTs.length
-      val lo = sortedTs(math.min(n - 1, math.max(0, ((1 - cover) / 2 * n).toInt)))
-      val hi = sortedTs(math.max(0, math.min(n - 1, (((1 + cover) / 2) * n).toInt - 1)))
+      (sortedTs(math.min(n - 1, math.max(0, ((1 - cover) / 2 * n).toInt))),
+        sortedTs(math.max(0, math.min(n - 1, (((1 + cover) / 2) * n).toInt - 1))))
+    }
+    def bandRecallRaw(cap: Double, cover: Double): Double = {
+      val (lo, hi) = centred(cover)
       val slice = tsIdx.inRange(lo, hi)
       if (slice.isEmpty) return 1.0
       val table = deflt.copy(inFilterMaxFactor = cap)
       val efW = table.inFilterEf(ef, cover)
-      val allowed: Int => Boolean = i => bigTs(i) >= lo && bigTs(i) <= hi
       // parallel over the sample (r15) — driver-CPU walks, same safety
       // argument as the union loop above; hit/total are exact integer
       // sums, so accumulation order cannot change the recall
@@ -317,8 +315,7 @@ object EfTuner {
         .forEach { qi =>
           val q = sample(qi)
           val truth = bigIdx.exactOver(q, slice, k).map(_._1).toSet
-          val got = bigIdx.search(q, k, efW, allowed,
-            seeds = tsIdx.seeds(lo, hi, graft.operators.SearchParams.FilterSeeds))
+          val got = SubIndexWalk.inFilter(bigIdx, bigTs, tsIdx, q, lo, hi, k, efW)
             .map(_._1).toSet
           hitA.addAndGet(truth.intersect(got).size.toLong)
           totalA.addAndGet(truth.size.toLong)
@@ -363,19 +360,15 @@ object EfTuner {
       // harder — a sweep priced at the pass-1 cap then under-priced the
       // walk, which lowers the brute line: the conservative direction,
       // a few percent of wall on narrow slices, never recall)
-      val n = sortedTs.length
       val rung = bruteLadder.find { c =>
-        val lo = sortedTs(math.min(n - 1, math.max(0, ((1 - c) / 2 * n).toInt)))
-        val hi = sortedTs(math.max(0, math.min(n - 1, (((1 + c) / 2) * n).toInt - 1)))
+        val (lo, hi) = centred(c)
         val slice = tsIdx.inRange(lo, hi)
         val refineK = math.min(slice.length, math.max(k + 40, 140))
         val scanWork = slice.length + fp32W * refineK
         val efW = walkEfDeflt.inFilterEf(ef, c)
-        val allowed: Int => Boolean = i => bigTs(i) >= lo && bigTs(i) <= hi
         var visits = 0L
         sample.foreach { q =>
-          bigIdx.search(q, k, efW, allowed,
-            seeds = tsIdx.seeds(lo, hi, graft.operators.SearchParams.FilterSeeds))
+          SubIndexWalk.inFilter(bigIdx, bigTs, tsIdx, q, lo, hi, k, efW)
           visits += bigIdx.lastFilteredWalkVisits
         }
         val walkWork = visits.toDouble / sample.length +

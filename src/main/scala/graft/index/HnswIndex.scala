@@ -746,11 +746,10 @@ final class HnswIndex(
     * fp32 squared L2 (the walk runs on SQ8 codes, the returned pool is
     * re-ranked exactly — reference refine, hybrid_graph.cpp:465-494).
     * With `allowed`, runs the in-filter walk with optional in-predicate
-    * entry `seeds` and a visited budget (default 32·ef + 1024). */
+    * entry `seeds` and a visited budget of 32·ef + 1024. */
   def search(q: Array[Float], k: Int, ef: Int,
       allowed: Int => Boolean = null,
-      seeds: Array[Int] = null,
-      maxVisits: Int = 0): Array[(Int, Double)] = {
+      seeds: Array[Int] = null): Array[(Int, Double)] = {
     if (entry < 0) return Array.empty
     ensureCodes()
     // query codes pre-widened to short: halves the hot loop's lane
@@ -768,10 +767,7 @@ final class HnswIndex(
     val effEf = math.max(ef, k)
     val res =
       if (allowed == null) searchLayerCoded(qc, cur, effEf)
-      else {
-        val budget = if (maxVisits > 0) maxVisits else 32 * effEf + 1024
-        searchLayerFilteredCoded(qc, cur, effEf, allowed, seeds, budget)
-      }
+      else searchLayerFilteredCoded(qc, cur, effEf, allowed, seeds, 32 * effEf + 1024)
     rerank(q, res, k)
   }
 

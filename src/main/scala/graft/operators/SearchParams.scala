@@ -27,16 +27,6 @@ object SearchParams {
     * [[Selectivity.splitInterval]]'s SMALL threshold. */
   val SmallCoverage = 0.2
 
-  /** Per-bucket ef for a range search that unions FULLY-covered bucket
-    * walks: the global top-k draws ~k/m from each of m full buckets, so
-    * per-bucket depth can shrink as m grows — the reference's banded
-    * ef2_full table (hybrid_graph.h:24-26, applied at
-    * hybrid_graph.cpp:434-448: 780/630/480 as coverage widens). Floored
-    * at k+40 (the reference never collects fewer than
-    * graph_full_refine_k=150 per decile at k=100). */
-  def unionWalkEf(ef: Int, k: Int, mFull: Int): Int =
-    DefaultBands.unionWalkEf(ef, k, mFull)
-
   /** Banded-arm partial-bucket threshold: below this in-range fraction
     * of a ≤maxRowsPerIndex sub-index, a contiguous quantized exact scan
     * ([[graft.index.HnswIndex.exactOverQ]]) beats a rejection-boosted
@@ -76,6 +66,13 @@ case class EfBands(
     inFilterMaxFactor: Double = 4.0,
     bruteCoverage: Double = SearchParams.BruteCoverage) {
 
+  /** Per-bucket ef for a range search that unions FULLY-covered bucket
+    * walks: the global top-k draws ~k/m from each of m full buckets, so
+    * per-bucket depth can shrink as m grows — the reference's banded
+    * ef2_full table (hybrid_graph.h:24-26, applied at
+    * hybrid_graph.cpp:434-448: 780/630/480 as coverage widens). Floored
+    * at k+40 (the reference never collects fewer than
+    * graph_full_refine_k=150 per decile at k=100). */
   def unionWalkEf(ef: Int, k: Int, mFull: Int): Int = {
     val banded = full.find(mFull >= _._1).map(_._2)
       .fold(ef)(f => math.ceil(ef * f).toInt)

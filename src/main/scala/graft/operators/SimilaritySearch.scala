@@ -364,11 +364,11 @@ object SimilaritySearch {
     ivfPqSearch(b, queries, k, coarse, nprobe, m, refineK, book)
   }
 
-  /** The trained (coarse, residual-codebook) pair shared by
-    * [[ivfPqKnnTrained]] and [[graft.index.AnnIndexStore.buildIvfPq]]:
-    * Lloyd coarse quantizer on a hash-spread bounded sample, then `m`
-    * per-subspace Lloyd runs over the sample's residuals. */
-  private[graft] def trainedIvfPqBooks(b: DataFrame, nlist: Int, m: Int,
+  /** The trained (coarse, residual-codebook) pair of
+    * [[ivfPqKnnTrained]]: Lloyd coarse quantizer on a hash-spread
+    * bounded sample, then `m` per-subspace Lloyd runs over the
+    * sample's residuals. */
+  private def trainedIvfPqBooks(b: DataFrame, nlist: Int, m: Int,
       ksub: Int, sampleCap: Int, maxIter: Int,
       seed: Long): (Array[Array[Float]], Array[Array[Float]]) = {
     val nRows = b.select(count(lit(1))).collect()(0).getLong(0)

@@ -18,7 +18,7 @@ import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType, StructType}
 
-import graft.index.HnswIndex
+import graft.index.{HnswIndex, SubIndexWalk}
 
 /** SQL-level ANN auto-routing — the optional "AnnJoinStrategy" polish of
   * SURVEY §4: the reference's entire premise is that
@@ -880,16 +880,7 @@ object AnnTopKExec extends org.apache.spark.internal.Logging {
         searchStore(spark, path, BucketsIn(Set(bucket)),
           labelWalk(qvec, k, effEf, tsRange), k)
       case RangeRoute(path, lo, hi) =>
-        // one bucket of slack low ONLY when lo sits exactly on a decile
-        // boundary — the single case where a boundary row could be
-        // filed one decile down by floor rounding AND still be in
-        // range (ts >= lo is monotone through the double multiply, so
-        // off-boundary queries can never have in-range rows below the
-        // nominal decile). The old unconditional -1 scanned and
-        // deserialized a bucket rangeWalk's overlap bail then
-        // discarded — one wasted blob per cold type-2 statement.
-        val nominal = math.floor(lo * 10).toLong
-        val minB = if (lo <= nominal / 10.0) nominal - 1 else nominal
+        val minB = SubIndexWalk.lowBucket(lo, 10)
         val maxB = math.floor(hi * 10).toLong
         searchStore(spark, path, BucketRange(minB, maxB),
           rangeWalk(qvec, k, effEf, lo, hi), k)
@@ -910,55 +901,21 @@ object AnnTopKExec extends org.apache.spark.internal.Logging {
   private def plainWalk(qvec: Array[Float], k: Int, effEf: Int): Walk =
     (_, e) => emit(e, qvec, e.index.search(qvec, k, effEf))
 
-  /** Type 1/3: label bucket, optional ts in-filter. Coverage by binary
-    * search on the entry's shared sorted-ts view; SMALL slices scan
-    * exactly, the rest walk in-filter with in-range seeds and
-    * coverage-widened ef. */
+  /** Type 1/3: label bucket, optional ts range through the shared
+    * [[graft.index.SubIndexWalk.partial]] at the exact-effort arm, with
+    * coverage by binary search on the entry's shared sorted-ts view. */
   private def labelWalk(qvec: Array[Float], k: Int, effEf: Int,
-      tsRange: Option[(Double, Double)]): Walk = (_, e) => {
-    val hits = tsRange match {
-      case None => e.index.search(qvec, k, effEf)
-      case Some((l, r)) =>
-        val tsIdx = e.tsIndex
-        val ts = e.attrs
-        val cover = tsIdx.coverage(l, r)
-        if (cover < graft.operators.SearchParams.SmallCoverage)
-          e.index.exactOver(qvec, tsIdx.inRange(l, r), k)
-        else
-          e.index.search(qvec, k,
-            graft.operators.SearchParams.inFilterEf(effEf, cover),
-            (i: Int) => ts(i) >= l && ts(i) <= r,
-            seeds = tsIdx.seeds(l, r, graft.operators.SearchParams.FilterSeeds))
-    }
-    emit(e, qvec, hits)
-  }
+      tsRange: Option[(Double, Double)]): Walk = (_, e) =>
+    emit(e, qvec, tsRange.fold(e.index.search(qvec, k, effEf)) { case (l, r) =>
+      SubIndexWalk.partial(e.index, e.attrs, e.tsIndex, qvec, l, r, k, effEf,
+        SubIndexWalk.ExactEffort) })
 
-  /** Type 2: decile buckets — full buckets walk unfiltered, partial
-    * ones in-filter (SMALL slices scan exactly). */
+  /** Type 2: decile buckets through the shared
+    * [[graft.index.SubIndexWalk.bucket]] at the exact-effort arm. */
   private def rangeWalk(qvec: Array[Float], k: Int, effEf: Int,
-      lo: Double, hi: Double): Walk = (decile, e) => {
-    val bStart = decile / 10.0
-    val bEnd = (decile + 1) / 10.0
-    if (lo > bEnd || hi < bStart) Iterator.empty
-    else {
-      val full = lo <= bStart && hi >= bEnd
-      val hits =
-        if (full) e.index.search(qvec, k, effEf)
-        else {
-          val tsIdx = e.tsIndex
-          val ts = e.attrs
-          val cover = tsIdx.coverage(lo, hi)
-          if (cover < graft.operators.SearchParams.SmallCoverage)
-            e.index.exactOver(qvec, tsIdx.inRange(lo, hi), k)
-          else
-            e.index.search(qvec, k,
-              graft.operators.SearchParams.inFilterEf(effEf, cover),
-              (i: Int) => ts(i) >= lo && ts(i) <= hi,
-              seeds = tsIdx.seeds(lo, hi, graft.operators.SearchParams.FilterSeeds))
-        }
-      emit(e, qvec, hits)
-    }
-  }
+      lo: Double, hi: Double): Walk = (decile, e) =>
+    emit(e, qvec, SubIndexWalk.bucket(e.index, e.attrs, e.tsIndex, qvec,
+      lo, hi, decile, 10, k, effEf, SubIndexWalk.ExactEffort))
 
   /** Run `walk` over every `sel`-matching row of the store and merge
     * the global top-k, ascending (dist, id).
