@@ -36,11 +36,106 @@ object AnnIndexStore {
   private[graft] val versionFileName = "_store_version"
 
   /** Stamp `dir` with a fresh version token — call AFTER the store's
-    * data files are committed. */
-  def stampVersion(dir: java.io.File): Unit =
-    java.nio.file.Files.write(
-      new java.io.File(dir, versionFileName).toPath,
-      java.util.UUID.randomUUID().toString.getBytes("UTF-8"))
+    * data files are committed. `from`, the base files the build read,
+    * is recorded for the new token first ([[baseFilesAt]]). */
+  def stampVersion(dir: java.io.File, from: Option[BaseFiles] = None): Unit = {
+    val token = java.util.UUID.randomUUID().toString
+    from.foreach(b => writeSidecarAtomic(dir, baseFileName, b.render(token)))
+    java.nio.file.Files.write(new java.io.File(dir, versionFileName).toPath,
+      token.getBytes("UTF-8"))
+  }
+
+  // ---- `_store_base`: the base files a store version was built from --
+  //
+  // A build whose input's `id` and `vec` are unchanged columns of one
+  // file-based relation records that relation's root paths and each
+  // data file's (path, length, mtime), taken from the relation's own
+  // file index (no listing, no job). The record's first line names the
+  // version token it belongs to, and it is written before that token
+  // is stamped, so a reader that resolved a version either finds its
+  // record or finds none (another token's record counts as none). The
+  // SQL serving guard compares a fresh listing of the statement's base
+  // with the record of the version it walked: equal means every id the
+  // walk returned is in the base with the vector it was indexed with.
+  private[graft] val baseFileName = "_store_base"
+
+  /** A relation's root paths and its data files as (path, length,
+    * modification time). */
+  final case class BaseFiles(roots: Seq[String], files: Set[(String, Long, Long)]) {
+    private[index] def render(token: String): String =
+      (Seq(token, roots.mkString("\t")) ++
+        files.toSeq.sorted.map { case (p, len, mtime) => s"$len\t$mtime\t$p" })
+        .mkString("", "\n", "\n")
+  }
+
+  object BaseFiles {
+    /** The listing `index` holds now (an in-memory index lists once,
+      * when it is built). */
+    def of(index: org.apache.spark.sql.execution.datasources.FileIndex): BaseFiles =
+      BaseFiles(index.rootPaths.map(_.toString),
+        index.listFiles(Nil, Nil).flatMap(_.files).map { f =>
+          (f.getPath.toString, f.getLen, f.fileStatus.getModificationTime)
+        }.toSet)
+  }
+
+  /** The base files `input` reads when its `id` and `vec` columns are
+    * unchanged attributes of one file-based relation (v1 or a v2
+    * `FileTable`) seen through projections, filters, subquery aliases
+    * and views; None for a derived `id`/`vec`, a union or join, or an
+    * in-memory frame. */
+  private def baseFilesOf(input: DataFrame): Option[BaseFiles] = {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, ExprId}
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, SubqueryAlias, View}
+    val plan = input.queryExecution.analyzed
+    val resolver = input.sparkSession.sessionState.conf.resolver
+    def attr(name: String) = plan.output.find(a => resolver(a.name, name)).map(_.exprId)
+    def from(p: LogicalPlan, want: Set[ExprId]): Option[BaseFiles] = p match {
+      case Project(pl, child) if want.forall(id => pl.exists {
+          case a: AttributeReference => a.exprId == id
+          case _ => false
+        }) => from(child, want)
+      case Filter(_, child) => from(child, want)
+      case SubqueryAlias(_, child) => from(child, want)
+      case v: View => from(v.child, want)
+      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation
+          if want.subsetOf(lr.output.map(_.exprId).toSet) => lr.relation match {
+        case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+          Some(BaseFiles.of(fs.location))
+        case _ => None
+      }
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+          if want.subsetOf(r.output.map(_.exprId).toSet) => r.table match {
+        case t: org.apache.spark.sql.execution.datasources.v2.FileTable =>
+          Some(BaseFiles.of(t.fileIndex))
+        case _ => None
+      }
+      case _ => None
+    }
+    for {
+      id <- attr("id")
+      vec <- attr("vec")
+      b <- from(plan, Set(id, vec))
+      if b.files.nonEmpty
+    } yield b
+  }
+
+  /** The record of the store version `ver` at the resolved data dir
+    * `dataDir`: None when there is none, or when the record there
+    * belongs to another version. */
+  def baseFilesAt(dataDir: String, ver: String): Option[BaseFiles] =
+    try {
+      import scala.jdk.CollectionConverters._
+      val lines = java.nio.file.Files.readAllLines(
+        new java.io.File(dataDir.stripSuffix("/"), baseFileName).toPath).asScala
+      if (lines.length < 2 || lines.head != ver) None
+      else Some(BaseFiles(lines(1).split("\t").toSeq, lines.iterator.drop(2).map { l =>
+        val Array(len, mtime, p) = l.split("\t", 3)
+        (p, len.toLong, mtime.toLong)
+      }.toSet))
+    } catch {
+      // no record, or a torn one: the guard only loses its skip
+      case _: java.io.IOException | _: MatchError | _: NumberFormatException => None
+    }
 
   /** The store's write-time version token, if stamped. Resolves the
     * generation layout first: a flipped store's token is the CURRENT
@@ -159,6 +254,7 @@ object AnnIndexStore {
   // scan per statement.
   private final class StoreEntry(val frame: DataFrame) {
     @volatile var keys: Array[(Long, Int)] = null
+    @volatile var base: Option[BaseFiles] = null
   }
   private val storeFrames = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String, String), StoreEntry]
@@ -192,6 +288,20 @@ object AnnIndexStore {
         .collect().map(r => (r.getLong(0), r.getInt(1))).sorted
       if (versionAt(dataDir).contains(ver)) e.keys = keys
       keys
+    }
+  }
+
+  /** [[baseFilesAt]] of the store version `ver` at `dataDir`, read on
+    * the version's first call: a version's record is written before
+    * its token, so what the first call finds never changes. */
+  def storeBaseFiles(spark: SparkSession, dataDir: String, ver: String): Option[BaseFiles] = {
+    val e = storeEntry(spark, dataDir, ver)
+    val hit = e.base
+    if (hit != null) hit
+    else {
+      val b = baseFilesAt(dataDir, ver)
+      e.base = b
+      b
     }
   }
 
@@ -480,6 +590,7 @@ object AnnIndexStore {
       m: Int = 16, efConstruction: Int = 200): Unit = {
     val spark = base.sparkSession
     import spark.implicits._
+    val from = baseFilesOf(base)
     val table = base.select(col("id").cast("long"), col("vec"),
         pmod(hash(col("id")), lit(numBuckets)).cast("int").as("bucket"))
       .as[(Long, Array[Float], Int)]
@@ -511,7 +622,7 @@ object AnnIndexStore {
     // MaxDirectMemorySize=20g at 32 threads in the r9/r10 full-scale
     // runs. Uncompressed pages read through plain heap buffers.
     blobStoreWriter(table).parquet(path)
-    stampVersion(new java.io.File(path.stripSuffix("/")))
+    stampVersion(new java.io.File(path.stripSuffix("/")), from)
   }
 
   /** Build sub-indexes per VALUE of `bucketCol` (label, decile, …) —
@@ -542,6 +653,7 @@ object AnnIndexStore {
     val spark = base.sparkSession
     import spark.implicits._
     require(!attrSalted || attrCol.isDefined, "attrSalted requires attrCol")
+    val from = baseFilesOf(base)
     val attr = attrCol.map(c => col(c).cast("double")).getOrElse(lit(0.0))
     val keyed = base.select(col("id").cast("long"),
       col(bucketCol).cast("long").as("bucket"), attr.as("attr"), col("vec"))
@@ -600,7 +712,7 @@ object AnnIndexStore {
     // blobStoreWriter: one blob row per row group (stats pin one
     // bucket; the reader batches one blob at a time)
     blobStoreWriter(table).parquet(path)
-    stampVersion(new java.io.File(path.stripSuffix("/")))
+    stampVersion(new java.io.File(path.stripSuffix("/")), from)
   }
 
   /** IVF-routed stored index: sampled k-means++ centroids as the coarse

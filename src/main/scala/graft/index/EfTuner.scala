@@ -17,6 +17,41 @@ package graft.index
   */
 object EfTuner {
 
+  // The tuners' driver-CPU walks run on this one engine-owned pool, not
+  // on the JVM's common ForkJoinPool that every other library in the
+  // process shares. Sized at first use from the active SparkContext's
+  // defaultParallelism (the cores the engine was given), daemon
+  // threads so it never holds the JVM open.
+  private lazy val walkThreads: Int = math.max(1,
+    org.apache.spark.sql.SparkSession.getActiveSession
+      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
+      .map(_.sparkContext.defaultParallelism)
+      .getOrElse(Runtime.getRuntime.availableProcessors()))
+  private lazy val walkPool: java.util.concurrent.ExecutorService = {
+    val seq = new java.util.concurrent.atomic.AtomicInteger(0)
+    java.util.concurrent.Executors.newFixedThreadPool(walkThreads, (r: Runnable) => {
+      val t = new Thread(r, s"graft-eftuner-walk-${seq.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    })
+  }
+
+  /** `body(i)` for every i in [0, n) on [[walkPool]], returning when all
+    * are done; the first failure is rethrown. Each index runs once, in
+    * no fixed order, so a body may only write its own slots. */
+  private def parallelOver(n: Int)(body: Int => Unit): Unit = {
+    val next = new java.util.concurrent.atomic.AtomicInteger(0)
+    val worker: java.util.concurrent.Callable[Unit] = () => {
+      var i = next.getAndIncrement()
+      while (i < n) { body(i); i = next.getAndIncrement() }
+    }
+    val workers = java.util.Collections.nCopies(math.max(1, math.min(n, walkThreads)), worker)
+    walkPool.invokeAll(workers).forEach { f =>
+      try f.get()
+      catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+    }
+  }
+
   /** Tune against a REAL stored sub-index (the reference sweeps the
     * actual index it will serve from, getquery.cpp — a sub-sampled
     * rebuild's recall-vs-ef curve can differ). Deterministically picks
@@ -226,18 +261,17 @@ object EfTuner {
             // outer bucket loop sequential — per-slot list order and
             // all values are unchanged (the determinism gate's
             // tuneOnce()==tuneOnce() still holds exactly).
-            java.util.stream.IntStream.range(0, sample.length).parallel()
-              .forEach { qi =>
-                val q = sample(qi)
-                val ex = idx.exactOver(q, all, k).map { case (n, d) => (d, ids(n)) }.toList
-                owners.foreach { m =>
-                  exact(m)(qi) = ex ::: exact(m)(qi)
-                  rungEfs(m).zipWithIndex.foreach { case (efB, fi) =>
-                    walked(m)(fi)(qi) = idx.search(q, k, efB)
-                      .map { case (n, d) => (d, ids(n)) }.toList ::: walked(m)(fi)(qi)
-                  }
+            parallelOver(sample.length) { qi =>
+              val q = sample(qi)
+              val ex = idx.exactOver(q, all, k).map { case (n, d) => (d, ids(n)) }.toList
+              owners.foreach { m =>
+                exact(m)(qi) = ex ::: exact(m)(qi)
+                rungEfs(m).zipWithIndex.foreach { case (efB, fi) =>
+                  walked(m)(fi)(qi) = idx.search(q, k, efB)
+                    .map { case (n, d) => (d, ids(n)) }.toList ::: walked(m)(fi)(qi)
                 }
               }
+            }
           }
         }
       }
@@ -311,15 +345,14 @@ object EfTuner {
       // sums, so accumulation order cannot change the recall
       val hitA = new java.util.concurrent.atomic.AtomicLong(0L)
       val totalA = new java.util.concurrent.atomic.AtomicLong(0L)
-      java.util.stream.IntStream.range(0, sample.length).parallel()
-        .forEach { qi =>
-          val q = sample(qi)
-          val truth = bigIdx.exactOver(q, slice, k).map(_._1).toSet
-          val got = SubIndexWalk.inFilter(bigIdx, bigTs, tsIdx, q, lo, hi, k, efW)
-            .map(_._1).toSet
-          hitA.addAndGet(truth.intersect(got).size.toLong)
-          totalA.addAndGet(truth.size.toLong)
-        }
+      parallelOver(sample.length) { qi =>
+        val q = sample(qi)
+        val truth = bigIdx.exactOver(q, slice, k).map(_._1).toSet
+        val got = SubIndexWalk.inFilter(bigIdx, bigTs, tsIdx, q, lo, hi, k, efW)
+          .map(_._1).toSet
+        hitA.addAndGet(truth.intersect(got).size.toLong)
+        totalA.addAndGet(truth.size.toLong)
+      }
       val total = totalA.get()
       if (total == 0) 1.0 else hitA.get().toDouble / total
     }
@@ -924,8 +957,7 @@ object EfTuner {
     // safety argument (exactOver/search are concurrent-read by design,
     // per-qi result slots, exact integer recall sums).
     val truth = new Array[Array[Int]](sample.length)
-    java.util.stream.IntStream.range(0, sample.length).parallel()
-      .forEach { qi => truth(qi) = idx.exactOver(sample(qi), all, k).map(_._1) }
+    parallelOver(sample.length) { qi => truth(qi) = idx.exactOver(sample(qi), all, k).map(_._1) }
     val rungs = scala.collection.mutable.ArrayBuffer.empty[Rung]
     var chosen = -1
     val it = ladder.iterator
@@ -933,19 +965,18 @@ object EfTuner {
       val ef = it.next()
       val hitA = new java.util.concurrent.atomic.AtomicLong(0L)
       val totalA = new java.util.concurrent.atomic.AtomicLong(0L)
-      java.util.stream.IntStream.range(0, sample.length).parallel()
-        .forEach { i =>
-          val exact = truth(i)
-          val got = idx.search(sample(i), k, ef).map(_._1).toSet
-          var j = 0
-          var hit = 0L
-          while (j < exact.length) {
-            if (got.contains(exact(j))) hit += 1
-            j += 1
-          }
-          hitA.addAndGet(hit)
-          totalA.addAndGet(exact.length.toLong)
+      parallelOver(sample.length) { i =>
+        val exact = truth(i)
+        val got = idx.search(sample(i), k, ef).map(_._1).toSet
+        var j = 0
+        var hit = 0L
+        while (j < exact.length) {
+          if (got.contains(exact(j))) hit += 1
+          j += 1
         }
+        hitA.addAndGet(hit)
+        totalA.addAndGet(exact.length.toLong)
+      }
       val total = totalA.get()
       val recall = if (total == 0) 1.0 else hitA.get().toDouble / total
       rungs += Rung(ef, recall)

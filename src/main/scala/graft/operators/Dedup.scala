@@ -199,10 +199,11 @@ object Dedup {
     * pass spills bands/bandGroups of it, which is exactly the knob that
     * fits a 100M-doc mine onto a single node whose scratch the one-shot
     * shuffle exceeded (BASELINE.md round-9 boundary; on a cluster the
-    * same knob caps per-executor scratch instead). */
+    * same knob caps per-executor scratch instead). `passPauseMs` is the
+    * wait between passes ([[releasePassShuffles]]). */
   def minhashLshCandidates(df: DataFrame, idCol: String, textCol: String,
       numHashes: Int = 16, bands: Int = 4, shingleSize: Int = 3,
-      bandGroups: Int = 1): DataFrame = {
+      bandGroups: Int = 1, passPauseMs: Long = PassGcPauseMs): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     require(bandGroups >= 1 && bands % bandGroups == 0,
       "bandGroups must partition the band set")
@@ -254,7 +255,7 @@ object Dedup {
       pairs
     } else {
       val perGroup = (0 until bandGroups).map { g =>
-        if (g > 0) releasePassShuffles()
+        if (g > 0) releasePassShuffles(passPauseMs)
         val (pairs, banded) = minePass(g * bpg, (g + 1) * bpg - 1)
         // eager: this pass's shuffle/cache is fully consumed HERE, so
         // its scratch can be dropped before the next pass allocates
@@ -278,10 +279,11 @@ object Dedup {
     * only BETWEEN passes: after the last one no band shuffle
     * allocates, the same state the one-shot mode never pauses in. Under
     * -XX:+DisableExplicitGC the gc is a no-op and the cleaner's own
-    * cadence must be trusted instead. */
-  private def releasePassShuffles(): Unit = {
+    * cadence must be trusted instead. A small input whose shuffles are
+    * tiny can pass `pauseMs` 0. */
+  private def releasePassShuffles(pauseMs: Long): Unit = {
     System.gc()
-    Thread.sleep(PassGcPauseMs)
+    if (pauseMs > 0) Thread.sleep(pauseMs)
   }
 
   private val PassGcPauseMs = 2000L
@@ -332,10 +334,12 @@ object Dedup {
     * That is the >100M-doc scale path: the 20M A/B showed key width
     * must grow with log2(N) while the band count must NOT — a wider
     * fingerprint at the same `blocks` (e.g. bits=120, blocks=6 → 60-bit
-    * keys, 20 bands) is the only config move that does both. */
+    * keys, 20 bands) is the only config move that does both.
+    * `passPauseMs` is the wait between band-sequential passes, as in
+    * [[minhashLshCandidates]]. */
   def simhashNearPairs(df: DataFrame, idCol: String, textCol: String,
       bits: Int = 48, maxHamming: Int = 3, blocks: Int = 0,
-      bandGroups: Int = 1): DataFrame = {
+      bandGroups: Int = 1, passPauseMs: Long = PassGcPauseMs): DataFrame = {
     val b = if (blocks > 0) blocks else maxHamming + 1
     require(b > maxHamming, s"blocks ($b) must exceed maxHamming ($maxHamming)")
     require(bits % b == 0, s"blocks ($b) must divide bits ($bits)")
@@ -455,7 +459,7 @@ object Dedup {
         // eager: each pass's shuffle is fully consumed here, so its
         // scratch is reclaimable before the next pass allocates
         .zipWithIndex.map { case (g, i) =>
-          if (i > 0) releasePassShuffles()
+          if (i > 0) releasePassShuffles(passPauseMs)
           bandCandidates(g.toIndexedSeq).localCheckpoint(true)
         }
         .reduce(_.unionByName(_))

@@ -366,9 +366,9 @@ object ApproxQueries {
     "ann_sql_topk" -> ((s, dir) => {
       val basePath = s"$dir/embeddings.parquet"
       val idxPath = routeHashStore(s, dir)
-      // trusted: the store was built from THIS base's embeddings
-      // (fingerprinted path), so serving skips the per-query
-      // staleness-validation job — scoped to this basePath only
+      // trusted: the store was built from the route pack's renamed copy
+      // of these embeddings (fingerprinted path), so its build record
+      // names that copy and can never match this base's listing
       org.apache.spark.sql.graft.AnnCatalog.register(
         basePath, idxPath, idCol = "vec_id", vecCol = "embedding", ef = 200,
         trusted = true)
@@ -404,7 +404,9 @@ object ApproxQueries {
       // ef 400: each probed list must be searched exhaustively-grade so
       // the serving top-k equals the oracle's exact re-rank over the
       // SAME candidate set (the approximation is WHICH lists, not the
-      // within-list walk)
+      // within-list walk). trusted: both stores were built from
+      // renamed-column copies of this base, whose records can never
+      // match its listing
       org.apache.spark.sql.graft.AnnCatalog.register(
         basePath, hashPath, idCol = "vec_id", vecCol = "embedding", ef = 400,
         trusted = true, ivfIndex = Some(ivfPath), nprobe = 4)
@@ -428,12 +430,13 @@ object ApproxQueries {
       val root = StorePaths.ensureRouteStores(s, dir)
       val basePath = s"$root/base"
       val b = s.read.parquet(basePath)
-      // trusted: stores built this run from this base (see ann_sql_topk)
+      // guard mode: the three stores were built from a bare read of this
+      // base, so each records its files and an unchanged base is served
+      // from the index with no fetch
       org.apache.spark.sql.graft.AnnCatalog.register(basePath, TypeStores.hashPath(root),
         idCol = "id", vecCol = "vec", ef = 200,
         labelIndex = Some(("label", TypeStores.labelPath(root))),
-        rangeIndex = Some(("ts", TypeStores.decilePath(root))),
-        trusted = true)
+        rangeIndex = Some(("ts", TypeStores.decilePath(root))))
       // min qid per type — deterministic, reproducible by the oracle.
       // The min is computed distributively and joined back so the
       // driver fetches exactly the 4 winning rows, not the query table

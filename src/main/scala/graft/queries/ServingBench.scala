@@ -17,11 +17,13 @@ import graft.index.TypeStores
   * IVF-routed type-0 serving arm: t0_hash (walk every hash bucket),
   * t0_ivf (walk the statement's nprobe centroid-nearest lists),
   * t1_label, t2_range, t3_label_range. Statements go through the full
-  * planner path (strategy match → AnnTopKExec → collect) in trusted
-  * mode; each route's first statement warms the cache and asserts the
-  * plan actually routed (a silent fallback to the exact scan would
-  * otherwise be reported as a serving number). Reuses the ann_sql_*
-  * gate queries' tagged /tmp stores, building any that are missing. */
+  * planner path (strategy match → AnnTopKExec → collect): the t0
+  * routes in trusted mode, the t1-t3 routes in guard mode on an
+  * unchanged base (no fetch); each route's first statement warms the
+  * cache and asserts the plan actually routed (a silent fallback to the
+  * exact scan would otherwise be reported as a serving number). Reuses
+  * the ann_sql_* gate queries' tagged /tmp stores, building any that
+  * are missing. */
 object ServingBench {
 
   /** Per-route serving stats. `medianMs`/`maxMs` are over the TIMED
@@ -124,9 +126,11 @@ object ServingBench {
         .orderBy(VF.l2Sq(col("embedding"), typedLit(p._4)), col("vec_id"))
         .select("vec_id").limit(10)
 
-    // finally-unregister: a failed plan assert must not leak trusted
+    // finally-unregister: a failed plan assert must not leak
     // /tmp-store registrations into the shared bench session
     try {
+      // trusted on embBase: its stores were built from renamed-column
+      // copies of it, whose records can never match its listing
       org.apache.spark.sql.graft.AnnCatalog.register(embBase, hashPath,
         idCol = "vec_id", vecCol = "embedding", ef = 200, trusted = true)
       results += "t0_hash" -> msPerStmt(qe, "index=")(t0Stmt)
@@ -136,10 +140,12 @@ object ServingBench {
         ivfIndex = Some(ivfPath), nprobe = 4)
       results += "t0_ivf" -> msPerStmt(qe, "ivf=")(t0Stmt)
 
+      // guard mode: the type stores were built from a bare read of
+      // basePath, so an unchanged base is served with no fetch
       org.apache.spark.sql.graft.AnnCatalog.register(basePath, hashPath,
         idCol = "id", vecCol = "vec", ef = 200,
         labelIndex = Some(("label", TypeStores.labelPath(root))),
-        rangeIndex = Some(("ts", TypeStores.decilePath(root))), trusted = true)
+        rangeIndex = Some(("ts", TypeStores.decilePath(root))))
       def ranked(filtered: DataFrame, qv: Array[Float]): DataFrame =
         filtered.orderBy(VF.l2Sq(col("vec"), typedLit(qv)), col("id"))
           .select("id").limit(10)

@@ -133,13 +133,17 @@ object LocalClusterProbe {
         .select("id").limit(10)
 
     try {
+      // trusted on embBase: its stores were built from renamed-column
+      // copies of it, whose records can never match its listing.
+      // basePath's type stores were built from a bare read of it, so
+      // it serves in guard mode with no fetch while unchanged.
       AnnCatalog.register(embBase, hashPath, idCol = "vec_id",
         vecCol = "embedding", ef = 400, trusted = true,
         ivfIndex = Some(ivfPath), nprobe = 4)
       AnnCatalog.register(basePath, hashPath, idCol = "id",
         vecCol = "vec", ef = 200,
         labelIndex = Some(("label", TypeStores.labelPath(root))),
-        rangeIndex = Some(("ts", TypeStores.decilePath(root))), trusted = true)
+        rangeIndex = Some(("ts", TypeStores.decilePath(root))))
 
       runRoute("t0_ivf", qsOf(0), "ivf=") { p =>
         spark.read.parquet(embBase)
@@ -172,7 +176,7 @@ object LocalClusterProbe {
           finally AnnCatalog.register(basePath, hashPath,
             idCol = "id", vecCol = "vec", ef = 200,
             labelIndex = Some(("label", TypeStores.labelPath(root))),
-            rangeIndex = Some(("ts", TypeStores.decilePath(root))), trusted = true)
+            rangeIndex = Some(("ts", TypeStores.decilePath(root))))
         routed != exact
       }
       require(mismatches == 0,

@@ -69,13 +69,25 @@ object AnnCatalog {
     * (tsCol → decile index path, `buildBy` over `floor(ts·10)` with
     * `attrCol = tsCol`) to also route predicated top-k statements —
     * all four of the reference's query types, from SQL text. */
-  /** `trusted = true` declares the store fresh by contract FOR THIS
-    * basePath only (e.g. it was just built from this exact base):
-    * id-only statements are then answered entirely from the index with
-    * no per-query staleness-validation scan. Scoped per registration —
-    * never a session-wide switch (the global
-    * `spark.graft.ann.trustIndex` conf remains as an operator
-    * override). */
+  /** Without `trusted` (guard mode) each statement lists `basePath`
+    * once. When the listing (root path, and every data file's path,
+    * length and mtime) equals what the walked store version recorded at
+    * build, id/dist/constant statements are answered from the index
+    * with no base read: the build records it when its input's id and
+    * vec are unchanged columns of one file-based relation (a bare
+    * `spark.read.parquet(basePath)`, projected, filtered or with extra
+    * computed columns). The one change the listing cannot see is a
+    * rewrite that keeps every file's name, length and mtime. Any other
+    * difference, or no record (a derived vec, a union, an in-memory
+    * frame), fetches the k result rows by id and re-distances them
+    * against the current base.
+    *
+    * `trusted = true` declares the store fresh by contract FOR THIS
+    * basePath only, with no listing: for a store built from another
+    * table than `basePath` (a renamed-column copy, say), whose record
+    * can never match. Scoped per registration — never a session-wide
+    * switch (the global `spark.graft.ann.trustIndex` conf remains as an
+    * operator override). */
   /** `ivfIndex` (a [[graft.index.AnnIndexStore.buildIvf]]/`buildIvfSeeded`
     * root holding `centroids` + `lists`) upgrades the UNFILTERED route:
     * instead of walking every hash bucket (B× walk amplification —
@@ -578,8 +590,13 @@ case class AnnTopKStrategy(session: SparkSession) extends SparkStrategy {
   * result rows from the base parquet, ids pushed down for row-group
   * pruning. That fetch reads the base with `baseSchema`, the schema of
   * the statement's own scanned relation, so it infers nothing from the
-  * footers; its files are listed again on every call, so a base
-  * rewritten after planning is read fresh.
+  * footers.
+  *
+  * In guard mode the base is listed once per statement, so a base
+  * rewritten after planning is seen. A listing equal to the walked
+  * store version's build record (root path and every file's path,
+  * length and mtime) answers id/dist/constant statements from the hits
+  * with no fetch; any difference fetches the k rows from that listing.
   *
   * Every read here, the guard fetch and the cold blob loads alike, is
   * one [[AnnTopKExec.freshParquet]] RDD job over Spark's parquet row
@@ -593,9 +610,10 @@ case class AnnTopKStrategy(session: SparkSession) extends SparkStrategy {
   * through a one-partition RDD, which Spark caches per executed plan:
   * they search once per executed plan, not once per action.
   *
-  * Driver-side SQL metrics: output rows, base rows fetched, the search
-  * and fetch times, the index rows walked (warm and cold) and the
-  * executor-cache hits and misses. */
+  * Driver-side SQL metrics: output rows, base rows fetched, guard
+  * checks skipped on an unchanged base, the search and fetch times, the
+  * index rows walked (warm and cold) and the executor-cache hits and
+  * misses. */
 case class AnnTopKExec(output: Seq[Attribute], slots: Seq[AnnTopKExec.Slot],
     route: AnnTopKExec.AnnRoute, ef: Int, qvec: Array[Float], k: Int,
     basePath: String, baseSchema: StructType, idCol: String, vecCol: String,
@@ -605,6 +623,8 @@ case class AnnTopKExec(output: Seq[Attribute], slots: Seq[AnnTopKExec.Slot],
   override lazy val metrics: Map[String, SQLMetric] = Map(
     "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"),
     "rowsFetched" -> SQLMetrics.createMetric(sparkContext, "base rows fetched"),
+    "guardSkips" -> SQLMetrics.createMetric(sparkContext,
+      "guard checks skipped: base unchanged since build"),
     "searchTime" -> SQLMetrics.createTimingMetric(sparkContext, "index search time"),
     "fetchTime" -> SQLMetrics.createTimingMetric(sparkContext, "base fetch time"),
     "storeRowsWalked" -> SQLMetrics.createMetric(sparkContext, "index rows walked"),
@@ -641,35 +661,50 @@ case class AnnTopKExec(output: Seq[Attribute], slots: Seq[AnnTopKExec.Slot],
     // matches, with no re-distancing needed here.
     //
     // GUARD mode (the default): the base table is the source of truth.
-    // Fetch the k result rows by id (one fresh read of the base, ids
-    // pushed down, read with the statement's scan schema — no footer
-    // inference, no query planned) INCLUDING the vector, drop ids the
-    // base no longer holds and rows whose vector went null since the
-    // index build (the strategy only routes when null-vec rows provably
-    // cannot exist in the scanned rows — a vec IS NOT NULL predicate, a
-    // non-nullable column, trusted, or a measured null-free base — so
-    // dropping here matches), and re-distance/re-sort against the
-    // CURRENT base vectors — so even a base row whose vector changed
-    // since the index build emits the distance and rank the unrouted
-    // exact plan would.
+    // The base is listed once per statement. When that listing (root
+    // path, and every data file's path, length and mtime) equals the
+    // record of the base files the walked store version was built from
+    // ([[graft.index.AnnIndexStore.BaseFiles]]), every hit id is in the
+    // base with the vector it was indexed with, so id/dist/constant
+    // statements return the hits as they are, with no base-table job.
+    // The one change this cannot see is a rewrite that keeps every
+    // file's name, length and mtime. Otherwise (a file added, removed
+    // or rewritten, a version built from no recorded base, or an
+    // unversioned store) the k result rows are fetched by id from that
+    // same listing (ids pushed down, read with the statement's scan
+    // schema — no footer inference, no query planned) INCLUDING the
+    // vector; ids the base no longer holds and rows whose vector went
+    // null since the build are dropped (the strategy only routes when
+    // null-vec rows provably cannot exist in the scanned rows — a vec
+    // IS NOT NULL predicate, a non-nullable column, trusted, or a
+    // measured null-free base — so dropping here matches), and the rest
+    // are re-distanced and re-sorted against the CURRENT base vectors,
+    // so even a row whose vector changed since the build emits the
+    // distance and rank the unrouted exact plan would.
     //
     // TRUST mode (per-registration `trusted=true`, or the session-wide
     // spark.graft.ann.trustIndex operator override): the store is fresh
     // by contract, so id/dist/constant-only statements are answered
-    // entirely from the index — zero base-table jobs, the reference's
-    // serving shape. Wide projections still fetch their columns (but
-    // trust the index's distances).
+    // from the index with no listing either.
     //
-    // Either way a root collect runs no result job: the rows below go
-    // straight back through executeCollect.
+    // Wide projections fetch their columns in every mode, trusting the
+    // index's distances when trusted or unchanged. Either way a root
+    // collect runs no result job: the rows below go straight back
+    // through executeCollect.
     val trustIndex = trusted ||
       session.conf.get("spark.graft.ann.trustIndex", "false").toBoolean
     val fetchCols = slotArr.collect { case AnnTopKExec.ColSlot(n) => n }.distinct
-    val needFetch = fetchCols.nonEmpty || !trustIndex
-    val (fetched, fetchedSchema) =
-      if (ids.isEmpty || !needFetch) (Map.empty[Long, InternalRow], new StructType())
-      else AnnTopKExec.fetchBaseRows(session, basePath, baseSchema, idCol, vecCol,
-        fetchCols.toSeq, ids)
+    val listing =
+      if (ids.isEmpty || (trustIndex && fetchCols.isEmpty)) None
+      else Some(AnnTopKExec.listed(session, basePath, baseSchema))
+    val unchanged = !trustIndex && listing.exists(l =>
+      searched.builtFrom.contains(graft.index.AnnIndexStore.BaseFiles.of(l)))
+    val hitsStand = trustIndex || unchanged
+    val (fetched, fetchedSchema) = listing match {
+      case Some(l) if fetchCols.nonEmpty || !hitsStand =>
+        AnnTopKExec.fetchBaseRows(session, l, baseSchema, idCol, vecCol, fetchCols.toSeq, ids)
+      case _ => (Map.empty[Long, InternalRow], new StructType())
+    }
     val fetchEnd = System.nanoTime()
     val resolver = conf.resolver
     def ordinal(name: String): Int = fetchedSchema.indexWhere(f => resolver(f.name, name))
@@ -681,8 +716,8 @@ case class AnnTopKExec(output: Seq[Attribute], slots: Seq[AnnTopKExec.Slot],
     def baseDist(id: Long): Double =
       graft.functions.VectorFunctions.l2SqJvm(fetched(id).getArray(vecOrd).toFloatArray(), qvec)
     val outHits =
-      if (!needFetch) hits
-      else if (trustIndex) hits.filter { case (id, _) => fetched.contains(id) }
+      if (hitsStand && fetchCols.isEmpty) hits
+      else if (hitsStand) hits.filter { case (id, _) => fetched.contains(id) }
       else hits
         .collect { case (id, _) if fetched.contains(id) => (id, baseDist(id)) }
         .sortBy { case (id, d) => (d, id) }
@@ -707,6 +742,7 @@ case class AnnTopKExec(output: Seq[Attribute], slots: Seq[AnnTopKExec.Slot],
     }
     longMetric("numOutputRows") += rows.length
     longMetric("rowsFetched") += fetched.size
+    longMetric("guardSkips") += (if (unchanged) 1 else 0)
     longMetric("searchTime") += (fetchStart - searchStart) / 1000000
     longMetric("fetchTime") += (fetchEnd - fetchStart) / 1000000
     longMetric("storeRowsWalked") += searched.rowsWalked
@@ -777,24 +813,30 @@ object AnnTopKExec extends org.apache.spark.internal.Logging {
   }
 
   /** A search's top-k, ascending (dist, id) as (id, exact fp32 dist),
-    * with the store rows it walked (warm and cold) and the rows the
-    * executor cache served and missed. */
+    * with the store rows it walked (warm and cold), the rows the
+    * executor cache served and missed, and the base files the walked
+    * store version was built from, when recorded. */
   private[graft] final case class Hits(rows: Array[(Long, Double)],
-      rowsWalked: Long, cacheHits: Long, cacheMisses: Long)
+      rowsWalked: Long, cacheHits: Long, cacheMisses: Long,
+      builtFrom: Option[graft.index.AnnIndexStore.BaseFiles] = None)
 
-  /** A fresh read of the parquet directory `dir` that plans no query.
-    * The directory is listed now by an [[InMemoryFileIndex]] given
-    * `schema`, so no footer is read to infer one and hive partition
-    * values come from the listing. Spark's parquet row reader then reads
-    * the data columns named in `columns`, followed by every partition
-    * column, with `filters` pushed down: they only skip row groups, so
-    * the caller still tests each row. The rows are the reader's own
+  /** The parquet directory `dir` as it is now: listed by an
+    * [[InMemoryFileIndex]] given `schema`, so no footer is read to infer
+    * one and hive partition values come from the listing. */
+  private def listed(spark: org.apache.spark.sql.classic.SparkSession, dir: String,
+      schema: StructType): InMemoryFileIndex =
+    new InMemoryFileIndex(spark, Seq(new Path(dir)), Map.empty, Some(schema))
+
+  /** A read of the parquet files of `index` (a [[listed]] directory)
+    * that plans no query. Spark's parquet row reader reads the data
+    * columns named in `columns`, followed by every partition column,
+    * with `filters` pushed down: they only skip row groups, so the
+    * caller still tests each row. The rows are the reader's own
     * objects, reused from one row to the next. Returns the rows, at most
     * one partition per core, and their schema. */
-  private def freshParquet(spark: org.apache.spark.sql.classic.SparkSession, dir: String,
-      schema: StructType, columns: Seq[String],
+  private def freshParquet(spark: org.apache.spark.sql.classic.SparkSession,
+      index: InMemoryFileIndex, schema: StructType, columns: Seq[String],
       filters: Seq[sources.Filter]): (RDD[InternalRow], StructType) = {
-    val index = new InMemoryFileIndex(spark, Seq(new Path(dir)), Map.empty, Some(schema))
     val partSchema = index.partitionSchema
     val resolver = spark.sessionState.conf.resolver
     val dataSchema = StructType(schema.filterNot(f => partSchema.exists(p => resolver(p.name, f.name))))
@@ -820,15 +862,15 @@ object AnnTopKExec extends org.apache.spark.internal.Logging {
 
   /** The guard fetch: the base rows of `ids` whose vector is non-null,
     * keyed by id, holding the id, the vector and `cols`, with the rows'
-    * schema. One fresh read of the base, so a base rewritten after
-    * planning is read as it is now; each kept row is copied out of the
-    * reader's reused row. */
+    * schema. It reads the statement's own listing of the base, so a
+    * base rewritten after planning is read as it is now; each kept row
+    * is copied out of the reader's reused row. */
   private def fetchBaseRows(spark: org.apache.spark.sql.classic.SparkSession,
-      basePath: String, baseSchema: StructType, idCol: String, vecCol: String,
+      base: InMemoryFileIndex, baseSchema: StructType, idCol: String, vecCol: String,
       cols: Seq[String], ids: Array[Long]): (Map[Long, InternalRow], StructType) = {
     val resolver = spark.sessionState.conf.resolver
     val idName = baseSchema.find(f => resolver(f.name, idCol)).fold(idCol)(_.name)
-    val (rows, schema) = freshParquet(spark, basePath, baseSchema, idCol +: vecCol +: cols,
+    val (rows, schema) = freshParquet(spark, base, baseSchema, idCol +: vecCol +: cols,
       Seq(sources.In(idName, ids.map(id => id: Any))))
     val idOf = longAt(spark, schema, schema.indexWhere(f => resolver(f.name, idCol)))
     val vecOrd = schema.indexWhere(f => resolver(f.name, vecCol))
@@ -954,7 +996,7 @@ object AnnTopKExec extends org.apache.spark.internal.Logging {
     def blobRows(dataPath: String, ver: Option[String], pushed: Seq[sources.Filter],
         keep: (Long, Int) => Boolean) = {
       val stored = graft.index.AnnIndexStore.storeFrame(spark, dataPath, ver).schema
-      val (rows, schema) = freshParquet(spark, dataPath, stored,
+      val (rows, schema) = freshParquet(spark, listed(spark, dataPath, stored), stored,
         Seq("bucket", "sub", "ids", "attrs", "graph"), pushed)
       def at(name: String) = schema.fieldIndex(name)
       val bucketOf = longAt(spark, schema, at("bucket"))
@@ -1069,6 +1111,7 @@ object AnnTopKExec extends org.apache.spark.internal.Logging {
         }
       }
     }
-    top
+    // (dataPath, ver) are the last pass's: the record of what it walked
+    top.copy(builtFrom = ver.flatMap(graft.index.AnnIndexStore.storeBaseFiles(spark, dataPath, _)))
   }
 }

@@ -17,8 +17,12 @@ class AnnTopKStrategySpec extends SparkSpec {
   import spark.implicits._
 
   private val dim = 16
-  private lazy val dirs = {
-    val root = Files.createTempDirectory("graft_anntopk").toFile
+  private lazy val dirs = fixture("graft_anntopk")
+
+  /** A 1,200-row base and a 3-bucket store built from a bare read of it,
+    * under a fresh temp root; returns (base path, index path). */
+  private def fixture(prefix: String): (String, String) = {
+    val root = Files.createTempDirectory(prefix).toFile
     root.deleteOnExit()
     val basePath = s"$root/base"
     val indexPath = s"$root/index"
@@ -31,14 +35,14 @@ class AnnTopKStrategySpec extends SparkSpec {
     (basePath, indexPath)
   }
 
-  private def planOf(qv: Array[Float], k: Int) =
-    spark.read.parquet(dirs._1)
+  private def planOf(qv: Array[Float], k: Int, basePath: String = dirs._1) =
+    spark.read.parquet(basePath)
       .orderBy(VectorFunctions.l2Sq(col("vec"), typedLit(qv)), col("id"))
       .select("id")
       .limit(k)
 
-  private def qvecOf(id: Long): Array[Float] =
-    spark.read.parquet(dirs._1).filter(col("id") === id)
+  private def qvecOf(id: Long, basePath: String = dirs._1): Array[Float] =
+    spark.read.parquet(basePath).filter(col("id") === id)
       .select("vec").head.getSeq[Float](0).toArray
 
   test("registered path routes to AnnTopKExec with good recall") {
@@ -80,20 +84,29 @@ class AnnTopKStrategySpec extends SparkSpec {
   }
 
   test("a warm guard-mode id-only statement runs 2 Spark jobs") {
-    AnnCatalog.register(dirs._1, dirs._2, idCol = "id", vecCol = "vec", ef = 150)
+    val (basePath, indexPath) = fixture("graft_anntopk_guard_jobs")
+    AnnCatalog.register(basePath, indexPath, idCol = "id", vecCol = "vec", ef = 150)
     try {
-      val qv = qvecOf(23L)
-      planOf(qv, 5).collect() // cold pass and the null-freedom probe
-      val df = planOf(qv, 5)
+      val qv = qvecOf(23L, basePath)
+      planOf(qv, 5, basePath).collect() // cold pass and the null-freedom probe
+      // the base is unchanged since the build: its listing matches the
+      // store's record, so the warm scan is the statement's only job
+      val unchanged = planOf(qv, 5, basePath)
+      val one = JobRecorder.record(spark.sparkContext)(unchanged.collect())
+      assert(one.jobs.size == 1, one.jobs.map(_.entry))
+      // the same rows rewritten into new files: the fetch runs
+      rewriteSameRows(basePath)
+      val df = planOf(qv, 5, basePath)
       val rec = JobRecorder.record(spark.sparkContext)(df.collect())
       // the warm scan and the id fetch; the fetch reads the base with
       // the scan's schema, so no footer-inference job
       assert(rec.jobs.size == 2, rec.jobs.map(_.entry))
       assert(!rec.jobs.exists(_.isParquetRead), rec.jobs.map(_.entry))
-    } finally AnnCatalog.unregister(dirs._1)
+    } finally AnnCatalog.unregister(basePath)
   }
 
   test("driver-side metrics: rows fetched is 0 when trusted, k in guard mode") {
+    val (basePath, indexPath) = fixture("graft_anntopk_guard_metrics")
     try {
       AnnCatalog.register(dirs._1, dirs._2, idCol = "id", vecCol = "vec",
         ef = 150, trusted = true)
@@ -104,19 +117,42 @@ class AnnTopKStrategySpec extends SparkSpec {
       assert(t("numOutputRows").value == 10)
       assert(t("searchTime").value >= 0 && t("fetchTime").value >= 0)
 
-      // the base is unchanged since the index build: every hit is fetched
-      AnnCatalog.register(dirs._1, dirs._2, idCol = "id", vecCol = "vec", ef = 150)
-      val guard = planOf(qvecOf(31L), 10)
+      // guard mode on a base unchanged since the index build: the
+      // listing matches the store's record and nothing is fetched
+      AnnCatalog.register(basePath, indexPath, idCol = "id", vecCol = "vec", ef = 150)
+      val same = planOf(qvecOf(31L, basePath), 10, basePath)
+      same.collect()
+      val u = annExec(same).metrics
+      assert(u("rowsFetched").value == 0)
+      assert(u("guardSkips").value == 1)
+      assert(u("numOutputRows").value == 10)
+
+      // the same rows rewritten into new files: every hit is fetched
+      rewriteSameRows(basePath)
+      val guard = planOf(qvecOf(31L, basePath), 10, basePath)
       guard.collect()
       val g = annExec(guard).metrics
       assert(g("rowsFetched").value == 10)
       assert(g("numOutputRows").value == 10)
 
       // the RDD path reports through the same row builder
-      val viaRdd = planOf(qvecOf(37L), 10)
+      val viaRdd = planOf(qvecOf(37L, basePath), 10, basePath)
       assert(viaRdd.queryExecution.toRdd.count() == 10)
       assert(annExec(viaRdd).metrics("rowsFetched").value == 10)
-    } finally AnnCatalog.unregister(dirs._1)
+    } finally {
+      AnnCatalog.unregister(dirs._1)
+      AnnCatalog.unregister(basePath)
+    }
+  }
+
+  /** Rewrite the parquet dataset at `path` with its own rows. The new
+    * files have new names, so a store built before the rewrite no
+    * longer matches the listing, and guard mode fetches. */
+  private def rewriteSameRows(path: String): Unit = {
+    val before = spark.read.parquet(path)
+    spark.createDataFrame(
+        spark.sparkContext.parallelize(before.collect().toSeq, 2), before.schema)
+      .write.mode("overwrite").parquet(path)
   }
 
   test("a warm trusted statement fires one query-execution callback: its own collect") {

@@ -94,7 +94,7 @@ class DedupSpec extends SparkSpec {
 
   test("band-sequential mining yields the identical pair set (bandGroups = 2, 4)") {
     def pairsWith(g: Int) =
-      Dedup.minhashLshCandidates(docs, "doc_id", "text", bandGroups = g)
+      Dedup.minhashLshCandidates(docs, "doc_id", "text", bandGroups = g, passPauseMs = 0)
         .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     val oneShot = pairsWith(1)
     assert(pairsWith(2) == oneShot)
@@ -141,7 +141,7 @@ class DedupSpec extends SparkSpec {
     assert(oneShot.nonEmpty)
     for (g <- Seq(2, 4, 5)) {
       val grouped = Dedup.simhashNearPairs(docs, "doc_id", "text", 60, 3,
-          blocks = 6, bandGroups = g)
+          blocks = 6, bandGroups = g, passPauseMs = 0)
         .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2))).toSet
       assert(grouped == oneShot, s"g=$g grouped=$grouped oneShot=$oneShot")
     }
