@@ -48,9 +48,12 @@ object AnnIndexStore {
   // ---- `_store_base`: the base files a store version was built from --
   //
   // A build whose input's `id` and `vec` are unchanged columns of one
-  // file-based relation records that relation's root paths and each
-  // data file's (path, length, mtime), taken from the relation's own
-  // file index (no listing, no job). The record's first line names the
+  // file-based relation records the relation's names for those two
+  // columns, its root paths and each data file's (path, length, mtime),
+  // taken from the relation's own file index (no listing, no job). The
+  // column names matter: a registration whose vecCol names another
+  // column of the same files must not take this store's distances as
+  // that column's. The record's first line names the
   // version token it belongs to, and it is written before that token
   // is stamped, so a reader that resolved a version either finds its
   // record or finds none (another token's record counts as none). The
@@ -59,20 +62,30 @@ object AnnIndexStore {
   // walk returned is in the base with the vector it was indexed with.
   private[graft] val baseFileName = "_store_base"
 
-  /** A relation's root paths and its data files as (path, length,
-    * modification time). */
-  final case class BaseFiles(roots: Seq[String], files: Set[(String, Long, Long)]) {
+  /** The relation's names of the indexed id and vec columns, its root
+    * paths and its data files as (path, length, modification time). */
+  final case class BaseFiles(idCol: String, vecCol: String, roots: Seq[String],
+      files: Set[(String, Long, Long)]) {
     private[index] def render(token: String): String =
-      (Seq(token, roots.mkString("\t")) ++
+      (Seq(token, s"$idCol\t$vecCol", roots.mkString("\t")) ++
         files.toSeq.sorted.map { case (p, len, mtime) => s"$len\t$mtime\t$p" })
         .mkString("", "\n", "\n")
+
+    /** True when `idCol`/`vecCol` name the indexed columns (case
+      * ignored, as the SQL route matches them) and `now` lists exactly
+      * the recorded roots and files. */
+    def matches(now: org.apache.spark.sql.execution.datasources.FileIndex,
+        idCol: String, vecCol: String): Boolean =
+      idCol.equalsIgnoreCase(this.idCol) && vecCol.equalsIgnoreCase(this.vecCol) &&
+        BaseFiles.of(now, this.idCol, this.vecCol) == this
   }
 
   object BaseFiles {
     /** The listing `index` holds now (an in-memory index lists once,
-      * when it is built). */
-    def of(index: org.apache.spark.sql.execution.datasources.FileIndex): BaseFiles =
-      BaseFiles(index.rootPaths.map(_.toString),
+      * when it is built), for the columns `idCol` and `vecCol`. */
+    def of(index: org.apache.spark.sql.execution.datasources.FileIndex,
+        idCol: String, vecCol: String): BaseFiles =
+      BaseFiles(idCol, vecCol, index.rootPaths.map(_.toString),
         index.listFiles(Nil, Nil).flatMap(_.files).map { f =>
           (f.getPath.toString, f.getLen, f.fileStatus.getModificationTime)
         }.toSet)
@@ -84,37 +97,43 @@ object AnnIndexStore {
     * and views; None for a derived `id`/`vec`, a union or join, or an
     * in-memory frame. */
   private def baseFilesOf(input: DataFrame): Option[BaseFiles] = {
-    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, ExprId}
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, ExprId}
     import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, SubqueryAlias, View}
+    import org.apache.spark.sql.execution.datasources.FileIndex
     val plan = input.queryExecution.analyzed
     val resolver = input.sparkSession.sessionState.conf.resolver
     def attr(name: String) = plan.output.find(a => resolver(a.name, name)).map(_.exprId)
-    def from(p: LogicalPlan, want: Set[ExprId]): Option[BaseFiles] = p match {
-      case Project(pl, child) if want.forall(id => pl.exists {
-          case a: AttributeReference => a.exprId == id
-          case _ => false
-        }) => from(child, want)
-      case Filter(_, child) => from(child, want)
-      case SubqueryAlias(_, child) => from(child, want)
-      case v: View => from(v.child, want)
-      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation
-          if want.subsetOf(lr.output.map(_.exprId).toSet) => lr.relation match {
-        case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-          Some(BaseFiles.of(fs.location))
+    def from(p: LogicalPlan, id: ExprId, vec: ExprId): Option[BaseFiles] = {
+      // the relation's own names for the two columns go into the record
+      def read(index: FileIndex, out: Seq[Attribute]): Option[BaseFiles] = for {
+        idA <- out.find(_.exprId == id)
+        vecA <- out.find(_.exprId == vec)
+      } yield BaseFiles.of(index, idA.name, vecA.name)
+      p match {
+        case Project(pl, child) if Seq(id, vec).forall(e => pl.exists {
+            case a: AttributeReference => a.exprId == e
+            case _ => false
+          }) => from(child, id, vec)
+        case Filter(_, child) => from(child, id, vec)
+        case SubqueryAlias(_, child) => from(child, id, vec)
+        case v: View => from(v.child, id, vec)
+        case lr: org.apache.spark.sql.execution.datasources.LogicalRelation => lr.relation match {
+          case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+            read(fs.location, lr.output)
+          case _ => None
+        }
+        case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation => r.table match {
+          case t: org.apache.spark.sql.execution.datasources.v2.FileTable =>
+            read(t.fileIndex, r.output)
+          case _ => None
+        }
         case _ => None
       }
-      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-          if want.subsetOf(r.output.map(_.exprId).toSet) => r.table match {
-        case t: org.apache.spark.sql.execution.datasources.v2.FileTable =>
-          Some(BaseFiles.of(t.fileIndex))
-        case _ => None
-      }
-      case _ => None
     }
     for {
       id <- attr("id")
       vec <- attr("vec")
-      b <- from(plan, Set(id, vec))
+      b <- from(plan, id, vec)
       if b.files.nonEmpty
     } yield b
   }
@@ -127,11 +146,15 @@ object AnnIndexStore {
       import scala.jdk.CollectionConverters._
       val lines = java.nio.file.Files.readAllLines(
         new java.io.File(dataDir.stripSuffix("/"), baseFileName).toPath).asScala
-      if (lines.length < 2 || lines.head != ver) None
-      else Some(BaseFiles(lines(1).split("\t").toSeq, lines.iterator.drop(2).map { l =>
-        val Array(len, mtime, p) = l.split("\t", 3)
-        (p, len.toLong, mtime.toLong)
-      }.toSet))
+      if (lines.length < 3 || lines.head != ver) None
+      else {
+        val Array(idCol, vecCol) = lines(1).split("\t")
+        Some(BaseFiles(idCol, vecCol, lines(2).split("\t").toSeq,
+          lines.iterator.drop(3).map { l =>
+            val Array(len, mtime, p) = l.split("\t", 3)
+            (p, len.toLong, mtime.toLong)
+          }.toSet))
+      }
     } catch {
       // no record, or a torn one: the guard only loses its skip
       case _: java.io.IOException | _: MatchError | _: NumberFormatException => None

@@ -17,16 +17,12 @@ package graft.index
   */
 object EfTuner {
 
-  // The tuners' driver-CPU walks run on this one engine-owned pool, not
-  // on the JVM's common ForkJoinPool that every other library in the
-  // process shares. Sized at first use from the active SparkContext's
-  // defaultParallelism (the cores the engine was given), daemon
-  // threads so it never holds the JVM open.
-  private lazy val walkThreads: Int = math.max(1,
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .map(_.sparkContext.defaultParallelism)
-      .getOrElse(Runtime.getRuntime.availableProcessors()))
+  // The tuners' walks run on the driver's CPU, on this one engine-owned
+  // pool rather than the JVM's common ForkJoinPool that every other
+  // library in the process shares. Sized by the driver's own cores (a
+  // cluster's defaultParallelism counts executor cores, which these
+  // walks never use), daemon threads so it never holds the JVM open.
+  private val walkThreads: Int = math.max(1, Runtime.getRuntime.availableProcessors())
   private lazy val walkPool: java.util.concurrent.ExecutorService = {
     val seq = new java.util.concurrent.atomic.AtomicInteger(0)
     java.util.concurrent.Executors.newFixedThreadPool(walkThreads, (r: Runnable) => {

@@ -199,11 +199,10 @@ object Dedup {
     * pass spills bands/bandGroups of it, which is exactly the knob that
     * fits a 100M-doc mine onto a single node whose scratch the one-shot
     * shuffle exceeded (BASELINE.md round-9 boundary; on a cluster the
-    * same knob caps per-executor scratch instead). `passPauseMs` is the
-    * wait between passes ([[releasePassShuffles]]). */
+    * same knob caps per-executor scratch instead). */
   def minhashLshCandidates(df: DataFrame, idCol: String, textCol: String,
       numHashes: Int = 16, bands: Int = 4, shingleSize: Int = 3,
-      bandGroups: Int = 1, passPauseMs: Long = PassGcPauseMs): DataFrame = {
+      bandGroups: Int = 1): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     require(bandGroups >= 1 && bands % bandGroups == 0,
       "bandGroups must partition the band set")
@@ -254,12 +253,16 @@ object Dedup {
       tracked(banded) // released with the operator's cache set
       pairs
     } else {
+      // measured while the pass's frame is live, released at the next
+      // pass's start, once nothing here still reaches its shuffle
+      var passBytes = 0L
       val perGroup = (0 until bandGroups).map { g =>
-        if (g > 0) releasePassShuffles(passPauseMs)
+        if (g > 0) releasePassShuffles(passBytes)
         val (pairs, banded) = minePass(g * bpg, (g + 1) * bpg - 1)
         // eager: this pass's shuffle/cache is fully consumed HERE, so
         // its scratch can be dropped before the next pass allocates
         val done = pairs.localCheckpoint(true)
+        passBytes = shuffleBytesWritten(pairs)
         banded.unpersist(blocking = true)
         done
       }
@@ -279,14 +282,49 @@ object Dedup {
     * only BETWEEN passes: after the last one no band shuffle
     * allocates, the same state the one-shot mode never pauses in. Under
     * -XX:+DisableExplicitGC the gc is a no-op and the cleaner's own
-    * cadence must be trusted instead. A small input whose shuffles are
-    * tiny can pass `pauseMs` 0. */
-  private def releasePassShuffles(pauseMs: Long): Unit = {
-    System.gc()
-    if (pauseMs > 0) Thread.sleep(pauseMs)
-  }
+    * cadence must be trusted instead. The caller must hold no
+    * reference to the finished pass's frame here, or the gc cannot
+    * collect its shuffle. A pass that wrote less than
+    * [[PassGcMinShuffleBytes]] of shuffle files (`passBytes`, its
+    * exchanges' write metrics, [[shuffleBytesWritten]]) leaves too
+    * little to reclaim to be worth the pause, so the next pass starts
+    * at once. */
+  private def releasePassShuffles(passBytes: Long): Unit =
+    if (passBytes >= PassGcMinShuffleBytes) {
+      System.gc()
+      Thread.sleep(PassGcPauseMs)
+    }
 
   private val PassGcPauseMs = 2000L
+  // Far under one pass of a scale that fills scratch (~14 GB at 100M
+  // docs), far over a test or sf-sized corpus's whole mine.
+  private val PassGcMinShuffleBytes = 64L << 20
+
+  /** Bytes of shuffle files that `df`'s executed plan wrote, summed
+    * over its exchanges' write metrics, through adaptive query stages
+    * (also those under a part the adaptive plan replaced with an empty
+    * relation once a stage came back empty) and into the plans of the
+    * caches it scanned (a cache built by an earlier action counts
+    * again: an overestimate). 0 before an action ran the plan. */
+  private[operators] def shuffleBytesWritten(df: DataFrame): Long = {
+    import org.apache.spark.sql.execution.{EmptyRelationExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, LogicalQueryStage, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.metric.SQLShuffleWriteMetricsReporter
+    def walk(p: SparkPlan): Long = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case e: EmptyRelationExec =>
+        e.logical.collect { case s: LogicalQueryStage => walk(s.physicalPlan) }.sum
+      case m: InMemoryTableScanExec => walk(m.relation.cachedPlan)
+      case e: ShuffleExchangeLike =>
+        e.metrics.get(SQLShuffleWriteMetricsReporter.SHUFFLE_BYTES_WRITTEN).fold(0L)(_.value) +
+          e.children.map(walk).sum
+      case other => other.children.map(walk).sum
+    }
+    walk(df.queryExecution.executedPlan)
+  }
 
   /** Per-doc SimHash fingerprint over distinct-token hashes: (doc_id, simhash). */
   def simhashFingerprints(df: DataFrame, idCol: String, textCol: String,
@@ -334,12 +372,10 @@ object Dedup {
     * That is the >100M-doc scale path: the 20M A/B showed key width
     * must grow with log2(N) while the band count must NOT — a wider
     * fingerprint at the same `blocks` (e.g. bits=120, blocks=6 → 60-bit
-    * keys, 20 bands) is the only config move that does both.
-    * `passPauseMs` is the wait between band-sequential passes, as in
-    * [[minhashLshCandidates]]. */
+    * keys, 20 bands) is the only config move that does both. */
   def simhashNearPairs(df: DataFrame, idCol: String, textCol: String,
       bits: Int = 48, maxHamming: Int = 3, blocks: Int = 0,
-      bandGroups: Int = 1, passPauseMs: Long = PassGcPauseMs): DataFrame = {
+      bandGroups: Int = 1): DataFrame = {
     val b = if (blocks > 0) blocks else maxHamming + 1
     require(b > maxHamming, s"blocks ($b) must exceed maxHamming ($maxHamming)")
     require(bits % b == 0, s"blocks ($b) must divide bits ($bits)")
@@ -453,14 +489,20 @@ object Dedup {
     // sort spill there); on a cluster it caps per-executor scratch.
     require(bandGroups >= 1 && keyStructs.length % bandGroups == 0,
       s"bandGroups ($bandGroups) must partition the ${keyStructs.length} bands")
+    var passBytes = 0L
     val candReps =
       if (bandGroups == 1) bandCandidates(keyStructs.toIndexedSeq)
       else keyStructs.grouped(keyStructs.length / bandGroups).toSeq
         // eager: each pass's shuffle is fully consumed here, so its
         // scratch is reclaimable before the next pass allocates
         .zipWithIndex.map { case (g, i) =>
-          if (i > 0) releasePassShuffles(passPauseMs)
-          bandCandidates(g.toIndexedSeq).localCheckpoint(true)
+          // measured now, released at the next pass's start, as in
+          // minhashLshCandidates
+          if (i > 0) releasePassShuffles(passBytes)
+          val pass = bandCandidates(g.toIndexedSeq)
+          val done = pass.localCheckpoint(true)
+          passBytes = shuffleBytesWritten(pass)
+          done
         }
         .reduce(_.unionByName(_))
         .dropDuplicates("ra", "rb")

@@ -72,7 +72,8 @@ object AnnCatalog {
   /** Without `trusted` (guard mode) each statement lists `basePath`
     * once. When the listing (root path, and every data file's path,
     * length and mtime) equals what the walked store version recorded at
-    * build, id/dist/constant statements are answered from the index
+    * build, and `idCol`/`vecCol` name the columns it indexed,
+    * id/dist/constant statements are answered from the index
     * with no base read: the build records it when its input's id and
     * vec are unchanged columns of one file-based relation (a bare
     * `spark.read.parquet(basePath)`, projected, filtered or with extra
@@ -664,15 +665,17 @@ case class AnnTopKExec(output: Seq[Attribute], slots: Seq[AnnTopKExec.Slot],
     // The base is listed once per statement. When that listing (root
     // path, and every data file's path, length and mtime) equals the
     // record of the base files the walked store version was built from
-    // ([[graft.index.AnnIndexStore.BaseFiles]]), every hit id is in the
-    // base with the vector it was indexed with, so id/dist/constant
-    // statements return the hits as they are, with no base-table job.
-    // The one change this cannot see is a rewrite that keeps every
-    // file's name, length and mtime. Otherwise (a file added, removed
-    // or rewritten, a version built from no recorded base, or an
-    // unversioned store) the k result rows are fetched by id from that
-    // same listing (ids pushed down, read with the statement's scan
-    // schema — no footer inference, no query planned) INCLUDING the
+    // ([[graft.index.AnnIndexStore.BaseFiles]]), and the registration's
+    // id and vec columns are the ones that store indexed, every hit id
+    // is in the base with the vector it was indexed with, so
+    // id/dist/constant statements return the hits as they are, with no
+    // base-table job. The one change this cannot see is a rewrite that
+    // keeps every file's name, length and mtime. Otherwise (a file
+    // added, removed or rewritten, a version built from no recorded
+    // base or for other columns, or an unversioned store) the k result
+    // rows are fetched by id from that same listing (ids pushed down,
+    // read with the statement's scan schema — no footer inference, no
+    // query planned) INCLUDING the
     // vector; ids the base no longer holds and rows whose vector went
     // null since the build are dropped (the strategy only routes when
     // null-vec rows provably cannot exist in the scanned rows — a vec
@@ -698,7 +701,7 @@ case class AnnTopKExec(output: Seq[Attribute], slots: Seq[AnnTopKExec.Slot],
       if (ids.isEmpty || (trustIndex && fetchCols.isEmpty)) None
       else Some(AnnTopKExec.listed(session, basePath, baseSchema))
     val unchanged = !trustIndex && listing.exists(l =>
-      searched.builtFrom.contains(graft.index.AnnIndexStore.BaseFiles.of(l)))
+      searched.builtFrom.exists(_.matches(l, idCol, vecCol)))
     val hitsStand = trustIndex || unchanged
     val (fetched, fetchedSchema) = listing match {
       case Some(l) if fetchCols.nonEmpty || !hitsStand =>

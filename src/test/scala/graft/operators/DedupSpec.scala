@@ -94,12 +94,39 @@ class DedupSpec extends SparkSpec {
 
   test("band-sequential mining yields the identical pair set (bandGroups = 2, 4)") {
     def pairsWith(g: Int) =
-      Dedup.minhashLshCandidates(docs, "doc_id", "text", bandGroups = g, passPauseMs = 0)
+      Dedup.minhashLshCandidates(docs, "doc_id", "text", bandGroups = g)
         .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     val oneShot = pairsWith(1)
     assert(pairsWith(2) == oneShot)
     assert(pairsWith(4) == oneShot)
     Dedup.releaseCaches(blocking = true)
+  }
+
+  test("a band pass's shuffle bytes are read from its executed plan, caches included") {
+    // the pause between band passes is taken only when the finished
+    // pass wrote enough shuffle to reclaim; a measure that misses the
+    // pass's exchanges would skip it at every scale
+    val keyed = docs.select(col("doc_id"), length(col("text")).as("len"))
+    val own = keyed.repartition(3, col("len"))
+    assert(Dedup.shuffleBytesWritten(own) == 0) // not run yet
+    own.localCheckpoint(true)
+    assert(Dedup.shuffleBytesWritten(own) > 0)
+    // no exchange of its own: it scans a cache whose build shuffled
+    val cached = keyed.repartition(3, col("doc_id")).persist()
+    val scan = cached.filter(col("len") > 0)
+    scan.localCheckpoint(true)
+    assert(Dedup.shuffleBytesWritten(scan) > 0)
+    cached.unpersist(blocking = true)
+    // a pass that finds no pair: adaptive execution replaces the plan
+    // above its empty stage, but the shuffles it ran still count
+    val parts = keyed.repartition(3, col("doc_id"))
+    val none = parts.as("a")
+      .join(parts.as("b").hint("merge"),
+        col("a.doc_id") === col("b.doc_id") && col("a.len") < col("b.len"))
+      .select(col("a.len")).dropDuplicates()
+    assert(none.localCheckpoint(true).isEmpty)
+    assert(none.queryExecution.executedPlan.toString.contains("EmptyRelation"))
+    assert(Dedup.shuffleBytesWritten(none) > 0)
   }
 
   test("simhash: identical docs share fingerprints; near dups are close") {
@@ -141,7 +168,7 @@ class DedupSpec extends SparkSpec {
     assert(oneShot.nonEmpty)
     for (g <- Seq(2, 4, 5)) {
       val grouped = Dedup.simhashNearPairs(docs, "doc_id", "text", 60, 3,
-          blocks = 6, bandGroups = g, passPauseMs = 0)
+          blocks = 6, bandGroups = g)
         .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2))).toSet
       assert(grouped == oneShot, s"g=$g grouped=$grouped oneShot=$oneShot")
     }

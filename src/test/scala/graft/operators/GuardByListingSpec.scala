@@ -155,6 +155,40 @@ class GuardByListingSpec extends SparkSpec {
     } finally AnnCatalog.unregister(basePath)
   }
 
+  test("a registration whose vecCol is another column than the store indexed fetches") {
+    val data = rows(19, 700)
+    val root = Files.createTempDirectory("graft_guard_vec2").toFile
+    root.deleteOnExit()
+    val basePath = s"$root/base"
+    val vec2Of = data.map { case (id, v) => id -> v.map(x => 3f - x * 0.5f) }.toMap
+    data.map { case (id, v) => (id, v, vec2Of(id)) }.toDF("id", "vec", "vec2")
+      .write.parquet(basePath)
+    val index = s"$root/index"
+    AnnIndexStore.build(spark.read.parquet(basePath), index, numBuckets = 2)
+    val rec = recordOf(index).getOrElse(fail("a bare read records its base"))
+    assert(rec.idCol == "id" && rec.vecCol == "vec")
+    val qv = vec2Of(23L)
+    val d = VectorFunctions.l2Sq(col("vec2"), typedLit(qv))
+    def stmt2 = spark.read.parquet(basePath)
+      .select(col("id"), d.as("d")).orderBy(d, col("id")).limit(k)
+    try {
+      // the same files, but the statement ranks by vec2: the listing
+      // matches and the columns do not, so the rows are fetched and
+      // re-distanced against vec2
+      AnnCatalog.register(basePath, index, idCol = "id", vecCol = "vec2", ef = 200)
+      assert(annExec(stmt2).isInstanceOf[AnnTopKExec])
+      stmt2.collect()
+      val s = served(stmt2)
+      assert(s.jobs == 2, s)
+      assert(s.fetched == k && s.skips == 0, s)
+      s.rows.foreach { r =>
+        val want = VectorFunctions.l2SqJvm(vec2Of(r.getLong(0)), qv)
+        assert(java.lang.Double.doubleToRawLongBits(r.getDouble(1)) ==
+          java.lang.Double.doubleToRawLongBits(want), r)
+      }
+    } finally AnnCatalog.unregister(basePath)
+  }
+
   test("a compacted store records nothing: its input is the graphs plus a delta") {
     val data = rows(13, 500)
     val root = baseRoot("compact", data)
